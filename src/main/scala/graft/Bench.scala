@@ -69,39 +69,8 @@ object Bench {
         .agg(min("doc_id").as("keep"), count(lit(1)).as("n"))),
 
     // MinHash-LSH near-dup candidates (banded bucket join)
-    "l2_minhash" -> ((s: SparkSession, d: String) => {
-      val toks = t(s, d, "documents")
-        .select(col("doc_id"), split(lower(col("text")), " ").as("tk"))
-        .filter(size(col("tk")) >= 5)
-      // position explode + codegen'd window build (shingleRows shape note)
-      val sh = toks
-        .select(col("doc_id"), col("tk"),
-          explode(sequence(lit(1), size(col("tk")) - 4)).as("i"))
-        .select(col("doc_id"),
-          concat_ws(" ", slice(col("tk"), col("i"), lit(5))).as("sh"))
-      // md5 hoisted out of the band mins (minhashSigs r19 note)
-      val bandMins = (0 to 3).map(b =>
-        min(substring(col("m"), b * 8 + 1, 8)).as(s"sig$b"))
-      val sigs = sh
-        .select(col("doc_id"), md5(col("sh")).as("m"))
-        .groupBy("doc_id")
-        .agg(bandMins.head, bandMins.tail: _*)
-        .select(col("doc_id"), posexplode(
-          array((0 to 3).map(b => col(s"sig$b")): _*)).as(Seq("b", "sig")))
-      // one-shuffle in-bucket pair expansion (minhashPairsOf r19 note);
-      // r20: the pair stage is sigs' ONLY consumer now, so the r19
-      // persist+count barrier (a self-join starvation workaround) is
-      // gone — one fewer blocking job, signatures computed exactly once.
-      // Pairs stream through two stacked Generates, never a materialized
-      // |bucket|² array (minhashPairsOf r20 shape note).
-      sigs.groupBy("b", "sig")
-        .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
-        .select(col("a"), explode(
-          slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("b"))
-        .distinct()
-    }),
+    "l2_minhash" -> ((s: SparkSession, d: String) =>
+      graft.operators.LlmOps.minhashPairsOf(t(s, d, "documents"))),
 
     // brute-force cosine kNN, broadcast probes, windowed top-k
     "l3_knn" -> ((s: SparkSession, d: String) => {
@@ -240,7 +209,7 @@ object Bench {
     // per-stage lanes can't
     "l57_pipeline" -> ((s: SparkSession, d: String) =>
       graft.operators.LlmOps.queries("l57_pipeline")(s, d))
-  ) ++ serveLanes(1) ++ Seq(
+  ) ++ serveLanes ++ Seq(
 
     // custom Aggregator with partial aggregation (Q-U2 class)
     "u2_interval_union" -> ((s: SparkSession, d: String) => {
@@ -264,40 +233,22 @@ object Bench {
   // growth scales the INDEX side while the arriving batch stays
   // fixed — exactly the 100 TB serving question ("does screen cost
   // track the batch or the corpus?") made measurable.
-
-  /** The serve lanes, parameterized by BATCH multiplier — the serve
-    * law's second axis (VERDICT r10 #6: corpora grow, but batches also
-    * burst). batchX=1 is the headline form above: batches pinned to
-    * base-replica ids (doc_id<250/500, vec_id<50). batchX>1 widens the
-    * ARRIVING batch by drawing the same per-replica slice from the
-    * first batchX replica shards of a ScaleBench-generated dir
-    * ((id % Off) < n ∧ id < batchX·Off): each slice keeps the exact
-    * dup/novel mix against ITS OWN shard's salted corpus, so a 100×
-    * batch is a real 100× burst of fresh work, not 100 copies of one
-    * batch whose screens would trivially collapse. Batch ids shift by
-    * +10^7 inside their shard (10^7 < Off), so they collide with no
-    * corpus id at any batchX. */
-  private[graft] def serveLanes(batchX: Int)
+  private def serveLanes
       : Seq[(String, (SparkSession, String) => DataFrame)] = {
-    require(batchX >= 1, s"batchX must be >= 1, got $batchX")
-    def slice(df: DataFrame, idCol: String, n: Long): DataFrame =
-      if (batchX == 1) df.filter(col(idCol) < n)
-      else df.filter((col(idCol) % ScaleBench.Off) < n &&
-        col(idCol) < lit(batchX.toLong) * ScaleBench.Off)
     // half duplicates the corpus, half is novel — both screen paths hot
     def novelMix(s: SparkSession, d: String, n: Long): DataFrame =
-      slice(t(s, d, "documents"), "doc_id", n)
+      t(s, d, "documents").filter(col("doc_id") < n)
         .select((col("doc_id") + lit(10000000L)).as("doc_id"),
           when(col("doc_id") % 2 === 0, col("text"))
             .otherwise(concat(col("text"), lit(" novel-"), col("doc_id")))
             .as("text"))
     // near-duplicates of corpus docs, so candidates flow end-to-end
     def tailBatch(s: SparkSession, d: String, n: Long): DataFrame =
-      slice(t(s, d, "documents"), "doc_id", n)
+      t(s, d, "documents").filter(col("doc_id") < n)
         .select((col("doc_id") + lit(10000000L)).as("doc_id"),
           concat(col("text"), lit(" tail")).as("text"))
     def probeBatch(s: SparkSession, d: String, n: Long): DataFrame =
-      slice(t(s, d, "embeddings"), "vec_id", n)
+      t(s, d, "embeddings").filter(col("vec_id") < n)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     Seq(
       // exact-dedup screen: sharded-bloom CASE + exact confirm of hits
@@ -311,7 +262,7 @@ object Bench {
       // fixed probes per replica slice, k=5)
       "idx_ann_probe" -> ((s: SparkSession, d: String) =>
         graft.operators.AnnIndex.queryProbes(s, ServeIndexes.ann(s, d),
-          probeBatch(s, d, 50), 5, probeCount = 50L * batchX)),
+          probeBatch(s, d, 50), 5, probeCount = 50L)),
 
       // ROUTED ANN probe batch (VERDICT r14 #6): the same probes served
       // through the router with the threshold forced past, over an index
@@ -328,7 +279,7 @@ object Bench {
         s.conf.set(key, "0")
         try graft.operators.AnnIndex.queryProbes(s,
           ServeIndexes.annRouted(s, d), probeBatch(s, d, 50), 5,
-          probeCount = 50L * batchX)
+          probeCount = 50L)
         finally saved match {
           case Some(v) => s.conf.set(key, v)
           case None => s.conf.unset(key)
@@ -348,7 +299,7 @@ object Bench {
         s.conf.set(key, "true")
         try graft.operators.AnnIndex.queryProbes(s,
           ServeIndexes.annSq8(s, d), probeBatch(s, d, 50), 5,
-          probeCount = 50L * batchX)
+          probeCount = 50L)
         finally saved match {
           case Some(v) => s.conf.set(key, v)
           case None => s.conf.unset(key)
@@ -374,7 +325,7 @@ object Bench {
         }
         try graft.operators.AnnIndex.queryProbes(s,
           ServeIndexes.annRoutedSq8(s, d), probeBatch(s, d, 50), 5,
-          probeCount = 50L * batchX)
+          probeCount = 50L)
         finally { restore(tKey, savedT); restore(sKey, savedS) }
       }),
 
@@ -413,7 +364,7 @@ object Bench {
         graft.operators.SimHashIndex.neighborsAgainstSigs(s,
           ServeIndexes.imageSimhash(s, d),
           graft.operators.MediaOps.aHashSigsOf(
-            slice(t(s, d, "documents"), "doc_id", 250),
+            t(s, d, "documents").filter(col("doc_id") < 250),
             resizeMaxDim = 64, idShift = 10000000L))),
 
       // PQ probe batch: broadcast per-probe ADC distance tables scanned
@@ -724,31 +675,31 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** `iters` round-robin sweeps over `lanes`: per-lane seconds of every
+    * iteration that completed, plus the names of the lanes that threw in
+    * any iteration. A crashed iteration records no time, so a lane that
+    * always throws has no timings and must be reported as failed — never
+    * as a fast lane. */
+  private[graft] def timeLanes[F](lanes: Seq[(String, F)], iters: Int)(
+      run: F => Unit): (Seq[(String, Seq[Double])], Seq[String]) = {
+    val acc = scala.collection.mutable.LinkedHashMap(
+      lanes.map { case (name, _) => name -> Vector.empty[Double] }: _*)
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    for (_ <- 1 to iters; (name, fn) <- lanes) {
+      val t0 = System.nanoTime()
+      val ok = try { run(fn); true } catch { case _: Throwable => false }
+      if (ok) acc(name) = acc(name) :+ (System.nanoTime() - t0) / 1e9
+      else failed += name
+    }
+    (acc.toSeq, failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val calib1t = calibrate(1, 256)
     val calibNt = calibrate(cpus.toInt, 4096)
-    // OPT-IN scan split (r20, Tables.maybeSplit): single-row-group
-    // testdata pins every scan stage to ONE task, starving the driver's
-    // core-count scaling probe of signal — SPARK_GRAFT_SPLIT_READS=1
-    // round-robin-splits under-parallel scans to the core count so the
-    // probe can measure map-side parallelism. Measured at sf0.1 (r20,
-    // OPTIMIZATION_r20.md): default-on was a 1.5-2x LOSS across the
-    // latency-bound lanes (the forced exchange of full base-table rows
-    // costs more than the parallelism buys at this data size), so the
-    // default stays the r19 methodology and the knob exists for probe
-    // runs only.
-    val splitScans =
-      if (sys.env.get("SPARK_GRAFT_SPLIT_READS").contains("1")) cpus else "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.SplitScansKey, splitScans)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // Spark-job anchors: timed inside the session, before any lane state
     val calibSpark = calibrateSpark(spark)
@@ -777,16 +728,7 @@ object Bench {
     // (q6 at 51-67 s vs 1.9 s quiet) while its neighbors recovered.
     // Spreading each query's iterations across the full bench wall-clock
     // means min-of-5 survives any burst shorter than a whole sweep.
-    val acc = scala.collection.mutable.LinkedHashMap(
-      headline.map { case (name, _) => name -> Vector.empty[Double] }: _*)
-    for (_ <- 1 to iters; (name, fn) <- headline) {
-      val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case _: Throwable => false }
-      if (ok) acc(name) = acc(name) :+ (System.nanoTime() - t0) / 1e9
-    }
-    val results: Seq[(String, Seq[Double])] = headline.map { case (name, _) =>
-      name -> acc(name)
-    }
+    val (results, failed) = timeLanes(headline, iters)(run)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.isEmpty) -1.0
@@ -860,11 +802,12 @@ object Bench {
         "\"" + k + "\":" + v.map(x => f"$x%.3f").getOrElse("null") }
       .mkString("{", ",", "}")
     val calib = f""""calib":{"sha256_1t_256mb_sec":$calib1t%.3f,"sha256_${cpus}%st_4gb_sec":$calibNt%.3f,"spark_10m_shuffle_sec":$calibSpark%.3f,"spark_1b_agg_sec":$calibSpark1b%.3f,"host_drift_chain":$chain%.6f,"host_drift_epoch":$chainEp%d,"loadavg":$loadavg%.2f,"jvms":$jvmCount%d},"value_calib_adjusted":$adj%.3f"""
-    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(_.min)},"queries_median":${jmap(median)},"iterations":$perIter,$calib,"deltas_norm_named":$deltaNamed,$deltaJson,"sf":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(_.min)},"queries_median":${jmap(median)},"iterations":$perIter,$calib,"deltas_norm_named":$deltaNamed,$deltaJson,"failed":$failedJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(_.min)},$calib,$deltaJson,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(_.min)},$calib,$deltaJson,"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

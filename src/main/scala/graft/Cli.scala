@@ -113,13 +113,7 @@ object Cli {
     val existing = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
     val s = existing.getOrElse {
-      val b = SparkSession.builder()
-        .master("local[8]")
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val b = GraftSession.local("8")
       b.sparkContext.setLogLevel("ERROR")
       b
     }

@@ -23,6 +23,17 @@ import graft.functions.{Interval, IntervalUnion}
   * facade only wires names, it owns no logic.
   */
 object GraftSession {
+  /** The local session every main runs on: `local[cpus]`, one shuffle
+    * partition per core, a UTC session time zone (the oracle's and the
+    * testdata's), and no UI. */
+  def local(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   def attach(spark: SparkSession, sfDir: String): Unit = {
     Tables.registerViews(spark, sfDir)
     graft.functions.VectorExpressions.register(spark)

@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement harness for the optimization rounds: time or
-  * explain individual bench lanes without paying the full 42-lane sweep.
-  * NOT part of the driver contract (Bench.main is); shares Bench.headline
-  * so the measured DataFrame is byte-identical to what Bench times.
+  * explain individual lanes without paying the full 42-lane sweep.
+  * Prints human-readable lines only (Bench.main owns the JSON contract
+  * line). A name resolves to the Bench lane first (so the measured
+  * DataFrame is byte-identical to what Bench times), then to the
+  * registry (SparkEntry.queries), so registry-only lanes get the same
+  * plan and job-count evidence.
   *
   * Usage: runMain graft.LaneProbe time l39_bigram_lm,l55_allpairs 5
   *        runMain graft.LaneProbe plan l57_pipeline plans/r19 _before
@@ -15,21 +18,9 @@ object LaneProbe {
     val cmd = args(0)
     val lanes = args(1).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // mirror Bench.main's scan-split methodology (r20) so probe numbers
-    // compare to bench numbers; SPARK_GRAFT_SPLIT_READS=1 opts both in
-    val splitScans =
-      if (sys.env.get("SPARK_GRAFT_SPLIT_READS").contains("1")) cpus else "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.SplitScansKey, splitScans)
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
-    val all = Bench.headline.toMap
+    val all = SparkEntry.queries ++ Bench.headline
     val chosen = lanes.map(n => n -> all(n))
 
     cmd match {

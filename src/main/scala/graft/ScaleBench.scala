@@ -153,14 +153,7 @@ object ScaleBench {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scale_x$k")
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val done = java.nio.file.Paths.get(out, "_SCALE_DONE")

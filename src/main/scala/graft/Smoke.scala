@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Minimal smoke main mirroring the driver's t1 check: run
   * SparkEntry.entry and assert it returns rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"SMOKE entry rows=$n")

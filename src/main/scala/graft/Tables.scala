@@ -16,44 +16,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** OPT-IN scan-split for scaling probes (r20, VERDICT r19 #5). The
-    * driver's testdata tables are single-file single-ROW-GROUP parquet,
-    * so every scan stage is ONE task no matter what SPARK_GRAFT_CPUS
-    * says: the low-vs-high-core scaling probe has no signal, and every
-    * lane's map-side work (shingling, hashing, window building) runs
-    * serially. With this conf set to the session's core count
-    * (SPARK_GRAFT_SPLIT_READS=1 in Bench/LaneProbe; Verify, tests, and
-    * the oracle path never set it, so declared plans and artifacts are
-    * untouched), a table whose OBSERVED scan parallelism is below the
-    * value is round-robin repartitioned to it on read. The decision
-    * derives from the observed partition count + file length, so
-    * multi-file production inputs bypass the extra exchange entirely.
-    * Tiny dims (< 256 KiB: region, nation, supplier) stay unsplit —
-    * they exist to be broadcast. NOT the bench default: measured at
-    * sf0.1 (OPTIMIZATION_r20.md), the forced exchange of full base-
-    * table rows costs 1.5-2x more than the parallelism buys on these
-    * latency-bound lanes — the honest fix for the probe is multi-row-
-    * group testdata, which only the driver can ship. */
-  private[graft] val SplitScansKey = "spark.graft.bench.splitScans"
-  private val SplitMinBytes = 256L * 1024
-  // (scan partitions, file bytes) per dir/name — plan metadata, not data
-  private val scanMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
-
-  private def maybeSplit(spark: SparkSession, dir: String, name: String,
-      df: DataFrame): DataFrame = {
-    val want = spark.conf.getOption(SplitScansKey).map(_.toInt).getOrElse(0)
-    if (want <= 1) return df
-    val (parts, bytes) = scanMeta.computeIfAbsent(s"$dir/$name", _ => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val len = try p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getContentSummary(p).getLength
-      catch { case _: Throwable => Long.MaxValue }
-      (df.rdd.getNumPartitions, len)
-    })
-    if (parts >= want || bytes < SplitMinBytes) df else df.repartition(want)
-  }
-
   /** Load one testdata table. Parquet scan → Catalyst handles column
     * pruning + predicate pushdown; callers must NOT cache or collect.
     *
@@ -80,7 +42,7 @@ object Tables {
         val prefix = graft.sources.PufsFileSystem.registerBacking(token, dir)
         s"$prefix/$name.parquet"
       } else s"$dir/$name.parquet"
-    val df = if (name == "events") {
+    if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -95,7 +57,6 @@ object Tables {
     } else {
       spark.read.parquet(path)
     }
-    maybeSplit(spark, dir, name, df)
   }
 
   /** Register every table as a temp view (for SQL-only surfaces such as

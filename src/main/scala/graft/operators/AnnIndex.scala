@@ -672,7 +672,7 @@ object AnnIndex {
 
   /** The flat sign-LSH serving arm (pre-r14 `queryProbes` body) — still
     * the right plan below the routing threshold, and callable directly
-    * for arm-vs-arm measurement (ServeScaleProbe). */
+    * for arm-vs-arm measurement (NearDupSpec's routed-vs-flat parity). */
   private[graft] def flatQueryProbes(spark: SparkSession, dir: String,
       probeVecs: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
     graft.functions.VectorExpressions.register(spark)

@@ -288,10 +288,7 @@ object JoinOps {
       // two stacked Generates, not flatten(transform(transform)) (r20):
       // per-row state stays O(|group|), never the materialized
       // |group|² pair array — see LlmOps.pairsInBucket's shape note
-      val pairs = LlmOps.pairsInBucket(variants.groupBy("vh")
-        .agg(sort_array(collect_set(col("id"))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-        .distinct()
+      val pairs = LlmOps.pairsInBucket(variants, Seq("vh"), col("id")).distinct()
       // names rejoin AFTER dedup, broadcast here because the name table is
       // dim-sized; at entity counts past broadcast range the same two
       // joins run shuffled — still O(pairs), never O(n²)

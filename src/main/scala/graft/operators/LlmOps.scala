@@ -78,15 +78,20 @@ object LlmOps {
   /** Banded MinHash signatures (doc_id, b, sig) for a (doc_id, text)
     * frame — the l2 signature scheme factored out so the standing
     * NearDupIndex indexes bit-identical signatures to the inline lane. */
-  private[operators] def minhashSigs(docs: DataFrame): DataFrame = {
+  private[operators] def minhashSigs(docs: DataFrame): DataFrame =
+    minhashSigsOfShingles(shingleRows(docs, distinctPerDoc = false))
+
+  /** The signature half of [[minhashSigs]] over (doc_id, sh) shingle
+    * rows — l12 signs its persisted distinct shingles through here, so
+    * its signatures cannot drift from l2's. */
+  private[operators] def minhashSigsOfShingles(sh: DataFrame): DataFrame = {
     // md5 hoisted into the pre-agg projection (r19): as four
     // min(substring(md5(sh))) aggregates it was evaluated once per BAND
     // per row; here once per row, with only the cheap substrings in the
     // partial-agg expressions
     val bandMins = (0 to 3).map(b =>
       min(substring(col("m"), b * 8 + 1, 8)).as(s"sig$b"))
-    shingleRows(docs, distinctPerDoc = false)
-      .select(col("doc_id"), md5(col("sh")).as("m"))
+    sh.select(col("doc_id"), md5(col("sh")).as("m"))
       .groupBy("doc_id")
       .agg(bandMins.head, bandMins.tail: _*)
       .select(col("doc_id"), posexplode(
@@ -216,40 +221,40 @@ object LlmOps {
     simhash64BandScreen(simhash64Of(t(s, d, "documents")
       .select(col("doc_id"), col("text"))))
 
-  /** The 4×16-bit band screen + exact Hamming verify over ANY 64-bit
-    * signature table (doc_id, simhash) — shared by simhash64NearDup
-    * (computes signatures in-plan) and the l54w lane (reads them from
-    * the engine-emitted fixture that also backs the DuckDB oracle).
+  /** The 4-band screen + exact Hamming ≤ 3 verify over ANY signature
+    * table (doc_id, simhash) of 4·`bandBits` bits — 4×16 over 64-bit
+    * signatures (the default: simhash64NearDup, which computes them
+    * in-plan; the l54w lane, which reads them from the engine-emitted
+    * fixture that also backs the DuckDB oracle; SimHashIndex; MediaOps)
+    * and 4×8 over l54's 32-bit ones. Radius 3 < 4 bands ⟹ some band
+    * of a true pair matches exactly, so the screen is complete at
+    * either width. Band values mask with & (2^bandBits − 1): an
+    * arithmetic shiftright alone would sign-extend 64-bit band 3
+    * negative.
     *
     * One-shuffle shape (r20, the minhashPairsOf discipline): group
     * (doc_id, simhash) structs per (band, bv) bucket and expand a<b
-    * pairs in-group through two stacked Generates — the former banded
-    * self-join exchanged the 4n band rows once per side and built join
-    * hash tables for the same bucket rows. sort_array orders the
-    * structs by doc_id (unique per frame), so x precedes y ⟺
-    * x.doc_id < y.doc_id — exactly the old a < b predicate. hamming is
-    * computed + filtered BEFORE the pair dedup (a pure function of the
-    * pair's signatures, so it commutes with distinct), leaving only
-    * true near-dup rows in the distinct's exchange. Per-row state is
-    * the O(|bucket|) struct array, never the |bucket|² pair array
-    * (pairsInBucket's shape note). */
-  private[graft] def simhash64BandScreen(sh: DataFrame): DataFrame =
-    sh.select(col("doc_id"), col("simhash"),
+    * pairs in-group (pairsInBucket) — the former banded self-join
+    * exchanged the 4n band rows once per side and built join hash
+    * tables for the same bucket rows. sort_array orders the structs by
+    * doc_id (unique per frame), so a precedes b ⟺ a.doc_id < b.doc_id.
+    * hamming is computed + filtered BEFORE the pair dedup (a pure
+    * function of the pair's signatures, so it commutes with distinct),
+    * leaving only true near-dup rows in the distinct's exchange. */
+  private[graft] def simhash64BandScreen(sh: DataFrame,
+      bandBits: Int = 16): DataFrame = {
+    val bands = sh.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("bv", expr("shiftright(simhash, band * 16) & 65535"))
-      .groupBy("band", "bv")
-      .agg(sort_array(collect_set(
-        struct(col("doc_id"), col("simhash")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "x")))
-      .select(col("x"), explode(
-        slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("y"))
+      .withColumn("bv",
+        expr(s"shiftright(simhash, band * $bandBits) & ${(1 << bandBits) - 1}"))
+    pairsInBucket(bands, Seq("band", "bv"), struct(col("doc_id"), col("simhash")))
       .withColumn("hamming",
-        expr("bit_count(x.simhash ^ y.simhash)").cast("long"))
+        expr("bit_count(a.simhash ^ b.simhash)").cast("long"))
       .filter(col("hamming") <= 3)
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"),
         col("hamming"))
       .distinct()
+  }
 
   /** Engine-emitted signature fixture backing the l54w oracle. JVM
     * xxhash64 has no DuckDB twin, so the lane's oracle is GENERATED from
@@ -638,13 +643,14 @@ object LlmOps {
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
     minhashPairsOf(t(s, d, "documents"))
 
-  /** MinHash-LSH candidate pairs (a < b) over an arbitrary (doc_id,
-    * text) frame — l2's screen as a reusable stage (the l57 pipeline
-    * runs it over dedup survivors, not the raw table). */
-  /** a<b pair rows from a grouped frame holding a sorted `ids` array per
-    * bucket — the shared in-bucket expansion of every one-shuffle
-    * candidate generator (minhashPairsOf, l55 prefix postings, l12's
-    * inline twin, j13's deletion variants; r19 discipline).
+  /** a<b pairs (a, b) of the `id` values that share a `bucket` key:
+    * group `rows` by the bucket, keep each bucket's sorted distinct ids
+    * when it holds two or more, and expand them — the shared in-bucket
+    * expansion of every one-shuffle candidate generator (minhashPairsOf
+    * and l12, l55's prefix postings, j13's deletion variants, and the
+    * SimHash band screen; r19 discipline). `id` may be a struct column:
+    * pairs then carry the whole struct, ordered by its first field. An
+    * empty `bucket` treats all rows as one bucket.
     *
     * Shape (r20): TWO stacked Generates — posexplode the bucket's ids,
     * then explode each id's tail slice. Per-row state is O(|bucket|)
@@ -657,28 +663,32 @@ object LlmOps {
     * degenerate bucket still COSTS |bucket|² output rows in one task —
     * that is the operator's exact semantics; capping or salting away
     * cross-chunk pairs would change the declared result. */
-  private[graft] def pairsInBucket(grouped: DataFrame): DataFrame =
-    grouped
+  private[graft] def pairsInBucket(rows: DataFrame, bucket: Seq[String],
+      id: Column): DataFrame =
+    rows.groupBy(bucket.map(col): _*)
+      .agg(sort_array(collect_set(id)).as("ids"))
+      .filter(size(col("ids")) >= 2)
       .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
       .select(col("a"),
         explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("b"))
 
-  private[operators] def minhashPairsOf(docs: DataFrame): DataFrame = {
-    // candidate pairs from ONE shuffle of the signature rows (r19, the
-    // l55/j13 discipline): group doc ids per (band, sig) bucket and
-    // expand a<b pairs in-group — the self-join shuffled the signature
-    // table twice and built join hash tables for the same bucket rows.
-    // Per-group state is the LSH bucket's membership list, exactly the
-    // row set one join key held; the join emitted |bucket|² rows per
-    // bucket too. (r20: the pair stage has ONE consumer of sigs now, so
-    // the r19 persist+count barrier that guarded the self-join's two
-    // concurrent map stages is gone — one fewer blocking job per call.)
-    pairsInBucket(
-      minhashSigs(docs).groupBy("b", "sig")
-        .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-      .distinct()
-  }
+  /** MinHash-LSH candidate pairs (a < b) over an arbitrary (doc_id,
+    * text) frame — l2's screen as a reusable stage (the l57 pipeline
+    * runs it over dedup survivors, not the raw table; Bench's l2 lane
+    * times exactly this operator). */
+  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame =
+    minhashBucketPairs(minhashSigs(docs))
+
+  /** Candidate pairs from (doc_id, b, sig) signature rows, deduped
+    * across bands. ONE shuffle of the signature rows (r19, the l55/j13
+    * discipline): group doc ids per (band, sig) bucket and expand a<b
+    * pairs in-group — the self-join shuffled the signature table twice
+    * and built join hash tables for the same bucket rows. Per-group
+    * state is the LSH bucket's membership list, exactly the row set one
+    * join key held. (r20: the pair stage is the signatures' ONE
+    * consumer, so no persist barrier guards them.) */
+  private[operators] def minhashBucketPairs(sigs: DataFrame): DataFrame =
+    pairsInBucket(sigs, Seq("b", "sig"), col("doc_id")).distinct()
 
   /** BPE tokenizer TRAINING (Sennrich et al. 2016): merge rounds over the
     * corpus word-frequency table. Each round is two distributed jobs —
@@ -1215,35 +1225,10 @@ object LlmOps {
     // set-similarity (MinHash on shingles, cosine on embeddings), SimHash
     // Hamming answers weighted-feature similarity with a 4-byte signature —
     // the cheapest standing near-dup key a 100 TB crawl can keep per doc.
-    "l54_simhash_neardup" -> ((s, d) => {
-      // one-shuffle in-bucket pair expansion (r20, the minhashPairsOf /
-      // simhash64BandScreen discipline): group (doc_id, simhash)
-      // structs per (band, bv) bucket and expand a<b pairs in-group —
-      // the former self-join exchanged the band rows once per side and
-      // needed a persist+count barrier; single consumer now, so the
-      // signatures compute exactly once in-plan. hamming is computed +
-      // filtered BEFORE the pair dedup (pure function of the pair's
-      // signatures, commutes with distinct), so the distinct's exchange
-      // carries only true near-dup rows.
-      simhashDf(s, d)
-        .select(col("doc_id"), col("simhash"),
-          explode(sequence(lit(0), lit(3))).as("band"))
-        .withColumn("bv", expr("shiftright(simhash, band * 8) % 256"))
-        .groupBy("band", "bv")
-        .agg(sort_array(collect_set(
-          struct(col("doc_id"), col("simhash")))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "x")))
-        .select(col("x"), explode(
-          slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("y"))
-        .withColumn("hamming",
-          expr("bit_count(x.simhash ^ y.simhash)").cast("long"))
-        .filter(col("hamming") <= 3)
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-          col("hamming"))
-        .distinct()
-        .orderBy("a", "b")
-    }),
+    "l54_simhash_neardup" -> ((s, d) =>
+      // the shared one-shuffle band screen at 4×8 bits: the signatures
+      // compute exactly once in-plan (single consumer)
+      simhash64BandScreen(simhashDf(s, d), bandBits = 8).orderBy("a", "b")),
 
     // L54W: l54 at the 64-bit signature width with 4×16-bit bands — the
     // variant a real crawl runs (65,536 buckets per band instead of 256:
@@ -1304,10 +1289,7 @@ object LlmOps {
       // two stacked Generates, not flatten(transform(transform)) (r20):
       // per-row state stays O(|posting|), never the materialized
       // |posting|² pair array — see pairsInBucket's shape note
-      val cands = pairsInBucket(prefix.groupBy("tok")
-        .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-        .distinct()
+      val cands = pairsInBucket(prefix, Seq("tok"), col("doc_id")).distinct()
       // exact verify via per-doc sorted shingle ARRAYS (r19): the former
       // cands ⋈ toks(a) ⋈ toks(b) → groupBy(a,b) exploded every candidate
       // pair to its full token lists and re-aggregated — a (pairs ×
@@ -1582,38 +1564,14 @@ object LlmOps {
     // bucket-join), exact Jaccard over distinct 5-gram shingle sets
     // disposes (computed ONLY for candidate pairs, never all pairs).
     "l12_jaccard_verify" -> ((s, d) => {
-      val toks = t(s, d, "documents")
-        .select(col("doc_id"), split(lower(col("text")), " ").as("tk"))
-        .filter(size(col("tk")) >= 5)
       // `sh` feeds the signature build AND both sides of the intersection
       // join; persist so the shingle explosion runs once, not four times
-      val sh = toks
-        .select(col("doc_id"), col("tk"),
-          explode(sequence(lit(1), size(col("tk")) - 4)).as("i"))
-        .select(col("doc_id"),
-          concat_ws(" ", slice(col("tk"), col("i"), lit(5))).as("sh"))
+      val sh = shingleRows(t(s, d, "documents"), distinctPerDoc = false)
         .distinct()
         .persist()
       sh.count() // materialize before the four consumer stages fan out
-      // md5 hoisted out of the band mins (minhashSigs r19 note)
-      val bandMins = (0 to 3).map(b =>
-        min(substring(col("m"), b * 8 + 1, 8)).as(s"sig$b"))
-      val sigs = sh
-        .select(col("doc_id"), md5(col("sh")).as("m"))
-        .groupBy("doc_id")
-        .agg(bandMins.head, bandMins.tail: _*)
-        .select(col("doc_id"), posexplode(
-          array((0 to 3).map(b => col(s"sig$b")): _*)).as(Seq("b", "sig")))
-      // one-shuffle in-bucket pair expansion (minhashPairsOf r19 note);
-      // the former self-join also re-evaluated the unpersisted sigs agg
-      // once per side
-      // two stacked Generates, not flatten(transform(transform)) (r20):
-      // per-row state stays O(|bucket|), never the materialized
-      // |bucket|² pair array — see pairsInBucket's shape note
-      val cands = pairsInBucket(sigs.groupBy("b", "sig")
-        .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-        .distinct()
+      // l2's signature and candidate kernels over the persisted shingles
+      val cands = minhashBucketPairs(minhashSigsOfShingles(sh))
       // exact intersection via per-doc sorted arrays (the l55 r19
       // shape): the former cands ⋈ sh(a) ⋈ sh(b) + filter(sha=shb)
       // materialized the FULL n_a × n_b shingle cross product per

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Persisted cross-run NEAR-dup index — the operational form of l2, and
   * DedupIndex's fuzzy sibling: a 100 TB corpus has its banded MinHash
   * signatures computed ONCE and stored; each day's arrivals are screened
@@ -83,9 +85,11 @@ object NearDupIndex {
     // sf0.1, plans/r20/idx_neardup_screen_*.txt).
     val minBytes = spark.conf.getOption(BatchBcastMinSigsBytesKey)
       .map(_.toLong).getOrElse(BatchBcastMinSigsBytes)
+    // an unreadable size falls back to the corpus-streaming shape; a
+    // fatal JVM error propagates instead of becoming a join-side choice
     val storedLen =
       try fs.getContentSummary(sigsPath).getLength
-      catch { case _: Throwable => Long.MaxValue }
+      catch { case NonFatal(_) => Long.MaxValue }
     val joined =
       if (storedLen < minBytes)
         batch.join(broadcast(stored),

@@ -155,4 +155,37 @@ class BenchSpec extends AnyFunSuite {
     assert(m.group(2).toInt == ScaleBench.extraProbes.size,
       s"SCALE.md says ${m.group(2)} extras; ScaleBench.extraProbes has ${ScaleBench.extraProbes.size}")
   }
+
+  test("a lane that throws is listed as failed, never timed as a fast lane") {
+    var calls = 0
+    val lanes = Seq[(String, () => Unit)](
+      "ok" -> (() => ()),
+      "boom" -> (() => throw new RuntimeException("lane crashed")),
+      "flaky" -> (() => { calls += 1; if (calls == 1) sys.error("once") }))
+    val (results, failed) = Bench.timeLanes(lanes, iters = 3)(f => f())
+    assert(failed == Seq("boom", "flaky"))
+    val times = results.toMap
+    assert(results.map(_._1) == Seq("ok", "boom", "flaky"),
+      "every lane keeps its slot in the artifact, in bench order")
+    assert(times("ok").size == 3 && times("flaky").size == 2)
+    assert(times("boom").isEmpty)
+  }
+
+  test("bench l2 and l54w lanes compute exactly the operators the oracle checks") {
+    val spark = SparkSpec.spark
+    // sf0.01 (the suite fixture's sibling) holds near-dup pairs to compare
+    val d = new java.io.File(SparkSpec.sfDir).getParent + "/sf0.01"
+    def same(x: org.apache.spark.sql.DataFrame,
+        y: org.apache.spark.sql.DataFrame): Boolean =
+      x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+    val lanes = Bench.headline.toMap
+    val l2 = lanes("l2_minhash")(spark, d)
+    assert(l2.count() > 0, "fixture lost its near-dup candidates")
+    assert(same(l2, SparkEntry.queries("l2_minhash_lsh")(spark, d)))
+    val l54w = lanes("l54w_simhash64")(spark, d)
+    assert(l54w.count() > 0, "fixture lost its near-dup pairs")
+    assert(same(l54w, graft.operators.LlmOps.simhash64BandScreen(
+      graft.operators.LlmOps.simhash64Of(
+        Tables.t(spark, d, "documents").select("doc_id", "text")))))
+  }
 }

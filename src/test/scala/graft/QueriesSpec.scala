@@ -80,6 +80,10 @@ class QueriesSpec extends SparkSpec {
     val banded = graft.operators.LlmOps.queries("l54_simhash_neardup")(spark, d)
     assert(banded.count() > 0, "fixture lost its near-dup pairs")
     assert(banded.exceptAll(brute).isEmpty && brute.exceptAll(banded).isEmpty)
+    // the generalised 64-bit screen at a band width of 8 is the same
+    // complete screen over 32-bit signatures
+    val screen8 = graft.operators.LlmOps.simhash64BandScreen(sh, bandBits = 8)
+    assert(screen8.exceptAll(brute).isEmpty && brute.exceptAll(screen8).isEmpty)
   }
 
   test("l55 prefix-filtered exact Jaccard join ≡ brute force") {

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Deterministic CLUSTERLESS vector corpora for the ANN recall probes
-  * (VERDICT r14 #1/#5): iid unit Gaussians have no structure a coarse
+/** Deterministic CLUSTERLESS vector corpora for the ANN recall specs
+  * (NearDupSpec; VERDICT r14 #1/#5): iid unit Gaussians have no structure a coarse
   * quantizer can exploit — IVF's adversarial case, where routed recall
   * is bounded by the scanned fraction for arbitrary neighbors — plus
   * PLANTED near-duplicates at a controlled cosine, the recoverable
@@ -23,36 +23,27 @@ object SynthVectors {
     x ^ (x >>> 31)
   }
 
-  private def unitGaussian(rng: java.util.Random, dim: Int,
-      shift: Double): Array[Float] = {
+  private def unitGaussian(rng: java.util.Random, dim: Int): Array[Float] = {
     val v = Array.fill(dim)(rng.nextGaussian())
-    // mean shift along e0, scaled to the vector's own magnitude (~√dim)
-    // so `shift` reads as "how many vector-lengths off center"
-    if (shift != 0.0) v(0) += shift * math.sqrt(dim.toDouble)
     val n = math.sqrt(v.map(x => x * x).sum)
     v.map(x => (x / n).toFloat)
   }
 
   /** n clusterless unit vectors (vec_id ∈ [0, n)), plus `planted`
     * near-duplicates of vectors 0..planted-1 at vec_ids n..n+planted-1
-    * with cosine ≈ `cosTarget` to their source. `shift` biases the whole
-    * distribution along e0 (the drift probe's shifted population);
-    * `seedSalt` decorrelates independently drawn corpora. */
+    * with cosine ≈ `cosTarget` to their source. */
   def corpus(spark: SparkSession, n: Long, dim: Int = 64,
-      planted: Int = 0, cosTarget: Double = 0.95, shift: Double = 0.0,
-      seedSalt: Long = 0L): DataFrame = {
+      planted: Int = 0, cosTarget: Double = 0.95): DataFrame = {
     import spark.implicits._
     require(planted <= n, s"planted=$planted exceeds n=$n")
     // cos(v, normalize(v + ε·g⊥)) = 1/√(1+ε²) for unit v ⊥ unit g
     val eps = math.sqrt(1.0 / (cosTarget * cosTarget) - 1.0)
     spark.range(n + planted).map { id =>
-      if (id < n) (id, unitGaussian(new java.util.Random(mix(id + seedSalt)),
-        dim, shift))
+      if (id < n) (id, unitGaussian(new java.util.Random(mix(id)), dim))
       else {
         val src = id - n
-        val v = unitGaussian(new java.util.Random(mix(src + seedSalt)),
-          dim, shift)
-        val rng = new java.util.Random(mix(id * 31 + seedSalt + 7))
+        val v = unitGaussian(new java.util.Random(mix(src)), dim)
+        val rng = new java.util.Random(mix(id * 31 + 7))
         val g = Array.fill(dim)(rng.nextGaussian())
         // project out the v-component, unit-normalize the residual
         val dot = v.zip(g).map { case (a, b) => a * b }.sum

@@ -357,4 +357,38 @@ class DedupIndexSpec extends SparkSpec {
       "post-append screen = pre-append cross + batch-internal pairs")
     spark.catalog.clearCache()
   }
+
+  test("near-dup screen lets a fatal error from the stored-size probe propagate") {
+    // the join-side choice reads the stored signatures' size; a fatal JVM
+    // error there must surface, not turn into the broadcast-side decision
+    val indexDir = java.nio.file.Files.createTempDirectory("nd-fatal").toString
+    val docs = graft.Tables.t(spark, sfDir, "documents").select("doc_id", "text")
+    NearDupIndex.build(spark, docs, indexDir)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.fatalsummary.impl", classOf[FatalSummaryFileSystem].getName)
+    hc.setBoolean("fs.fatalsummary.impl.disable.cache", true)
+    try {
+      val e = intercept[LinkageError] {
+        NearDupIndex.candidatesAgainst(spark, s"fatalsummary://$indexDir",
+          docs.limit(10))
+      }
+      assert(e.getMessage == FatalSummaryFileSystem.Message)
+    } finally {
+      hc.unset("fs.fatalsummary.impl")
+      hc.unset("fs.fatalsummary.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem on the `fatalsummary` scheme, except that
+  * getContentSummary throws a fatal JVM error. */
+class FatalSummaryFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("fatalsummary:///")
+  override def getContentSummary(
+      f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.ContentSummary =
+    throw new LinkageError(FatalSummaryFileSystem.Message)
+}
+
+object FatalSummaryFileSystem {
+  val Message = "getContentSummary failed fatally"
 }

@@ -16,9 +16,8 @@ class HotBucketSpec extends graft.SparkSpec {
 
   test("one hot bucket of 20k ids streams its 2e8 pairs without OOM") {
     val n = 20000L
-    val bucket = spark.range(n)
-      .agg(sort_array(collect_set(col("id"))).as("ids"))
-    val pairs = LlmOps.pairsInBucket(bucket)
+    // no bucket key: the whole range is one bucket
+    val pairs = LlmOps.pairsInBucket(spark.range(n).toDF(), Seq.empty, col("id"))
     // plan shape: two Generates, no flatten — the streaming property
     val plan = pairs.queryExecution.executedPlan.toString
     assert("Generate".r.findAllIn(plan).length >= 2, plan)
@@ -27,9 +26,7 @@ class HotBucketSpec extends graft.SparkSpec {
   }
 
   test("pair semantics: sorted a<b tail expansion, no self or dup pairs") {
-    val bucket = spark.range(5)
-      .agg(sort_array(collect_set(col("id"))).as("ids"))
-    val got = LlmOps.pairsInBucket(bucket)
+    val got = LlmOps.pairsInBucket(spark.range(5).toDF(), Seq.empty, col("id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val want = for { a <- 0L until 5L; b <- (a + 1) until 5L } yield (a, b)
     assert(got === want)
