@@ -43,6 +43,15 @@ import org.apache.spark.sql.functions._
   * contract, now served from a standing store). */
 object DecontamIndex {
 
+  /** Pinned physical layout of shingles/ (the build writes exactly these
+    * types): an explicit read schema skips the per-screen parquet footer
+    * inference job — the DedupIndex/JaccardIndex convention. */
+  private val ShinglesSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("sh",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("h",
+      org.apache.spark.sql.types.LongType)))
+
   private def fs(spark: SparkSession, p: String) = {
     val path = new org.apache.hadoop.fs.Path(p)
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
@@ -137,7 +146,8 @@ object DecontamIndex {
       }
     val hits = prefiltered
       .distinct() // count DISTINCT shared shingles (the l26/l29 unit)
-      .join(spark.read.parquet(s"$indexDir/shingles").select("sh"), "sh")
+      .join(spark.read.schema(ShinglesSchema)
+        .parquet(s"$indexDir/shingles").select("sh"), "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     ids.join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -130,25 +130,11 @@ object DedupIndex {
   }
 
   private def readBloomBytes(spark: SparkSession, indexDir: String,
-      shard: Int): Array[Byte] = {
-    // Bounded FNF retry: on filesystems without FileContext the publish
-    // fallback is delete-then-rename, so a lock-free reader can observe
-    // a sub-millisecond no-file window between a concurrent appender's
-    // delete and rename. Waiting out that window keeps newAgainst
-    // entirely lock-free instead of dragging every screen through the
-    // append lock.
-    var attempt = 0
-    while (true) {
-      try return readBloomBytesOnce(spark, indexDir, shard)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          attempt += 1
-          if (attempt >= 5) throw e
-          Thread.sleep(20L * attempt)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      shard: Int): Array[Byte] =
+    // bounded FNF retry over writeBloom's delete-then-rename window
+    FsRetry.retryFnf(readBloomBytesOnce(spark, indexDir, shard))
+      .getOrElse(throw new java.io.FileNotFoundException(
+        fsFor(spark, indexDir, shard)._2.toString))
 
   private def readBloomBytesOnce(spark: SparkSession, indexDir: String,
       shard: Int): Array[Byte] = {

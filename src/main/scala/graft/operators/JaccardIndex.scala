@@ -121,14 +121,24 @@ object JaccardIndex {
     * max-aggregate sizes, so duplicated stored rows change nothing.
     * Serialized under the shared AppendLock: two concurrent appenders
     * stage commits in the same _temporary tree and one's cleanup would
-    * silently drop the other's rows (see AppendLock). */
+    * silently drop the other's rows (see AppendLock).
+    *
+    * The shingle frame is CHECKPOINTED, not persisted: `docs` is
+    * typically the output of a screen against THIS index, so its lineage
+    * scans shingles/ and sizes/. Every parquet write ends in Spark's
+    * CacheManager.recacheByPath, which drops each cached frame whose
+    * lineage reads the written path — a persisted frame would lose its
+    * cache at the shingles/ write and the sizes/ write would re-run the
+    * whole upstream screen (against an index that already holds the
+    * batch). An eager localCheckpoint cuts the lineage, so no write can
+    * invalidate it; its blocks are released once both writes land. */
   def append(spark: SparkSession, indexDir: String, docs: DataFrame): Unit = {
-    val sh = shingleSets(docs).persist()
+    val sh = shingleSets(docs).localCheckpoint(true)
     try AppendLock.withLock(spark, indexDir) {
       sh.write.mode("append").parquet(s"$indexDir/shingles")
       sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         .write.mode("append").parquet(s"$indexDir/sizes")
-    } finally { sh.unpersist(); () }
+    } finally LlmOps.dropCheckpoint(sh)
   }
 
   /** Both tables present → true; neither → false (never built — screen

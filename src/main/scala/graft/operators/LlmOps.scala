@@ -833,26 +833,27 @@ object LlmOps {
       .orderBy("doc_id")
   }
 
-  /** Connected components over undirected pair edges (a, b) by
-    * distributed min-label propagation: one shuffle join + one
-    * partial-aggregated min per round, isEmpty convergence probe.
-    * Returns (v, lab) for every vertex that appears in a pair; lab = min
-    * vertex id in the component. Converges in O(component diameter)
-    * rounds — shallow for dup clusters (clique unions). */
   /** The cached blocks behind an eagerly-localCheckpoint'ed DataFrame
     * (its analyzed plan is a single LogicalRDD over the checkpointed
-    * RDD). Used to RELEASE superseded rounds of an iterative loop —
-    * without this, every round's labels stay in the block manager for
-    * the rest of the session. Unpersisting makes the DataFrame
-    * unusable (localCheckpoint truncates lineage), so only ever call it
-    * on a frame nothing references anymore. */
-  private def dropCheckpoint(df: DataFrame): Unit =
+    * RDD). Used to RELEASE superseded rounds of an iterative loop, and a
+    * streaming micro-batch's checkpoints once the batch has committed —
+    * without this, every round's labels (every batch's frames) stay in
+    * the block manager for the rest of the session. Unpersisting makes
+    * the DataFrame unusable (localCheckpoint truncates lineage), so only
+    * ever call it on a frame nothing references anymore. */
+  private[graft] def dropCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
+  /** Connected components over undirected pair edges (a, b) by
+    * distributed min-label propagation: one shuffle join + one
+    * partial-aggregated min per round, isEmpty convergence probe.
+    * Returns (v, lab) for every vertex that appears in a pair; lab = min
+    * vertex id in the component. Converges in O(component diameter)
+    * rounds — shallow for dup clusters (clique unions). */
   private[operators] def components(pairs: DataFrame): DataFrame = {
     // localCheckpoint (eager) rather than persist: it TRUNCATES the
     // logical plan. Each round references the previous labels twice

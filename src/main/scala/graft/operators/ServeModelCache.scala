@@ -24,38 +24,49 @@ import org.apache.spark.sql.SparkSession
   *
   * The cache is LRU-bounded at [[MaxEntries]] so a long-lived serving
   * process touching many index dirs does not accumulate one resident
-  * model per dir forever (ADVICE r19). */
+  * model per dir forever (ADVICE r19). A Broadcast value is unpersisted
+  * when its entry is replaced or evicted (see [[release]]). */
 private[operators] object ServeModelCache {
 
   private val MaxEntries = 32
   private val HashMaxBytes = 8L << 20
 
-  private val cache =
-    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
-        size() > MaxEntries
-    }
+  // access-ordered: iteration starts at the least recently used entry
+  private val cache = new java.util.LinkedHashMap[String, (String, AnyRef)](
+    16, 0.75f, true)
 
+  /** In-flight publish files — DedupIndex's `shard-<i>.bin.tmp-<uuid>`,
+    * DecontamIndex's `.bloom.bin.tmp-<uuid>` — are not model state yet:
+    * fingerprinting them would flip the signature (and force a reload)
+    * for every publish in progress. */
+  private def isPublishTemp(name: String): Boolean = name.contains(".tmp-")
+
+  /** Name:length:content-hash of every listed file. A listed file can
+    * vanish before its open (DedupIndex's delete-then-rename bloom
+    * publish), so the open+hash gets FsRetry's bounded wait; a file
+    * still gone after it is left out, as the next listing would. */
   private def signature(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).map { s =>
+    fs.listStatus(p).filterNot(s => isPublishTemp(s.getPath.getName)).flatMap { s =>
       val tail =
-        if (s.isDirectory) "dir"
-        else if (s.getLen > HashMaxBytes) s"mtime:${s.getModificationTime}"
-        else {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val in = fs.open(s.getPath)
-          try {
-            val buf = new Array[Byte](64 * 1024)
-            var n = in.read(buf)
-            while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-          md.digest().map("%02x".format(_)).mkString
-        }
-      s"${s.getPath.getName}:${s.getLen}:$tail"
+        if (s.isDirectory) Some("dir")
+        else if (s.getLen > HashMaxBytes) Some(s"mtime:${s.getModificationTime}")
+        else FsRetry.retryFnf(md5Of(fs, s.getPath))
+      tail.map(t => s"${s.getPath.getName}:${s.getLen}:$t")
     }.sorted.mkString(",")
+  }
+
+  private def md5Of(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val in = fs.open(path)
+    try {
+      val buf = new Array[Byte](64 * 1024)
+      var n = in.read(buf)
+      while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
+    } finally in.close()
+    md.digest().map("%02x".format(_)).mkString
   }
 
   /** Cached `load` keyed by `dir`, revalidated against the dir's content
@@ -78,9 +89,27 @@ private[operators] object ServeModelCache {
     if (hit != null && hit._1 == sig) hit._2.asInstanceOf[T]
     else {
       val v = load
-      cache.synchronized(cache.put(key, (sig, v)))
+      val dropped = cache.synchronized {
+        val replaced = Option(cache.put(key, (sig, v))).toList
+        val evicted = List.newBuilder[(String, AnyRef)]
+        val lru = cache.values().iterator()
+        while (cache.size() > MaxEntries) { evicted += lru.next(); lru.remove() }
+        replaced ++ evicted.result()
+      }
+      dropped.foreach(d => release(d._2))
       v
     }
+  }
+
+  /** Frees what the cache no longer holds. A Broadcast is unpersisted,
+    * not destroyed: its executor copies go now instead of after the next
+    * driver GC, while a query still running on it re-fetches from the
+    * driver's copy, which ContextCleaner frees once nothing references
+    * the handle. (A dead context's handle only drops executor copies of
+    * whatever live broadcast reuses its id — they re-fetch too.) */
+  private def release(value: AnyRef): Unit = value match {
+    case b: org.apache.spark.broadcast.Broadcast[_] => b.unpersist(blocking = false)
+    case _ => ()
   }
 
   /** Test hook: drop everything (e.g. after deleting temp dirs). */

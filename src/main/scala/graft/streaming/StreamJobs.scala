@@ -302,7 +302,20 @@ object StreamJobs {
     }
 
   /** One micro-batch of the streaming curation (package-visible so the
-    * replay matrix is directly testable — the applyAggBatch pattern). */
+    * replay matrix is directly testable — the applyAggBatch pattern).
+    *
+    * The pipeline runs ONCE per batch: `accepted` is materialised with
+    * an eager localCheckpoint before anything is written, and the
+    * accepted/ write and both index appends read those blocks. A
+    * persist() would not survive the appends: every parquet write ends
+    * in Spark's CacheManager.recacheByPath, which drops each cached
+    * frame whose lineage reads the written path — and `accepted`'s
+    * lineage scans jaccard/shingles, jaccard/sizes and exact/hashes, so
+    * the Jaccard sizes/ write and the exact append's bloom pass would
+    * each re-run the whole ~25-job pipeline against indexes that already
+    * hold the batch. Checkpointing cuts the lineage, so no path-based
+    * recache can reach it; the blocks are released after the exact
+    * append, before the marker. */
   private[graft] def applyCurateBatch(batch: DataFrame, batchId: Long,
       modelDir: String, pipeDir: String): Unit = {
       val s = batch.sparkSession
@@ -330,12 +343,15 @@ object StreamJobs {
         // the full eval shingle set)
         val dc = graft.operators.DecontamIndex
           .dropContaminated(s, modelDir, nd)
-        // stage 5: split + accept (per-batch partition, dynamic overwrite)
+        // stage 5: split + accept (per-batch partition, dynamic overwrite).
+        // Checkpointed, not persisted: the index appends below would drop
+        // a cache whose lineage reads the indexes (see scaladoc)
         val b2 = substring(md5(col("text")), 1, 2)
         val accepted = dc.select(col("doc_id"), col("text"),
           when(b2 < "cd", "train").when(b2 < "e6", "val")
             .otherwise("test").as("split"))
-          .persist()
+          .localCheckpoint(true)
+        exactNew.unpersist()
         val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
         try {
           s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -352,8 +368,7 @@ object StreamJobs {
         graft.operators.DedupIndex.append(s, s"$pipeDir/exact",
           accepted.select("doc_id", "text"))
         crashProbe("after_exact_append")
-        accepted.unpersist()
-        exactNew.unpersist()
+        graft.operators.LlmOps.dropCheckpoint(accepted)
         writeMarker(s, pipeDir, batchId)
       }
       ()

@@ -828,6 +828,78 @@ class StreamingSpec extends SparkSpec {
       s"post-recovery batch must dedup against both indexes: $accepted")
   }
 
+  test("a curation batch evaluates its pipeline once: the model is read in one execution") {
+    import graft.SparkSpec.spark.implicits._
+    val pipeDir = java.nio.file.Files.createTempDirectory("curate-once").toString
+    val modelDir = s"$pipeDir/eval-model"
+    StreamJobs.buildDecontamModel(
+      Seq((1L, "exam question secret alpha bravo charlie delta echo " +
+        "foxtrot golf hotel")).toDF("doc_id", "text"), modelDir)
+    def doc(prefix: String): String =
+      (1 to 40).map(i => s"$prefix$i").mkString(" ")
+    val docA = doc("alpha")
+    def accepted(batch: Long): Set[Long] =
+      spark.read.parquet(s"$pipeDir/accepted").filter(col("batch_id") === batch)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    def run(batch: Long, rows: (Long, String)*): Set[Long] = {
+      val df = rows.toDF("doc_id", "text")
+      val (_, rec) = JobAttribution.of(spark)(
+        StreamJobs.applyCurateBatch(df, batch, modelDir, pipeDir))
+      // the model is read with its pinned schema: no footer-inference job
+      assert(!rec.jobs.exists(_.frame.startsWith("graft.operators.DecontamIndex$.screen")),
+        s"batch $batch inferred the model's schema: ${rec.jobs}")
+      rec.scansOf(s"$modelDir/shingles")
+    }
+    // each batch carries a contaminated doc: with no bloom survivor the
+    // adaptive plan would skip the model scan altogether
+    def dirty(prefix: String): String =
+      doc(prefix) + " exam question secret alpha bravo charlie delta echo foxtrot"
+    // batch 0 bootstraps the indexes; batch 1 screens against them, so
+    // `accepted`'s lineage reads jaccard/ and exact/ — the paths its own
+    // appends write
+    val reads0 = run(0L, (10L, docA), (14L, dirty("delta")), (15L, doc("bravo")))
+    val reads1 = run(1L,
+      (20L, docA),                                   // exact dup of 10
+      (21L, docA.replace("alpha20", "changed")),     // near dup of 10
+      (22L, doc("civic")),                           // novel
+      (23L, dirty("echo")))                          // contaminated
+    assert(accepted(0L) == Set(10L, 15L) && accepted(1L) == Set(22L))
+    assert(reads0.size == 1, s"batch 0 read the model in executions $reads0")
+    assert(reads1.size == 1,
+      s"batch 1 read the model in executions $reads1: an index append " +
+        "re-ran the pipeline")
+  }
+
+  test("an exactDedupIngest batch's sizes write does not re-run the screens") {
+    import graft.SparkSpec.spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val indexDir = java.nio.file.Files.createTempDirectory("jaccard-once").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamJobs.exactDedupIngest(mem.toDF().toDF("doc_id", "text"),
+      indexDir).start()
+    try {
+      mem.addData(
+        (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
+        (12L, "one two three four five six seven eight nine ten eleven twelve"))
+      q.processAllAvailable()
+      // batch 2 screens against the built index: its accepted frame's
+      // lineage scans shingles/, which the append then writes
+      val (_, rec) = JobAttribution.of(spark) {
+        mem.addData(
+          (20L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda xi"),
+          (21L, "red orange yellow green blue indigo violet white black grey pink brown"))
+        q.processAllAvailable()
+      }
+      val reads = rec.scansOf(s"$indexDir/shingles")
+      assert(reads.size == 1,
+        s"the standing shingles/ was read in executions $reads: the append " +
+          "re-ran the screen")
+    } finally q.stop()
+    val accepted = spark.read.parquet(s"$indexDir/accepted")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(accepted == Set(10L, 12L, 21L), s"$accepted")
+  }
+
   test("maintainAggEachBatch keeps the standing aggregate ≡ full recompute") {
     import graft.SparkSpec.spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -317,6 +317,21 @@ class DedupIndexSpec extends SparkSpec {
       "every concurrently-appended content must be indexed")
   }
 
+  test("a screen still evaluates after a republish and a later screen replace its blooms") {
+    // newAgainst is lazy and its filter reads the resident bloom
+    // broadcast in its tasks; the next screen after an append reloads
+    // the blooms, and the replaced broadcast must stay readable
+    val indexDir = java.nio.file.Files.createTempDirectory("dedup-republish").toString
+    DedupIndex.build(spark, Seq((1L, "an indexed doc")).toDF("doc_id", "text"), indexDir)
+    val first = DedupIndex.newAgainst(spark, indexDir,
+      Seq((10L, "an indexed doc"), (11L, "a fresh doc")).toDF("doc_id", "text"))
+    DedupIndex.append(spark, indexDir,
+      Seq((2L, "an appended doc")).toDF("doc_id", "text"))
+    assert(DedupIndex.newAgainst(spark, indexDir,
+      Seq((20L, "an appended doc")).toDF("doc_id", "text")).isEmpty)
+    assert(first.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L))
+  }
+
   test("near-dup index: screening composes exactly with inline discovery") {
     val indexDir = java.nio.file.Files.createTempDirectory("neardup-idx").toString
     val docs = graft.Tables.t(spark, sfDir, "documents")
