@@ -183,10 +183,9 @@ object Cli {
     0
   }
 
-  /** Zone-map sidecar inspection: per-(file, column) min/max entries.
-    * Always reads through the DataFrame surface (zoneMapDF handles both
-    * the text and parquet sidecar formats) — only the displayed entries
-    * reach the driver. */
+  /** Zone-map sidecar inspection: per-(file, column) min/max entries,
+    * read through zoneMapDF — only the displayed entries reach the
+    * driver. */
   private def stats(repo: String, ref: String, column: Option[String]): Int =
     withSession { s =>
       var df = SnapshotStore.zoneMapDF(s, repo, ref)

@@ -83,15 +83,13 @@ object NearDupIndex {
     // a separate broadcast-build job on the expensive subtree plus a
     // fresh exchange for the distinct (measured +0.2 s per screen at
     // sf0.1, plans/r20/idx_neardup_screen_*.txt).
-    val minBytes = spark.conf.getOption(BatchBcastMinSigsBytesKey)
-      .map(_.toLong).getOrElse(BatchBcastMinSigsBytes)
     // an unreadable size falls back to the corpus-streaming shape; a
     // fatal JVM error propagates instead of becoming a join-side choice
     val storedLen =
       try fs.getContentSummary(sigsPath).getLength
       catch { case NonFatal(_) => Long.MaxValue }
     val joined =
-      if (storedLen < minBytes)
+      if (storedLen < BatchBcastMinSigsBytes)
         batch.join(broadcast(stored),
           col("b") === col("b2") && col("sig") === col("sig2") &&
             col("new_id") =!= col("index_id"))
@@ -108,8 +106,6 @@ object NearDupIndex {
     * corpus streams. 32 MiB of sigs ≈ 10⁶ docs — far below any corpus
     * whose screen cost could matter, far above every test fixture. */
   private[graft] val BatchBcastMinSigsBytes: Long = 32L << 20
-  private[graft] val BatchBcastMinSigsBytesKey =
-    "spark.graft.neardup.batchBcastMinSigsBytes"
 
   /** Near-dup candidate pairs WITHIN a frame (a < b), deduped — exactly
     * the l2 screen, so it delegates to LlmOps.minhashPairsOf (r20): the

@@ -133,64 +133,17 @@ final class GcsStore(endpoint: String, bucket: String, key: String,
     extends RemoteStore {
 
   def read(start: Long, len: Int): Array[Byte] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return readOnce(start, len)
-      catch {
-        case t: TornReadException => throw t // the pinned generation is GONE
-        case t: java.net.ProtocolException => throw t // replaying can't fix it
-        case t: IOException if attempt <= maxRetries =>
-          Thread.sleep(math.min(200L * attempt, 1000L))
-        case t: IOException =>
-          throw new IOException(s"GCS range GET failed after $maxRetries retries", t)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def readOnce(start: Long, len: Int): Array[Byte] = {
     val query = "alt=media" +
       (if (generation != 0) s"&ifGenerationMatch=$generation" else "")
-    val conn = GcsStore.open("GET", endpoint,
-      s"/storage/v1/b/$bucket/o/${GcsStore.encodeObject(key)}?$query", tokens)
-    try {
-      conn.setRequestProperty("Range", s"bytes=$start-${start + len - 1}")
-      conn.getResponseCode match {
-        case 200 if start > 0 ||
-            { val cl = conn.getContentLengthLong; cl >= 0 && cl < len } =>
-          // body starts at offset 0 — serving it as [start, start+len)
-          // would be silent corruption (same guard as S3Store.readOnce).
-          // Content-Length -1 (chunked/streamed) is NOT a violation at
-          // start == 0: the body is still the object from offset 0 and a
-          // truly short object surfaces as a short-read IOException below.
-          throw new java.net.ProtocolException(
-            s"GCS endpoint did not honor Range bytes=$start-${start + len - 1} " +
-              s"for gs://$bucket/$key (got 200 with length ${conn.getContentLengthLong})")
-        case 206 | 200 =>
-          val in = conn.getInputStream
-          try {
-            val buf = new Array[Byte](len)
-            var off = 0
-            while (off < len) {
-              val n = in.read(buf, off, len - off)
-              if (n < 0) throw new IOException(
-                s"short GCS ranged read: got $off of $len at $start")
-              off += n
-            }
-            buf
-          } finally in.close()
-        case 412 =>
-          throw new TornReadException(
-            s"gs://$bucket/$key generation $generation gone — object replaced " +
-              "under an open reader")
-        case 401 =>
-          tokens.invalidate() // expired mid-flight; retry path re-exchanges
-          throw new IOException(s"GCS range GET gs://$bucket/$key returned 401")
-        case code =>
-          throw new IOException(s"GCS range GET gs://$bucket/$key returned $code")
-      }
-    } finally conn.disconnect()
+    RangedGet.read("GCS", s"gs://$bucket/$key", s"generation $generation",
+      start, len, maxRetries,
+      // an expired token answers 401: drop it so the retry re-exchanges
+      onFail = code => if (code == 401) tokens.invalidate()) { range =>
+      val conn = GcsStore.open("GET", endpoint,
+        s"/storage/v1/b/$bucket/o/${GcsStore.encodeObject(key)}?$query", tokens)
+      conn.setRequestProperty("Range", range)
+      conn
+    }
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{File, IOException, RandomAccessFile}
-import java.net.{HttpURLConnection, URI}
+import java.net.{HttpURLConnection, ProtocolException, URI}
 
 /** The "remote" seam of the lazy FileSystem — a ranged read against a
   * backing object store (reference remote/gcs.go:302-331 NewRangeReader,
@@ -62,42 +62,54 @@ final class PinnedLocalStore(src: File, pinSize: Long, pinMtime: Long)
   * reader was opened against no longer exists. */
 final class TornReadException(msg: String) extends IOException(msg)
 
-/** HTTP(S) remote with Range GET + If-Match ETag pinning + a bounded retry
-  * budget (reference remote/http.go:22-51; retry ≤10 core/freezer.go:566-600).
-  *
-  * The ETag is captured once at open (the snapshot pin); every ranged read
-  * sends `If-Match`, so a concurrently-replaced object answers 412 and the
-  * read fails with TornReadException instead of silently mixing bytes from
-  * two object generations. Transient IO errors retry with linear backoff;
-  * 412 never retries (the object is GONE, not flaky). */
-final class HttpStore(url: String, etag: Option[String], maxRetries: Int = 10)
-    extends RemoteStore {
+/** The ranged-GET protocol shared by the HTTP-family stores (HttpStore,
+  * GcsStore, S3Store): a bounded retry budget with linear backoff for
+  * transient IO (reference retry ≤10, core/freezer.go:566-600), the
+  * ignored-Range guard, read-fully, and 412 → TornReadException. Torn
+  * reads and protocol violations never retry: the pinned object is gone,
+  * and replaying a protocol violation returns the same wrong answer.
+  * Each store supplies only its connection opener, which applies the
+  * Range header and the store's pin. */
+private[sources] object RangedGet {
 
-  def read(start: Long, len: Int): Array[Byte] = {
+  /** Read exactly `len` bytes at `start`. `kind` and `obj` name the store
+    * and object in messages, `pin` the precondition a 412 broke. `open`
+    * gets the Range header value; `onFail` sees every other failing
+    * status code before it becomes a (retried) IOException. */
+  def read(kind: String, obj: String, pin: String, start: Long, len: Int,
+      maxRetries: Int, onFail: Int => Unit = _ => ())(
+      open: String => HttpURLConnection): Array[Byte] = {
+    val range = s"bytes=$start-${start + len - 1}"
     var attempt = 0
     while (true) {
       attempt += 1
-      try return readOnce(start, len)
+      try return once(kind, obj, pin, start, len, open(range), onFail)
       catch {
-        case t: TornReadException => throw t // never retry a torn read
-        case t: IOException if attempt <= maxRetries =>
+        case t: TornReadException => throw t
+        case t: ProtocolException => throw t
+        case _: IOException if attempt <= maxRetries =>
           Thread.sleep(math.min(200L * attempt, 1000L))
         case t: IOException =>
-          throw new IOException(s"range GET failed after $maxRetries retries", t)
+          throw new IOException(s"$kind range GET failed after $maxRetries retries", t)
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
-  private def readOnce(start: Long, len: Int): Array[Byte] = {
-    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+  private def once(kind: String, obj: String, pin: String, start: Long,
+      len: Int, conn: HttpURLConnection, onFail: Int => Unit): Array[Byte] =
     try {
-      conn.setRequestMethod("GET")
-      conn.setConnectTimeout(5000)
-      conn.setReadTimeout(30000)
-      conn.setRequestProperty("Range", s"bytes=$start-${start + len - 1}")
-      etag.foreach(e => conn.setRequestProperty("If-Match", e))
       conn.getResponseCode match {
+        case 200 if start > 0 ||
+            { val cl = conn.getContentLengthLong; cl >= 0 && cl < len } =>
+          // The endpoint ignored the Range header: a 200 body starts at
+          // offset 0, so serving it as [start, start+len) would silently
+          // return the wrong region. Content-Length -1 (chunked) at
+          // start == 0 is still a correct full-body read — a short object
+          // hits the short-read guard below.
+          throw new ProtocolException(
+            s"$kind endpoint did not honor Range bytes=$start-${start + len - 1} " +
+              s"for $obj (got 200 with length ${conn.getContentLengthLong})")
         case 206 | 200 =>
           val in = conn.getInputStream
           try {
@@ -106,19 +118,41 @@ final class HttpStore(url: String, etag: Option[String], maxRetries: Int = 10)
             while (off < len) {
               val n = in.read(buf, off, len - off)
               if (n < 0) throw new IOException(
-                s"short ranged read: got $off of $len at $start")
+                s"short $kind ranged read: got $off of $len at $start")
               off += n
             }
             buf
           } finally in.close()
         case 412 =>
           throw new TornReadException(
-            s"ETag mismatch on $url — object replaced under an open reader")
+            s"$obj $pin mismatch — object replaced under an open reader")
         case code =>
-          throw new IOException(s"range GET $url returned $code")
+          onFail(code)
+          throw new IOException(s"$kind range GET $obj returned $code")
       }
     } finally conn.disconnect()
-  }
+}
+
+/** HTTP(S) remote with Range GET + If-Match ETag pinning + a bounded retry
+  * budget (reference remote/http.go:22-51; the protocol is [[RangedGet]]).
+  *
+  * The ETag is captured once at open (the snapshot pin); every ranged read
+  * sends `If-Match`, so a concurrently-replaced object answers 412 and the
+  * read fails with TornReadException instead of silently mixing bytes from
+  * two object generations. */
+final class HttpStore(url: String, etag: Option[String], maxRetries: Int = 10)
+    extends RemoteStore {
+
+  def read(start: Long, len: Int): Array[Byte] =
+    RangedGet.read("HTTP", url, "ETag", start, len, maxRetries) { range =>
+      val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("GET")
+      conn.setConnectTimeout(5000)
+      conn.setReadTimeout(30000)
+      conn.setRequestProperty("Range", range)
+      etag.foreach(e => conn.setRequestProperty("If-Match", e))
+      conn
+    }
 }
 
 object HttpStore {

@@ -109,64 +109,13 @@ final class S3Store(endpoint: String, bucket: String, key: String,
     region: String, creds: SigV4.Credentials, etag: Option[String],
     maxRetries: Int = 10) extends RemoteStore {
 
-  def read(start: Long, len: Int): Array[Byte] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return readOnce(start, len)
-      catch {
-        case t: TornReadException => throw t
-        // protocol violations (e.g. Range ignored) are permanent — retrying
-        // would just replay the same wrong answer
-        case t: java.net.ProtocolException => throw t
-        case t: IOException if attempt <= maxRetries =>
-          Thread.sleep(math.min(200L * attempt, 1000L))
-        case t: IOException =>
-          throw new IOException(s"S3 range GET failed after $maxRetries retries", t)
-      }
+  def read(start: Long, len: Int): Array[Byte] =
+    RangedGet.read("S3", s"s3://$bucket/$key", "ETag", start, len,
+        maxRetries) { range =>
+      // the Range and If-Match headers are signed, so they go in here
+      S3Store.signedConnection("GET", endpoint, bucket, key, region, creds,
+        SigV4.EmptySha, Seq("range" -> range) ++ etag.map("if-match" -> _))
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def readOnce(start: Long, len: Int): Array[Byte] = {
-    val extra = Seq("range" -> s"bytes=$start-${start + len - 1}") ++
-      etag.map("if-match" -> _)
-    val conn = S3Store.signedConnection("GET", endpoint, bucket, key,
-      region, creds, SigV4.EmptySha, extra)
-    try {
-      conn.getResponseCode match {
-        case 200 if start > 0 ||
-            { val cl = conn.getContentLengthLong; cl >= 0 && cl < len } =>
-          // The endpoint ignored the Range header (real S3 honors it, but
-          // this class targets any S3-compatible service): a 200 body
-          // starts at offset 0, so reading `len` bytes from it would
-          // silently return the wrong region for any start > 0.
-          // Content-Length -1 (chunked) at start == 0 is still a correct
-          // full-body read — a short object hits the short-read guard.
-          throw new java.net.ProtocolException(
-            s"S3 endpoint did not honor Range bytes=$start-${start + len - 1} " +
-              s"for s3://$bucket/$key (got 200 with length ${conn.getContentLengthLong})")
-        case 206 | 200 =>
-          val in = conn.getInputStream
-          try {
-            val buf = new Array[Byte](len)
-            var off = 0
-            while (off < len) {
-              val n = in.read(buf, off, len - off)
-              if (n < 0) throw new IOException(
-                s"short S3 ranged read: got $off of $len at $start")
-              off += n
-            }
-            buf
-          } finally in.close()
-        case 412 =>
-          throw new TornReadException(
-            s"s3://$bucket/$key ETag mismatch — object replaced under an open reader")
-        case code =>
-          throw new IOException(s"S3 range GET s3://$bucket/$key returned $code")
-      }
-    } finally conn.disconnect()
-  }
 }
 
 object S3Store {

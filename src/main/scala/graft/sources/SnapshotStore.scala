@@ -138,14 +138,7 @@ object SnapshotStore {
       clean.map { case (p, sz, _) => ManifestEntry(p, sz, prev(p)._3) } ++
         hashedResults.map { case (p, sz, _, sha, _) => ManifestEntry(p, sz, sha) }
       ).sortBy(_.path)
-    // the manifest is itself a CAS block — the snapshot's "root BID"
-    val manifestBytes = entries
-      .map(e => s"${e.path}\t${e.size}\t${e.sha256}").mkString("\n").getBytes("UTF-8")
-    val manifestSha = PufsFileSystem.sha256Bytes(manifestBytes)
-    val tmp = Files.createTempFile(casDir(repo), ".mf", ".part")
-    Files.write(tmp, manifestBytes)
-    val manifestUploaded = casPut(repo, manifestSha, tmp)
-    Files.deleteIfExists(tmp)
+    val (manifestSha, manifestUploaded) = commitManifest(repo, entries)
     setRoot(repo, label, manifestSha)
     renewLease(repo, label, manifestSha)
     val mtimes = files.map { case (p, _, mt) => p -> mt }.toMap
@@ -153,6 +146,22 @@ object SnapshotStore {
       entries.map(e => (e.path, e.size, mtimes(e.path), e.sha256)))
     PublishStats(manifestSha,
       uploadedBlocks + (if (manifestUploaded) 1 else 0), hashedResults.size)
+  }
+
+  /** Write `entries` as a manifest block (one `path\tsize\tsha` line
+    * each) into the CAS — the manifest is itself a CAS block, the
+    * snapshot's "root BID". Returns (manifest sha, whether the block was
+    * newly uploaded). */
+  private def commitManifest(repo: String,
+      entries: Seq[ManifestEntry]): (String, Boolean) = {
+    val bytes = entries
+      .map(e => s"${e.path}\t${e.size}\t${e.sha256}").mkString("\n").getBytes("UTF-8")
+    val sha = PufsFileSystem.sha256Bytes(bytes)
+    val tmp = Files.createTempFile(casDir(repo), ".mf", ".part")
+    try {
+      Files.write(tmp, bytes)
+      (sha, casPut(repo, sha, tmp))
+    } finally Files.deleteIfExists(tmp)
   }
 
   private def readStatCache(repo: String, label: String): Map[String, (Long, Long, String)] = {
@@ -280,14 +289,10 @@ object SnapshotStore {
     var deleted = 0
     listDir(casDir(repo)).foreach { b =>
       val name = b.getFileName.toString
-      // zone-map sidecars (text + parquet) live and die with their
-      // manifest — they're keyed stats-<sha> / statspq-<sha>, not by
-      // content sha, so resolve liveness through the manifest's sha
-      val base =
-        if (name.startsWith("stats-")) name.stripPrefix("stats-")
-        else if (name.startsWith("statspq-")) name.stripPrefix("statspq-")
-        else name
-      if (!name.startsWith(".") && !live.contains(base)) {
+      // a zone-map sidecar lives and dies with its manifest — it is keyed
+      // statspq-<sha>, not by content sha, so resolve liveness through
+      // the manifest's sha
+      if (!name.startsWith(".") && !live.contains(name.stripPrefix("statspq-"))) {
         deleteRecursively(b); deleted += 1
       }
     }
@@ -455,100 +460,6 @@ object SnapshotStore {
     * values, cast to double — numeric/date columns). */
   case class ZoneEntry(path: String, column: String, min: Double, max: Double)
 
-  private def statsPath(repo: String, manifestSha: String) =
-    casDir(repo).resolve("stats-" + manifestSha)
-
-  /** Collect per-file min/max for `cols` over the parquet tree at
-    * `srcDir` (the staging tree just published as `manifestSha`) — one
-    * Spark job: groupBy(input_file_name), partial-agg min/max, manifest-
-    * relative paths. Files a column is entirely NULL in get no entry
-    * (pruning keeps them — conservative). Returns the entry count. */
-  def publishStats(spark: SparkSession, srcDir: String, repo: String,
-      manifestSha: String, cols: Seq[String],
-      distributedThreshold: Int = 10000): Int = {
-    import org.apache.spark.sql.functions._
-    // the text-sidecar path collects O(files) rows to the driver — fine
-    // for a human-sized tree, wrong at 1M files. Above the threshold,
-    // route to the Spark-task writer so callers can't pick the
-    // driver-bound path by accident. Count the files that will actually
-    // be scanned (under srcDir) — not the manifest (advisor r17): a
-    // caller publishing stats for a SUBTREE of a big snapshot must not
-    // be routed by the untouched remainder's size.
-    val nFiles = {
-      val s = Files.walk(Paths.get(srcDir))
-      try s.filter(p => Files.isRegularFile(p) &&
-        p.toString.endsWith(".parquet")).count().toInt
-      finally s.close()
-    }
-    // one sidecar FORMAT per manifest (advisor r18, optimizeTable's
-    // usePq rule): if a PARQUET sidecar already exists for this
-    // manifestSha — an earlier distributed run — a small-subtree call
-    // must not write a TEXT sidecar zoneMapDF would shadow with the
-    // stale parquet one; stay parquet regardless of the routing count
-    if (nFiles > distributedThreshold ||
-        Files.exists(statsPqDir(repo, manifestSha)))
-      return publishStatsDistributed(spark, srcDir, repo, manifestSha, cols).toInt
-    // the staging tree nests tables under subdirs — walk it all, and
-    // merge schemas so a multi-table tree exposes every stats column
-    // (files lacking a column read it as null → no entry → kept)
-    val df = spark.read
-      .option("recursiveFileLookup", "true")
-      .option("mergeSchema", "true")
-      .parquet(srcDir)
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"__min_$c"),
-      max(col(c).cast("double")).as(s"__max_$c")))
-    val rows = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val srcRoot = Paths.get(srcDir).toAbsolutePath
-    val entries = rows.flatMap { r =>
-      // input_file_name() is a file: URI; manifest keys are srcDir-relative
-      val norm = Paths.get(new java.net.URI(r.getAs[String]("__file")).getPath)
-        .toAbsolutePath
-      val rel = srcRoot.relativize(norm).toString.replace(File.separatorChar, '/')
-      cols.flatMap { c =>
-        val mn = r.getAs[Any](s"__min_$c")
-        val mx = r.getAs[Any](s"__max_$c")
-        if (mn == null || mx == null) None
-        else {
-          val mnD = mn.asInstanceOf[Double]
-          val mxD = mx.asInstanceOf[Double]
-          // NaN bounds poison range checks (Spark sorts NaN largest, so a
-          // single NaN makes max=NaN and `max >= lo` false for every lo —
-          // the file would be pruned despite matching rows): skip the
-          // entry, same conservative-keep as the all-null case. Widen the
-          // finite bounds by one ULP so the double cast of wider source
-          // types (bigint/decimal beyond 2^53) can't round a stored bound
-          // past a true value.
-          if (mnD.isNaN || mxD.isNaN) None
-          else Some(ZoneEntry(rel, c, Math.nextDown(mnD), Math.nextUp(mxD)))
-        }
-      }
-    }.sortBy(e => (e.path, e.column))
-    val bytes = entries
-      .map(e => s"${e.path}\t${e.column}\t${e.min}\t${e.max}")
-      .mkString("\n").getBytes("UTF-8")
-    val tmp = Files.createTempFile(casDir(repo), ".zs", ".part")
-    Files.write(tmp, bytes)
-    Files.move(tmp, statsPath(repo, manifestSha),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    entries.length
-  }
-
-  /** The zone map of a snapshot (label or manifest sha); empty when no
-    * stats sidecar was published. */
-  def zoneMap(repo: String, ref: String): Seq[ZoneEntry] = {
-    val sha = getRoot(repo, ref).getOrElse(ref)
-    val p = statsPath(repo, sha)
-    if (!Files.exists(p)) Seq.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .filter(_.nonEmpty).map { line =>
-        val Array(path, c, mn, mx) = line.split("\t")
-        ZoneEntry(path, c, mn.toDouble, mx.toDouble)
-      }
-  }
-
   /** OPTIMIZE advances a label (VERDICT r16 #5) — the Delta
     * OPTIMIZE-inside-the-table analog over write-once storage: rewrite
     * ONE table subtree of a published snapshot through
@@ -566,11 +477,9 @@ object SnapshotStore {
     * `statsCols ++ cols` (tight per-file boxes are the point of the
     * rewrite); untouched files carry their old entries forward, so
     * prune-after-optimize works across the whole snapshot through the
-    * label. Fresh and carried entries land in ONE sidecar format —
-    * parquet when the old sidecar was parquet or the snapshot is past
-    * `distributedThreshold` files, else text (advisor r17: the split
-    * formats made the two read paths disagree). A Hive-partitioned
-    * subtree keeps its partition-column VALUES: the k=v layout is
+    * label; fresh and carried entries land together in the new
+    * snapshot's sidecar. A Hive-partitioned subtree keeps its
+    * partition-column VALUES: the k=v layout is
     * reconstructed from the manifest paths before the rewrite, and the
     * columns land physical in the new files (advisor r17) — losslessly:
     * type inference is off (it would rewrite p=0001 to int 1); a column
@@ -596,7 +505,6 @@ object SnapshotStore {
   def optimizeTable(spark: SparkSession, repo: String, label: String,
       table: String, targetBytes: Long, cols: Seq[String],
       statsCols: Seq[String] = Nil,
-      distributedThreshold: Int = 10000,
       distributedHashBytes: Long = 256L << 20): (String, Int, Int) = {
     val sha0 = getRoot(repo, label).getOrElse(
       throw new IllegalArgumentException(s"no such label: $label"))
@@ -692,25 +600,9 @@ object SnapshotStore {
         outDir.toString, targetBytes, cols)
       val newEntries =
         hashStagedEntries(spark, repo, table, outDir, distributedHashBytes)
-      val entries = (kept ++ newEntries).sortBy(_.path)
-      val manifestBytes = entries
-        .map(e => s"${e.path}\t${e.size}\t${e.sha256}").mkString("\n")
-        .getBytes("UTF-8")
-      val manifestSha = PufsFileSystem.sha256Bytes(manifestBytes)
-      val mTmp = Files.createTempFile(casDir(repo), ".mf", ".part")
-      Files.write(mTmp, manifestBytes)
-      casPut(repo, manifestSha, mTmp)
-      Files.deleteIfExists(mTmp)
+      val (manifestSha, _) = commitManifest(repo, (kept ++ newEntries).sortBy(_.path))
       // stats sidecar BEFORE the pointer flip: fresh entries for the
-      // rewritten files, carried entries for everything untouched — in
-      // ONE format (advisor r17). The old code routed fresh stats
-      // through publishStats, whose threshold counted the WHOLE
-      // manifest, so a big snapshot got its fresh entries as a parquet
-      // sidecar while the carried merge wrote text — and zoneMapDF
-      // (prefers parquet) silently lost the carried entries. Format
-      // decision: parquet if the old sidecar was parquet or the merged
-      // snapshot is past the driver-bound threshold, else text; fresh
-      // and carried both land in that one sidecar.
+      // rewritten files, carried entries for everything untouched
       val wantCols = (statsCols ++ cols).distinct
       val carriedDF = zoneMapDF(spark, repo, sha0).filter(
         !org.apache.spark.sql.functions.col("path").startsWith(prefix))
@@ -718,27 +610,8 @@ object SnapshotStore {
         if (wantCols.isEmpty) None
         else Some(statsFrame(spark, staging.toString, wantCols,
           Some(newEntries.map(_.path))))
-      val mergedDF = freshDF.map(_.unionByName(carriedDF)).getOrElse(carriedDF)
-      val usePq = Files.exists(statsPqDir(repo, sha0)) ||
-        entries.count(_.path.endsWith(".parquet")) > distributedThreshold
-      if (usePq)
-        mergedDF.write.mode("overwrite")
-          .parquet(statsPqDir(repo, manifestSha).toString)
-      else {
-        val merged = mergedDF.collect().map(r => ZoneEntry(r.getString(0),
-            r.getString(1), r.getDouble(2), r.getDouble(3)))
-          .sortBy(e => (e.path, e.column))
-        if (merged.nonEmpty) {
-          val bytes = merged
-            .map(e => s"${e.path}\t${e.column}\t${e.min}\t${e.max}")
-            .mkString("\n").getBytes("UTF-8")
-          val sTmp = Files.createTempFile(casDir(repo), ".zs", ".part")
-          Files.write(sTmp, bytes)
-          Files.move(sTmp, statsPath(repo, manifestSha),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          ()
-        }
-      }
+      freshDF.map(_.unionByName(carriedDF)).getOrElse(carriedDF)
+        .write.mode("overwrite").parquet(statsPqDir(repo, manifestSha).toString)
       setRoot(repo, label, manifestSha)
       renewLease(repo, label, manifestSha)
       (manifestSha, tbl.size, newEntries.size)
@@ -787,24 +660,6 @@ object SnapshotStore {
     }
   }
 
-  /** Manifest paths whose `[min, max]` for `column` intersects
-    * `[lo, hi]` — plus every file the zone map has NO entry for
-    * (non-parquet, all-null, or uncovered column: skipping is only ever
-    * an optimization, never allowed to change results). */
-  def prunedFiles(repo: String, ref: String, column: String,
-      lo: Double, hi: Double): Seq[String] = {
-    val sha = getRoot(repo, ref).getOrElse(ref)
-    val manifest = mountAt(repo, sha).map(_.path)
-    val zm = zoneMap(repo, sha).filter(_.column == column)
-      .map(e => e.path -> e).toMap
-    manifest.filter { p =>
-      zm.get(p) match {
-        case Some(e) => e.max >= lo && e.min <= hi
-        case None => true // no stats — keep (conservative)
-      }
-    }
-  }
-
   /** Zone-map-pruned parquet read THROUGH a pufs:// snapshot mount: the
     * sidecar cuts the file list before Spark ever opens a footer, then
     * the surviving files are served by the lazy chunk-pull cache (column
@@ -834,15 +689,12 @@ object SnapshotStore {
       // an empty-path parquet read fails schema inference, so serve an
       // empty result with the snapshot's real schema — one file read
       // under an always-false filter (footer-only work in practice).
-      // Schema source: a file the zone map has an entry for THIS column
-      // in — a snapshot can hold several tables, and an arbitrary
-      // parquet file could carry a different table's schema (ADVICE r5).
-      val sha = getRoot(repo, ref).getOrElse(ref)
-      val withCol = zoneMap(repo, sha).filter(_.column == column)
-        .map(_.path).toSet
-      val candidates = mountAt(repo, sha).map(_.path).filter(inScope)
-      val any = candidates.filter(withCol).headOption
-        .orElse(candidates.headOption)
+      // Schema source: the first in-scope parquet file. Pruning keeps
+      // every file without a zone entry for `column`, so each in-scope
+      // file here has one — it holds `column`, and pathPrefix picks the
+      // table when a snapshot holds several (ADVICE r5).
+      val any = mountAt(repo, getRoot(repo, ref).getOrElse(ref))
+        .map(_.path).find(inScope)
       require(any.nonEmpty, s"snapshot $ref contains no parquet files" +
         (if (pathPrefix.nonEmpty) s" under '$pathPrefix'" else ""))
       spark.read.parquet(toUri(any.get))
@@ -885,12 +737,12 @@ object SnapshotStore {
   }
 
   // ------------------------------------------------------------------
-  // Distributed metadata — the 1M-file / 100 TB path. mountAt/zoneMap/
-  // prunedFiles above materialize the manifest on the driver, which is
-  // fine to ~100k files; past that the metadata itself must be a
-  // DataFrame (the Delta/Iceberg distributed-manifest move; the
-  // reference keeps listings hierarchical via its dir-block Merkle tree,
-  // core/datastore.go:981-997). These variants never hold more than the
+  // Distributed metadata — the 1M-file / 100 TB path. mountAt above
+  // materializes the manifest on the driver, which is fine to ~100k
+  // files; past that the metadata itself must be a DataFrame (the
+  // Delta/Iceberg distributed-manifest move; the reference keeps
+  // listings hierarchical via its dir-block Merkle tree,
+  // core/datastore.go:981-997). These never hold more than the
   // SURVIVING file list on the driver.
   // ------------------------------------------------------------------
 
@@ -911,30 +763,19 @@ object SnapshotStore {
       .csv(casDir(repo).resolve(sha).toString)
   }
 
-  /** Zone-map stats as a DataFrame (path, column, min, max): prefers the
-    * parquet sidecar (publishStatsDistributed), falls back to parsing the
-    * text sidecar with Spark, else an empty frame — pruning downgrades to
-    * keep-everything when no stats exist. */
+  /** Zone-map stats as a DataFrame (path, column, min, max) read from
+    * the snapshot's sidecar, or an empty frame when it has none —
+    * pruning downgrades to keep-everything when no stats exist. */
   def zoneMapDF(spark: SparkSession, repo: String, ref: String): DataFrame = {
-    val sha = getRoot(repo, ref).getOrElse(ref)
-    val schema = "path STRING, column STRING, min DOUBLE, max DOUBLE"
-    val pq = statsPqDir(repo, sha)
-    val txt = statsPath(repo, sha)
-    if (Files.exists(pq)) spark.read.parquet(pq.toString)
-    else if (Files.exists(txt))
-      spark.read.schema(schema).option("sep", "\t")
-        .option("quote", "\u0000").csv(txt.toString)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    val pq = statsPqDir(repo, getRoot(repo, ref).getOrElse(ref))
+    if (Files.exists(pq)) spark.read.parquet(pq.toString) else noZones(spark)
   }
 
-  /** publishStats without the driver collect: per-file min/max computed,
-    * NaN-screened, ULP-widened, and WRITTEN entirely by Spark tasks as a
-    * parquet sidecar — O(files) rows never touch the driver. Same
-    * conservative-keep semantics as publishStats (all-null or NaN column
-    * in a file → no entry → never pruned). Returns the entry count (one
-    * count over the written sidecar — metadata-sized). */
+  private def noZones(spark: SparkSession): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "path STRING, column STRING, min DOUBLE, max DOUBLE"))
+
   /** The (path, column, min, max) zone entries for parquet under
     * `srcDir` — all files, or only `onlyPaths` (srcDir-relative) when
     * given. Computed, NaN-screened, and ULP-widened entirely in Spark
@@ -942,15 +783,14 @@ object SnapshotStore {
   private def statsFrame(spark: SparkSession, srcDir: String,
       cols: Seq[String], onlyPaths: Option[Seq[String]]): DataFrame = {
     import org.apache.spark.sql.functions._
+    // the staging tree nests tables under subdirs — walk it all, and
+    // merge schemas so a multi-table tree exposes every stats column
+    // (files lacking a column read it as null → no entry → kept)
     val reader = spark.read
       .option("recursiveFileLookup", "true")
       .option("mergeSchema", "true")
     val df = onlyPaths match {
-      case Some(ps) if ps.isEmpty =>
-        return spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "path STRING, column STRING, min DOUBLE, max DOUBLE"))
+      case Some(ps) if ps.isEmpty => return noZones(spark)
       case Some(ps) => reader.parquet(ps.map(p => s"$srcDir/$p"): _*)
       case None     => reader.parquet(srcDir)
     }
@@ -959,32 +799,34 @@ object SnapshotStore {
     val present = cols.filter(df.schema.fieldNames.contains)
     require(onlyPaths.isDefined || present.nonEmpty,
       s"none of $cols exist under $srcDir")
-    if (present.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "path STRING, column STRING, min DOUBLE, max DOUBLE"))
+    if (present.isEmpty) return noZones(spark)
     val aggs = present.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"__min_$c"),
       max(col(c).cast("double")).as(s"__max_$c")))
     val perFile = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
     // manifest keys are srcDir-relative; input_file_name is a file: URI.
-    // Path/URI normalization is exactly the driver version's — as a UDF
-    // so it runs where the rows are (no driver round trip).
+    // The normalization is a UDF so it runs where the rows are (no
+    // driver round trip).
     val srcDirStr = srcDir
     val relOf = udf { f: String =>
       val root = Paths.get(srcDirStr).toAbsolutePath
       root.relativize(Paths.get(new java.net.URI(f).getPath).toAbsolutePath)
         .toString.replace(File.separatorChar, '/')
     }
-    // ULP widening (same rationale as publishStats); no built-in
-    // nextUp/nextDown expression exists, and this is the metadata path,
-    // so a scalar UDF is the right tool
+    // Widen the finite bounds by one ULP so the double cast of wider
+    // source types (bigint/decimal beyond 2^53) can't round a stored
+    // bound past a true value. No built-in nextUp/nextDown expression
+    // exists, and this is the metadata path, so a scalar UDF is the
+    // right tool.
     val down = udf(Math.nextDown(_: Double))
     val up = udf(Math.nextUp(_: Double))
     val stackExpr = "stack(" + present.size + ", " + present.map(c =>
       s"'$c', `__min_$c`, `__max_$c`").mkString(", ") + ") AS (column, mn, mx)"
+    // NaN bounds poison range checks (Spark sorts NaN largest, so a single
+    // NaN makes max=NaN and `max >= lo` false for every lo — the file
+    // would be pruned despite matching rows): no entry, the same
+    // conservative keep as an all-null column
     perFile.select(relOf(col("__file")).as("path"), expr(stackExpr))
       .filter(col("mn").isNotNull && col("mx").isNotNull &&
         !isnan(col("mn")) && !isnan(col("mx")))
@@ -992,9 +834,16 @@ object SnapshotStore {
         down(col("mn")).as("min"), up(col("mx")).as("max"))
   }
 
-  def publishStatsDistributed(spark: SparkSession, srcDir: String,
-      repo: String, manifestSha: String, cols: Seq[String]): Long = {
-    require(cols.nonEmpty, "publishStatsDistributed: no columns")
+  /** Publish the zone map of the parquet tree at `srcDir` (the staging
+    * tree just published as `manifestSha`): per-file min/max for `cols`,
+    * computed and WRITTEN entirely by Spark tasks as the parquet sidecar
+    * `CAS/statspq-<manifestSha>` — O(files) rows never touch the driver.
+    * A file whose column is all-null or holds a NaN gets no entry for it,
+    * so it is never pruned. Returns the entry count (one count over the
+    * written sidecar — metadata-sized). */
+  def publishStats(spark: SparkSession, srcDir: String, repo: String,
+      manifestSha: String, cols: Seq[String]): Long = {
+    require(cols.nonEmpty, "publishStats: no columns")
     statsFrame(spark, srcDir, cols, None)
       .write.mode("overwrite").parquet(statsPqDir(repo, manifestSha).toString)
     spark.read.parquet(statsPqDir(repo, manifestSha).toString).count()
@@ -1017,8 +866,7 @@ object SnapshotStore {
     // an unchanged republish yields the SAME manifest sha (Merkle) — the
     // sidecar is already current, and overwriting it from itself would
     // corrupt the read-while-write
-    val havePrev = Files.exists(statsPqDir(repo, prevSha)) ||
-      Files.exists(statsPath(repo, prevSha))
+    val havePrev = Files.exists(statsPqDir(repo, prevSha))
     // a column requested now but absent from the previous sidecar has no
     // carry-over entries for unchanged files — those columns must be
     // scanned across ALL files, or pruning on them silently degrades to
@@ -1045,7 +893,7 @@ object SnapshotStore {
         scanned)
     }
     if (!havePrev) {
-      val n = publishStatsDistributed(spark, srcDir, repo, manifestSha, cols)
+      val n = publishStats(spark, srcDir, repo, manifestSha, cols)
       val scanned = mountAt(repo, manifestSha)
         .count(_.path.endsWith(".parquet"))
       return (n, scanned)
@@ -1080,8 +928,12 @@ object SnapshotStore {
       scanned)
   }
 
-  /** prunedFiles as a DataFrame: manifest left-joined to the zone map,
-    * range-filtered — the decision runs where the metadata is. A caller
+  /** Manifest paths whose `[min, max]` for `column` intersects
+    * `[lo, hi]` — plus every file the zone map has NO entry for
+    * (non-parquet, all-null, or uncovered column: skipping is only ever
+    * an optimization, never allowed to change results). The manifest is
+    * left-joined to the zone map and range-filtered, so the decision runs
+    * where the metadata is. A caller
     * that needs concrete paths (spark.read takes a path list) collects
     * only the SURVIVORS, which pruning has already cut. */
   def prunedFilesDF(spark: SparkSession, repo: String, ref: String,

@@ -468,8 +468,9 @@ class PufsFsSpec extends SparkSpec {
   // --- HTTP remote connector (B10 analog: Range GET + If-Match + retry) ---
 
   /** In-process HTTP object server: Range + If-Match semantics, injectable
-    * ETag flips and transient failures. */
-  private class ObjServer(data: Array[Byte]) {
+    * ETag flips and transient failures; `ignoreRange` answers every GET
+    * with the whole object as a 200, like a server without Range support. */
+  private class ObjServer(data: Array[Byte], ignoreRange: Boolean = false) {
     @volatile var etag: String = "\"v1\""
     val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
     private val server = com.sun.net.httpserver.HttpServer.create(
@@ -483,7 +484,9 @@ class PufsFsSpec extends SparkSpec {
           if (ifMatch != null && ifMatch != etag) {
             ex.sendResponseHeaders(412, -1)
           } else {
-            val range = Option(ex.getRequestHeaders.getFirst("Range"))
+            val range =
+              if (ignoreRange) None
+              else Option(ex.getRequestHeaders.getFirst("Range"))
             val (s, e) = range match {
               case Some(r) =>
                 val Array(a, b) = r.stripPrefix("bytes=").split("-")
@@ -492,7 +495,7 @@ class PufsFsSpec extends SparkSpec {
             }
             val slice = java.util.Arrays.copyOfRange(data, s.toInt, e.toInt + 1)
             ex.getResponseHeaders.set("ETag", etag)
-            ex.sendResponseHeaders(206, slice.length)
+            ex.sendResponseHeaders(if (ignoreRange) 200 else 206, slice.length)
             ex.getResponseBody.write(slice)
           }
         }
@@ -576,6 +579,20 @@ class PufsFsSpec extends SparkSpec {
         new HttpStore(srv.url, Some("\"v1\""), maxRetries = 2).read(0, 10)
       }
       assert(t0.getMessage.contains("after 2 retries"), t0.getMessage)
+    } finally srv.stop()
+  }
+
+  test("HTTP remote: an endpoint that ignores Range is an error, not silent wrong bytes") {
+    // a 200 body always starts at offset 0; reading it as if it were the
+    // requested range would hand back the wrong region of the object
+    val data = (0 until 4096).map(_.toByte).toArray
+    val srv = new ObjServer(data, ignoreRange = true)
+    try {
+      val store = new HttpStore(srv.url, Some("\"v1\""))
+      val ex = intercept[java.net.ProtocolException] { store.read(100, 64) }
+      assert(ex.getMessage.contains("did not honor Range"))
+      // start == 0 with a full-object 200 is still a correct read
+      assert(store.read(0, 64).sameElements(data.take(64)))
     } finally srv.stop()
   }
 

@@ -18,6 +18,18 @@ class SnapshotSpec extends SparkSpec {
     src
   }
 
+  /** A snapshot's zone map as (path, column, min, max) tuples. */
+  private def zones(repo: String, ref: String): Set[(String, String, Double, Double)] =
+    SnapshotStore.zoneMapDF(spark, repo, ref).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
+      .toSet
+
+  /** The manifest paths a range probe on `column` keeps. */
+  private def pruned(repo: String, ref: String, column: String, lo: Double,
+      hi: Double): Seq[String] =
+    SnapshotStore.prunedFilesDF(spark, repo, ref, column, lo, hi)
+      .collect().map(_.getString(0)).toSeq
+
   test("publish → mount round trip preserves every byte") {
     val src = mkTree()
     val repo = Files.createTempDirectory("snap-repo").toString
@@ -273,20 +285,20 @@ class SnapshotSpec extends SparkSpec {
     // cluster key prune a range query to a strict subset
     val tFiles = after.map(_.path).filter(p => p.startsWith("t/") &&
       p.endsWith(".parquet"))
-    val hit = SnapshotStore.prunedFiles(repo, "main", "a", 10.0, 40.0)
+    val hit = pruned(repo, "main", "a", 10.0, 40.0)
       .filter(_.startsWith("t/"))
     assert(hit.nonEmpty && hit.size < tFiles.size,
       s"prune-after-optimize: ${hit.size} of ${tFiles.size}")
     // untouched files CARRY their old zone entries (k over s/)
-    assert(SnapshotStore.zoneMap(repo, "main")
-      .exists(e => e.path.startsWith("s/") && e.column == "k"),
+    assert(zones(repo, "main")
+      .exists(e => e._1.startsWith("s/") && e._2 == "k"),
       "untouched files must carry their zone-map entries forward")
     // statsCols got fresh entries over the rewritten files too
-    assert(SnapshotStore.zoneMap(repo, "main")
-      .exists(e => e.path.startsWith("t/") && e.column == "v"))
+    assert(zones(repo, "main")
+      .exists(e => e._1.startsWith("t/") && e._2 == "v"))
     // the superseded snapshot still serves: mount by sha, old zone map
     assert(SnapshotStore.mountAt(repo, sha0).size == before.size)
-    assert(SnapshotStore.zoneMap(repo, sha0).nonEmpty)
+    assert(zones(repo, sha0).nonEmpty)
 
     // the CLI verb drives the same path label-to-label
     val code = graft.Cli.run(List("optimize", repo, "main", "t",
@@ -386,8 +398,7 @@ class SnapshotSpec extends SparkSpec {
     // advisor r17: with a big manifest, fresh stats went to a parquet
     // sidecar while the carried merge wrote text — zoneMapDF (prefers
     // parquet) lost the carried entries and the two read paths
-    // disagreed. Force the parquet decision via the threshold and pin
-    // both entry classes in the ONE parquet sidecar.
+    // disagreed. Pin both entry classes in the ONE parquet sidecar.
     val src = Files.createTempDirectory("snap-fmt-src").toString
     spark.range(0, 4000)
       .select((col("id") % 100).as("a"), col("id").as("v"))
@@ -398,10 +409,9 @@ class SnapshotSpec extends SparkSpec {
     val st = SnapshotStore.publish(spark, src, repo, "main")
     SnapshotStore.publishStats(spark, src, repo, st.manifestSha, Seq("a", "k"))
     val (sha1, _, _) = SnapshotStore.optimizeTable(spark, repo, "main", "t",
-      targetBytes = Long.MaxValue, cols = Seq("a"), statsCols = Seq("v"),
-      distributedThreshold = 0)
+      targetBytes = Long.MaxValue, cols = Seq("a"), statsCols = Seq("v"))
     assert(Files.exists(Paths.get(repo, "CAS", s"statspq-$sha1")),
-      "past the threshold the sidecar must be parquet")
+      "the sidecar must be parquet")
     assert(!Files.exists(Paths.get(repo, "CAS", s"stats-$sha1")),
       "exactly ONE sidecar format per snapshot")
     val zm = SnapshotStore.zoneMapDF(spark, repo, "main")
@@ -475,7 +485,7 @@ class SnapshotSpec extends SparkSpec {
       .map(_.path).filter(_.endsWith(".parquet"))
     assert(dataFiles.size >= 4, s"expected >=4 data files, got $dataFiles")
     // a one-quarter key range must prune to a strict subset of files
-    val hit = SnapshotStore.prunedFiles(repo, "main", "key", 100.0, 900.0)
+    val hit = pruned(repo, "main", "key", 100.0, 900.0)
       .filter(_.endsWith(".parquet"))
     assert(hit.nonEmpty && hit.size < dataFiles.size,
       s"pruning selected ${hit.size} of ${dataFiles.size} files")
@@ -489,7 +499,7 @@ class SnapshotSpec extends SparkSpec {
     assert(viaPruned.agg(sum("v")).head().getDouble(0) ==
       viaFull.agg(sum("v")).head().getDouble(0))
     // a column with no sidecar entries keeps everything (conservative)
-    assert(SnapshotStore.prunedFiles(repo, "main", "nope", 0, 1).toSet ==
+    assert(pruned(repo, "main", "nope", 0, 1).toSet ==
       SnapshotStore.mount(repo, "main").map(_.path).toSet)
 
     // composed path: zone-map prune + lazy pufs:// mount — fewer file
@@ -509,6 +519,9 @@ class SnapshotSpec extends SparkSpec {
     assert(PufsFileSystem.bytesPulled.get() <= prunedTotal,
       s"pulled ${PufsFileSystem.bytesPulled.get()} > pruned file total $prunedTotal")
     PufsFileSystem.unmountSnapshot("zm/main")
+    // publishing again replaces the sidecar: entries for the new columns only
+    SnapshotStore.publishStats(spark, src, repo, stats.manifestSha, Seq("v"))
+    assert(zones(repo, "main").map(_._2) == Set("v"))
   }
 
   test("distributed metadata: DF manifest/zone-map/prune ≡ driver path, gc-safe") {
@@ -528,42 +541,47 @@ class SnapshotSpec extends SparkSpec {
       .map(e => (e.path, e.size, e.sha256)).toSet
     assert(viaDF == viaDriver, "manifestDF diverged from mountAt")
 
-    // distributed stats publish (zero driver collect) ≡ driver publish:
-    // same entries, same NaN/ULP discipline
-    val nDist = SnapshotStore.publishStatsDistributed(spark, src, repo,
+    // a legacy text sidecar (the retired `stats-<sha>` format) is never
+    // read: a snapshot that has only it prunes nothing
+    val legacy = Paths.get(repo, "CAS", s"stats-${stats.manifestSha}")
+    Files.write(legacy, viaDriver.toSeq.map(e => s"${e._1}\tkey\t0.0\t0.0")
+      .mkString("\n").getBytes("UTF-8"))
+    assert(pruned(repo, "main", "key", 1e9, 2e9).toSet == viaDriver.map(_._1),
+      "a legacy text sidecar must not prune")
+
+    // task-written stats ≡ per-file min/max computed here on the driver,
+    // with the NaN/ULP discipline: every bound widened by one ULP
+    val nDist = SnapshotStore.publishStats(spark, src, repo,
       stats.manifestSha, Seq("key", "v"))
     assert(nDist > 0)
-    val pqEntries = SnapshotStore.zoneMapDF(spark, repo, "main")
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getDouble(2), r.getDouble(3))).toSet
-    // the text route runs in a SECOND repo of the same content (same
-    // manifestSha — Merkle): advisor r18 made publishStats refuse to
-    // put a text sidecar next to an existing parquet one
-    val repoTxt = Files.createTempDirectory("snap-dm-txt").toString
-    val statsTxt = SnapshotStore.publish(spark, src, repoTxt, "main")
-    assert(statsTxt.manifestSha == stats.manifestSha, "Merkle setup")
-    SnapshotStore.publishStats(spark, src, repoTxt, statsTxt.manifestSha,
-      Seq("key", "v"))
-    val txtEntries = SnapshotStore.zoneMap(repoTxt, "main")
-      .map(e => (e.path, e.column, e.min, e.max)).toSet
-    assert(pqEntries == txtEntries,
-      s"distributed stats diverged: ${(pqEntries -- txtEntries).take(3)} / " +
-        s"${(txtEntries -- pqEntries).take(3)}")
+    val parquetPaths = viaDriver.map(_._1).filter(_.endsWith(".parquet"))
+    val want = parquetPaths.flatMap { p =>
+      val r = spark.read.parquet(s"$src/$p")
+        .agg(min("key"), max("key"), min("v"), max("v")).head()
+      Seq((p, "key", Math.nextDown(r.getLong(0).toDouble),
+          Math.nextUp(r.getLong(1).toDouble)),
+        (p, "v", Math.nextDown(r.getDouble(2)), Math.nextUp(r.getDouble(3))))
+    }
+    val got = zones(repo, "main")
+    assert(got == want, s"stats diverged: ${(got -- want).take(3)} / " +
+      s"${(want -- got).take(3)}")
 
-    // prunedFilesDF ≡ prunedFiles for hit, miss, and uncovered columns
-    def dfPrune(c: String, lo: Double, hi: Double) =
-      SnapshotStore.prunedFilesDF(spark, repo, "main", c, lo, hi)
-        .collect().map(_.getString(0)).toSet
-    // driver prunedFiles reads the TEXT sidecar — compare against the
-    // text repo (identical entries, asserted above)
+    // prunedFilesDF keeps exactly the files whose box meets the range,
+    // plus every file without an entry, for hit, miss, and uncovered columns
     for ((c, lo, hi) <- Seq(("key", 100.0, 900.0), ("key", 1e9, 2e9),
-        ("v", 0.0, 10.0), ("nope", 0.0, 1.0)))
-      assert(dfPrune(c, lo, hi) ==
-        SnapshotStore.prunedFiles(repoTxt, "main", c, lo, hi).toSet,
+        ("v", 0.0, 10.0), ("nope", 0.0, 1.0))) {
+      val boxes = want.filter(_._2 == c).map(e => e._1 -> e).toMap
+      val keep = viaDriver.map(_._1).filter(p =>
+        boxes.get(p).forall(e => e._4 >= lo && e._3 <= hi))
+      assert(pruned(repo, "main", c, lo, hi).toSet == keep,
         s"prune mismatch for $c [$lo,$hi]")
+    }
 
-    // gc keeps both sidecars while the label lives; collects them (and
-    // doesn't crash on the parquet DIRECTORY sidecar) once orphaned
+    // gc collects the legacy text sidecar although its manifest is live,
+    // keeps the parquet sidecar while the label lives, and collects it
+    // (without crashing on the parquet DIRECTORY) once orphaned
+    assert(SnapshotStore.gc(repo) == 1, "gc must collect the legacy sidecar")
+    assert(!Files.exists(legacy))
     assert(SnapshotStore.gc(repo) == 0, "gc ate a live sidecar")
     assert(SnapshotStore.zoneMapDF(spark, repo, "main").count() == nDist)
     val src2 = Files.createTempDirectory("snap-dm-src2").toString
@@ -614,7 +632,7 @@ class SnapshotSpec extends SparkSpec {
     val incEntries = SnapshotStore.zoneMapDF(spark, repo, s2.manifestSha)
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getDouble(2), r.getDouble(3))).toSet
-    SnapshotStore.publishStatsDistributed(spark, src, repo,
+    SnapshotStore.publishStats(spark, src, repo,
       s2.manifestSha, Seq("key", "v"))
     val fullEntries = SnapshotStore.zoneMapDF(spark, repo, s2.manifestSha)
       .collect().map(r => (r.getString(0), r.getString(1),
@@ -624,8 +642,6 @@ class SnapshotSpec extends SparkSpec {
         s"${(fullEntries -- incEntries).take(3)}")
     assert(n2 == fullEntries.size.toLong)
     // and the new range actually prunes: only the touched file matches
-    // (prunedFilesDF — the parquet sidecar is the distributed format;
-    // the text-sidecar driver path is a different publish flavor)
     val hot = SnapshotStore.prunedFilesDF(spark, repo, s2.manifestSha,
       "key", 90000.0, 91000.0)
       .collect().map(_.getString(0)).filter(_.endsWith(".parquet"))
@@ -634,49 +650,6 @@ class SnapshotSpec extends SparkSpec {
     val (n3, scanned3) = SnapshotStore.publishStatsIncremental(
       spark, src, repo, s2.manifestSha, s2.manifestSha, Seq("key", "v"))
     assert(scanned3 == 0 && n3 == n2)
-  }
-
-  test("publishStats self-routes to the distributed writer above the file threshold") {
-    import org.apache.spark.sql.functions._
-    val src = Files.createTempDirectory("snap-route-src").toString
-    spark.range(0, 2000).select(
-        col("id").as("key"), (col("id") * 3).cast("double").as("v"))
-      .orderBy("key").write.option("maxRecordsPerFile", 500)
-      .parquet(s"$src/t")
-    val repoA = Files.createTempDirectory("snap-route-a").toString
-    val repoB = Files.createTempDirectory("snap-route-b").toString
-    val sA = SnapshotStore.publish(spark, src, repoA, "main")
-    val sB = SnapshotStore.publish(spark, src, repoB, "main")
-    // threshold 0: every tree exceeds it → the distributed (parquet
-    // sidecar, task-written) path must be taken
-    val nA = SnapshotStore.publishStats(spark, src, repoA, sA.manifestSha,
-      Seq("key", "v"), distributedThreshold = 0)
-    // default threshold: a 4-file tree stays on the driver text path
-    val nB = SnapshotStore.publishStats(spark, src, repoB, sB.manifestSha,
-      Seq("key", "v"))
-    assert(SnapshotStore.zoneMap(repoA, sA.manifestSha).isEmpty,
-      "threshold 0 must not write the text sidecar")
-    assert(SnapshotStore.zoneMap(repoB, sB.manifestSha).nonEmpty,
-      "small tree should keep the driver text sidecar")
-    // identical entries regardless of route
-    def entries(repo: String, sha: String) =
-      SnapshotStore.zoneMapDF(spark, repo, sha).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2),
-          r.getDouble(3))).toSet
-    val eA = entries(repoA, sA.manifestSha)
-    val eB = entries(repoB, sB.manifestSha)
-    assert(eA == eB, s"routes diverged: ${(eA -- eB).take(3)} / ${(eB -- eA).take(3)}")
-    assert(nA == nB && nA == eA.size)
-    // advisor r18: a later small-tree call on a snapshot that already
-    // HAS a parquet sidecar must stay parquet — a text sidecar here
-    // would be shadowed by the parquet one at read time (zoneMapDF
-    // prefers parquet) and the new stats would silently not take effect
-    SnapshotStore.publishStats(spark, src, repoA, sA.manifestSha, Seq("v"))
-    assert(SnapshotStore.zoneMap(repoA, sA.manifestSha).isEmpty,
-      "pq-sidecar snapshot must not gain a text sidecar from a small call")
-    assert(entries(repoA, sA.manifestSha).nonEmpty &&
-      entries(repoA, sA.manifestSha).forall(_._2 == "v"),
-      "the small re-publish must take effect in the parquet sidecar")
   }
 
   test("stale .optstage-* staging debris sweeps; a live staging survives") {
@@ -747,13 +720,13 @@ class SnapshotSpec extends SparkSpec {
     SnapshotStore.publishStats(spark, src, repo, stats.manifestSha, Seq("v", "key"))
     val all = SnapshotStore.mount(repo, "main")
       .map(_.path).filter(_.endsWith(".parquet")).toSet
-    assert(SnapshotStore.prunedFiles(repo, "main", "v", 3.0, 4.0)
+    assert(pruned(repo, "main", "v", 3.0, 4.0)
       .filter(_.endsWith(".parquet")).toSet == all,
       "NaN-poisoned zone entry pruned a file with matching rows")
     // the clean column still prunes normally on an out-of-range probe,
     // and readPruned over ZERO surviving files must return an empty
     // frame with the snapshot's schema instead of failing inference
-    assert(SnapshotStore.prunedFiles(repo, "main", "key", 1e9, 2e9)
+    assert(pruned(repo, "main", "key", 1e9, 2e9)
       .filter(_.endsWith(".parquet")).isEmpty)
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.pufs.impl", classOf[PufsFileSystem].getName)
@@ -801,6 +774,13 @@ class SnapshotSpec extends SparkSpec {
       val kept = SnapshotStore.readPruned(spark, repo, "main",
         "mt/main", "key", 10.0, 19.5, pathPrefix = "facts/")
       assert(kept.where("key >= 10 AND key <= 19").count() == 10)
+      // unscoped: dims/ has no `key` entry, so pruning keeps it and its
+      // rows come back — a file without stats is never skipped
+      val unscoped = SnapshotStore.readPruned(spark, repo, "main",
+        "mt/main", "key", 1e9, 2e9)
+      assert(unscoped.columns.toSet == Set("dim_id", "name"),
+        s"expected the unpruned dims file, got ${unscoped.columns.toSeq}")
+      assert(unscoped.count() == 10)
     } finally PufsFileSystem.unmountSnapshot("mt/main")
   }
 
