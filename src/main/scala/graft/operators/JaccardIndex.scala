@@ -36,6 +36,15 @@ import org.apache.spark.sql.functions._
   * Appends are per-row parquet appends (write-once; same two-table
   * non-atomicity contract as AnnIndex.append — re-run only a failed
   * table, or rebuild).
+  *
+  * Pre-shingled entry points: every screen and the append has a kernel
+  * over `(doc_id, sh)` rows as [[shingleSets]] makes them
+  * ([[pairsWithinShingles]], [[pairsAgainstShingles]],
+  * [[appendShingles]]), and the `docs` entry points are wrappers that
+  * shingle and call it. A caller that screens and then
+  * appends one batch (the streaming ingests) shingles it once, screens
+  * it in one pass with [[rejects]], and appends the accepted docs' rows
+  * of the same shingle frame.
   */
 object JaccardIndex {
 
@@ -57,7 +66,9 @@ object JaccardIndex {
     org.apache.spark.sql.types.StructField("n",
       org.apache.spark.sql.types.LongType)))
 
-  private def shingleSets(docs: DataFrame): DataFrame =
+  /** The batch side of every screen and append: distinct 5-gram
+    * shingle rows (doc_id, sh) of a (doc_id, text) frame. */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
     LlmOps.shingleRows(docs.select("doc_id", "text"), distinctPerDoc = true)
 
   /** Exact intersection count + integer threshold over candidate id
@@ -134,12 +145,19 @@ object JaccardIndex {
     * invalidate it; its blocks are released once both writes land. */
   def append(spark: SparkSession, indexDir: String, docs: DataFrame): Unit = {
     val sh = shingleSets(docs).localCheckpoint(true)
-    try AppendLock.withLock(spark, indexDir) {
+    try appendShingles(spark, indexDir, sh) finally LlmOps.dropCheckpoint(sh)
+  }
+
+  /** [[append]] over pre-shingled (doc_id, sh) rows. `sh` is read twice
+    * (shingles/, then sizes/), so its lineage must not read this index:
+    * pass materialised rows, such as a checkpoint of [[shingleSets]]. */
+  def appendShingles(spark: SparkSession, indexDir: String,
+      sh: DataFrame): Unit =
+    AppendLock.withLock(spark, indexDir) {
       sh.write.mode("append").parquet(s"$indexDir/shingles")
       sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         .write.mode("append").parquet(s"$indexDir/sizes")
-    } finally LlmOps.dropCheckpoint(sh)
-  }
+    }
 
   /** Both tables present → true; neither → false (never built — screen
     * everything as novel); exactly one → fail fast: a build crashed
@@ -175,12 +193,17 @@ object JaccardIndex {
     * rows (an at-least-once replay) must not match itself. An index
     * that was never built screens everything as novel (empty result). */
   def pairsAgainst(spark: SparkSession, indexDir: String,
-      batch: DataFrame): DataFrame = {
-    // eager localCheckpoint, NOT persist: screens run once per
-    // micro-batch under exactDedupIngest and a pinned cache per call
-    // accumulates forever (the NearDupIndex.pairsWithin lesson);
-    // checkpointed RDDs release with the ContextCleaner
-    val bsh = shingleSets(batch).localCheckpoint(true)
+      batch: DataFrame): DataFrame =
+    // eager localCheckpoint, NOT persist: a screen per micro-batch
+    // with a pinned cache per call accumulates forever (the
+    // NearDupIndex.pairsWithin lesson); checkpointed RDDs release with
+    // the ContextCleaner
+    pairsAgainstShingles(spark, indexDir, shingleSets(batch).localCheckpoint(true))
+
+  /** [[pairsAgainst]] over pre-shingled batch rows `bsh` (doc_id, sh),
+    * which the screen reads several times: pass materialised rows. */
+  def pairsAgainstShingles(spark: SparkSession, indexDir: String,
+      bsh: DataFrame): DataFrame = {
     val bsizes = bsh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     if (!indexExists(spark, indexDir))
       return verify(bsh.select(col("doc_id").as("a"),
@@ -205,8 +228,12 @@ object JaccardIndex {
     * applied reflexively (prefix side is the larger id `b`, joined
     * against the frame's full rows): the within-batch pass of the
     * streaming ingest. */
-  def pairsWithin(docs: DataFrame): DataFrame = {
-    val sh = shingleSets(docs).localCheckpoint(true)
+  def pairsWithin(docs: DataFrame): DataFrame =
+    pairsWithinShingles(shingleSets(docs).localCheckpoint(true))
+
+  /** [[pairsWithin]] over pre-shingled rows `sh` (doc_id, sh), which the
+    * screen reads several times: pass materialised rows. */
+  def pairsWithinShingles(sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     val cands = probePrefix(sh, dfreq)
@@ -215,4 +242,27 @@ object JaccardIndex {
       .select("a", "b").distinct()
     verify(cands, sh, sizes, sh, sizes)
   }
+
+  /** The near-dup reject set of one batch in ONE pass, as an eagerly
+    * checkpointed (doc_id) frame: the within-batch losers (the larger id
+    * of every within-batch τ-pair) ∪ every batch doc with a τ-match in
+    * the standing index. `sh` is the whole batch's pre-shingled rows.
+    *
+    * This equals the sequential formula — losers first, then only the
+    * SURVIVORS screened against the index — because a doc's
+    * against-index verdict depends on its own shingle set alone (the
+    * screen is complete under any probe order and the verify is exact;
+    * the batch-wide prefix order changes cost, not the verified set).
+    * So the index matches of the losers are a subset of the losers and
+    * add nothing, and the survivors' matches are the sequential ones.
+    * Screening the whole batch lets both screens read one shingle frame
+    * and lets the caller's pipeline read this small set instead of
+    * re-running the two verifies. The caller releases it with
+    * LlmOps.dropCheckpoint once nothing reads it. */
+  def rejects(spark: SparkSession, indexDir: String,
+      sh: DataFrame): DataFrame =
+    pairsWithinShingles(sh).select(col("b").as("doc_id"))
+      .union(pairsAgainstShingles(spark, indexDir, sh).select(col("b").as("doc_id")))
+      .distinct()
+      .localCheckpoint(true)
 }

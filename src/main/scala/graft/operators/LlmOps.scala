@@ -180,31 +180,6 @@ object LlmOps {
       .where(col("simhash").isNotNull)
   }
 
-  /** The relational formulation of simhash64Of — explode tokens → explode
-    * 64 bit positions → two partial-agg groupBys, signature assembled by
-    * bit_or (additive assembly would overflow at bit 63 — 2^63 is
-    * Long.MinValue and sum() wraps; OR of disjoint bits is exact). Kept
-    * as the independent parity mirror the kernel is spec-pinned against:
-    * two formulations from different primitives (built-in split/lower/
-    * xxhash64 vs the byte-scanning kernel) agreeing bit-for-bit is the
-    * no-DuckDB-twin substitute for an oracle. */
-  private[graft] def simhash64OfRelational(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    toks
-      .select(col("doc_id"), col("h"),
-        explode(sequence(lit(0), lit(63))).as("k"))
-      .withColumn("contrib",
-        when(expr("(shiftright(h, k) & 1)") === 1, 1).otherwise(-1))
-      .groupBy("doc_id", "k")
-      .agg(sum(col("contrib")).as("s"))
-      .groupBy("doc_id")
-      .agg(expr("bit_or(CASE WHEN s > 0 " +
-        "THEN shiftleft(CAST(1 AS BIGINT), k) ELSE CAST(0 AS BIGINT) END)")
-        .as("simhash"))
-  }
-
   /** l54's Hamming ≤ 3 near-dup join at the 64-bit width with 4×16-bit
     * bands: 65,536 buckets per band instead of 256, so band-bucket
     * density — the ONE super-linear term the K=100 probe surfaced in

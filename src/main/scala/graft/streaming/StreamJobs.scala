@@ -283,12 +283,16 @@ object StreamJobs {
     * second, marker third:
     *  - crash before any append: replay recomputes identically;
     *  - crash between the appends (Jaccard in, exact not): the replay's
-    *    exact screen passes the full batch; the Jaccard re-screen now
-    *    sees the batch's own stored rows, but a=b self-matches are
-    *    excluded and accepted docs are pairwise below τ by
-    *    construction, so the same set survives and the re-append's
-    *    duplicate rows are tolerated (the verify counts DISTINCT
-    *    shingles);
+    *    exact screen passes the full batch; the Jaccard reject set
+    *    (within-batch losers ∪ index matches of the WHOLE batch) now
+    *    screens against the batch's own stored rows. The losers are
+    *    computed within the batch and do not move. An accepted doc's
+    *    match with its own stored rows is excluded (a ≠ b), and accepted
+    *    docs are pairwise below τ by construction, so no accepted doc
+    *    gains an index match; a loser that now matches a stored
+    *    survivor was in the reject set already. So the same set
+    *    survives, and the re-append's duplicate rows are tolerated (the
+    *    verify counts DISTINCT shingles);
     *  - crash after the exact append: the replay empties, both indexes
     *    already hold the batch, accepted/ is untouched.
     * Appending the exact index FIRST instead would let a crash strand
@@ -310,12 +314,19 @@ object StreamJobs {
     * persist() would not survive the appends: every parquet write ends
     * in Spark's CacheManager.recacheByPath, which drops each cached
     * frame whose lineage reads the written path — and `accepted`'s
-    * lineage scans jaccard/shingles, jaccard/sizes and exact/hashes, so
-    * the Jaccard sizes/ write and the exact append's bloom pass would
-    * each re-run the whole ~25-job pipeline against indexes that already
-    * hold the batch. Checkpointing cuts the lineage, so no path-based
+    * lineage scans exact/hashes and the model, so the exact append's
+    * bloom pass would re-run the pipeline against an index that already
+    * holds the batch. Checkpointing cuts the lineage, so no path-based
     * recache can reach it; the blocks are released after the exact
-    * append, before the marker. */
+    * append, before the marker.
+    *
+    * The near-dup stage is one pass ([[JaccardPass]]): the batch is
+    * shingled once, both Jaccard screens read that checkpoint into one
+    * small checkpointed reject set, and the Jaccard append writes the
+    * accepted docs' rows of the same checkpoint. A 500-doc batch runs
+    * 38 Spark jobs (local[4]): shingle checkpoint 7 (with the exact
+    * screen it evaluates), reject set 13, pipeline checkpoint 8,
+    * accepted write 1, Jaccard append 5, exact append 4. */
   private[graft] def applyCurateBatch(batch: DataFrame, batchId: Long,
       modelDir: String, pipeDir: String): Unit = {
       val s = batch.sparkSession
@@ -330,14 +341,10 @@ object StreamJobs {
           .select("doc_id", "text")
         val exactNew = graft.operators.DedupIndex
           .newAgainst(s, s"$pipeDir/exact", inBatch).persist()
-        // stage 3: near-dup — within batch, then vs the standing index
-        val inLosers = graft.operators.JaccardIndex.pairsWithin(exactNew)
-          .select(col("b").as("doc_id")).distinct()
-        val ndSurvivors = exactNew.join(inLosers, Seq("doc_id"), "left_anti")
-        val idxDups = graft.operators.JaccardIndex
-          .pairsAgainst(s, s"$pipeDir/jaccard", ndSurvivors)
-          .select(col("b").as("doc_id")).distinct()
-        val nd = ndSurvivors.join(idxDups, Seq("doc_id"), "left_anti")
+        // stage 3: near-dup — within batch and vs the standing index, in
+        // one pass over one shingle checkpoint
+        val jaccard = new JaccardPass(s, s"$pipeDir/jaccard", exactNew)
+        val nd = jaccard.survivors
         // stage 4: decontamination vs the standing DecontamIndex model
         // (bloom-prefiltered scan + exact confirm — never a broadcast of
         // the full eval shingle set)
@@ -362,12 +369,12 @@ object StreamJobs {
         crashProbe("after_accepted_write")
         // index appends: Jaccard FIRST, exact LAST (the replay fuse —
         // see scaladoc), marker after both
-        graft.operators.JaccardIndex.append(s, s"$pipeDir/jaccard",
-          accepted.select("doc_id", "text"))
+        jaccard.append(accepted)
         crashProbe("after_jaccard_append")
         graft.operators.DedupIndex.append(s, s"$pipeDir/exact",
           accepted.select("doc_id", "text"))
         crashProbe("after_exact_append")
+        jaccard.release()
         graft.operators.LlmOps.dropCheckpoint(accepted)
         writeMarker(s, pipeDir, batchId)
       }
@@ -809,20 +816,46 @@ object StreamJobs {
       ()
     }
 
+  /** The near-dup step both Jaccard ingests share, one pass per batch:
+    * `docs` is shingled ONCE into an eager checkpoint, both screens read
+    * it to build one checkpointed reject set (JaccardIndex.rejects —
+    * within-batch losers ∪ index matches, equal to screening the
+    * within-batch survivors alone), and the append writes the accepted
+    * docs' rows of the same checkpoint instead of shingling them again.
+    * Neither checkpoint's lineage reads the index, so the append's
+    * writes cannot invalidate them; `release` frees both once the
+    * append has landed. */
+  private final class JaccardPass(s: org.apache.spark.sql.SparkSession,
+      indexDir: String, docs: DataFrame) {
+    private val sh = graft.operators.JaccardIndex.shingleSets(docs)
+      .localCheckpoint(true)
+    private val rejected = graft.operators.JaccardIndex.rejects(s, indexDir, sh)
+    val survivors: DataFrame = docs.join(rejected, Seq("doc_id"), "left_anti")
+    def append(accepted: DataFrame): Unit =
+      graft.operators.JaccardIndex.appendShingles(s, indexDir,
+        sh.join(accepted.select("doc_id"), Seq("doc_id"), "left_semi"))
+    def release(): Unit = {
+      graft.operators.LlmOps.dropCheckpoint(rejected)
+      graft.operators.LlmOps.dropCheckpoint(sh)
+    }
+  }
+
   /** Streaming EXACT-Jaccard near-dup ingestion — nearDedupIngest with
-    * recall guarantees: within-batch exact τ-pairs drop the larger id
-    * (JaccardIndex.pairsWithin), survivors screen against the standing
-    * index with the one-sided prefix filter (provably complete, so a
+    * recall guarantees: within-batch exact τ-pairs drop the larger id,
+    * survivors screen against the standing index with the one-sided
+    * prefix filter (JaccardIndex.rejects; provably complete, so a
     * true near-dup can NEVER slip past — where the MinHash screen is
     * probabilistic), and accepted docs join the index.
     *
     * at-least-once replay safety, the nearDedupIngest argument made
     * exact: marker, per-batch dynamic partition overwrite, append last.
-    * A replay after the append screens the batch against an index
-    * already holding its own survivors — a doc's match with its own
-    * stored rows is excluded (a ≠ b), and two within-batch SURVIVORS
-    * have exact J < τ by construction (else pairsWithin would have
-    * dropped one), so the re-screen admits exactly the original
+    * A replay after the append screens the WHOLE batch against an index
+    * already holding its own survivors (the one-pass reject set,
+    * [[JaccardPass]]) — a doc's match with its own stored rows is
+    * excluded (a ≠ b), two within-batch SURVIVORS have exact J < τ by
+    * construction (else the within-batch screen would have dropped
+    * one), and a within-batch loser that matches a stored survivor is
+    * rejected either way, so the re-screen admits exactly the original
     * accepted set and the partition rewrite is byte-stable. The replay
     * then RE-APPENDS those rows; the index tolerates that because the
     * verify counts DISTINCT shingles and max-aggregates sizes — with a
@@ -834,14 +867,8 @@ object StreamJobs {
       val s = batch.sparkSession
       if (!markerExists(s, indexDir, batchId)) {
         val rows = batch.select("doc_id", "text").persist()
-        val losers = graft.operators.JaccardIndex.pairsWithin(rows)
-          .select(col("b").as("doc_id")).distinct()
-        val inBatch = rows.join(losers, Seq("doc_id"), "left_anti")
-        val dups = graft.operators.JaccardIndex
-          .pairsAgainst(s, indexDir, inBatch)
-          .select(col("b").as("doc_id")).distinct()
-        val accepted = inBatch.join(dups, Seq("doc_id"), "left_anti")
-          .persist()
+        val jaccard = new JaccardPass(s, indexDir, rows)
+        val accepted = jaccard.survivors.persist()
         val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
         try {
           s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -849,8 +876,9 @@ object StreamJobs {
             .write.mode("overwrite").partitionBy("batch_id")
             .parquet(s"$indexDir/accepted")
         } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-        graft.operators.JaccardIndex.append(s, indexDir, accepted)
+        jaccard.append(accepted)
         crashProbe("after_index_append")
+        jaccard.release()
         accepted.unpersist()
         rows.unpersist()
         writeMarker(s, indexDir, batchId)

@@ -22,7 +22,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
   * scan node's SQL metrics are updated only by tasks that run it, so a
   * frame served from a live cache or checkpoint reads nothing, while a
   * frame whose cache was dropped re-scans — the observable behind "the
-  * pipeline is evaluated once per batch".
+  * pipeline is evaluated once per batch". And it records each
+  * execution's plan nodes, so a test can ask which executions computed
+  * an operator rather than read its result from a checkpoint.
   *
   * Same drain → register → run → drain discipline as ShuffleMetrics. */
 object JobAttribution {
@@ -32,7 +34,8 @@ object JobAttribution {
   final case class Job(id: Int, execution: Option[Long], frame: String)
 
   final case class Record(jobs: Seq[Job],
-      private val scanReads: Seq[(Int, String)]) {
+      private val scanReads: Seq[(Int, String)],
+      private val planNodes: Set[(Long, String)]) {
     /** Where a parquet location containing `path` was read: the SQL
       * execution ids, plus `-1 - jobId` for a job outside any execution. */
     def scansOf(path: String): Set[Long] = {
@@ -41,6 +44,11 @@ object JobAttribution {
         byId.get(job).flatMap(_.execution).getOrElse(-1L - job)
       }.toSet
     }
+
+    /** The SQL executions whose initial or adaptive plan has a node whose
+      * one-line description satisfies `p`. */
+    def executionsWith(p: String => Boolean): Set[Long] =
+      planNodes.collect { case (exec, node) if p(node) => exec }
   }
 
   private def firstGraftFrame(callSite: String): Option[String] =
@@ -54,10 +62,12 @@ object JobAttribution {
     val stageJob = scala.collection.mutable.Map.empty[Int, Int]
     val scanMetric = scala.collection.mutable.Map.empty[Long, String]
     val stageAccums = scala.collection.mutable.Set.empty[(Int, Long)]
-    def scanNodes(p: SparkPlanInfo): Unit = {
+    val planNodes = scala.collection.mutable.Set.empty[(Long, String)]
+    def planned(exec: Long, p: SparkPlanInfo): Unit = {
       for (loc <- p.metadata.get("Location") if p.nodeName.startsWith("Scan");
            m <- p.metrics) scanMetric(m.accumulatorId) = loc
-      p.children.foreach(scanNodes)
+      planNodes += exec -> p.simpleString
+      p.children.foreach(planned(exec, _))
     }
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = lock.synchronized {
@@ -72,9 +82,9 @@ object JobAttribution {
         e match {
           case s: SparkListenerSQLExecutionStart =>
             firstGraftFrame(s.details).foreach(execFrame(s.executionId) = _)
-            scanNodes(s.sparkPlanInfo)
+            planned(s.executionId, s.sparkPlanInfo)
           case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-            scanNodes(u.sparkPlanInfo)
+            planned(u.executionId, u.sparkPlanInfo)
           case _ => ()
         }
       }
@@ -101,7 +111,7 @@ object JobAttribution {
       val scanReads = stageAccums.toSeq.flatMap { case (stage, acc) =>
         for (job <- stageJob.get(stage); loc <- scanMetric.get(acc)) yield job -> loc
       }
-      (result, Record(jobs, scanReads))
+      (result, Record(jobs, scanReads, planNodes.toSet))
     }
   }
 }

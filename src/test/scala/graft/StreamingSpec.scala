@@ -870,6 +870,49 @@ class StreamingSpec extends SparkSpec {
         "re-ran the pipeline")
   }
 
+  test("a curation batch shingles once and screens near-dups in one pass") {
+    import graft.SparkSpec.spark.implicits._
+    val pipeDir = java.nio.file.Files.createTempDirectory("curate-jobs").toString
+    val modelDir = s"$pipeDir/eval-model"
+    StreamJobs.buildDecontamModel(
+      Seq((1L, "exam question secret alpha bravo charlie delta echo " +
+        "foxtrot golf hotel")).toDF("doc_id", "text"), modelDir)
+    def doc(prefix: String): String =
+      (1 to 40).map(i => s"$prefix$i").mkString(" ")
+    val docA = doc("alpha")
+    // standing indexes over a corpus, as a serving deployment has them
+    val corpus = Seq((1L, docA), (2L, doc("bravo"))).toDF("doc_id", "text")
+    graft.operators.DedupIndex.build(spark, corpus, s"$pipeDir/exact")
+    graft.operators.JaccardIndex.build(spark, corpus, s"$pipeDir/jaccard")
+    val civic = doc("civic")
+    val batch = Seq(
+      (10L, docA),                                   // exact dup of 1
+      (11L, docA.replace("alpha20", "changed")),     // near dup of 1
+      (12L, civic),                                  // novel
+      (13L, civic.replace("civic20", "changed")),    // near dup of 12
+      (14L, doc("delta") +                           // contaminated
+        " exam question secret alpha bravo charlie delta echo foxtrot"),
+      (15L, doc("echo")),                            // novel
+      (16L, "tiny doc")).toDF("doc_id", "text")      // fails quality
+    val (_, rec) = JobAttribution.of(spark)(
+      StreamJobs.applyCurateBatch(batch, 0L, modelDir, pipeDir))
+    val accepted = spark.read.parquet(s"$pipeDir/accepted")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(accepted == Set(12L, 15L), s"$accepted")
+    // the batch's 5-gram shingle sets are computed in one execution (the
+    // shingle checkpoint); both screens and the append read its blocks
+    val shingled = rec.executionsWith(n =>
+      n.startsWith("Generate") && n.contains("array_distinct"))
+    assert(shingled.size == 1, s"the batch was shingled in executions $shingled")
+    val reads = rec.scansOf(s"$pipeDir/jaccard/shingles")
+    assert(reads.size == 1, s"jaccard/shingles was read in executions $reads")
+    // jobs per batch, measured on this fixture with local[4]: 39 (the
+    // sequential screens, each shingling the batch again, ran 51)
+    assert(rec.jobs.size <= 39, s"${rec.jobs.size} jobs:\n" +
+      rec.jobs.groupBy(_.frame).map { case (f, js) => s"${js.size}\t$f" }
+        .toSeq.sorted.mkString("\n"))
+  }
+
   test("an exactDedupIngest batch's sizes write does not re-run the screens") {
     import graft.SparkSpec.spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -7,6 +7,32 @@ import org.apache.spark.sql.functions._
   * formulation (same float op order), null-safe, and actually codegen'd. */
 class VectorExprSpec extends SparkSpec {
 
+  /** The relational formulation of LlmOps.simhash64Of — explode tokens →
+    * explode 64 bit positions → two partial-agg groupBys, signature
+    * assembled by bit_or (additive assembly would overflow at bit 63 —
+    * 2^63 is Long.MinValue and sum() wraps; OR of disjoint bits is
+    * exact). The independent parity mirror the kernel is pinned
+    * against: two formulations from different primitives (built-in
+    * split/lower/xxhash64 vs the byte-scanning kernel) agreeing
+    * bit-for-bit is the no-DuckDB-twin substitute for an oracle. */
+  private def simhash64OfRelational(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val toks = docs
+      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
+      .withColumn("h", xxhash64(col("tok")))
+    toks
+      .select(col("doc_id"), col("h"),
+        explode(sequence(lit(0), lit(63))).as("k"))
+      .withColumn("contrib",
+        when(expr("(shiftright(h, k) & 1)") === 1, 1).otherwise(-1))
+      .groupBy("doc_id", "k")
+      .agg(sum(col("contrib")).as("s"))
+      .groupBy("doc_id")
+      .agg(expr("bit_or(CASE WHEN s > 0 " +
+        "THEN shiftleft(CAST(1 AS BIGINT), k) ELSE CAST(0 AS BIGINT) END)")
+        .as("simhash"))
+  }
+
   test("dot_f32 equals aggregate(zip_with(...)) bit-for-bit") {
     VectorExpressions.register(spark)
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -70,7 +96,7 @@ class VectorExprSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val kernel = graft.operators.LlmOps.simhash64Of(df)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val relational = graft.operators.LlmOps.simhash64OfRelational(df)
+    val relational = simhash64OfRelational(df)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kernel == relational,
       s"kernel-only=${kernel -- relational} relational-only=${relational -- kernel}")
@@ -81,7 +107,7 @@ class VectorExprSpec extends SparkSpec {
       .select("doc_id", "text")
     val kernel = graft.operators.LlmOps.simhash64Of(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val relational = graft.operators.LlmOps.simhash64OfRelational(docs)
+    val relational = simhash64OfRelational(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kernel == relational)
     val plan = graft.operators.LlmOps.simhash64Of(docs)

@@ -228,6 +228,47 @@ class DedupIndexSpec extends SparkSpec {
       "duplicated stored rows changed the screened pairs or their counts")
   }
 
+  test("exact-Jaccard one-pass reject set ≡ the sequential within-then-index screen") {
+    val indexDir = java.nio.file.Files.createTempDirectory("jac-rejects").toString
+    // 40-token docs: one changed token keeps J = 31/41 ≥ 3/5, two
+    // changed tokens far apart give J = 26/46 < 3/5
+    def doc(prefix: String): String = (1 to 40).map(i => s"$prefix$i").mkString(" ")
+    def edit(text: String, at: Int, word: String): String =
+      text.split(" ").updated(at - 1, word).mkString(" ")
+    val x = doc("xray")
+    JaccardIndex.build(spark,
+      Seq((100L, x), (101L, doc("yankee"))).toDF("doc_id", "text"), indexDir)
+    val a = doc("alpha")
+    val b = edit(a, 10, "b10")
+    val batch = Seq(
+      // a within-batch chain 1 ~ 2 ~ 3 with 1 !~ 3: both 2 and 3 lose
+      (1L, a), (2L, b), (3L, edit(b, 30, "c30")),
+      // 5 and 6 both match indexed 100; 6 also loses to 5 within the batch
+      (5L, edit(x, 10, "d10")), (6L, edit(x, 10, "e10")),
+      (7L, doc("zulu")), (8L, "tiny doc")).toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.collect().map(_.getLong(0)).toSet
+    def sequential(): Set[Long] = {
+      val losers = JaccardIndex.pairsWithin(batch).select(col("b").as("doc_id"))
+      val survivors = batch.join(losers, Seq("doc_id"), "left_anti")
+      ids(losers) ++ ids(JaccardIndex.pairsAgainst(spark, indexDir, survivors).select("b"))
+    }
+    def fused(): Set[Long] = {
+      val sh = JaccardIndex.shingleSets(batch).localCheckpoint(true)
+      ids(JaccardIndex.rejects(spark, indexDir, sh))
+    }
+    val expected = Set(2L, 3L, 5L, 6L)
+    assert(sequential() == expected, s"sequential: ${sequential()}")
+    assert(fused() == expected, s"fused: ${fused()}")
+    // a replay: the index already holds the batch's survivors. Their
+    // self-matches stay excluded (a ≠ b) and survivors are pairwise
+    // below τ, so neither formula's reject set moves
+    JaccardIndex.append(spark, indexDir,
+      batch.filter(!col("doc_id").isin(expected.toSeq: _*)))
+    assert(sequential() == expected, s"sequential replay: ${sequential()}")
+    assert(fused() == expected, s"fused replay: ${fused()}")
+  }
+
   test("NULL-text docs dedup instead of being re-admitted every batch") {
     // sha2(NULL) is NULL and NULL = NULL never matches the confirm join —
     // without the coalesce a NULL-text doc would screen as "new" forever
