@@ -269,8 +269,8 @@ object Bench {
       // that carries the IVFPQ sidecar. At sf0.1 the corpus sits far
       // below the production threshold, so idx_ann_probe above always
       // serves the flat arm — without this lane a routed-serve
-      // regression (centroid select, cell join, shared ADC kernel,
-      // divergence guard) would never move a bench number. The conf is
+      // regression (centroid select, cell join, shared ADC kernel)
+      // would never move a bench number. The conf is
       // pinned only around DataFrame CONSTRUCTION (chosenArm resolves
       // eagerly) and restored before the timed evaluation.
       "idx_ann_routed" -> ((s: SparkSession, d: String) => {

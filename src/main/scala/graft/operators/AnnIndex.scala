@@ -15,6 +15,18 @@ import org.apache.spark.sql.functions._
   * Same index family and parameters as the l13 query lane (24 tables ×
   * 8 bits, Hamming≤1 multiprobe, exact cosine re-rank, bounded-heap
   * top-k), so results match l13 exactly — NearDupSpec pins the parity.
+  *
+  * GENERATIONS ([[IndexGenerations]]): every build, append and refit
+  * commits one manifest, `_gen/<N>`, naming the data files of each table
+  * — signatures, vectors, the SQ8 codes and the IVFPQ sidecar — and the
+  * corpus size n. A build writes the fixed paths (`signatures/`,
+  * `vectors/`, `sq8/codes`, `ivfpq/`) and commits generation 1; an
+  * append writes its batch's tables under `g<N>/` and commits N. Serving
+  * reads the newest complete manifest: both arms, and n for the router,
+  * always describe one committed corpus, so a crashed append is
+  * invisible and its re-run commits the same N. A directory without
+  * `_gen/` (built before the log) is generation 0 — the fixed paths,
+  * with n counted per call — and its first append commits generation 1.
   */
 object AnnIndex {
 
@@ -78,9 +90,9 @@ object AnnIndex {
     * bounded drift, but once the corpus has grown past `refitFactor` ×
     * the fitted size, the centroids/codebooks describe a minority of
     * the data and routed recall decays silently. `append` then REFITS
-    * the sidecar from the full vectors table (built aside, swapped in —
-    * a crash mid-refit leaves either the old sidecar or none, and the
-    * flat arm serves through both). The default comes from the measured
+    * the sidecar from the full corpus into its generation's directory;
+    * until that generation commits, the old sidecar keeps serving. The
+    * default comes from the measured
     * drift table (SCALE.md Round-15, AnnDriftProbe): a 4× shifted
     * append under frozen quantizers vs a fresh fit. Refit cost is
     * corpus-linear but amortized — at factor F the total refit work
@@ -116,71 +128,64 @@ object AnnIndex {
     * falling to PQ. Candidates are unchanged (the signature tables
     * hash the float vectors); only the re-rank bytes shrink, so recall
     * differs from float serving only by sub-quantization-error rank
-    * swaps. The sidecar keeps the divergence discipline of the IVFPQ
-    * arm: a crash that lands flat rows without their codes serves
-    * float32 (exact, complete) until [[repairSidecar]] appends the
-    * missing codes. */
+    * swaps. The codes table is part of each generation, so it always
+    * covers exactly the corpus the flat tables hold. */
   private[graft] val ServeSq8Key = "spark.graft.ann.serveSq8"
 
   private def serveSq8(spark: SparkSession): Boolean =
     spark.conf.getOption(ServeSq8Key).contains("true")
 
   /** Average rows per (band, sig) bucket for an n-vector corpus. */
-  private[operators] def avgBucketRows(n: Long): Long = n >> Bits
+  private def avgBucketRows(n: Long): Long = n >> Bits
 
-  private def ivfDir(dir: String) = s"$dir/ivfpq"
-  private def sq8Dir(dir: String) = s"$dir/sq8"
+  /** Past the routing threshold at the reference batch: build and append
+    * keep an IVFPQ sidecar from here on. */
+  private def sidecarDue(spark: SparkSession, n: Long): Boolean =
+    avgBucketRows(n) > flatMaxBucketRows(spark)
 
-  private def hasIvf(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${ivfDir(dir)}/centroids")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** One committed generation, read back: the corpus size n and the data
+    * files each table serves from. `ivfpq` is the sidecar's model
+    * directory with its corpus tables. */
+  private[graft] final case class Generation(number: Long, rows: Long,
+      signatures: Seq[String], vectors: Seq[String], sq8: Seq[String],
+      ivfpq: Option[(String, IvfPqIndex.Tables)])
 
-  private def hasSq8(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${sq8Dir(dir)}/codes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** The newest committed generation of `dir` (generation 0 when `dir`
+    * has no log). */
+  private[graft] def generation(spark: SparkSession, dir: String): Generation =
+    IndexGenerations.latest(spark, dir) match {
+      case Some(m) => Generation(m.number, m.rows, m("signatures"),
+        m("vectors"), m("sq8"), m("ivfpq").headOption.map(_ ->
+          IvfPqIndex.Tables(m("ivfpq/cells"), m("ivfpq/codes"), m("ivfpq/vectors"))))
+      case None =>
+        val files = IndexGenerations.files(spark, _: String)
+        def exists(p: String) = {
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+        }
+        val vectors = files(s"$dir/vectors")
+        Generation(0, readVectors(spark, vectors).count(),
+          files(s"$dir/signatures"), vectors,
+          if (exists(s"$dir/sq8/codes")) files(s"$dir/sq8/codes") else Nil,
+          if (exists(s"$dir/ivfpq/centroids"))
+            Some(s"$dir/ivfpq" -> sidecarTables(spark, s"$dir/ivfpq"))
+          else None)
+    }
 
-  /** Corpus size per index dir, cached for the JVM's lifetime and
-    * maintained INCREMENTALLY by this JVM's appends (VERDICT r14 #3: a
-    * parquet footer count per streaming micro-batch is the exact job
-    * this cache exists to avoid): the routing decision needs n on EVERY
-    * serve call (streaming probes arrive per micro-batch) and a parquet
-    * metadata count over a 100 TB corpus's footers is a real job. A
-    * stale cross-JVM count only shifts the routing point by the
-    * un-counted appends — harmless, the threshold has headroom. The
-    * sidecar count is cached the same way — `chosenArm`'s divergence
-    * guard compares the two on every routed serve, so neither may cost
-    * a job. */
-  private val nCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val ivfNCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val sq8NCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  /** Test instrumentation: parquet footer-count jobs the caches ran —
-    * the warm append/serve paths must not move it. */
-  private[graft] val footerCounts = new java.util.concurrent.atomic.AtomicLong()
-  private def countRows(spark: SparkSession, path: String): Long = {
-    footerCounts.incrementAndGet()
-    spark.read.parquet(path).count()
-  }
-  private[operators] def corpusRows(spark: SparkSession, dir: String): Long =
-    nCache.computeIfAbsent(dir,
-      _ => countRows(spark, s"$dir/vectors")).longValue()
-  private def sidecarRows(spark: SparkSession, dir: String): Long =
-    ivfNCache.computeIfAbsent(dir,
-      _ => countRows(spark, s"${ivfDir(dir)}/vectors")).longValue()
-  private def sq8Rows(spark: SparkSession, dir: String): Long =
-    sq8NCache.computeIfAbsent(dir,
-      _ => countRows(spark, s"${sq8Dir(dir)}/codes")).longValue()
-  /** Bump a cached count by an append's batch size — only when the cache
-    * is already warm (a cold cache recounts lazily, which also absorbs
-    * any cross-JVM appends this JVM never saw). */
-  private def bump(cache: java.util.concurrent.ConcurrentHashMap[
-      String, java.lang.Long], dir: String, by: Long): Unit = {
-    cache.computeIfPresent(dir, (_, old) => old + by); ()
-  }
+  private def manifest(g: Generation): IndexGenerations.Manifest =
+    IndexGenerations.Manifest(g.number, g.rows, Map("signatures" -> g.signatures,
+      "vectors" -> g.vectors, "sq8" -> g.sq8) ++ g.ivfpq.toSeq.flatMap {
+      case (model, t) => Seq("ivfpq" -> Seq(model), "ivfpq/cells" -> t.cells,
+        "ivfpq/codes" -> t.codes, "ivfpq/vectors" -> t.vectors)
+    })
+
+  private def sidecarTables(spark: SparkSession, d: String): IvfPqIndex.Tables =
+    IvfPqIndex.Tables(IndexGenerations.files(spark, s"$d/cells"),
+      IndexGenerations.files(spark, s"$d/codes"),
+      IndexGenerations.files(spark, s"$d/vectors"))
+
+  private def readVectors(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(files: _*)
 
   /** The probe-batch size the corpus-only routing threshold was
     * MEASURED at (AnnRouteProbe, 500-probe batches — SCALE.md
@@ -188,6 +193,13 @@ object AnnIndex {
     * old decision at this batch size and scales with the actual batch
     * either side of it. */
   private[graft] val RouteRefProbes = 500L
+
+  /** Saturating non-negative multiply: a Long.MaxValue threshold (the
+    * routing-off idiom specs use) must clamp, not wrap negative. */
+  private def satMul(a: Long, b: Long): Long = {
+    val r = a * b
+    if (a != 0 && (r / a != b || r < 0)) Long.MaxValue else r
+  }
 
   /** Which serving arm `queryProbes` will take for the stored index —
     * "flat" or "ivfpq". Exposed so specs pin the choice on both sides
@@ -213,38 +225,32 @@ object AnnIndex {
     * expecting burst batches below the corpus threshold lowers
     * [[FlatMaxBucketRowsKey]] so build/append fit the sidecar earlier.
     *
-    * DIVERGENCE GUARD (VERDICT r14 #2 / advisor r14): `append` writes
-    * the flat tables and the sidecar non-atomically, so a crash between
-    * them leaves the sidecar missing the appended batch — and a routed
-    * serve would silently drop those rows from every result (worse than
-    * the flat arm's crash window, where un-joined rows merely drop from
-    * candidacy). Before routing, the arms' row counts are compared
-    * (cached — no job on the warm path); on mismatch serving falls back
-    * to the exact-recall flat arm and logs the divergence. Recovery is
-    * [[repairSidecar]] (appends exactly the missing rows under the
-    * frozen quantizers). */
-  /** Saturating non-negative multiply: a Long.MaxValue threshold (the
-    * routing-off idiom specs use) must clamp, not wrap negative. */
-  private def satMul(a: Long, b: Long): Long = {
-    val r = a * b
-    if (a != 0 && (r / a != b || r < 0)) Long.MaxValue else r
-  }
-
+    * A pure function of the newest manifest and the conf: an arm serves
+    * iff its tables are in the manifest, and n is the manifest's. */
   private[graft] def chosenArm(spark: SparkSession, dir: String,
       probeCount: Long = RouteRefProbes): String =
-    if (satMul(probeCount, avgBucketRows(corpusRows(spark, dir))) >
-        satMul(flatMaxBucketRows(spark), RouteRefProbes) &&
-      hasIvf(spark, dir)) {
-      val (n, sn) = (corpusRows(spark, dir), sidecarRows(spark, dir))
-      if (n == sn) "ivfpq"
-      else {
-        org.apache.log4j.Logger.getLogger(getClass).warn(
-          s"ANN index $dir: flat arm holds $n vectors but the IVFPQ " +
-            s"sidecar holds $sn — serving flat until repairSidecar runs " +
-            "(likely a crash between the two halves of append)")
-        "flat"
-      }
-    } else "flat"
+    arm(spark, generation(spark, dir), probeCount)
+
+  private def arm(spark: SparkSession, g: Generation, probeCount: Long): String =
+    if (g.ivfpq.isDefined && satMul(probeCount, avgBucketRows(g.rows)) >
+        satMul(flatMaxBucketRows(spark), RouteRefProbes)) "ivfpq"
+    else "flat"
+
+  /** Which representation the exact re-rank will read — "sq8" (1-byte
+    * codes, 4× fewer corpus bytes) or "float32" — for EITHER serving
+    * arm (r19: the routed IVFPQ arm's bounded re-rank honors the same
+    * decision). SQ8 serves when opted in ([[ServeSq8Key]]) and the
+    * newest generation has codes, which then cover its whole corpus. */
+  private[graft] def serveMode(spark: SparkSession, dir: String): String =
+    mode(spark, generation(spark, dir))
+
+  private def mode(spark: SparkSession, g: Generation): String =
+    if (serveSq8(spark) && g.sq8.nonEmpty) "sq8" else "float32"
+
+  private def sq8Codes(spark: SparkSession, g: Generation): Option[DataFrame] =
+    if (mode(spark, g) == "sq8")
+      Some(spark.read.schema("vec_id BIGINT, q ARRAY<TINYINT>").parquet(g.sq8: _*))
+    else None
 
   /** One pass over the vectors: (vec_id, band, sig) signature rows plus
     * a co-located copy of the vectors, written under `dir`. Past the
@@ -253,23 +259,25 @@ object AnnIndex {
   def build(spark: SparkSession, sfDir: String, dir: String): Unit =
     buildFrom(spark, graft.Tables.t(spark, sfDir, "embeddings"), dir)
 
-  /** Build from an arbitrary (vec_id, embedding) frame. */
-  def buildFrom(spark: SparkSession, vecs: DataFrame, dir: String): Unit = {
-    nCache.remove(dir)
-    ivfNCache.remove(dir)
-    sq8NCache.remove(dir)
-    sq8SetCache.remove(dir)
-    writeIndex(spark, vecs, dir, mode = "overwrite")
-    maintainSq8(spark, dir)
-    maintainIvfSidecar(spark, dir)
-  }
+  /** Build from an arbitrary (vec_id, embedding) frame: replaces whatever
+    * `dir` held, log included, and commits generation 1. */
+  def buildFrom(spark: SparkSession, vecs: DataFrame, dir: String): Unit =
+    AppendLock.withLock(spark, dir) {
+      IndexGenerations.clear(spark, dir)
+      val n = writeIndex(spark, vecs, dir)
+      complete(spark, dir, dir, Generation(1, n,
+        IndexGenerations.files(spark, s"$dir/signatures"),
+        IndexGenerations.files(spark, s"$dir/vectors"), Nil, None),
+        fit = sidecarDue(spark, n))
+    }
 
   /** Symmetric int8 codes for a (vec_id, embedding) frame — the l67
     * lane's arithmetic, stored as array<tinyint> (measured on-disk win
     * vs hand-packed binary, SCALE.md r16). scale rides along for
     * dequantization debugging; serving never reads it ([[CosineI8]]'s
-    * scale cancellation). MAP-ONLY — no shuffle. */
-  private def quantizeSq8(vecs: DataFrame): DataFrame =
+    * scale cancellation). MAP-ONLY — no shuffle. Returns the files. */
+  private def writeSq8(spark: SparkSession, vecs: DataFrame,
+      out: String): Seq[String] = {
     vecs.select(col("vec_id"),
       (expr("aggregate(embedding, CAST(0 AS DOUBLE), " +
         "(a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))") / 127.0)
@@ -280,269 +288,111 @@ object AnnIndex {
           "CASE WHEN scale = 0 THEN 0 ELSE " +
           "floor(CAST(x AS DOUBLE) / scale + 0.5) END)) AS TINYINT))")
           .as("q"))
-
-  /** Create the SQ8 sidecar when serving opted in and none exists; an
-    * EXISTING sidecar is maintained by [[append]] regardless of the
-    * conf (two arms over different corpora is the failure mode the
-    * divergence guards exist to catch, not one to create on purpose). */
-  private def maintainSq8(spark: SparkSession, dir: String): Unit =
-    if (serveSq8(spark) && !hasSq8(spark, dir)) {
-      val n = corpusRows(spark, dir)
-      quantizeSq8(spark.read.parquet(s"$dir/vectors"))
-        .write.mode("overwrite").parquet(s"${sq8Dir(dir)}/codes")
-      sq8NCache.put(dir, n)
-      ()
-    }
-
-  /** Fit (or incrementally extend) the IVFPQ sidecar when the corpus has
-    * outgrown the flat arm. Reading back the just-written vectors/ keeps
-    * the sidecar derived from EXACTLY the rows the flat tables hold. The
-    * sidecar fit is corpus-linear (sampled k-means + one encode pass) —
-    * paid at build/append time so serving never is. The threshold check
-    * consumes the CACHED corpus count (VERDICT r14 #3) — on the
-    * streaming-append path below the threshold this must cost no job. */
-  private def maintainIvfSidecar(spark: SparkSession, dir: String): Unit = {
-    val n = corpusRows(spark, dir)
-    if (avgBucketRows(n) > flatMaxBucketRows(spark)) {
-      if (!hasIvf(spark, dir)) {
-        IvfPqIndex.buildFrom(spark, spark.read.parquet(s"$dir/vectors"),
-          ivfDir(dir))
-        // sidecar derives from exactly the flat rows — seed its cached
-        // count from the corpus's instead of re-counting
-        ivfNCache.put(dir, n)
-        ()
-      }
-      // an existing sidecar stays frozen across appends (the FAISS add
-      // contract); appended rows joined in by the caller via
-      // IvfPqIndex.append before this check
-    }
+      .write.mode("overwrite").parquet(out)
+    IndexGenerations.files(spark, out)
   }
 
-  /** Refit the sidecar's quantizers on the CURRENT corpus (the
-    * refit-at-N× policy — see [[RefitFactor]]): built aside under
-    * ivfpq.tmp, then swapped in. Crash windows: during the aside build
-    * the old (stale-quantizer, row-complete) sidecar keeps serving;
-    * between delete and rename there is NO sidecar and `chosenArm`
-    * serves the flat arm; a leftover tmp dir is overwritten by the next
-    * refit. Concurrent serving JVMs that appended-ahead see a row-count
-    * mismatch mid-refit and also fall back to flat — never a silently
-    * short answer. */
-  private def refitSidecar(spark: SparkSession, dir: String): Unit = {
-    // count snapshot from BEFORE the aside build: the new sidecar holds
-    // the flat rows as of the build's read, so seeding its cached count
-    // from this snapshot keeps the post-refit serve free of footer-count
-    // jobs. An append by THIS JVM racing the refit still surfaces as a
-    // count mismatch (nCache moves past the snapshot) and degrades to
-    // the conservative flat fallback. A CROSS-JVM append landing between
-    // this snapshot and the build's read is invisible here — both caches
-    // then sit equal at the stale-low value, which the guard cannot
-    // distinguish from agreement. That state is still SAFE (the sidecar
-    // is a superset of what the caches claim, so routed answers are
-    // complete); the counts stay silently low until the serving JVM's
-    // refreshCounts cadence recounts both arms.
-    val nAtStart = corpusRows(spark, dir)
-    val tmp = s"$dir/ivfpq.tmp"
-    IvfPqIndex.buildFrom(spark, spark.read.parquet(s"$dir/vectors"), tmp)
-    val p = new org.apache.hadoop.fs.Path(ivfDir(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    // the no-sidecar window: between this delete and the rename below
-    // there is NO ivfpq/ dir and chosenArm serves the flat arm — a crash
-    // here degrades to exact-recall flat serving, never a short answer.
-    // AnnCrashSpec SIGKILLs a child exactly here and pins the story.
-    crashProbe("refit_before_rename")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), p),
-      s"refit swap failed: could not rename $tmp over $p")
-    ivfNCache.put(dir, nAtStart)
-    ()
+  /** Add what generation `g` lacks but the conf and its size call for,
+    * under `out`, then commit it: the SQ8 codes of the whole corpus when
+    * SQ8 serving is opted in and `g` has none (an existing codes table
+    * is extended by [[append]] whatever the conf), and with `fit` a
+    * fresh IVFPQ sidecar over the whole corpus — past the routing
+    * threshold, or in place of one due a refit. The fit is
+    * corpus-linear (sampled k-means + one encode pass), paid at
+    * build/append time so serving never is. */
+  private def complete(spark: SparkSession, dir: String, out: String,
+      g: Generation, fit: Boolean): Unit = {
+    val sq8 =
+      if (g.sq8.isEmpty && serveSq8(spark))
+        writeSq8(spark, readVectors(spark, g.vectors), s"$out/sq8/codes")
+      else g.sq8
+    val ivfpq =
+      if (fit) {
+        IvfPqIndex.buildFrom(spark, readVectors(spark, g.vectors), s"$out/ivfpq")
+        Some(s"$out/ivfpq" -> sidecarTables(spark, s"$out/ivfpq"))
+      } else g.ivfpq
+    crashProbe("before_commit")
+    IndexGenerations.commit(spark, dir, manifest(g.copy(sq8 = sq8, ivfpq = ivfpq)))
   }
-
-  /** Reconverge the IVFPQ sidecar after a crash inside [[append]]'s
-    * flat-landed/sidecar-missed window (the divergence [[chosenArm]]
-    * detects and serves around): appends exactly the rows present in
-    * vectors/ but absent from the sidecar, under the sidecar's FROZEN
-    * quantizers — so a repaired index serves identically to one whose
-    * append never crashed. A sidecar that somehow holds rows the flat
-    * tables lack (not a state `append`'s write order can produce) is
-    * beyond this repair — rebuild via [[buildFrom]]. No-op when no
-    * sidecar exists. */
-  def repairSidecar(spark: SparkSession, dir: String): Unit = {
-    if (hasIvf(spark, dir)) {
-      val missing = spark.read.parquet(s"$dir/vectors")
-        .join(spark.read.parquet(s"${ivfDir(dir)}/vectors").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-      if (!missing.isEmpty) IvfPqIndex.append(spark, ivfDir(dir), missing)
-      nCache.remove(dir)
-      ivfNCache.remove(dir)
-    } else maintainIvfSidecar(spark, dir)
-    // the SQ8 codes heal by the same anti-join discipline: append
-    // exactly the flat rows the codes table lacks (quantization is
-    // per-row — no quantizer state to refit)
-    if (hasSq8(spark, dir)) {
-      val missing = spark.read.parquet(s"$dir/vectors")
-        .join(spark.read.parquet(s"${sq8Dir(dir)}/codes").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-      if (!missing.isEmpty)
-        quantizeSq8(missing).write.mode("append")
-          .parquet(s"${sq8Dir(dir)}/codes")
-      sq8NCache.remove(dir)
-      ()
-    } else maintainSq8(spark, dir)
-  }
-
-  /** Drop this JVM's cached row counts for `dir`, forcing the next
-    * serve to recount both arms. The caches deliberately do NOT see
-    * other JVMs' appends (a stale count only shifts the routing point —
-    * harmless); a long-lived serving JVM that wants to OBSERVE another
-    * process's appends — including a crashed append's arm divergence,
-    * which [[chosenArm]] can only detect from fresh counts — calls this
-    * on its refresh cadence. */
-  def refreshCounts(dir: String): Unit = {
-    nCache.remove(dir)
-    ivfNCache.remove(dir)
-    sq8NCache.remove(dir)
-    sq8SetCache.remove(dir)
-    ()
-  }
-
-  /** True when a sidecar exists but holds a different row count than the
-    * flat tables — the LIGHT repair class ([[repairSidecar]] heals it
-    * with a batch-sized anti-join append), distinct from
-    * [[repairNeeded]]'s other state, the missing sidecar, whose repair
-    * is a corpus-linear full fit. The serving stream's auto-repair path
-    * (StreamJobs.annServeEachBatch) calls this after [[refreshCounts]]
-    * to NAME the repair class it is about to pay for. Reads the same
-    * (possibly cached) counts as the router, so any caller wanting a
-    * fresh observation pairs it with [[refreshCounts]] first. */
-  def sidecarDiverged(spark: SparkSession, dir: String): Boolean =
-    hasIvf(spark, dir) &&
-      corpusRows(spark, dir) != sidecarRows(spark, dir)
-
-  /** True when [[repairSidecar]] has work to do: either the sidecar
-    * diverged from the flat tables (a crashed APPEND — repair is an
-    * anti-join + frozen-quantizer append), or the corpus is past the
-    * routing threshold with NO sidecar at all (a crashed REFIT swap, or
-    * a threshold crossing another JVM's appends caused — repair is a
-    * FULL sidecar fit, corpus-linear). The two states heal through the
-    * same [[repairSidecar]] entry point; a caller that needs to budget
-    * the heavy case separately distinguishes them via
-    * [[sidecarDiverged]]. Cached counts, like the router — pair with
-    * [[refreshCounts]] to observe other JVMs. */
-  def repairNeeded(spark: SparkSession, dir: String): Boolean =
-    (if (hasIvf(spark, dir))
-      corpusRows(spark, dir) != sidecarRows(spark, dir)
-    else avgBucketRows(corpusRows(spark, dir)) > flatMaxBucketRows(spark)) ||
-      // an SQ8 code table short of the flat rows (crashed append) — or
-      // SQ8 serving opted in with no codes at all — heals through the
-      // same repairSidecar entry point
-      (if (hasSq8(spark, dir))
-        corpusRows(spark, dir) != sq8Rows(spark, dir)
-      else serveSq8(spark))
 
   /** Crash-point probe for the SIGKILL e2e (the StreamJobs.crashProbe
-    * discipline): labels fire between append's non-atomic halves. */
+    * discipline): labels fire between append's writes and before its
+    * commit. */
   private[graft] var crashProbe: String => Unit = _ => ()
 
   /** Incremental maintenance: signatures are per-row, so new vectors
     * append without touching the existing index (the write-once model —
     * no rebuild, no rewrite). `newVecs`: (vec_id, embedding).
     *
-    * NOT atomic across signatures/ and vectors/ and NOT idempotent: a
-    * crash between the writes leaves the batch un-servable but harmless
-    * (signature rows without vectors drop at the candidate-vector inner
-    * join; vectors without signatures are never candidates), while
-    * blindly re-running the whole append duplicates rows — duplicate
-    * VECTOR rows reach the top-k heap twice and can occupy two result
-    * slots. Recovery from a failed append is re-appending only the
-    * missing table's rows, or a rebuild; replay-safe ingestion belongs
-    * behind a committed-batch marker (the StreamJobs discipline).
-    *
-    * Also not atomic ACROSS THE ARMS: a crash between the flat write
-    * and the sidecar extension leaves the sidecar missing the batch.
-    * [[chosenArm]]'s count guard detects exactly that state and serves
-    * the flat arm (exact recall over the full corpus, appended rows
-    * included) until [[repairSidecar]] appends the missing rows —
-    * AnnCrashSpec SIGKILLs a child in this window and pins both the
-    * fallback and the repair's reconvergence. */
-  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    // persisted around BOTH the flat write and the sidecar append: a
-    // non-deterministic input evaluated twice would leave the two arms
-    // serving different corpora
-    val e = newVecs.select(col("vec_id"), col("embedding")).persist()
-    try {
-      // batch-sized count (e is persisted): keeps the cached corpus
-      // count warm INCREMENTALLY instead of invalidating it — at
-      // streaming-append rates a footer recount per micro-batch is the
-      // job the cache exists to avoid (VERDICT r14 #3)
-      val batchN = e.count()
-      try writeIndex(spark, e, dir, mode = "append")
-      catch { case t: Throwable => nCache.remove(dir); throw t }
-      bump(nCache, dir, batchN)
-      crashProbe("after_flat_write")
-      // an existing SQ8 sidecar extends with the batch's codes (per-row
-      // quantization, no fitted state) — a crash between the flat write
-      // and here leaves the codes short, which flatQueryProbes' count
-      // guard detects and serves around in float32
-      if (hasSq8(spark, dir)) {
-        try quantizeSq8(e).write.mode("append")
-          .parquet(s"${sq8Dir(dir)}/codes")
-        catch { case t: Throwable => sq8NCache.remove(dir); throw t }
-        bump(sq8NCache, dir, batchN)
-        // the set-equality verdict CARRIES across this append: the same
-        // id batch landed on both sides, so the symmetric difference is
-        // unchanged — re-key the cached verdict instead of letting the
-        // next serve pay two corpus-linear fingerprint scans (the same
-        // incremental discipline as bump, VERDICT r14 #3)
-        sq8SetCache.computeIfPresent(dir,
-          (_, o) => (o._1 + batchN, o._2 + batchN, o._3))
-        ()
-      } else maintainSq8(spark, dir)
-      if (hasIvf(spark, dir)) {
-        val f = refitFactor(spark)
-        val refit = f > 0 &&
-          IvfPqIndex.fittedN(spark, ivfDir(dir))
-            .exists(fn => corpusRows(spark, dir) > f * fn)
-        if (refit) refitSidecar(spark, dir)
-        else {
-          // sidecar exists, corpus within the refit bound: extend it
-          // under its frozen quantizers so both arms keep answering
-          // over the same corpus
-          try IvfPqIndex.append(spark, ivfDir(dir), e)
-          catch { case t: Throwable => ivfNCache.remove(dir); throw t }
-          bump(ivfNCache, dir, batchN)
+    * One generation per call, under the index's [[AppendLock]]: the
+    * batch's signatures, vectors and SQ8 codes land under `g<N>/`, the
+    * sidecar extends under its FROZEN quantizers into `g<N>/ivfpq` (or,
+    * past [[RefitFactor]] × its fitted size, is refit there over the
+    * whole corpus), and the manifest commit publishes all of it at once.
+    * A crash anywhere before the commit leaves generation N−1 serving
+    * on both arms; re-running the append rewrites `g<N>/` and commits
+    * the same N. Running it again AFTER a commit appends the batch a
+    * second time — replay-safe ingestion still belongs behind a
+    * committed-batch marker (the StreamJobs discipline). */
+  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit =
+    AppendLock.withLock(spark, dir) {
+      val g = generation(spark, dir)
+      val number = IndexGenerations.next(spark, dir)
+      val out = s"$dir/g$number"
+      IndexGenerations.delete(spark, out) // a crashed run's leftovers
+      // persisted across every write: a non-deterministic input evaluated
+      // twice would leave the tables describing different batches
+      val e = newVecs.select(col("vec_id"), col("embedding")).persist()
+      try {
+        val rows = g.rows + writeIndex(spark, e, out)
+        crashProbe("after_flat_write")
+        // the SQ8 codes extend per row (no fitted state)
+        val sq8 =
+          if (g.sq8.isEmpty) Nil
+          else g.sq8 ++ writeSq8(spark, e, s"$out/sq8/codes")
+        val refit = g.ivfpq.exists { case (model, _) =>
+          val f = refitFactor(spark)
+          f > 0 && IvfPqIndex.fittedN(spark, model).exists(rows > f * _)
         }
-      } else
-        // corpus may have just crossed the routing threshold
-        maintainIvfSidecar(spark, dir)
-    } finally { e.unpersist(); () }
-  }
+        val ivfpq = g.ivfpq.filterNot(_ => refit).map { case (model, t) =>
+          IvfPqIndex.appendTo(spark, model, s"$out/ivfpq", e)
+          model -> (t ++ sidecarTables(spark, s"$out/ivfpq"))
+        }
+        complete(spark, dir, out, Generation(number, rows,
+          g.signatures ++ IndexGenerations.files(spark, s"$out/signatures"),
+          g.vectors ++ IndexGenerations.files(spark, s"$out/vectors"), sq8, ivfpq),
+          fit = refit || (ivfpq.isEmpty && sidecarDue(spark, rows)))
+      } finally { e.unpersist(); () }
+    }
 
   /** Shared write half: the input is PERSISTED across the two writes —
     * signatures/ and vectors/ must come from the SAME evaluation, or a
     * non-deterministic input (sample/limit, a re-read table that changed
     * between writes) leaves them inconsistent and queryProbes' inner join
-    * silently drops or strands vectors. Also one corpus scan, not two. */
-  private def writeIndex(spark: SparkSession, vecs: DataFrame, dir: String,
-      mode: String): Unit = {
+    * silently drops or strands vectors. Also one corpus scan, not two.
+    * Returns the row count, which the generation records as its n. */
+  private def writeIndex(spark: SparkSession, vecs: DataFrame, dir: String): Long = {
     graft.functions.VectorExpressions.register(spark)
     val e = vecs.select(col("vec_id"), col("embedding")).persist()
     try {
+      val n = e.count()
       e.select(col("vec_id"), posexplode(
           expr(s"sign_lsh(embedding, $Tables, $Bits)")).as(Seq("band", "sig")))
-        .write.mode(mode).parquet(s"$dir/signatures")
-      e.write.mode(mode).parquet(s"$dir/vectors")
+        .write.mode("overwrite").parquet(s"$dir/signatures")
+      e.write.mode("overwrite").parquet(s"$dir/vectors")
+      n
     } finally { e.unpersist(); () }
   }
 
   /** Top-k neighbors for every vector with `vec_id < nProbes`, served
     * from the stored index. */
   def query(spark: SparkSession, dir: String, nProbes: Int, k: Int): DataFrame = {
-    val vecs = spark.read.parquet(s"$dir/vectors")
+    val g = generation(spark, dir)
     // nProbes is the router's batch-size hint too (an upper bound when
     // ids are sparse — a cost-model input, not a correctness one)
-    queryProbes(spark, dir, vecs.filter(col("vec_id") < nProbes)
+    serve(spark, g, readVectors(spark, g.vectors).filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv")), k,
-      probeCount = nProbes)
+      excludeSelf = true, probeCount = nProbes)
   }
 
   /** Top-k neighbors for an ARBITRARY probe set `(probe_id, pv)`, served
@@ -563,127 +413,45 @@ object AnnIndex {
     * arm's dominant shuffle term — the batch serves from the IVFPQ
     * sidecar instead (cells grow as √n; candidates per probe fall with
     * corpus growth). Below it, the flat arm's exact-recall bucket-join
-    * serves as before. `probeCount` feeds the router: pass it when the
-    * caller knows the batch size (streaming micro-batches, fixed probe
-    * slices) — when negative it is COUNTED, one batch-sized job, which
-    * also means a non-deterministic probe frame should be persisted by
-    * the caller (the flat arm already broadcasts the probe frame
-    * twice, so that requirement is not new). */
+    * serves as before. The probe batch is collected once and both arms
+    * serve from that local relation; the router takes the batch size
+    * from it unless the caller passes `probeCount` (a burst caller that
+    * wants routing to follow a nominal size). Every table, and n, come
+    * from ONE read of the newest manifest. */
   def queryProbes(spark: SparkSession, dir: String, probeVecs: DataFrame,
-      k: Int, excludeSelf: Boolean = true, probeCount: Long = -1L): DataFrame = {
-    val pn = if (probeCount >= 0) probeCount else probeVecs.count()
-    if (chosenArm(spark, dir, pn) == "ivfpq") {
-      // the routed arm honors serveSq8 too (VERDICT r17 #5 / r18 #4):
-      // behind the SAME gates as the flat arm — opt-in conf, codes
-      // exist, counts agree, id-set fingerprints agree — its bounded
-      // exact re-rank reads the 1-byte codes; any gate failure serves
-      // the complete float32 re-rank, never short answers
-      val sq8 =
-        if (serveMode(spark, dir) == "sq8")
-          Some(spark.read.parquet(s"${sq8Dir(dir)}/codes"))
-        else None
-      IvfPqIndex.queryProbes(spark, ivfDir(dir), probeVecs, k,
-        nprobe = routeNprobe(spark), excludeSelf = excludeSelf,
-        sq8Codes = sq8)
-    } else flatQueryProbes(spark, dir, probeVecs, k, excludeSelf)
-  }
+      k: Int, excludeSelf: Boolean = true, probeCount: Long = -1L): DataFrame =
+    serve(spark, generation(spark, dir), probeVecs, k, excludeSelf, probeCount)
 
-  /** Set-equality spot check BEHIND the count gate (advisor r17): equal
-    * row counts with divergent vec_id sets — two external writers'
-    * crossed appends — pass a count-only gate, and the codes inner join
-    * would then silently drop the un-coded vectors from the re-rank.
-    * One order-insensitive fingerprint per side — two independent
-    * 64-bit XOR-folds of hashed ids PLUS two SUM-folds of the hashes
-    * mod 31-bit primes (advisor r18: XOR alone tests multiset PARITY,
-    * so duplicate ids — the blind-re-run-append failure mode append()'s
-    * own doc names — cancel in pairs and equal-count sides with
-    * divergent sets could pass; a sum is cancellation-resistant, a
-    * duplicated id shifts it by its residue instead of erasing itself).
-    * The sums are modded below 2³¹ BEFORE summing because the session
-    * runs ANSI: a wrapping mod-2⁶⁴ sum of full-range hashes would
-    * overflow-throw on the second row; n·(2³¹) stays inside a long to
-    * n = 2³² rows per index dir. Combined catch probability for a
-    * duplicate-cancellation divergence ≈ 1−2⁻⁶² (the XOR pair already
-    * catches every non-cancelling set difference at ≈ 1−2⁻¹²⁸). Cached keyed
-    * by the (n, qn) the verdict was computed at: the warm serve path
-    * costs no job, this JVM's own appends CARRY the verdict (the same
-    * id batch lands on both sides — symmetric difference unchanged, so
-    * append() just re-keys it), and only externally-moved counts
-    * (refreshCounts observing another process, a repair) re-check —
-    * exactly once per observation. Crossed appends stay float32 even after
-    * repairSidecar (the repair append makes the counts diverge, which
-    * the count gate then holds) — degraded, never short answers. */
-  private val sq8SetCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long, Boolean)]()
-  private[graft] def idFingerprint(spark: SparkSession,
-      path: String): (Long, Long, Long, Long) = {
-    val r = spark.read.parquet(path)
-      .select(xxhash64(col("vec_id")).as("h1"),
-        xxhash64(lit("g2"), col("vec_id")).as("h2"))
-      .agg(expr("coalesce(bit_xor(h1), 0L)"), expr("coalesce(bit_xor(h2), 0L)"),
-        // duplicate ids do NOT cancel in these
-        expr("coalesce(sum(pmod(h1, 2147483629L)), 0L)"),
-        expr("coalesce(sum(pmod(h2, 2147483587L)), 0L)"))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
-  private def sq8SetMatches(spark: SparkSession, dir: String,
-      n: Long, qn: Long): Boolean = {
-    // plain get/put, NOT compute: the recompute runs two Spark jobs and
-    // must never run under the map's bin lock (a serve on another dir
-    // hashing to the same bin would stall behind them). The benign race
-    // — two threads recomputing the same dir — both reach one verdict.
-    val cached = sq8SetCache.get(dir)
-    if (cached != null && cached._1 == n && cached._2 == qn) cached._3
-    else {
-      val ok = idFingerprint(spark, s"$dir/vectors") ==
-        idFingerprint(spark, s"${sq8Dir(dir)}/codes")
-      sq8SetCache.put(dir, (n, qn, ok))
-      ok
+  private def serve(spark: SparkSession, g: Generation, probeVecs: DataFrame,
+      k: Int, excludeSelf: Boolean, probeCount: Long): DataFrame = {
+    val probes = PqIndex.collectProbes(spark, probeVecs)
+    val pn = if (probeCount >= 0) probeCount else probes._1.length.toLong
+    g.ivfpq match {
+      case Some((model, t)) if arm(spark, g, pn) == "ivfpq" =>
+        // the routed arm's bounded exact re-rank honors serveSq8 too
+        // (VERDICT r17 #5 / r18 #4)
+        IvfPqIndex.serve(spark, model, t, probes, k, routeNprobe(spark),
+          excludeSelf, sq8Codes(spark, g))
+      case _ => flatServe(spark, g, probes._2, k, excludeSelf)
     }
   }
-
-  /** Which representation the exact re-rank will read — "sq8" (1-byte
-    * codes, 4× fewer corpus bytes) or "float32" — for EITHER serving
-    * arm (r19: the routed IVFPQ arm's bounded re-rank honors the same
-    * decision; until then it was the last float32 reader under
-    * serveSq8). SQ8 serves only when opted in ([[ServeSq8Key]]), the
-    * codes exist, the cached counts agree — the same divergence
-    * discipline as [[chosenArm]]: a crashed append's missing codes
-    * degrade to the complete float32 re-rank, never to silently short
-    * answers — AND the id-set fingerprints agree ([[sq8SetMatches]],
-    * advisor r17/r18). */
-  private[graft] def serveMode(spark: SparkSession, dir: String): String =
-    if (serveSq8(spark) && hasSq8(spark, dir)) {
-      val (n, qn) = (corpusRows(spark, dir), sq8Rows(spark, dir))
-      if (n != qn) {
-        org.apache.log4j.Logger.getLogger(getClass).warn(
-          s"ANN index $dir: flat arm holds $n vectors but the SQ8 codes " +
-            s"hold $qn — serving float32 until repairSidecar runs")
-        "float32"
-      } else if (!sq8SetMatches(spark, dir, n, qn)) {
-        org.apache.log4j.Logger.getLogger(getClass).warn(
-          s"ANN index $dir: flat arm and SQ8 codes both hold $n rows but " +
-            "their vec_id sets diverge (crossed external appends) — " +
-            "serving the complete float32 re-rank")
-        "float32"
-      } else "sq8"
-    } else "float32"
 
   /** The flat sign-LSH serving arm (pre-r14 `queryProbes` body) — still
     * the right plan below the routing threshold, and callable directly
     * for arm-vs-arm measurement (NearDupSpec's routed-vs-flat parity). */
   private[graft] def flatQueryProbes(spark: SparkSession, dir: String,
-      probeVecs: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
+      probeVecs: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame =
+    flatServe(spark, generation(spark, dir),
+      PqIndex.collectProbes(spark, probeVecs)._2, k, excludeSelf)
+
+  /** `probeLocal`: the probe batch collected ONCE into a LocalRelation —
+    * the pre-r19 plan evaluated the probe frame twice (bucket-probe
+    * broadcast + re-rank broadcast), re-running its scan each time. */
+  private def flatServe(spark: SparkSession, g: Generation,
+      probeLocal: DataFrame, k: Int, excludeSelf: Boolean): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
     val sigs = spark.read.schema("vec_id BIGINT, band INT, sig BIGINT")
-      .parquet(s"$dir/signatures")
-    val vecs = spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .parquet(s"$dir/vectors")
-    // the probe batch is collected ONCE and reused as a LocalRelation:
-    // the pre-r19 plan evaluated probeVecs twice (bucket-probe broadcast
-    // + re-rank broadcast), re-running its scan each time
-    val (_, probeLocal) = PqIndex.collectProbes(spark, probeVecs)
+      .parquet(g.signatures: _*)
     val probeSigs = probeLocal.select(col("probe_id"), col("pv"), posexplode(
         expr(s"sign_lsh(pv, $Tables, $Bits)")).as(Seq("pband", "psig")))
     val probeBuckets = probeSigs.withColumn("bsig",
@@ -698,18 +466,18 @@ object AnnIndex {
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
     // the re-rank reads SQ8 codes when the mode allows (4× fewer corpus
     // bytes through the candidates join; scale cancels in cosine_i8)
-    val scored =
-      if (serveMode(spark, dir) == "sq8")
+    val scored = sq8Codes(spark, g) match {
+      case Some(codes) =>
         cands
-          .join(spark.read.parquet(s"${sq8Dir(dir)}/codes")
-            .select("vec_id", "q"), "vec_id")
+          .join(codes, "vec_id")
           .join(broadcast(probeLocal), "probe_id")
           .withColumn("cos", expr("cosine_i8(pv, q)"))
-      else
+      case None =>
         cands
-          .join(vecs, "vec_id")
+          .join(readVectors(spark, g.vectors), "vec_id")
           .join(broadcast(probeLocal), "probe_id")
           .withColumn("cos", expr("cosine_f32(pv, embedding)"))
+    }
     scored
       .groupBy("probe_id")
       .agg(topk(col("cos"), col("vec_id")).as("nb"))

@@ -51,6 +51,12 @@ import org.apache.spark.sql.functions._
   * FIXED nprobe (tens of cells out of √n) — pass `nprobe` explicitly
   * there; the scan term then falls with corpus growth instead of
   * tracking it.
+  *
+  * Appending and serving each have a kernel over a model directory and
+  * explicit table paths ([[appendTo]], [[serve]]). AnnIndex's sidecar
+  * serves through them from the files its generation manifest lists —
+  * the build's directory plus one directory per committed append; the
+  * one-directory `append` and `queryProbes` are wrappers.
   */
 object IvfPqIndex {
 
@@ -130,6 +136,20 @@ object IvfPqIndex {
     } finally { vecs.unpersist(); () }
   }
 
+  /** The corpus-sized tables an index serves from, as parquet paths
+    * (directories or files). A built index is its own directory's
+    * tables ([[Tables.at]]); AnnIndex's sidecar adds the files of each
+    * committed append. */
+  private[graft] final case class Tables(cells: Seq[String],
+      codes: Seq[String], vectors: Seq[String]) {
+    def ++(o: Tables): Tables =
+      Tables(cells ++ o.cells, codes ++ o.codes, vectors ++ o.vectors)
+  }
+  private[graft] object Tables {
+    def at(dir: String): Tables =
+      Tables(Seq(s"$dir/cells"), Seq(s"$dir/codes"), Seq(s"$dir/vectors"))
+  }
+
   /** Incremental maintenance under the FROZEN build-time models: new
     * vectors assign to their top-2 cells under the stored centroids and
     * encode under the stored codebooks (PqIndex.encode — one shared
@@ -140,13 +160,19 @@ object IvfPqIndex {
     * harmless (cells without codes produce candidates whose ADC rows
     * drop at the codes join; codes without cells are never candidates),
     * and replay-safe ingestion belongs behind a committed-batch marker
-    * (the StreamJobs discipline). Quantizer drift (a corpus that
-    * outgrows the build-time centroids/codebooks) is a REBUILD, the
-    * FAISS contract. */
-  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
+    * (the StreamJobs discipline) or a generation commit (AnnIndex's
+    * sidecar). Quantizer drift (a corpus that outgrows the build-time
+    * centroids/codebooks) is a REBUILD, the FAISS contract. */
+  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit =
+    appendTo(spark, dir, dir, newVecs)
+
+  /** The append kernel: encodes `newVecs` under the models of `modelDir`
+    * and appends them to cells/, codes/ and vectors/ under `outDir`. */
+  private[operators] def appendTo(spark: SparkSession, modelDir: String,
+      outDir: String, newVecs: DataFrame): Unit = {
     graft.functions.VectorExpressions.register(spark)
-    val centers = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebooks")
+    val centers = spark.read.parquet(s"$modelDir/centroids")
+    val cb = spark.read.parquet(s"$modelDir/codebooks")
     val subDim = cb.select(size(col("cvec"))).first().getInt(0)
     val vecs = newVecs.select(col("vec_id"), col("embedding")).persist()
     try {
@@ -157,12 +183,12 @@ object IvfPqIndex {
         .groupBy("vec_id")
         .agg(top2(col("csim"), col("cell")).as("nb"))
         .select(col("vec_id"), explode(col("nb.id")).as("cell"))
-        .write.mode("append").parquet(s"$dir/cells")
+        .write.mode("append").parquet(s"$outDir/cells")
       // match the stored codes layout (wide r13+ / long pre-r13) — see
       // PqIndex.encodeMatchingLayout for why mixing schemas is fatal
-      PqIndex.encodeMatchingLayout(spark, s"$dir/codes", cb, subDim, vecs)
-        .write.mode("append").parquet(s"$dir/codes")
-      vecs.write.mode("append").parquet(s"$dir/vectors")
+      PqIndex.encodeMatchingLayout(spark, s"$modelDir/codes", cb, subDim, vecs)
+        .write.mode("append").parquet(s"$outDir/codes")
+      vecs.write.mode("append").parquet(s"$outDir/vectors")
     } finally { vecs.unpersist(); () }
   }
 
@@ -174,28 +200,38 @@ object IvfPqIndex {
     * twice), cell-restricted ADC over codes/, bounded exact re-rank. */
   def queryProbes(spark: SparkSession, dir: String, probeVecs: DataFrame,
       k: Int, nprobe: Int = 0, excludeSelf: Boolean = true,
-      sq8Codes: Option[DataFrame] = None): DataFrame = {
+      sq8Codes: Option[DataFrame] = None): DataFrame =
+    serve(spark, dir, Tables.at(dir), PqIndex.collectProbes(spark, probeVecs),
+      k, nprobe, excludeSelf, sq8Codes)
+
+  /** The serving kernel: the models of `modelDir`, the corpus tables
+    * `t`, and a probe batch already collected by
+    * [[PqIndex.collectProbes]]. */
+  private[operators] def serve(spark: SparkSession, modelDir: String,
+      t: Tables, probes: (Array[(Long, Array[Float])], DataFrame), k: Int,
+      nprobe: Int, excludeSelf: Boolean,
+      sq8Codes: Option[DataFrame]): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
     // the two MODEL tables are collected once per dir and held resident
     // (ServeModelCache, file-signature guarded): the pre-r19 serve paid
     // a centroid-count job, a subDim job, and a distance-table
     // crossJoin-collect job per probe batch — driver-blocking scheduling
     // latency, not compute, at any batch size
-    val centersArr = ServeModelCache.cached(spark, s"$dir/centroids") {
-      spark.read.parquet(s"$dir/centroids").collect()
+    val centersArr = ServeModelCache.cached(spark, s"$modelDir/centroids") {
+      spark.read.parquet(s"$modelDir/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     }
-    val cbArr = ServeModelCache.cached(spark, s"$dir/codebooks") {
-      PqIndex.collectCodebooks(spark.read.parquet(s"$dir/codebooks"))
+    val cbArr = ServeModelCache.cached(spark, s"$modelDir/codebooks") {
+      PqIndex.collectCodebooks(spark.read.parquet(s"$modelDir/codebooks"))
     }
     val subDim = cbArr.head._3.length
     val cells = spark.read.schema("vec_id BIGINT, cell BIGINT")
-      .parquet(s"$dir/cells")
-    val codes = spark.read.parquet(s"$dir/codes")
+      .parquet(t.cells: _*)
+    val codes = spark.read.parquet(t.codes: _*)
     val vecs = spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .parquet(s"$dir/vectors")
+      .parquet(t.vectors: _*)
     val np = if (nprobe > 0) nprobe else defaultNprobe(centersArr.length)
-    val (probeArr, probeLocal) = PqIndex.collectProbes(spark, probeVecs)
+    val (probeArr, probeLocal) = probes
     // probe cells ON THE DRIVER — |probes| × k cosines against the
     // resident centroids, replicating the former crossJoin + row_number
     // plan exactly: cosine via the bit-identical driver twin, ordering

@@ -35,7 +35,14 @@ final class StatsHeartbeat(intervalMs: Long, sink: String => Unit)
     },
     intervalMs, intervalMs, TimeUnit.MILLISECONDS)
 
-  override def close(): Unit = exec.shutdownNow()
+  /** Stops the ticker and waits until its executor has terminated, so a
+    * stopped heartbeat's thread is not still running its last tick when
+    * the caller goes on (StatsHeartbeatSpec counts the live ones). */
+  override def close(): Unit = {
+    exec.shutdownNow()
+    exec.awaitTermination(5, TimeUnit.SECONDS)
+    ()
+  }
 }
 
 object StatsHeartbeat {

@@ -396,59 +396,14 @@ object StreamJobs {
     * mutates no index state, so a replay is a pure byte-stable rewrite
     * of the batch's own partition.
     *
-    * DIVERGENCE-OBSERVATION CADENCE (VERDICT r15 #1): AnnIndex's row
-    * caches deliberately never see other JVMs' appends, so a long-lived
-    * serving stream that outlives an EXTERNAL writer's crashed append
-    * would keep routing to the short sidecar indefinitely — the exact
-    * state chosenArm's guard exists to catch, unreachable from stale
-    * caches. Every [[AnnServeRefreshBatches]] micro-batches (config
-    * [[AnnServeRefreshKey]]; 0 disables) the stream drops its cached
-    * counts before serving, so a cross-process divergence is observed
-    * within at most that many batches and serving falls back to the
-    * exact-recall flat arm until repairSidecar reconverges. The refresh
-    * costs two parquet footer counts — amortized over the cadence, not
-    * per-batch (the r14 #3 discipline). */
-  private[graft] val AnnServeRefreshKey = "spark.graft.ann.serveRefreshBatches"
-  private[graft] val AnnServeRefreshBatches = 8
-
-  /** Opt-in self-healing for the serving stream: when a refresh batch
-    * observes a repair-needing state, the stream runs
-    * [[graft.operators.AnnIndex.repairSidecar]] INLINE before serving.
-    * Two states heal (AnnIndex.repairNeeded): a crashed APPEND's arm
-    * divergence — one anti-join + frozen-quantizer append — and a
-    * crashed REFIT's missing sidecar (or a cross-JVM threshold
-    * crossing) — a full corpus-linear sidecar fit. After either,
-    * serving returns to the routed arm instead of degrading to flat
-    * until an operator intervenes. Default OFF: the repair job's
-    * latency (a full FIT, in the refit-crash case) lands on whichever
-    * micro-batch detects the crash, which a latency-sensitive
-    * deployment may prefer to schedule out-of-band (the
-    * divergence-guarded flat fallback is already correct, just
-    * corpus-linear). */
-  private[graft] val AnnAutoRepairKey = "spark.graft.ann.serveAutoRepair"
-
+    * Each micro-batch serves the index's newest committed generation
+    * (AnnIndex's generation log): another process's append is served
+    * from the first batch after its commit, and its crashed append is
+    * never served. */
   def annServeEachBatch(probes: DataFrame, indexDir: String, outDir: String,
       k: Int = 5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     probes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val s = batch.sparkSession
-      val every = s.conf.getOption(AnnServeRefreshKey).map(_.toInt)
-        .getOrElse(AnnServeRefreshBatches)
-      if (every > 0 && batchId % every == 0) {
-        graft.operators.AnnIndex.refreshCounts(indexDir)
-        if (s.conf.getOption(AnnAutoRepairKey).contains("true") &&
-          graft.operators.AnnIndex.repairNeeded(s, indexDir)) {
-          // name the repair class before paying for it: a diverged
-          // sidecar heals by a batch-sized anti-join append, a MISSING
-          // one by a corpus-linear full fit — the log line is what an
-          // operator watching batch latency needs to tell the two apart
-          val diverged = graft.operators.AnnIndex.sidecarDiverged(s, indexDir)
-          org.apache.log4j.Logger.getLogger(getClass).warn(
-            s"ANN serve batch $batchId: auto-repairing $indexDir (" +
-              (if (diverged) "diverged sidecar — incremental append"
-               else "missing sidecar — full corpus-linear fit") + ")")
-          graft.operators.AnnIndex.repairSidecar(s, indexDir)
-        }
-      }
       if (!markerExists(s, outDir, batchId)) {
         val answers = graft.operators.AnnIndex.queryProbes(s, indexDir,
           batch.select(col("probe_id"), col("pv")), k)
@@ -520,7 +475,7 @@ object StreamJobs {
     if (cached != null && cached._1 == fp) cached._2
     else {
       // plain get/put, not compute: the read runs a Spark job and must
-      // not run under the map's bin lock (the sq8SetCache discipline)
+      // not run under the map's bin lock
       val cents = s.read.parquet(fixtureDir).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
         .sortBy(_._1).toSeq

@@ -1,301 +1,215 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files => JF, Paths => JP}
+import graft.operators.{AnnIndex, IvfPqIndex}
 
-/** Kill-the-JVM e2e for the two-arm ANN append window (VERDICT r14 #2 —
-  * the one new failure mode round 14's routing introduced): a SIGKILL
-  * between AnnIndex.append's flat write and its IVFPQ sidecar extension
-  * leaves the arms serving DIFFERENT corpora, and past the routing
-  * threshold a naive router would silently drop the appended batch from
-  * every routed result. This spec SIGKILLs a real child JVM in exactly
-  * that window and pins the full story: the divergence is real on disk,
-  * chosenArm's count guard detects it and serves the exact-recall flat
-  * arm (appended rows included), and repairSidecar reconverges the
-  * sidecar to byte-identical serving with a crash-free twin of the same
-  * index. */
+/** Kill-the-JVM e2e for AnnIndex's generation commit: a child JVM is
+  * SIGKILLed inside an append — after the flat write, before the SQ8
+  * codes write, or after a refit's sidecar build but before the commit —
+  * and the spec pins that (a) the crash is real on disk (the batch's
+  * tables sit under `g<N>/` with no `_gen/<N>`), (b) serving equals a
+  * clean run at the previous generation on the same arm, and (c)
+  * re-running the append commits generation N and serves what a
+  * crash-free twin of the index serves. */
 class AnnCrashSpec extends SparkSpec {
 
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** 20 near-dups of corpus vectors 0..19 under ids +900000, as parquet. */
+  private def plantedBatch(idx: String, root: java.nio.file.Path): String = {
+    val batchPq = s"$root/batch"
+    spark.read.parquet(s"$idx/vectors")
+      .filter(col("vec_id") < 20)
+      .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
+      .write.parquet(batchPq)
+    batchPq
+  }
+
+  /** Start `main` appending `batchPq` to `idx`, wait for it to park at
+    * `point`, then SIGKILL it — no shutdown hooks, no finally. */
+  private def crashAppend(main: String, idx: String, batchPq: String,
+      point: String, root: java.nio.file.Path): Unit = {
+    val sentinel = root.resolve(s"kill-$point")
+    val log = root.resolve(s"child-$point.log")
+    val child = ChildJvm.start(main, Seq(idx, batchPq, point, sentinel.toString), log)
+    try assert(ChildJvm.awaitFile(sentinel),
+      s"child never reached $point — log:\n${ChildJvm.logTail(log)}")
+    finally {
+      child.destroyForcibly()
+      child.waitFor()
+      ()
+    }
+  }
+
+  private def probesOf(idx: String, ids: Long*): DataFrame =
+    spark.read.parquet(s"$idx/vectors").filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+
+  private def served(dir: String, probes: DataFrame, k: Int = 5) =
+    AnnIndex.queryProbes(spark, dir, probes, k)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+
+  private def top1(rows: Seq[(Long, Int, Long)]): Map[Long, Long] =
+    rows.filter(_._2 == 1).map(r => r._1 -> r._3).toMap
+
+  private def committed(idx: String, n: Long): Boolean =
+    JF.exists(JP.get(s"$idx/_gen/$n"))
+
   test("ANN append: SIGKILL between the arms is detected, served around, and repaired") {
+    // The name predates the generation log. It now pins: a SIGKILL between
+    // the arms serves generation 1, routed; the re-run commits generation 2
+    // and matches a crash-free twin.
     val root = JF.createTempDirectory("ann-crash")
-    val key = graft.operators.AnnIndex.FlatMaxBucketRowsKey
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "0") // tiny corpus routes like a 10^9-vector one
+    withConf(AnnIndex.FlatMaxBucketRowsKey -> "0") { // routes like a 10^9-vector corpus
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
+      AnnIndex.build(spark, sfDir, idx)
+      assert(AnnIndex.chosenArm(spark, idx) == "ivfpq",
         "precondition: the index must be routing before the crash")
-      // crash-free twin: a byte-copy of the SAME built index (identical
-      // frozen quantizers, so a repaired sidecar must serve identically)
+      // crash-free twin: a byte-copy of the SAME built index
       val ref = s"$root/ref"
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(idx), new java.io.File(ref))
+      val batchPq = plantedBatch(idx, root)
+      val probes = probesOf(idx, 0L until 5L: _*)
+      val gen1 = served(idx, probes)
 
-      // the batch: near-dups of corpus vectors under fresh ids
-      val batch = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 20)
-        .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-      val batchPq = s"$root/batch"
-      batch.write.parquet(batchPq)
+      crashAppend("graft.AnnCrashChild", idx, batchPq, "after_flat_write", root)
+      // the crash is real on disk: the flat tables landed, the sidecar
+      // extension and the commit did not
+      assert(spark.read.parquet(s"$idx/g2/vectors").count() == 20)
+      assert(!JF.exists(JP.get(s"$idx/g2/ivfpq")))
+      assert(!committed(idx, 2))
+      // serving is generation 1, on the routed arm, byte for byte
+      assert(AnnIndex.generation(spark, idx).number == 1)
+      assert(AnnIndex.chosenArm(spark, idx) == "ivfpq", "routed must stay routed")
+      assert(served(idx, probes) == gen1,
+        "a crashed append must serve exactly the previous generation")
 
-      // child JVM appends to idx and is SIGKILLed between the arms
-      val sentinel = root.resolve("kill-ann")
-      val log1 = root.resolve("child1.log")
-      val child = ChildJvm.start("graft.AnnCrashChild",
-        Seq(idx, batchPq, "after_flat_write", sentinel.toString), log1)
-      try assert(ChildJvm.awaitFile(sentinel),
-        s"child never reached the crash point — log:\n${ChildJvm.logTail(log1)}")
-      finally {
-        child.destroyForcibly() // SIGKILL — no shutdown hooks, no finally
-        child.waitFor()
-        ()
-      }
-
-      // the window is real on disk: flat holds the batch, the sidecar
-      // doesn't
-      val nFlat = spark.read.parquet(s"$idx/vectors").count()
-      val nSide = spark.read.parquet(s"$idx/ivfpq/vectors").count()
-      assert(nFlat == nSide + 20,
-        s"expected 20-row divergence, got flat=$nFlat sidecar=$nSide")
-
-      // a fresh-counting server detects it and refuses to route
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "flat",
-        "diverged sidecar must not be served")
-      // ...and the fallback serve SEES the appended rows: a probe that
-      // IS an appended vector's source finds its 900000-shifted dup
-      val probes = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 5 && col("vec_id") >= 0)
-        .filter(col("vec_id") < 900000L) // corpus side only
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      val flatTop = graft.operators.AnnIndex
-        .queryProbes(spark, idx, probes, 1)
-        .select("probe_id", "neighbor_id").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (0L until 5L).foreach { p =>
-        assert(flatTop(p) == p + 900000L,
-          s"fallback flat serve missed appended dup of $p: got ${flatTop(p)}")
-      }
-      // the routed arm REALLY would have dropped the batch (why the
-      // guard exists): the sidecar alone knows nothing past the corpus
-      val sideHits = graft.operators.IvfPqIndex
-        .queryProbes(spark, s"$idx/ivfpq", probes, 1,
-          nprobe = graft.operators.AnnIndex.RouteNprobe)
-        .select("neighbor_id").collect().map(_.getLong(0)).toSet
-      assert(!sideHits.exists(_ >= 900000L),
-        "diverged sidecar unexpectedly serves appended rows")
-
-      // recovery: repairSidecar appends exactly the missing rows under
-      // the frozen quantizers; serving must reconverge to the crash-free
-      // twin (same build byte-copied, same batch appended cleanly)
-      graft.operators.AnnIndex.repairSidecar(spark, idx)
-      ChildJvm.run("graft.AnnCrashChild",
-        Seq(ref, batchPq, "none", s"$root/unused"),
-        root.resolve("child2.log"))
-      graft.operators.AnnIndex.refreshCounts(ref)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-        "repair must restore routing")
-      assert(graft.operators.AnnIndex.chosenArm(spark, ref) == "ivfpq")
-      def served(dir: String) = graft.operators.AnnIndex
-        .queryProbes(spark, dir, probes, 5)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      assert(served(idx) == served(ref),
-        "repaired index diverges from the crash-free twin")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      // the re-run commits generation 2 and serves what the twin serves
+      AnnIndex.append(spark, idx, spark.read.parquet(batchPq))
+      AnnIndex.append(spark, ref, spark.read.parquet(batchPq))
+      assert(committed(idx, 2) && !committed(idx, 3), "the re-run commits the same N")
+      assert(AnnIndex.chosenArm(spark, idx) == "ivfpq")
+      val rerun = served(idx, probes)
+      assert(rerun == served(ref, probes),
+        "re-run index diverges from the crash-free twin")
+      (0L until 5L).foreach(p => assert(top1(rerun)(p) == p + 900000L,
+        s"routed serve missed the appended dup of $p: ${top1(rerun)}"))
     }
   }
 
-  /** The SQ8 arm's crash window, killed for real (r17 — the same
-    * discipline the two-arm ivfpq window got in r14): a SIGKILL between
-    * append's flat write and its SQ8 codes extension leaves the codes
-    * short, and a naive codes re-rank would silently drop the appended
-    * batch from every result. Pins: the window is real on disk, the
-    * count guard degrades serving to the complete float32 re-rank
-    * (appended rows found), and repairSidecar's anti-join code append
-    * restores SQ8 serving that finds the planted dup. */
   test("SQ8 append: SIGKILL before the codes write degrades to float32 and repairs") {
+    // The name predates the generation log. It now pins: a SIGKILL before
+    // the codes write keeps serving generation 1 on SQ8; the re-run matches
+    // a crash-free twin.
     val root = JF.createTempDirectory("ann-sq8-crash")
-    val key = graft.operators.AnnIndex.ServeSq8Key
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "true")
+    withConf(AnnIndex.ServeSq8Key -> "true") {
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
-      assert(graft.operators.AnnIndex.serveMode(spark, idx) == "sq8",
+      AnnIndex.build(spark, sfDir, idx)
+      assert(AnnIndex.serveMode(spark, idx) == "sq8",
         "precondition: SQ8 serving before the crash")
-      val batch = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 20)
-        .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-      val batchPq = s"$root/batch"
-      batch.write.parquet(batchPq)
+      val ref = s"$root/ref"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(idx), new java.io.File(ref))
+      val batchPq = plantedBatch(idx, root)
+      val probes = probesOf(idx, 0L until 5L: _*)
+      val gen1 = served(idx, probes)
 
-      val sentinel = root.resolve("kill-sq8")
-      val log1 = root.resolve("child1.log")
-      val child = ChildJvm.start("graft.AnnSq8Child",
-        Seq(idx, batchPq, "after_flat_write", sentinel.toString), log1)
-      try assert(ChildJvm.awaitFile(sentinel),
-        s"child never reached the crash point — log:\n${ChildJvm.logTail(log1)}")
-      finally {
-        child.destroyForcibly() // SIGKILL — no shutdown hooks, no finally
-        child.waitFor()
-        ()
-      }
-      // the window is real on disk: flat holds the batch, the codes don't
-      val nFlat = spark.read.parquet(s"$idx/vectors").count()
-      val nCodes = spark.read.parquet(s"$idx/sq8/codes").count()
-      assert(nFlat == nCodes + 20,
-        s"expected 20-row code divergence, got flat=$nFlat codes=$nCodes")
-      // a fresh-counting server degrades to the complete float32 re-rank
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.serveMode(spark, idx) == "float32",
-        "short codes must not serve")
-      val probes = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      val floatTop = graft.operators.AnnIndex
-        .queryProbes(spark, idx, probes, 1)
-        .select("probe_id", "neighbor_id").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (0L until 5L).foreach(p => assert(floatTop(p) == p + 900000L,
-        s"float32 fallback missed appended dup of $p: got ${floatTop(p)}"))
-      // repair appends exactly the missing codes; SQ8 serving resumes
-      // and finds the planted dups
-      assert(graft.operators.AnnIndex.repairNeeded(spark, idx))
-      graft.operators.AnnIndex.repairSidecar(spark, idx)
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.serveMode(spark, idx) == "sq8",
-        "repair must restore SQ8 serving")
-      val sq8Top = graft.operators.AnnIndex
-        .queryProbes(spark, idx, probes, 1)
-        .select("probe_id", "neighbor_id").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (0L until 5L).foreach(p => assert(sq8Top(p) == p + 900000L,
-        s"repaired SQ8 serve missed appended dup of $p: got ${sq8Top(p)}"))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      crashAppend("graft.AnnSq8Child", idx, batchPq, "after_flat_write", root)
+      assert(spark.read.parquet(s"$idx/g2/vectors").count() == 20)
+      assert(!JF.exists(JP.get(s"$idx/g2/sq8")))
+      assert(!committed(idx, 2))
+      assert(AnnIndex.serveMode(spark, idx) == "sq8", "sq8 must stay sq8")
+      assert(served(idx, probes) == gen1,
+        "a crashed append must serve exactly the previous generation")
+
+      AnnIndex.append(spark, idx, spark.read.parquet(batchPq))
+      AnnIndex.append(spark, ref, spark.read.parquet(batchPq))
+      assert(committed(idx, 2) && !committed(idx, 3))
+      assert(AnnIndex.serveMode(spark, idx) == "sq8")
+      val rerun = served(idx, probes)
+      assert(rerun == served(ref, probes))
+      (0L until 5L).foreach(p => assert(top1(rerun)(p) == p + 900000L,
+        s"SQ8 serve missed the appended dup of $p: ${top1(rerun)}"))
     }
   }
 
-  /** VERDICT r15 #1: the r15 divergence guard compares CACHED counts, and
-    * a long-lived serving stream was the one caller with no refresh
-    * cadence — a serving JVM outliving an external writer's crashed
-    * append kept routing to the short sidecar indefinitely. This test
-    * runs the REAL streaming serve (annServeEachBatch) while a child JVM
-    * crash-appends mid-stream, and pins the full timeline: the batch
-    * BEFORE the cadence fires still routes short (the stale-cache state
-    * the cadence exists to bound), the next refresh batch observes the
-    * divergence and serves the appended rows through the flat arm. */
+  /** Streams the real serve (annServeEachBatch) while a child JVM
+    * crash-appends; the serving process then replays the append. */
   test("serving stream observes an external crashed append within the refresh cadence") {
+    // The name predates the generation log. It now pins: the stream never
+    // serves an external crashed append and serves its replay on the very
+    // next batch.
     import graft.SparkSpec.spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = JF.createTempDirectory("ann-stream-crash")
-    val tKey = graft.operators.AnnIndex.FlatMaxBucketRowsKey
-    val rKey = graft.streaming.StreamJobs.AnnServeRefreshKey
-    val saved = Seq(tKey, rKey).map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(tKey, "0")  // tiny corpus routes like a 10^9-vector one
-      spark.conf.set(rKey, "2")  // observe divergence within 2 batches
+    withConf(AnnIndex.FlatMaxBucketRowsKey -> "0") {
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
-
+      AnnIndex.build(spark, sfDir, idx)
       val probeRows = spark.read.parquet(s"$idx/vectors")
         .filter(col("vec_id").isin(0L, 3L, 4L))
         .select(col("vec_id"), col("embedding"))
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
         .sortBy(_._1)
+      val gen1Probe3 = served(idx, probesOf(idx, 3L), k = 3)
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
       val probes = mem.toDF().toDF("probe_id", "pv")
         .withColumn("pv", col("pv").cast("array<float>"))
       val outDir = s"$root/out"
       val q = graft.streaming.StreamJobs
         .annServeEachBatch(probes, idx, outDir, k = 3).start()
+      val batchPq = plantedBatch(idx, root)
       try {
-        // batch 0: warms the caches; counts agree, serving is routed
-        mem.addData(probeRows(0))
+        mem.addData(probeRows(0)) // batch 0: generation 1, routed
         q.processAllAvailable()
-        assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-          "precondition: the stream must be routing before the crash")
+        assert(AnnIndex.chosenArm(spark, idx) == "ivfpq")
 
-        // an EXTERNAL writer crash-appends between the arms: 20 dups of
-        // corpus vectors under +900000 ids land in flat, not the sidecar
-        val batch = spark.read.parquet(s"$idx/vectors")
-          .filter(col("vec_id") < 20)
-          .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-        val batchPq = s"$root/batch"
-        batch.write.parquet(batchPq)
-        val sentinel = root.resolve("kill-ann-stream")
-        val log1 = root.resolve("child1.log")
-        val child = ChildJvm.start("graft.AnnCrashChild",
-          Seq(idx, batchPq, "after_flat_write", sentinel.toString), log1)
-        try assert(ChildJvm.awaitFile(sentinel),
-          s"child never reached the crash point — log:\n${ChildJvm.logTail(log1)}")
-        finally {
-          child.destroyForcibly()
-          child.waitFor()
-          ()
-        }
-        assert(spark.read.parquet(s"$idx/vectors").count() ==
-          spark.read.parquet(s"$idx/ivfpq/vectors").count() + 20,
-          "crash window must be real on disk")
-        // the serving JVM's caches are stale: without the cadence this
-        // state persists indefinitely
-        assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-          "stale caches must still claim agreement — the gap the cadence closes")
-
-        // batch 1 (no refresh yet): still routed — the sidecar knows
-        // nothing of the appended rows, so probe 3's on-disk dup 900003
-        // is missing from its answers
-        mem.addData(probeRows(1))
+        crashAppend("graft.AnnCrashChild", idx, batchPq, "after_flat_write", root)
+        assert(spark.read.parquet(s"$idx/g2/vectors").count() == 20 &&
+          !committed(idx, 2), "the crash must be real on disk")
+        mem.addData(probeRows(1)) // batch 1: still generation 1
         q.processAllAvailable()
-        // batch 2 (refresh fires): fresh counts disagree, serving falls
-        // back to the flat arm, which SEES the appended rows — probe 4's
-        // dup 900004 is the exact-cosine-1 top answer
-        mem.addData(probeRows(2))
+        AnnIndex.append(spark, idx, spark.read.parquet(batchPq)) // the replay
+        mem.addData(probeRows(2)) // batch 2: the very next batch
         q.processAllAvailable()
       } finally q.stop()
 
+      val g = AnnIndex.generation(spark, idx)
+      assert(g.number == 2 && !committed(idx, 3), "the replay commits the same N")
       val answers = spark.read.parquet(s"$outDir/answers")
         .select(col("batch_id").cast("long"), col("probe_id"),
           col("rnk"), col("neighbor_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      val b1 = answers.filter(_._1 == 1L)
-      assert(b1.nonEmpty && b1.forall(_._4 < 900000L),
-        s"pre-cadence batch must still be routed (short answers): ${b1.toSeq}")
+      val b1 = answers.filter(_._1 == 1L).map(a => (a._2, a._3, a._4)).sortBy(_._2).toSeq
+      assert(b1 == gen1Probe3,
+        s"the batch after the crash must serve generation 1 exactly: $b1")
       val b2Top = answers.filter(a => a._1 == 2L && a._3 == 1).map(a => a._2 -> a._4).toMap
       assert(b2Top.get(4L).contains(900004L),
-        s"post-refresh batch must serve flat and see the appended dup: $b2Top")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+        s"the batch after the replay must serve the appended dup: $b2Top")
     }
   }
 
-  /** The opt-in self-healing path: with serveAutoRepair on, the refresh
-    * batch that OBSERVES an external crashed append also repairs it
-    * inline — the stream returns to routed serving in the same batch,
-    * with the appended rows visible through the reconverged sidecar,
-    * instead of degrading to flat until an operator runs repairSidecar
-    * by hand. */
   test("serving stream with auto-repair reconverges the sidecar and keeps routing") {
+    // The name predates the generation log. It now pins: the stream serves
+    // an external writer's commit on the very next batch, routed, with both
+    // arms over one corpus.
     import graft.SparkSpec.spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = JF.createTempDirectory("ann-stream-heal")
-    val tKey = graft.operators.AnnIndex.FlatMaxBucketRowsKey
-    val rKey = graft.streaming.StreamJobs.AnnServeRefreshKey
-    val hKey = graft.streaming.StreamJobs.AnnAutoRepairKey
-    val saved = Seq(tKey, rKey, hKey).map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(tKey, "0")
-      spark.conf.set(rKey, "2")
-      spark.conf.set(hKey, "true")
+    val root = JF.createTempDirectory("ann-stream-commit")
+    withConf(AnnIndex.FlatMaxBucketRowsKey -> "0") {
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
+      AnnIndex.build(spark, sfDir, idx)
       val probeRows = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id").isin(0L, 3L, 4L))
+        .filter(col("vec_id").isin(0L, 4L))
         .select(col("vec_id"), col("embedding"))
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
         .sortBy(_._1)
@@ -305,220 +219,130 @@ class AnnCrashSpec extends SparkSpec {
       val outDir = s"$root/out"
       val q = graft.streaming.StreamJobs
         .annServeEachBatch(probes, idx, outDir, k = 3).start()
+      val batchPq = plantedBatch(idx, root)
       try {
         mem.addData(probeRows(0))
         q.processAllAvailable()
-
-        val batch = spark.read.parquet(s"$idx/vectors")
-          .filter(col("vec_id") < 20)
-          .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-        val batchPq = s"$root/batch"
-        batch.write.parquet(batchPq)
-        val sentinel = root.resolve("kill-ann-heal")
-        val log1 = root.resolve("child1.log")
-        val child = ChildJvm.start("graft.AnnCrashChild",
-          Seq(idx, batchPq, "after_flat_write", sentinel.toString), log1)
-        try assert(ChildJvm.awaitFile(sentinel),
-          s"child never reached the crash point — log:\n${ChildJvm.logTail(log1)}")
-        finally {
-          child.destroyForcibly()
-          child.waitFor()
-          ()
-        }
-        assert(spark.read.parquet(s"$idx/vectors").count() ==
-          spark.read.parquet(s"$idx/ivfpq/vectors").count() + 20,
-          "crash window must be real on disk")
-
-        mem.addData(probeRows(1)) // batch 1: no refresh, still routed-short
-        q.processAllAvailable()
-        mem.addData(probeRows(2)) // batch 2: refresh + AUTO-REPAIR + serve
+        ChildJvm.run("graft.AnnCrashChild", Seq(idx, batchPq, "none", s"$root/unused"),
+          root.resolve("child-commit.log"))
+        mem.addData(probeRows(1)) // the first batch after the commit
         q.processAllAvailable()
       } finally q.stop()
 
-      // the repair reconverged the sidecar ON DISK, routing is restored,
-      // and the post-repair batch served the appended dup ROUTED
-      assert(spark.read.parquet(s"$idx/vectors").count() ==
-        spark.read.parquet(s"$idx/ivfpq/vectors").count(),
-        "auto-repair must reconverge the sidecar row count")
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-        "healed index must route again")
+      // the external commit is generation 2, whose two arms hold one corpus
+      val g = AnnIndex.generation(spark, idx)
+      assert(g.number == 2)
+      val flatN = spark.read.parquet(g.vectors: _*).count()
+      val sideN = spark.read.parquet(g.ivfpq.get._2.vectors: _*).count()
+      assert(flatN == 520 && sideN == 520 && g.rows == 520,
+        s"arms must agree with n: flat=$flatN sidecar=$sideN n=${g.rows}")
+      assert(AnnIndex.chosenArm(spark, idx) == "ivfpq")
       val answers = spark.read.parquet(s"$outDir/answers")
         .select(col("batch_id").cast("long"), col("probe_id"),
           col("rnk"), col("neighbor_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      val b2Top = answers.filter(a => a._1 == 2L && a._3 == 1)
+      val b1Top = answers.filter(a => a._1 == 1L && a._3 == 1)
         .map(a => a._2 -> a._4).toMap
-      assert(b2Top.get(4L).contains(900004L),
-        s"healed routed serve must see the appended dup: $b2Top")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+      assert(b1Top.get(4L).contains(900004L),
+        s"routed serve after the external commit must see the appended dup: $b1Top")
     }
   }
 
-  /** The healing matrix's second row: an EXTERNAL refit crash leaves NO
-    * sidecar (not a diverged one), so the append-divergence predicate
-    * alone would let the stream serve flat forever. repairNeeded also
-    * fires on routed-eligible-but-sidecarless, and the auto-repair path
-    * then REBUILDS (a fresh fit over the grown corpus) and returns to
-    * routed serving — the stream heals both crash windows. */
   test("serving stream auto-repair rebuilds a sidecar lost to an external refit crash") {
+    // The name predates the generation log. It now pins: the stream keeps
+    // routing through the old sidecar after an external refit crash and
+    // serves the re-run refit's generation next.
     import graft.SparkSpec.spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = JF.createTempDirectory("ann-stream-refit-heal")
-    val tKey = graft.operators.AnnIndex.FlatMaxBucketRowsKey
-    val rKey = graft.streaming.StreamJobs.AnnServeRefreshKey
-    val hKey = graft.streaming.StreamJobs.AnnAutoRepairKey
-    val saved = Seq(tKey, rKey, hKey).map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(tKey, "0")
-      spark.conf.set(rKey, "2")
-      spark.conf.set(hKey, "true")
+    val root = JF.createTempDirectory("ann-stream-refit")
+    withConf(AnnIndex.FlatMaxBucketRowsKey -> "0", AnnIndex.RefitFactorKey -> "1.0") {
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
+      AnnIndex.build(spark, sfDir, idx)
       val probeRows = spark.read.parquet(s"$idx/vectors")
         .filter(col("vec_id").isin(0L, 3L, 4L))
         .select(col("vec_id"), col("embedding"))
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
         .sortBy(_._1)
+      val gen1Probe3 = served(idx, probesOf(idx, 3L), k = 3)
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
       val probes = mem.toDF().toDF("probe_id", "pv")
         .withColumn("pv", col("pv").cast("array<float>"))
       val outDir = s"$root/out"
       val q = graft.streaming.StreamJobs
         .annServeEachBatch(probes, idx, outDir, k = 3).start()
+      val batchPq = plantedBatch(idx, root)
       try {
         mem.addData(probeRows(0))
         q.processAllAvailable()
-
-        // external writer refits (refitFactor=1.0) and dies in the
-        // no-sidecar window: ivfpq/ gone, tmp stranded, flat +20 rows
-        val batch = spark.read.parquet(s"$idx/vectors")
-          .filter(col("vec_id") < 20)
-          .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-        val batchPq = s"$root/batch"
-        batch.write.parquet(batchPq)
-        val sentinel = root.resolve("kill-refit-stream")
-        val log1 = root.resolve("child1.log")
-        val child = ChildJvm.start("graft.AnnRefitChild",
-          Seq(idx, batchPq, "refit_before_rename", sentinel.toString), log1)
-        try assert(ChildJvm.awaitFile(sentinel),
-          s"child never reached the refit window — log:\n${ChildJvm.logTail(log1)}")
-        finally {
-          child.destroyForcibly()
-          child.waitFor()
-          ()
-        }
-        assert(!JF.exists(JP.get(s"$idx/ivfpq/centroids")),
-          "refit crash must be real on disk (no sidecar)")
-
-        mem.addData(probeRows(1)) // batch 1: no refresh; flat (correct, linear)
+        // the external writer refits (refitFactor 1.0) and dies with the
+        // new sidecar built but not committed
+        crashAppend("graft.AnnRefitChild", idx, batchPq, "before_commit", root)
+        assert(JF.exists(JP.get(s"$idx/g2/ivfpq/centroids")) && !committed(idx, 2),
+          "the refit crash must be real on disk")
+        mem.addData(probeRows(1)) // batch 1: generation 1's sidecar, routed
         q.processAllAvailable()
-        mem.addData(probeRows(2)) // batch 2: refresh + REBUILD + routed serve
+        AnnIndex.append(spark, idx, spark.read.parquet(batchPq)) // the re-run
+        mem.addData(probeRows(2)) // batch 2: the refit generation
         q.processAllAvailable()
       } finally q.stop()
 
-      // the rebuild is a fresh fit over the grown corpus and routing is
-      // back — the exact end-state the crashed refit was aiming for
-      assert(graft.operators.IvfPqIndex.fittedN(spark, s"$idx/ivfpq")
-        .contains(520L),
-        "auto-rebuild must re-fit over the grown corpus")
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-        "healed index must route again")
+      val g = AnnIndex.generation(spark, idx)
+      assert(g.number == 2 && g.ivfpq.get._1 == s"$idx/g2/ivfpq")
+      assert(IvfPqIndex.fittedN(spark, g.ivfpq.get._1).contains(520L),
+        "the re-run must refit over the grown corpus")
       val answers = spark.read.parquet(s"$outDir/answers")
         .select(col("batch_id").cast("long"), col("probe_id"),
           col("rnk"), col("neighbor_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+      val b1 = answers.filter(_._1 == 1L).map(a => (a._2, a._3, a._4)).sortBy(_._2).toSeq
+      assert(b1 == gen1Probe3,
+        s"the batch after the crash must serve generation 1 exactly: $b1")
       val b2Top = answers.filter(a => a._1 == 2L && a._3 == 1)
         .map(a => a._2 -> a._4).toMap
       assert(b2Top.get(4L).contains(900004L),
-        s"healed routed serve must see the appended dup: $b2Top")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+        s"the refit generation must serve the appended dup: $b2Top")
     }
   }
 
-  /** VERDICT r15 #2: refitSidecar's delete-then-rename was argued safe
-    * (no sidecar → flat serving) but never SIGKILL-observed, and the
-    * path now fires automatically at refitFactor crossings. A child JVM
-    * is killed INSIDE the no-sidecar window; the spec pins the degraded
-    * state (flat serving, appended rows included), then a clean re-refit
-    * via repairSidecar's rebuild path (fresh fit over the full corpus —
-    * fittedN advances to the grown size) restores routed serving that
-    * finds every planted dup. */
   test("refit swap: SIGKILL in the no-sidecar window degrades to flat and re-refits cleanly") {
+    // The name predates the generation log. It now pins: a SIGKILL before
+    // the refit's commit keeps the old sidecar routing; the re-run commits
+    // the refit and matches a crash-free twin.
     val root = JF.createTempDirectory("ann-refit-crash")
-    val key = graft.operators.AnnIndex.FlatMaxBucketRowsKey
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "0")
+    withConf(AnnIndex.FlatMaxBucketRowsKey -> "0", AnnIndex.RefitFactorKey -> "1.0") {
       val idx = s"$root/idx"
-      graft.operators.AnnIndex.build(spark, sfDir, idx)
-      val fitted0 = graft.operators.IvfPqIndex.fittedN(spark, s"$idx/ivfpq")
-      assert(fitted0.contains(500L), s"precondition: fresh fit marker, got $fitted0")
+      AnnIndex.build(spark, sfDir, idx)
+      assert(IvfPqIndex.fittedN(spark, s"$idx/ivfpq").contains(500L),
+        "precondition: fresh fit marker")
+      val ref = s"$root/ref"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(idx), new java.io.File(ref))
+      val batchPq = plantedBatch(idx, root)
+      val probes = probesOf(idx, 0L until 5L: _*)
+      val gen1 = served(idx, probes)
 
-      val batch = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 20)
-        .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
-      val batchPq = s"$root/batch"
-      batch.write.parquet(batchPq)
+      // the child appends with refitFactor 1.0 (any growth refits) and is
+      // SIGKILLed with the refit sidecar built but not committed
+      crashAppend("graft.AnnRefitChild", idx, batchPq, "before_commit", root)
+      assert(IvfPqIndex.fittedN(spark, s"$idx/g2/ivfpq").contains(520L),
+        "the refit sidecar must be complete on disk")
+      assert(!committed(idx, 2))
+      // generation 1's sidecar keeps serving, routed, byte for byte
+      val g1 = AnnIndex.generation(spark, idx)
+      assert(g1.number == 1 && g1.ivfpq.get._1 == s"$idx/ivfpq")
+      assert(AnnIndex.chosenArm(spark, idx) == "ivfpq", "routed must stay routed")
+      assert(served(idx, probes) == gen1)
 
-      // child appends with refitFactor=1.0 (any growth refits) and is
-      // SIGKILLed between the sidecar delete and the tmp rename
-      val sentinel = root.resolve("kill-refit")
-      val log1 = root.resolve("child1.log")
-      val child = ChildJvm.start("graft.AnnRefitChild",
-        Seq(idx, batchPq, "refit_before_rename", sentinel.toString), log1)
-      try assert(ChildJvm.awaitFile(sentinel),
-        s"child never reached the refit window — log:\n${ChildJvm.logTail(log1)}")
-      finally {
-        child.destroyForcibly()
-        child.waitFor()
-        ()
-      }
-
-      // the window is real on disk: no sidecar, the aside build stranded
-      assert(!JF.exists(JP.get(s"$idx/ivfpq/centroids")),
-        "old sidecar must be deleted inside the window")
-      assert(JF.exists(JP.get(s"$idx/ivfpq.tmp")),
-        "aside-built tmp sidecar must be stranded by the kill")
-
-      // degraded state: flat serving, exact recall INCLUDING the batch
-      graft.operators.AnnIndex.refreshCounts(idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "flat",
-        "no-sidecar window must serve the flat arm")
-      val probes = spark.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      def top1(k: Int) = graft.operators.AnnIndex
-        .queryProbes(spark, idx, probes, k)
-        .filter(col("rnk") === 1)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      val flatTop = top1(1)
-      (0L until 5L).foreach { p =>
-        assert(flatTop(p) == p + 900000L,
-          s"degraded flat serve missed appended dup of $p: got ${flatTop(p)}")
-      }
-
-      // recovery: repairSidecar's rebuild path re-fits over the FULL
-      // grown corpus — the refit's intent, achieved after the crash
-      graft.operators.AnnIndex.repairSidecar(spark, idx)
-      assert(graft.operators.AnnIndex.chosenArm(spark, idx) == "ivfpq",
-        "repair must restore routing")
-      assert(graft.operators.IvfPqIndex.fittedN(spark, s"$idx/ivfpq")
-        .contains(520L),
-        "re-refit must record the grown corpus as the fitted size")
-      val routedTop = top1(5)
-      (0L until 5L).foreach { p =>
-        assert(routedTop(p) == p + 900000L,
-          s"re-refit routed serve missed planted dup of $p: got ${routedTop(p)}")
-      }
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      AnnIndex.append(spark, idx, spark.read.parquet(batchPq))
+      AnnIndex.append(spark, ref, spark.read.parquet(batchPq))
+      val g2 = AnnIndex.generation(spark, idx)
+      assert(g2.number == 2 && !committed(idx, 3))
+      assert(IvfPqIndex.fittedN(spark, g2.ivfpq.get._1).contains(520L),
+        "the re-run must record the grown corpus as the fitted size")
+      val rerun = served(idx, probes)
+      assert(rerun == served(ref, probes))
+      (0L until 5L).foreach(p => assert(top1(rerun)(p) == p + 900000L,
+        s"refit routed serve missed the planted dup of $p: ${top1(rerun)}"))
     }
   }
 }

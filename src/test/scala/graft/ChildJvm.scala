@@ -174,12 +174,12 @@ object CrashIngestChild {
   }
 }
 
-/** Child main for the two-arm ANN append crash e2e (AnnCrashSpec, the
-  * fifth CrashIngestSpec family): appends `batchParquet` to the routed
-  * ANN index at `indexDir`. With a crashPoint ("after_flat_write") it
-  * writes `sentinel` between the flat write and the sidecar extension
-  * and parks for the parent's SIGKILL — the exact window where the two
-  * arms diverge; with "none" it appends cleanly and exits 0. */
+/** Child main for the ANN append crash e2e (AnnCrashSpec): appends
+  * `batchParquet` to the ANN index at `indexDir`. With a crashPoint
+  * ("after_flat_write") it writes `sentinel` once the batch's flat tables
+  * are down, before the sidecar extension and the generation commit, and
+  * parks for the parent's SIGKILL; with "none" it appends cleanly and
+  * exits 0. */
 object AnnCrashChild {
   def main(args: Array[String]): Unit = {
     val Array(indexDir, batchParquet, crashPoint, sentinel) = args
@@ -197,13 +197,12 @@ object AnnCrashChild {
   }
 }
 
-/** Child main for the refit-swap crash e2e (AnnCrashSpec's sixth SIGKILL
-  * scenario): appends `batchParquet` with refitFactor pinned to 1.0, so
-  * any growth past the fitted size triggers refitSidecar's aside-build +
-  * delete + rename. With crashPoint "refit_before_rename" it writes
-  * `sentinel` inside the no-sidecar window (old ivfpq/ deleted, tmp not
-  * yet renamed) and parks for the parent's SIGKILL; with "none" the
-  * append refits cleanly and exits 0. */
+/** Child main for the refit crash e2e (AnnCrashSpec): appends
+  * `batchParquet` with refitFactor pinned to 1.0, so any growth past the
+  * fitted size refits the sidecar into the new generation's directory.
+  * With crashPoint "before_commit" it writes `sentinel` once the refit
+  * sidecar is built, before the generation commit, and parks for the
+  * parent's SIGKILL; with "none" the append refits cleanly and exits 0. */
 object AnnRefitChild {
   def main(args: Array[String]): Unit = {
     val Array(indexDir, batchParquet, crashPoint, sentinel) = args
@@ -223,11 +222,11 @@ object AnnRefitChild {
   }
 }
 
-/** Child main for the SQ8-arm append crash e2e (AnnCrashSpec's seventh
-  * SIGKILL scenario): appends `batchParquet` with SQ8 serving opted in,
-  * so append extends the codes sidecar right after the flat write. With
-  * crashPoint "after_flat_write" it writes `sentinel` inside the
-  * flat-landed/codes-missed window and parks for the parent's SIGKILL. */
+/** Child main for the SQ8 append crash e2e (AnnCrashSpec): appends
+  * `batchParquet` with SQ8 serving opted in, so append extends the codes
+  * table right after the flat write. With crashPoint "after_flat_write"
+  * it writes `sentinel` before the codes write and parks for the
+  * parent's SIGKILL. */
 object AnnSq8Child {
   def main(args: Array[String]): Unit = {
     val Array(indexDir, batchParquet, crashPoint, sentinel) = args

@@ -64,12 +64,14 @@ class IndexPortabilitySpec extends SparkSpec {
 
   /** VERDICT r15 #5: the standing-index machinery and the snapshot/CAS
     * machinery it sits beside, closed into one loop — a ROUTED AnnIndex
-    * (flat tables + IVFPQ sidecar + the _FITTED_N refit marker) is ONE
-    * write-once tree, so one publish freezes all of it under a single
+    * with one appended generation (flat tables + IVFPQ sidecar + the
+    * _FITTED_N refit marker + the generation log) is ONE write-once
+    * tree, so one publish freezes all of it under a single snapshot
     * manifest and a consumer mounting the label gets an index that
     * routes and serves byte-identically. The atomicity claim is the
-    * manifest's: there is no label state where the flat tables arrive
-    * without the sidecar or the sidecar without its fit marker. */
+    * snapshot manifest's: there is no label state where the flat tables
+    * arrive without the sidecar, the sidecar without its fit marker, or
+    * a generation's tables without its log entry. */
   test("routed AnnIndex publishes to a label; mount serves byte-identically with sidecar + fit marker") {
     val key = AnnIndex.FlatMaxBucketRowsKey
     val saved = spark.conf.getOption(key)
@@ -79,6 +81,11 @@ class IndexPortabilitySpec extends SparkSpec {
       AnnIndex.build(spark, sfDir, dirA)
       assert(AnnIndex.chosenArm(spark, dirA) == "ivfpq",
         "precondition: source index must be routing")
+      AnnIndex.append(spark, dirA, spark.read.parquet(s"$dirA/vectors")
+        .filter(col("vec_id") < 10)
+        .select((col("vec_id") + 900000L).as("vec_id"), col("embedding")))
+      assert(AnnIndex.generation(spark, dirA).number == 2,
+        "precondition: source index must hold two generations")
 
       val repo = Files.createTempDirectory("ann-pub-repo").toString
       SnapshotStore.publish(dirA, repo, "ann-idx")
@@ -90,6 +97,9 @@ class IndexPortabilitySpec extends SparkSpec {
         "sidecar must ride the same manifest as the flat tables")
       assert(entries.exists(_.path == "ivfpq/_FITTED_N"),
         "refit marker must ride the same manifest as the sidecar")
+      assert(Seq("_gen/1", "_gen/2").forall(p => entries.exists(_.path == p)) &&
+        entries.exists(_.path.startsWith("g2/ivfpq/codes/")),
+        "the generation log and the appended tables must ride the manifest")
       val dirB = Files.createTempDirectory("ann-pub-dst").toString
       entries.foreach { e =>
         val dst = Paths.get(dirB, e.path)
@@ -102,6 +112,7 @@ class IndexPortabilitySpec extends SparkSpec {
       // serves the exact bytes of the source's answers
       assert(AnnIndex.chosenArm(spark, dirB) == "ivfpq",
         "mounted replica must route through its sidecar")
+      assert(AnnIndex.generation(spark, dirB).number == 2)
       assert(IvfPqIndex.fittedN(spark, s"$dirB/ivfpq") ==
         IvfPqIndex.fittedN(spark, s"$dirA/ivfpq"))
       def served(dir: String) = AnnIndex

@@ -275,7 +275,6 @@ class NearDupSpec extends SparkSpec {
       // serve with the corpus AT the threshold (n=500 → avgBucketRows
       // 1): the corpus-only rule says flat at the reference batch
       spark.conf.set(key, "1")
-      AnnIndex.refreshCounts(dir)
       assert(AnnIndex.chosenArm(spark, dir) == "flat",
         "at the reference batch the old corpus rule must hold verbatim")
       assert(AnnIndex.chosenArm(spark, dir, 50) == "flat",
@@ -295,8 +294,8 @@ class NearDupSpec extends SparkSpec {
       val direct = IvfPqIndex.queryProbes(spark, s"$dir/ivfpq", probes, 5,
         nprobe = AnnIndex.RouteNprobe).collect().toSeq
       assert(burst == direct, "burst-routed serve must BE the sidecar's")
-      // the no-hint path COUNTS the probes (500 here → break-even →
-      // flat) — the router never routes blind
+      // the no-hint path routes on the collected batch's size (500 here
+      // → break-even → flat) — the router never routes blind
       val counted = AnnIndex.queryProbes(spark, dir, probes, 5)
         .collect().toSeq
       val flat = AnnIndex.flatQueryProbes(spark, dir, probes, 5)
@@ -360,18 +359,15 @@ class NearDupSpec extends SparkSpec {
         f32(p).headOption.forall(sq8(p).contains))
       assert(contained >= (0.95 * f32.size).toInt,
         s"routed float top-1 must stay in SQ8 top-5: $contained/${f32.size}")
-      // the divergence gate guards the routed re-rank too: a stray
-      // code row (counts diverge) degrades to the complete float32
-      // re-rank — identical answers to float routed serving
+      // a stray code row written outside a commit is never read: the
+      // routed re-rank keeps serving the committed codes
       spark.conf.set(sKey, "true")
       spark.read.parquet(s"$dir/sq8/codes").limit(1)
         .withColumn("vec_id", lit(920001L))
         .write.mode("append").parquet(s"$dir/sq8/codes")
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.serveMode(spark, dir) == "float32",
-        "diverged codes must not serve SQ8 on the routed path")
-      assert(topSets(AnnIndex.queryProbes(spark, dir, probes, 5)) == f32,
-        "degraded routed serve must BE the float32 routed serve")
+      assert(AnnIndex.serveMode(spark, dir) == "sq8")
+      assert(topSets(AnnIndex.queryProbes(spark, dir, probes, 5)) == sq8,
+        "an uncommitted code row must not change the routed SQ8 serve")
     } finally { restore(tKey, savedT); restore(sKey, savedS) }
   }
 
@@ -425,23 +421,24 @@ class NearDupSpec extends SparkSpec {
       assert(contained >= (0.95 * f32.size).toInt,
         s"float top-1 must stay in SQ8 top-5: $contained/${f32.size}")
 
-      // divergence guard: flat rows land without their codes (the
-      // crashed-append window) → serving degrades to float32, and
-      // repairSidecar's anti-join append restores SQ8 serving
+      // flat rows written without their codes, outside a commit, are
+      // never served; the same rows appended through a commit are, and
+      // SQ8 serving covers them
       spark.conf.set(key, "true")
-      graft.Tables.t(spark, sfDir, "embeddings")
+      val dups = graft.Tables.t(spark, sfDir, "embeddings")
         .filter(col("vec_id") < 5)
         .select((col("vec_id") + 700000L).as("vec_id"), col("embedding"))
-        .write.mode("append").parquet(s"$dir/vectors")
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.serveMode(spark, dir) == "float32",
-        "short codes must degrade to the complete float32 re-rank")
-      assert(AnnIndex.repairNeeded(spark, dir))
-      AnnIndex.repairSidecar(spark, dir)
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.serveMode(spark, dir) == "sq8",
-        "repair must reconverge the codes and restore SQ8 serving")
-      assert(!AnnIndex.repairNeeded(spark, dir))
+      dups.write.mode("append").parquet(s"$dir/vectors")
+      assert(AnnIndex.serveMode(spark, dir) == "sq8")
+      assert(topSets(AnnIndex.queryProbes(spark, dir, probes, 5)
+        .select("probe_id", "rnk", "neighbor_id")) == sq8,
+        "uncommitted flat rows must not change the SQ8 serve")
+      AnnIndex.append(spark, dir, dups)
+      assert(AnnIndex.serveMode(spark, dir) == "sq8")
+      val appended = topSets(AnnIndex.queryProbes(spark, dir, probes, 5)
+        .select("probe_id", "rnk", "neighbor_id"))
+      (0L until 5L).foreach(p => assert(appended(p).head == p + 700000L,
+        s"SQ8 serve after the commit missed the dup of $p: ${appended(p)}"))
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -449,12 +446,14 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("SQ8 gate catches equal-count vec_id divergence (crossed appends)") {
-    // advisor r17: the serve gate compared row COUNTS only, so two
-    // external writers' crossed appends — a vector landing without its
-    // code next to a stray code without its vector — passed the gate
-    // with equal counts, and the codes inner join silently dropped the
-    // un-coded vector from every re-rank. The id-set fingerprint
-    // (order-insensitive XOR-fold) catches exactly this shape.
+    // The name predates the generation log. It now pins: crossed writes
+    // outside a commit never reach the SQ8 re-rank.
+    //
+    // advisor r17: two external writers' crossed appends — a vector
+    // landing without its code next to a stray code without its vector —
+    // once passed a count-only gate and silently dropped the un-coded
+    // vector from the re-rank. Serving now reads only the files the newest
+    // manifest names, so neither stray row is ever read.
     val dir = java.nio.file.Files.createTempDirectory("ann-crossed").toString
     val key = AnnIndex.ServeSq8Key
     val saved = spark.conf.getOption(key)
@@ -462,15 +461,28 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(key, "true")
       AnnIndex.build(spark, sfDir, dir)
       assert(AnnIndex.serveMode(spark, dir) == "sq8")
-      spark.read.parquet(s"$dir/vectors").limit(1)
-        .withColumn("vec_id", lit(900001L))
-        .write.mode("append").parquet(s"$dir/vectors")
-      spark.read.parquet(s"$dir/sq8/codes").limit(1)
-        .withColumn("vec_id", lit(900002L))
-        .write.mode("append").parquet(s"$dir/sq8/codes")
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.serveMode(spark, dir) == "float32",
-        "equal counts with divergent vec_id sets must not serve SQ8")
+      val probes = graft.Tables.t(spark, sfDir, "embeddings")
+        .filter(col("vec_id") < 20)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+      def answers = AnnIndex.queryProbes(spark, dir, probes, 5, excludeSelf = false)
+        .collect().map(_.toSeq).toSeq
+      val before = answers
+      val g = AnnIndex.generation(spark, dir)
+      // writer A lands a copy of vector 0 (signatures + vector, no code),
+      // writer B a copy of its code (signatures + code, no vector): read
+      // by directory listing, B's copy would tie probe 0 at cosine 1
+      val sig0 = spark.read.parquet(s"$dir/signatures").filter(col("vec_id") === 0L)
+      for ((id, table) <- Seq(900001L -> "vectors", 900002L -> "sq8/codes")) {
+        sig0.withColumn("vec_id", lit(id))
+          .write.mode("append").parquet(s"$dir/signatures")
+        spark.read.parquet(s"$dir/$table").filter(col("vec_id") === 0L)
+          .withColumn("vec_id", lit(id))
+          .write.mode("append").parquet(s"$dir/$table")
+      }
+      assert(AnnIndex.generation(spark, dir) == g,
+        "writes outside a commit must not change the generation")
+      assert(AnnIndex.serveMode(spark, dir) == "sq8")
+      assert(answers == before, "crossed stray rows must never be served")
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -478,13 +490,14 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("SQ8 gate catches XOR-cancelling duplicate-id divergence") {
-    // advisor r18: the XOR fold alone tests multiset PARITY — a
-    // duplicated id cancels itself in pairs, so vectors {…,X,X} vs
-    // codes {…,Y,Y} have EQUAL counts and EQUAL XOR folds while the
-    // sets diverge (the codes lack X entirely), and the re-rank would
-    // silently drop X. Duplicate rows are exactly what a blindly
-    // re-run append produces. The prime-modded SUM folds are
-    // cancellation-resistant and must catch this.
+    // The name predates the generation log. It now pins: re-running a
+    // crashed append lands each id once in vectors and codes.
+    //
+    // advisor r18: a blindly re-run append duplicated rows, and duplicate
+    // ids could cancel out of an XOR fingerprint of the id sets. A crashed
+    // append now commits nothing, and its re-run rewrites the same
+    // generation directory: after two crashes and one clean run the
+    // committed tables hold each id exactly once, on both sides.
     val dir = java.nio.file.Files.createTempDirectory("ann-dupcancel").toString
     val key = AnnIndex.ServeSq8Key
     val saved = spark.conf.getOption(key)
@@ -492,25 +505,25 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(key, "true")
       AnnIndex.build(spark, sfDir, dir)
       assert(AnnIndex.serveMode(spark, dir) == "sq8")
-      // the same new id TWICE per side — XOR folds stay at the base
-      // value on both sides, counts stay equal
-      for (_ <- 0 until 2)
-        spark.read.parquet(s"$dir/vectors").limit(1)
-          .withColumn("vec_id", lit(910001L))
-          .write.mode("append").parquet(s"$dir/vectors")
-      for (_ <- 0 until 2)
-        spark.read.parquet(s"$dir/sq8/codes").limit(1)
-          .withColumn("vec_id", lit(910002L))
-          .write.mode("append").parquet(s"$dir/sq8/codes")
-      val fv = AnnIndex.idFingerprint(spark, s"$dir/vectors")
-      val fq = AnnIndex.idFingerprint(spark, s"$dir/sq8/codes")
-      assert(fv._1 == fq._1 && fv._2 == fq._2,
-        "setup must reproduce the XOR-cancellation (else this test " +
-          "stopped exercising the sum fold)")
-      assert(fv != fq, "sum folds must separate the divergent sets")
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.serveMode(spark, dir) == "float32",
-        "duplicate-cancelled divergence must not serve SQ8")
+      val batch = spark.read.parquet(s"$dir/vectors").limit(1)
+        .withColumn("vec_id", lit(910001L))
+      object Boom extends Exception
+      for (point <- Seq("after_flat_write", "before_commit")) {
+        AnnIndex.crashProbe = p => if (p == point) throw Boom
+        try intercept[Boom.type] { AnnIndex.append(spark, dir, batch) }
+        finally AnnIndex.crashProbe = _ => ()
+      }
+      assert(AnnIndex.generation(spark, dir).number == 1)
+      AnnIndex.append(spark, dir, batch)
+      val g = AnnIndex.generation(spark, dir)
+      assert(g.number == 2 && g.rows == 501)
+      for (files <- Seq(g.vectors, g.sq8)) {
+        val ids = spark.read.parquet(files: _*).select("vec_id").collect()
+          .map(_.getLong(0))
+        assert(ids.length == 501 && ids.distinct.length == 501,
+          s"each id must land once: ${ids.length} rows, ${ids.distinct.length} ids")
+      }
+      assert(AnnIndex.serveMode(spark, dir) == "sq8")
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -518,36 +531,32 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("sidecarDiverged names the light repair class; repairNeeded covers both") {
-    // advisor r16: sidecarDiverged's job is to DISCRIMINATE the two
-    // repairNeeded states — diverged sidecar (light: anti-join append)
-    // vs missing sidecar (heavy: full fit) — which the serving stream's
-    // auto-repair log line uses to name the cost it is about to pay.
+    // The name predates the generation log. It now pins: stray flat rows
+    // move neither n nor an arm; a commit moves both.
+    //
+    // advisor r16 split the old repair states in two (a sidecar short of
+    // the flat rows, a sidecar missing). Neither can be committed: n and
+    // both arms' tables come from one manifest.
     val dir = java.nio.file.Files.createTempDirectory("ann-diverge").toString
     val key = AnnIndex.FlatMaxBucketRowsKey
     val saved = spark.conf.getOption(key)
     try {
       spark.conf.set(key, "0")
       AnnIndex.build(spark, sfDir, dir)
-      AnnIndex.refreshCounts(dir)
-      assert(!AnnIndex.sidecarDiverged(spark, dir) &&
-        !AnnIndex.repairNeeded(spark, dir), "healthy index needs nothing")
-      // crashed-append state: flat vectors grow, sidecar doesn't
-      graft.Tables.t(spark, sfDir, "embeddings")
+      val rows = graft.Tables.t(spark, sfDir, "embeddings")
         .filter(col("vec_id") < 7)
         .select((col("vec_id") + 800000L).as("vec_id"), col("embedding"))
-        .write.mode("append").parquet(s"$dir/vectors")
-      AnnIndex.refreshCounts(dir)
-      assert(AnnIndex.sidecarDiverged(spark, dir),
-        "flat rows the sidecar lacks = the LIGHT repair class")
-      assert(AnnIndex.repairNeeded(spark, dir))
-      // crashed-refit state: no sidecar at all, corpus past threshold
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$dir/ivfpq"))
-      AnnIndex.refreshCounts(dir)
-      assert(!AnnIndex.sidecarDiverged(spark, dir),
-        "no sidecar ≠ diverged — that's the HEAVY class")
-      assert(AnnIndex.repairNeeded(spark, dir),
-        "routed-eligible with no sidecar still needs repair")
+      rows.write.mode("append").parquet(s"$dir/vectors")
+      val g1 = AnnIndex.generation(spark, dir)
+      assert(g1.number == 1 && g1.rows == 500)
+      assert(AnnIndex.chosenArm(spark, dir) == "ivfpq")
+      AnnIndex.append(spark, dir, rows)
+      val g2 = AnnIndex.generation(spark, dir)
+      assert(g2.number == 2 && g2.rows == 507)
+      assert(spark.read.parquet(g2.vectors: _*).count() == 507 &&
+        spark.read.parquet(g2.ivfpq.get._2.vectors: _*).count() == 507,
+        "the commit must extend both arms by the batch")
+      assert(AnnIndex.chosenArm(spark, dir) == "ivfpq")
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -782,10 +791,14 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("ANN chosenArm detects arm divergence and falls back to flat; repairSidecar reconverges") {
+    // The name predates the generation log. It now pins: a crashed append
+    // keeps serving generation 1, routed; its re-run commits the same N.
+    //
     // VERDICT r14 #2 / advisor r14: append's flat write and sidecar
-    // extension are non-atomic. Crash the REAL code path between them
-    // (crashProbe throws, the in-process twin of AnnCrashSpec's SIGKILL)
-    // and assert the router refuses to serve the diverged sidecar.
+    // extension are separate writes. Crash the REAL code path between them
+    // (crashProbe throws, the in-process twin of AnnCrashSpec's SIGKILL):
+    // nothing is committed, so the router keeps routing over generation 1,
+    // and the re-run commits generation 2 on both arms.
     val dir = java.nio.file.Files.createTempDirectory("ann-diverge").toString
     val key = AnnIndex.FlatMaxBucketRowsKey
     val saved = spark.conf.getOption(key)
@@ -798,33 +811,25 @@ class NearDupSpec extends SparkSpec {
         .filter(col("vec_id") === 0L).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
       val batch = Seq((777777L, v0)).toDF("vec_id", "embedding")
+      val probe = Seq((0L, v0)).toDF("probe_id", "pv")
+      def hits = AnnIndex.queryProbes(spark, dir, probe, 3)
+        .select("neighbor_id").collect().map(_.getLong(0)).toSet
+      val gen1 = hits
       object Boom extends Exception
       AnnIndex.crashProbe =
         p => if (p == "after_flat_write") throw Boom
       try intercept[Boom.type] { AnnIndex.append(spark, dir, batch) }
       finally AnnIndex.crashProbe = _ => ()
-      // the window: flat tables hold the batch, the sidecar doesn't —
-      // the guard must refuse to route
-      assert(AnnIndex.chosenArm(spark, dir) == "flat",
-        "diverged sidecar must not be served")
-      val probe = Seq((0L, v0)).toDF("probe_id", "pv")
-      val flatHits = AnnIndex.queryProbes(spark, dir, probe, 3)
-        .select("neighbor_id").collect().map(_.getLong(0)).toSet
-      assert(flatHits.contains(777777L),
-        s"fallback flat serve must see the appended batch: $flatHits")
-      // repair appends exactly the missing rows under the frozen
-      // quantizers; the router routes again and the routed arm now sees
-      // the batch (reconvergence to the crash-free state)
-      AnnIndex.repairSidecar(spark, dir)
+      assert(AnnIndex.generation(spark, dir).number == 1)
       assert(AnnIndex.chosenArm(spark, dir) == "ivfpq",
-        "repair must restore routing")
-      val routedHits = AnnIndex.queryProbes(spark, dir, probe, 3)
-        .select("neighbor_id").collect().map(_.getLong(0)).toSet
-      assert(routedHits.contains(777777L),
-        s"repaired sidecar must serve the appended batch: $routedHits")
-      // a second repair is a no-op (idempotent: anti-join finds nothing)
-      AnnIndex.repairSidecar(spark, dir)
+        "a crashed append must not move the router off the sidecar")
+      assert(hits == gen1 && !gen1.contains(777777L),
+        s"a crashed append must serve generation 1: $hits")
+      AnnIndex.append(spark, dir, batch)
+      assert(AnnIndex.generation(spark, dir).number == 2)
       assert(AnnIndex.chosenArm(spark, dir) == "ivfpq")
+      assert(hits.contains(777777L),
+        s"the committed re-run must serve the appended batch: $hits")
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -875,8 +880,8 @@ class NearDupSpec extends SparkSpec {
 
   test("ANN sidecar refits once the corpus outgrows the fitted size by refitFactor") {
     // VERDICT r14 #5: frozen quantizers are correct for bounded drift;
-    // past refitFactor × the fitted corpus, append rebuilds the sidecar
-    // from the full vectors table (aside + swap). Pin the arm both
+    // past refitFactor × the fitted corpus, append refits the sidecar
+    // over the whole corpus into its generation. Pin the arm both
     // sides of the bound: at exactly F× no refit, past it the fitted
     // marker, cell count, and served rows all reflect the fresh fit.
     val dir = java.nio.file.Files.createTempDirectory("ann-refit").toString
@@ -891,34 +896,34 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(tKey, "0")
       spark.conf.set(fKey, "2")
       AnnIndex.build(spark, sfDir, dir)
+      def model = AnnIndex.generation(spark, dir).ivfpq.get._1
       val n0 = spark.read.parquet(s"$dir/vectors").count() // 500 at sf0.001
-      assert(IvfPqIndex.fittedN(spark, s"$dir/ivfpq").contains(n0),
+      assert(IvfPqIndex.fittedN(spark, model).contains(n0),
         "build must record the fitted corpus size")
-      val k0 = spark.read.parquet(s"$dir/ivfpq/centroids").count()
+      val k0 = spark.read.parquet(s"$model/centroids").count()
       val src = spark.read.parquet(s"$dir/vectors")
       // corpus doubles to exactly F× the fit: still frozen (bound is
       // strict), appended rows served via the frozen quantizers
       AnnIndex.append(spark, dir, src.select(
         (col("vec_id") + 20000L).as("vec_id"), col("embedding")))
-      assert(IvfPqIndex.fittedN(spark, s"$dir/ivfpq").contains(n0),
+      assert(IvfPqIndex.fittedN(spark, model).contains(n0),
         "append at exactly refitFactor× must stay frozen")
       // past the bound: refit
       AnnIndex.append(spark, dir, src.limit(200).select(
         (col("vec_id") + 30000L).as("vec_id"), col("embedding")))
-      val nNow = spark.read.parquet(s"$dir/vectors").count()
-      assert(nNow == n0 * 2 + 200)
-      assert(IvfPqIndex.fittedN(spark, s"$dir/ivfpq").contains(nNow),
+      val g = AnnIndex.generation(spark, dir)
+      val nNow = spark.read.parquet(g.vectors: _*).count()
+      assert(nNow == n0 * 2 + 200 && g.rows == nNow)
+      assert(IvfPqIndex.fittedN(spark, model).contains(nNow),
         "append past refitFactor× must refit on the grown corpus")
-      assert(spark.read.parquet(s"$dir/ivfpq/centroids").count() > k0,
+      assert(spark.read.parquet(s"$model/centroids").count() > k0,
         "refit must re-derive the cell count from the grown corpus")
-      assert(spark.read.parquet(s"$dir/ivfpq/vectors").count() == nNow)
-      // the refit sidecar serves the whole corpus, routed — and the
-      // post-refit serve costs no footer-count job (the swap seeds the
-      // sidecar's cached count from the pre-build snapshot)
-      val fc = AnnIndex.footerCounts.get()
-      assert(AnnIndex.chosenArm(spark, dir) == "ivfpq")
-      assert(AnnIndex.footerCounts.get() == fc,
-        "post-refit routing re-counted parquet footers despite the seeded cache")
+      assert(spark.read.parquet(g.ivfpq.get._2.vectors: _*).count() == nNow)
+      // the refit sidecar serves the whole corpus, routed — and routing
+      // runs no Spark job: n comes from the manifest
+      val (arm, rec) = graft.JobAttribution.of(spark)(AnnIndex.chosenArm(spark, dir))
+      assert(arm == "ivfpq")
+      assert(rec.jobs.isEmpty, s"post-refit routing ran jobs: ${rec.jobs}")
       import graft.SparkSpec.spark.implicits._
       val v0 = src.filter(col("vec_id") === 0L).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
@@ -931,31 +936,51 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(fKey, "0")
       AnnIndex.append(spark, dir, src.limit(50).select(
         (col("vec_id") + 40000L).as("vec_id"), col("embedding")))
-      assert(IvfPqIndex.fittedN(spark, s"$dir/ivfpq").contains(nNow),
+      assert(IvfPqIndex.fittedN(spark, model).contains(nNow),
         "refitFactor=0 must disable auto-refit")
     } finally { restore(tKey, saved._1); restore(fKey, saved._2) }
   }
 
   test("ANN warm append maintains the cached corpus count without a footer-count job") {
+    // The name predates the generation log. It now pins: n comes from the
+    // manifest: routing runs no job, and an append's jobs are pinned.
+    //
     // VERDICT r14 #3: at streaming-append rates, a parquet footer count
-    // per micro-batch is the job the nCache exists to avoid. Warm the
-    // cache, append, and assert (a) zero new count jobs and (b) the
-    // incrementally-maintained count still equals the truth.
+    // per micro-batch is a job the serve path must not pay. n is the
+    // manifest's: routing runs no job, and an append's jobs are its batch
+    // count and its two table writes.
     val dir = java.nio.file.Files.createTempDirectory("ann-nocount").toString
     AnnIndex.build(spark, sfDir, dir) // default threshold: no sidecar
-    val n0 = AnnIndex.corpusRows(spark, dir) // warms the cache
+    val n0 = AnnIndex.generation(spark, dir).rows
     import graft.SparkSpec.spark.implicits._
     val v0 = spark.read.parquet(s"$dir/vectors")
       .filter(col("vec_id") === 0L).select("embedding")
       .collect()(0).getSeq[Float](0).toArray
-    val before = AnnIndex.footerCounts.get()
-    AnnIndex.append(spark, dir,
-      Seq((888881L, v0), (888882L, v0)).toDF("vec_id", "embedding"))
-    assert(AnnIndex.chosenArm(spark, dir) == "flat") // consumes the count
-    assert(AnnIndex.footerCounts.get() == before,
-      s"append/serve ran ${AnnIndex.footerCounts.get() - before} footer-count job(s) on the warm path")
-    assert(AnnIndex.corpusRows(spark, dir) == n0 + 2,
-      "incrementally-maintained count diverged from the appended truth")
-    assert(spark.read.parquet(s"$dir/vectors").count() == n0 + 2)
+    val batch = Seq((888881L, v0), (888882L, v0)).toDF("vec_id", "embedding")
+    val (_, appendRec) = graft.JobAttribution.of(spark)(AnnIndex.append(spark, dir, batch))
+    assert(appendRec.jobs.size == 5,
+      s"append ran ${appendRec.jobs.size} jobs: ${appendRec.jobs}")
+    val (arm, routeRec) = graft.JobAttribution.of(spark)(AnnIndex.chosenArm(spark, dir))
+    assert(arm == "flat")
+    assert(routeRec.jobs.isEmpty, s"routing ran jobs: ${routeRec.jobs}")
+    val g = AnnIndex.generation(spark, dir)
+    assert(g.rows == n0 + 2, "the manifest's n diverged from the appended truth")
+    assert(spark.read.parquet(g.vectors: _*).count() == n0 + 2)
+  }
+
+  test("unhinted ANN queryProbes collects its probes once and routes on their count") {
+    // serve_ingest's probe_ann passes no probeCount; the router used to
+    // count the probe frame with a job of its own before the arm
+    // collected the same frame again
+    val dir = java.nio.file.Files.createTempDirectory("ann-probejobs").toString
+    AnnIndex.build(spark, sfDir, dir)
+    val probes = spark.read.parquet(s"$dir/vectors").filter(col("vec_id") < 50)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+    AnnIndex.queryProbes(spark, dir, probes, 5).collect() // warm-up
+    val (rows, rec) = graft.JobAttribution.of(spark)(
+      AnnIndex.queryProbes(spark, dir, probes, 5).collect())
+    assert(rows.length == 250)
+    assert(rec.jobs.size == 9,
+      s"one unhinted queryProbes ran ${rec.jobs.size} jobs: ${rec.jobs}")
   }
 }
