@@ -16,7 +16,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *   blooms/shard-<i>.bin 16 serialized Blooms over xxhash64(sha), sharded
   *                        by the first hex nibble of sha. Each shard is
   *                        always a SUPERSET of its slice of hashes/ (append
-  *                        merges blooms before writing rows), so a bloom
+  *                        adds its keys before writing rows), so a bloom
   *                        miss proves a document is new and skips the join
   *                        entirely; bloom hits (~dup rate + fpp of the
   *                        batch) are the only rows that reach the exact
@@ -52,12 +52,11 @@ object DedupIndex {
   private def shardExpr: Column =
     conv(substring(col("sha"), 1, 1), 16, 10).cast("int")
 
-  /** All shard blooms in ONE distributed pass (lazy per-partition arrays;
-    * only non-empty shards materialize). A shard the frame never touched
-    * stays null — append derives its touched-shard set from exactly
-    * that (r20: the former separate `touched` distinct+collect job per
-    * batch re-ran the batch's sha pass for a fact this aggregate already
-    * knows); use [[fillEmpty]] where a full array is needed. */
+  /** All shard blooms in ONE distributed pass over a corpus (lazy
+    * per-partition arrays; only non-empty shards materialize, so a shard
+    * the frame never touched stays null — use [[fillEmpty]] where a full
+    * array is needed). A batch append does not build blooms: it collects
+    * its (shard, h) pairs instead (see [[append]]). */
   private def bloomsOf(df: DataFrame): Array[BloomFilter] =
     df.select(shardExpr.as("shard"), col("h"))
       .rdd.treeAggregate(new Array[BloomFilter](Shards))(
@@ -331,7 +330,7 @@ object DedupIndex {
     * every instant), then rows. Only shards the batch actually touches
     * are locked and rewritten.
     *
-    * A shard's bloom update is a read-merge-write, and a parquet append
+    * A shard's bloom update is a read-modify-write, and a parquet append
     * stages its commit in a shared _temporary dir; concurrent appenders
     * would lose each other's bloom bits (breaking the superset invariant
     * — "bloom miss proves new" would then admit duplicates silently) and
@@ -345,23 +344,26 @@ object DedupIndex {
       .groupBy("sha").agg(min(col("doc_id")).as("keeper_id"),
         first(col("h")).as("h"))
       .persist()
-    val batchBlooms = bloomsOf(hashes)
-    // touched shards fall out of the bloom aggregate itself (r20): the
-    // former separate distinct+collect job re-ran the batch's sha pass
-    // once per append for a fact the nulls in batchBlooms already carry
-    val touched = batchBlooms.indices.filter(batchBlooms(_) != null).toSet
+    // the batch's bloom keys (distinct: one row per sha), not batch
+    // blooms: a 500-doc batch's per-partition blooms were up to
+    // 4 × 16 × 1.26 MB of task results, for bits that a putLong into the
+    // stored shard blooms sets the same way
+    val keys = hashes.select(shardExpr.as("shard"), col("h")).collect()
+      .groupBy(_.getInt(0)).map { case (i, rs) => i -> rs.map(_.getLong(1)) }
     withAppendLock(spark, indexDir) {
       ensureShardedLayout(spark, indexDir)
       val (fs0, p0) = fsFor(spark, indexDir, 0)
-      if (!fs0.exists(p0))
+      if (!fs0.exists(p0)) {
         // never-built index: this append IS the build's bloom
         // publication — all 16 shards (empties included) land with
         // shard 0 last, establishing the sentinel invariant
-        publishBlooms(spark, indexDir, fillEmpty(batchBlooms))
-      else
-        touched.foreach { i =>
+        val blooms = fillEmpty(new Array[BloomFilter](Shards))
+        for ((i, hs) <- keys; h <- hs) blooms(i).putLong(h)
+        publishBlooms(spark, indexDir, blooms)
+      } else
+        keys.foreach { case (i, hs) =>
           val merged = readBloom(spark, indexDir, i)
-          merged.mergeInPlace(batchBlooms(i))
+          hs.foreach(merged.putLong)
           writeBloom(spark, indexDir, i, merged)
         }
       hashes.select("sha", "keeper_id")

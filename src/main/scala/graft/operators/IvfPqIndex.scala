@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.functions.CosineKernels
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF+PQ index — the composition of the coarse inverted-file
@@ -218,8 +220,8 @@ object IvfPqIndex {
     // crossJoin-collect job per probe batch — driver-blocking scheduling
     // latency, not compute, at any batch size
     val centersArr = ServeModelCache.cached(spark, s"$modelDir/centroids") {
-      spark.read.parquet(s"$modelDir/centroids").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      spark.read.parquet(s"$modelDir/centroids").collect().map(r => (r.getLong(0),
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)))
     }
     val cbArr = ServeModelCache.cached(spark, s"$modelDir/codebooks") {
       PqIndex.collectCodebooks(spark.read.parquet(s"$modelDir/codebooks"))
@@ -234,7 +236,7 @@ object IvfPqIndex {
     val (probeArr, probeLocal) = probes
     // probe cells ON THE DRIVER — |probes| × k cosines against the
     // resident centroids, replicating the former crossJoin + row_number
-    // plan exactly: cosine via the bit-identical driver twin, ordering
+    // plan exactly: cosine via cosine_f32's own kernel, ordering
     // (csim DESC with NaN largest-first — Spark's double ordering —
     // then cell ASC), top-np per probe
     val cellOrd = new Ordering[(Long, Double)] {
@@ -245,8 +247,9 @@ object IvfPqIndex {
     }
     val pcRows: Seq[org.apache.spark.sql.Row] = probeArr.toSeq.flatMap {
       case (pid, pv) =>
+        val p = UnsafeArrayData.fromPrimitiveArray(pv)
         centersArr
-          .map { case (cell, cv) => (cell, PqIndex.cosineF32(pv, cv)) }
+          .map { case (cell, cv) => (cell, CosineKernels.f32(p, cv)) }
           .sorted(cellOrd).take(np)
           .map { case (cell, _) => org.apache.spark.sql.Row(pid, cell) }
     }

@@ -114,19 +114,6 @@ object PqIndex {
     s
   }
 
-  /** Driver-side twin of [[graft.functions.CosineF32]] — one pass, three
-    * double accumulators in ascending index order, dot/(√na·√nb). */
-  private[operators] def cosineF32(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /** slice(arr, start0+1, len) with SQL slice's truncation semantics. */
   private def sliceF(a: Array[Float], start0: Int, len: Int): Array[Float] =
     if (start0 >= a.length) Array.emptyFloatArray

@@ -22,6 +22,13 @@ import org.apache.spark.sql.SparkSession
   * back to name:length:mtime (a model dir should never contain one; the
   * guard keeps a misuse from turning every serve into a bulk re-read).
   *
+  * An index that commits by generation ([[IndexGenerations]]) needs no
+  * fingerprint: its entries ([[committed]]) are keyed by the index
+  * directory and checked against the identity of the manifest the
+  * caller read — the puFS key discipline (a block's cache identity
+  * includes its generation, PAPER.md §1.1). That is what lets AnnIndex
+  * keep a whole small generation resident, corpus tables included.
+  *
   * The cache is LRU-bounded at [[MaxEntries]] so a long-lived serving
   * process touching many index dirs does not accumulate one resident
   * model per dir forever (ADVICE r19). A Broadcast value is unpersisted
@@ -82,11 +89,28 @@ private[operators] object ServeModelCache {
     * applicationId and a context restart misses cleanly (the dead
     * entry LRU-evicts). */
   def cachedKeyed[T <: AnyRef](spark: SparkSession, dir: String,
-      extraKey: String)(load: => T): T = {
-    val key = if (extraKey.isEmpty) dir else s"$extraKey:$dir"
-    val sig = signature(spark, dir)
+      extraKey: String)(load: => T): T =
+    lookup(if (extraKey.isEmpty) dir else s"$extraKey:$dir",
+      signature(spark, dir), (_: T) => true)(load)
+
+  /** Cached `load` for an index directory whose state is a committed
+    * generation: keyed by `dir` and checked against the manifest's
+    * `identity` (its number and file list), which the caller has already
+    * read — no listing, no hashing, because a committed generation's
+    * files never change. The identity, not the number alone: a rebuild
+    * clears the log and commits generation 1 again. One entry per dir: a
+    * newer manifest replaces and releases the old entry. `keep` can
+    * reject a hit whose value no longer suits the caller (AnnIndex keeps
+    * an over-bound verdict only while the bound still excludes it). */
+  def committed[T <: AnyRef](dir: String, identity: String)(keep: T => Boolean)
+      (load: => T): T =
+    lookup(s"manifest:$dir", identity, keep)(load)
+
+  private def lookup[T <: AnyRef](key: String, sig: String, keep: T => Boolean)
+      (load: => T): T = {
     val hit = cache.synchronized(cache.get(key))
-    if (hit != null && hit._1 == sig) hit._2.asInstanceOf[T]
+    if (hit != null && hit._1 == sig && keep(hit._2.asInstanceOf[T]))
+      hit._2.asInstanceOf[T]
     else {
       val v = load
       val dropped = cache.synchronized {

@@ -384,8 +384,9 @@ object StreamJobs {
   /** Streaming ANN serving — the query half of a vector store put under a
     * stream: probes `(probe_id, pv)` arrive as micro-batches, each batch
     * is answered from the standing AnnIndex (broadcast probe buckets →
-    * bucket-join against the stored signatures → exact cosine re-rank;
-    * the IDENTICAL plan as the batch path, AnnIndex.queryProbes), and
+    * bucket-join against the stored signatures → exact cosine re-rank,
+    * or a small generation's driver-resident model; the IDENTICAL path
+    * as the batch caller, AnnIndex.queryProbes), and
     * answers land under `outDir/answers`. Cost per batch is
     * O(batch × bucket density), never a corpus scan: the index is the
     * 100 TB side and stays untouched, the probe batch is the broadcast

@@ -80,9 +80,17 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"), s"$n plans a cartesian:\n$p")
     }
     // the ANN probe's candidate join must broadcast the probe buckets
-    // against the signature table — the index side is the 100 TB side
-    val pAnn = lanes("idx_ann_probe")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    // against the signature table — the index side is the 100 TB side.
+    // That join exists on the distributed arm, which serves a generation
+    // past the broadcast bound; the sf0.001 generation fits the bound and
+    // serves from the driver-resident model, so the bound is switched
+    // off (-1) to plan the distributed arm here
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val pAnn =
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        lanes("idx_ann_probe")(spark, sfDir).queryExecution.executedPlan.toString
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert(pAnn.contains("BroadcastHashJoin"), pAnn)
   }
 

@@ -129,10 +129,21 @@ class NearDupSpec extends SparkSpec {
       s"index-served results diverge from the inline lane: " +
         s"only-index=${fromIndex -- inline} only-inline=${inline -- fromIndex}")
     // the query plan reads the STORED signatures, not a recompute: the
-    // only sign_lsh in the plan is the tiny probe-side projection
-    val plan = AnnIndex.query(spark, dir, 10, 5)
-      .queryExecution.executedPlan.toString
+    // only sign_lsh in the plan is the tiny probe-side projection. That
+    // is the distributed arm's plan; a generation this small serves from
+    // the driver-resident model, a local relation built from the same
+    // stored signatures, whose plan computes nothing
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    val plan =
+      try {
+        spark.conf.set(key, "-1")
+        AnnIndex.query(spark, dir, 10, 5).queryExecution.executedPlan.toString
+      } finally spark.conf.set(key, saved)
     assert(plan.contains("/signatures"), plan.take(1500))
+    val residentPlan = AnnIndex.query(spark, dir, 10, 5).queryExecution.executedPlan
+    assert(residentPlan.collectLeaves().forall(_.nodeName == "LocalTableScan") &&
+      !residentPlan.toString.contains("sign_lsh"), residentPlan.toString.take(1500))
 
     // incremental append: an identical copy of probe 0 appended to the
     // index shares every bucket and must surface as its top-1 neighbor
@@ -947,8 +958,9 @@ class NearDupSpec extends SparkSpec {
     //
     // VERDICT r14 #3: at streaming-append rates, a parquet footer count
     // per micro-batch is a job the serve path must not pay. n is the
-    // manifest's: routing runs no job, and an append's jobs are its batch
-    // count and its two table writes.
+    // manifest's: routing runs no job, and an append's jobs are its two
+    // table writes — the batch's n is observed on the vectors write, not
+    // counted by a job of its own.
     val dir = java.nio.file.Files.createTempDirectory("ann-nocount").toString
     AnnIndex.build(spark, sfDir, dir) // default threshold: no sidecar
     val n0 = AnnIndex.generation(spark, dir).rows
@@ -958,7 +970,7 @@ class NearDupSpec extends SparkSpec {
       .collect()(0).getSeq[Float](0).toArray
     val batch = Seq((888881L, v0), (888882L, v0)).toDF("vec_id", "embedding")
     val (_, appendRec) = graft.JobAttribution.of(spark)(AnnIndex.append(spark, dir, batch))
-    assert(appendRec.jobs.size == 5,
+    assert(appendRec.jobs.size == 2,
       s"append ran ${appendRec.jobs.size} jobs: ${appendRec.jobs}")
     val (arm, routeRec) = graft.JobAttribution.of(spark)(AnnIndex.chosenArm(spark, dir))
     assert(arm == "flat")
@@ -968,19 +980,41 @@ class NearDupSpec extends SparkSpec {
     assert(spark.read.parquet(g.vectors: _*).count() == n0 + 2)
   }
 
-  test("unhinted ANN queryProbes collects its probes once and routes on their count") {
-    // serve_ingest's probe_ann passes no probeCount; the router used to
-    // count the probe frame with a job of its own before the arm
-    // collected the same frame again
+  /** Jobs of one warm, unhinted 50-probe queryProbes on the sf0.001
+    * index, with `autoBroadcastJoinThreshold` at `threshold` (None: the
+    * session's). */
+  private def warmProbeJobs(threshold: Option[String]): Int = {
     val dir = java.nio.file.Files.createTempDirectory("ann-probejobs").toString
     AnnIndex.build(spark, sfDir, dir)
     val probes = spark.read.parquet(s"$dir/vectors").filter(col("vec_id") < 50)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    AnnIndex.queryProbes(spark, dir, probes, 5).collect() // warm-up
-    val (rows, rec) = graft.JobAttribution.of(spark)(
-      AnnIndex.queryProbes(spark, dir, probes, 5).collect())
-    assert(rows.length == 250)
-    assert(rec.jobs.size == 9,
-      s"one unhinted queryProbes ran ${rec.jobs.size} jobs: ${rec.jobs}")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    try {
+      threshold.foreach(spark.conf.set(key, _))
+      AnnIndex.queryProbes(spark, dir, probes, 5).collect() // warm-up
+      val (rows, rec) = graft.JobAttribution.of(spark)(
+        AnnIndex.queryProbes(spark, dir, probes, 5).collect())
+      assert(rows.length == 250)
+      rec.jobs.size
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("unhinted ANN queryProbes collects its probes once and routes on their count") {
+    // serve_ingest's probe_ann passes no probeCount; the router used to
+    // count the probe frame with a job of its own before the arm
+    // collected the same frame again. The generation fits the broadcast
+    // bound, so the resident flat arm serves it: the probe collect is
+    // the only job
+    val jobs = warmProbeJobs(None)
+    assert(jobs == 1, s"one unhinted queryProbes ran $jobs jobs")
+  }
+
+  test("unhinted ANN queryProbes with the resident arm off runs the distributed plan") {
+    // threshold -1 also turns auto-broadcast off, so the vectors join
+    // plans as a sort-merge join: one job more than the 9 the
+    // distributed arm ran at the default threshold
+    val jobs = warmProbeJobs(Some("-1"))
+    assert(jobs == 10, s"one unhinted distributed queryProbes ran $jobs jobs")
   }
 }
