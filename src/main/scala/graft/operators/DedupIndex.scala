@@ -16,7 +16,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *   blooms/shard-<i>.bin 16 serialized Blooms over xxhash64(sha), sharded
   *                        by the first hex nibble of sha. Each shard is
   *                        always a SUPERSET of its slice of hashes/ (append
-  *                        adds its keys before writing rows), so a bloom
+  *                        merges blooms before writing rows), so a bloom
   *                        miss proves a document is new and skips the join
   *                        entirely; bloom hits (~dup rate + fpp of the
   *                        batch) are the only rows that reach the exact
@@ -52,29 +52,37 @@ object DedupIndex {
   private def shardExpr: Column =
     conv(substring(col("sha"), 1, 1), 16, 10).cast("int")
 
-  /** All shard blooms in ONE distributed pass over a corpus (lazy
-    * per-partition arrays; only non-empty shards materialize, so a shard
-    * the frame never touched stays null — use [[fillEmpty]] where a full
-    * array is needed). A batch append does not build blooms: it collects
-    * its (shard, h) pairs instead (see [[append]]). */
-  private def bloomsOf(df: DataFrame): Array[BloomFilter] =
-    df.select(shardExpr.as("shard"), col("h"))
-      .rdd.treeAggregate(new Array[BloomFilter](Shards))(
-        (acc, row) => {
-          val s = row.getInt(0)
-          if (acc(s) == null) acc(s) = BloomFilter.create(ShardCapacity, Fpp)
-          acc(s).putLong(row.getLong(1))
-          acc
-        },
-        (a, b) => {
-          var i = 0
-          while (i < Shards) {
-            if (a(i) == null) a(i) = b(i)
-            else if (b(i) != null) a(i).mergeInPlace(b(i))
-            i += 1
-          }
-          a
-        })
+  /** All shard blooms of a frame's (shard, h) keys, in ONE job. Each
+    * task returns its partition's keys as one primitive array (16 bytes
+    * a key), and the driver puts them into its blooms as each task's
+    * result arrives, then drops them: the driver holds at most Shards
+    * blooms plus the key arrays of tasks finishing at once, whatever the
+    * frame's size. Per-partition blooms would ship Shards × 1.26 MB per
+    * task however few keys it holds (80 MB for a 500-doc batch on four
+    * partitions). A shard the frame never touched stays null — append
+    * derives its touched-shard set from exactly that; use [[fillEmpty]]
+    * where a full array is needed. */
+  private def bloomsOf(df: DataFrame): Array[BloomFilter] = {
+    val blooms = new Array[BloomFilter](Shards)
+    val keys = df.select(shardExpr.as("shard"), col("h")).rdd.mapPartitions { rows =>
+      val ks = Array.newBuilder[Long]
+      rows.foreach { r => ks += r.getInt(0); ks += r.getLong(1) }
+      Iterator.single(ks.result())
+    }
+    // the handler runs on the scheduler's single event thread, one task
+    // result at a time
+    df.sparkSession.sparkContext.runJob(keys, (it: Iterator[Array[Long]]) => it.next(),
+      (_: Int, ks: Array[Long]) => {
+        var i = 0
+        while (i < ks.length) {
+          val s = ks(i).toInt
+          if (blooms(s) == null) blooms(s) = BloomFilter.create(ShardCapacity, Fpp)
+          blooms(s).putLong(ks(i + 1))
+          i += 2
+        }
+      })
+    blooms
+  }
 
   private def fillEmpty(blooms: Array[BloomFilter]): Array[BloomFilter] =
     blooms.map(bf =>
@@ -330,7 +338,7 @@ object DedupIndex {
     * every instant), then rows. Only shards the batch actually touches
     * are locked and rewritten.
     *
-    * A shard's bloom update is a read-modify-write, and a parquet append
+    * A shard's bloom update is a read-merge-write, and a parquet append
     * stages its commit in a shared _temporary dir; concurrent appenders
     * would lose each other's bloom bits (breaking the superset invariant
     * — "bloom miss proves new" would then admit duplicates silently) and
@@ -344,26 +352,23 @@ object DedupIndex {
       .groupBy("sha").agg(min(col("doc_id")).as("keeper_id"),
         first(col("h")).as("h"))
       .persist()
-    // the batch's bloom keys (distinct: one row per sha), not batch
-    // blooms: a 500-doc batch's per-partition blooms were up to
-    // 4 × 16 × 1.26 MB of task results, for bits that a putLong into the
-    // stored shard blooms sets the same way
-    val keys = hashes.select(shardExpr.as("shard"), col("h")).collect()
-      .groupBy(_.getInt(0)).map { case (i, rs) => i -> rs.map(_.getLong(1)) }
+    val batchBlooms = bloomsOf(hashes)
+    // touched shards fall out of the bloom aggregate itself (r20): the
+    // former separate distinct+collect job re-ran the batch's sha pass
+    // once per append for a fact the nulls in batchBlooms already carry
+    val touched = batchBlooms.indices.filter(batchBlooms(_) != null).toSet
     withAppendLock(spark, indexDir) {
       ensureShardedLayout(spark, indexDir)
       val (fs0, p0) = fsFor(spark, indexDir, 0)
-      if (!fs0.exists(p0)) {
+      if (!fs0.exists(p0))
         // never-built index: this append IS the build's bloom
         // publication — all 16 shards (empties included) land with
         // shard 0 last, establishing the sentinel invariant
-        val blooms = fillEmpty(new Array[BloomFilter](Shards))
-        for ((i, hs) <- keys; h <- hs) blooms(i).putLong(h)
-        publishBlooms(spark, indexDir, blooms)
-      } else
-        keys.foreach { case (i, hs) =>
+        publishBlooms(spark, indexDir, fillEmpty(batchBlooms))
+      else
+        touched.foreach { i =>
           val merged = readBloom(spark, indexDir, i)
-          hs.foreach(merged.putLong)
+          merged.mergeInPlace(batchBlooms(i))
           writeBloom(spark, indexDir, i, merged)
         }
       hashes.select("sha", "keeper_id")

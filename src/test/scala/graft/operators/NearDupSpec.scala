@@ -978,6 +978,16 @@ class NearDupSpec extends SparkSpec {
     val g = AnnIndex.generation(spark, dir)
     assert(g.rows == n0 + 2, "the manifest's n diverged from the appended truth")
     assert(spark.read.parquet(g.vectors: _*).count() == n0 + 2)
+    // an empty append observes n = 0 rather than waiting for a metric
+    // that never comes (the call runs under the index's append lock), and
+    // commits the next generation with the same n
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future(AnnIndex.append(spark, dir, batch.limit(0))),
+      scala.concurrent.duration.Duration(5, "min"))
+    val empty = AnnIndex.generation(spark, dir)
+    assert(empty.number == g.number + 1 && empty.rows == g.rows)
+    assert(spark.read.parquet(empty.vectors: _*).count() == g.rows)
   }
 
   /** Jobs of one warm, unhinted 50-probe queryProbes on the sf0.001
