@@ -21,14 +21,13 @@ import org.apache.spark.sql.functions._
   *   bloom.bin   derived scan-side prefilter (1% fpp), published AFTER
   *               the rows by temp-write + rename
   *
-  * Publish ORDER is the opposite of DedupIndex's blooms-first — and for
-  * the opposite reason. A dedup bloom must be a superset of the rows at
-  * every instant ("miss proves new"), so blooms lead. Here the bloom is
-  * a containment PREFILTER: a shingle it wrongly drops would silently
-  * MISS contamination, so the bloom may only ever exist when it covers
-  * the full row set. Rows-first makes that structural: a build that
-  * crashes between the row write and the bloom publish leaves a model
-  * whose screen() simply skips the prefilter (missing sidecar = screen
+  * Publish ORDER matters here (DedupIndex commits its rows and blooms
+  * as one generation instead). The bloom is a containment PREFILTER: a
+  * shingle it wrongly drops would silently MISS contamination, so the
+  * bloom may only ever exist when it covers the full row set.
+  * Rows-first makes that structural: a build that crashes between the
+  * row write and the bloom publish leaves a model whose screen() simply
+  * skips the prefilter (missing sidecar = screen
   * everything) and still answers exactly. The model is write-once — eval
   * suites version by building a new dir, which is how benchmarks
   * actually rev — so the bloom can never lag a later append.
@@ -122,45 +121,56 @@ object DecontamIndex {
     * the measured 10^7-key point. */
   def screen(spark: SparkSession, indexDir: String,
       docs: DataFrame): DataFrame = {
-    val ids = docs.select("doc_id")
-    val corpusSh = LlmOps.shingles8(docs.select(col("doc_id"), col("text")))
-      .withColumn("h", xxhash64(col("sh")))
-    val (hfs, bloomPath) = fs(spark, s"$indexDir/bloom.bin")
-    val prefiltered =
-      if (!hfs.exists(bloomPath)) corpusSh // crashed build: no prefilter
-      else {
-        val st = hfs.getFileStatus(bloomPath)
-        def bytes: Array[Byte] = {
-          val in = hfs.open(bloomPath)
-          try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        }
-        val pred =
-          if (st.getLen <= graft.functions.BloomMembership.LiteralMaxBytes)
-            graft.functions.BloomMembership.mightContain(
-              spark, lit(bytes), col("h"))
-          else // key on (path, len, mtime): a rebuilt model re-broadcasts
-            graft.functions.BloomMembership.mightContainBroadcast(spark,
-              s"$bloomPath@${st.getLen}:${st.getModificationTime}",
-              col("h"))(bytes)
-        corpusSh.filter(pred)
-      }
-    val hits = prefiltered
+    val hits = candidateShingles(spark, indexDir, docs)
       .distinct() // count DISTINCT shared shingles (the l26/l29 unit)
-      .join(spark.read.schema(ShinglesSchema)
-        .parquet(s"$indexDir/shingles").select("sh"), "sh")
+      .join(model(spark, indexDir), "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    ids.join(hits, Seq("doc_id"), "left")
+    docs.select("doc_id").join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"))
       .withColumn("contaminated", col("n_shared") > 0)
   }
 
   /** The curation verb: rows of `docs` sharing NO shingle with the
-    * model — the standing-store form of l26's anti-join stage. */
+    * model — the standing-store form of l26's anti-join stage. Only
+    * EXISTENCE decides, so a doc drops by a semi-join of its
+    * bloom-passing shingles against the model: no distinct, no count,
+    * no left join (those are [[screen]]'s, for n_shared). */
   def dropContaminated(spark: SparkSession, indexDir: String,
       docs: DataFrame): DataFrame = {
-    val bad = screen(spark, indexDir, docs)
-      .filter(col("contaminated")).select("doc_id")
+    val bad = candidateShingles(spark, indexDir, docs)
+      .join(model(spark, indexDir), Seq("sh"), "left_semi")
+      .select("doc_id")
     docs.join(bad, Seq("doc_id"), "left_anti")
+  }
+
+  private def model(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(ShinglesSchema).parquet(s"$indexDir/shingles").select("sh")
+
+  /** The docs' 8-gram shingle rows (doc_id, sh, h) that can be in the
+    * model: those passing the bloom sidecar, or every row when a build
+    * crashed before publishing it. */
+  private def candidateShingles(spark: SparkSession, indexDir: String,
+      docs: DataFrame): DataFrame = {
+    val corpusSh = LlmOps.shingles8(docs.select(col("doc_id"), col("text")))
+      .withColumn("h", xxhash64(col("sh")))
+    val (hfs, bloomPath) = fs(spark, s"$indexDir/bloom.bin")
+    if (!hfs.exists(bloomPath)) corpusSh // crashed build: no prefilter
+    else {
+      val st = hfs.getFileStatus(bloomPath)
+      def bytes: Array[Byte] = {
+        val in = hfs.open(bloomPath)
+        try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+      }
+      val pred =
+        if (st.getLen <= graft.functions.BloomMembership.LiteralMaxBytes)
+          graft.functions.BloomMembership.mightContain(
+            spark, lit(bytes), col("h"))
+        else // key on (path, len, mtime): a rebuilt model re-broadcasts
+          graft.functions.BloomMembership.mightContainBroadcast(spark,
+            s"$bloomPath@${st.getLen}:${st.getModificationTime}",
+            col("h"))(bytes)
+      corpusSh.filter(pred)
+    }
   }
 }

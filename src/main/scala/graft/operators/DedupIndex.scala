@@ -1,6 +1,8 @@
 package graft.operators
 
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -10,24 +12,45 @@ import org.apache.spark.util.sketch.BloomFilter
   * index, and each day's arrivals are checked against the index without
   * ever rescanning the corpus.
   *
-  * Layout at `indexDir`:
-  *   hashes/              parquet (sha, keeper_id) — one row per distinct
-  *                        content
-  *   blooms/shard-<i>.bin 16 serialized Blooms over xxhash64(sha), sharded
-  *                        by the first hex nibble of sha. Each shard is
-  *                        always a SUPERSET of its slice of hashes/ (append
-  *                        merges blooms before writing rows), so a bloom
-  *                        miss proves a document is new and skips the join
-  *                        entirely; bloom hits (~dup rate + fpp of the
-  *                        batch) are the only rows that reach the exact
-  *                        anti-join confirm.
+  * Two tables: parquet (sha, keeper_id) rows, one per distinct content,
+  * and 16 serialized Blooms over xxhash64(sha), sharded by the first hex
+  * nibble of sha. A shard's bloom covers every row of its slice, so a
+  * bloom miss proves a document is new and skips the join entirely;
+  * bloom hits (~dup rate + fpp of the batch) are the only rows that
+  * reach the exact anti-join confirm.
   *
-  * At scale: the index is hash-partitioned parquet the confirm join
-  * shuffles against; each shard bloom is a fixed-size broadcast (9.6 bits
-  * per indexed doc at 1% fpp). Sharding by sha prefix makes total capacity
-  * Shards × ShardCapacity while keeping every bloom ever built for a shard
+  * GENERATIONS ([[IndexGenerations]], the AnnIndex discipline): every
+  * build and append commits one manifest, `_gen/<N>`, that lists the
+  * `hashes` files of the whole index and the newest bloom file of each
+  * shard holding rows. Layout at `indexDir`:
+  *   _gen/<N>                   the manifest of generation N
+  *   g<N>/hashes/               parquet (sha, keeper_id): the rows
+  *                              generation N added (a build's: all)
+  *   g<N>/blooms/shard-<i>.bin  shard i's bloom, for each shard
+  *                              generation N touched: the previous
+  *                              generation's bloom merged with the
+  *                              batch's
+  * Every file is written once, by a plain create, into a directory no
+  * reader looks at yet; the commit publishes them all at once. A screen
+  * reads the newest complete manifest and exactly the files it names,
+  * so a crash before a commit is invisible, files outside a commit
+  * never screen, and a screen racing an append sees one generation
+  * whole. A shard the manifest names no bloom for holds no rows.
+  *
+  * A directory without `_gen/` — written before the log — serves as
+  * generation 0: `hashes/` and `blooms/shard-<i>.bin`, whose writers
+  * published shard 0 last, so shard 0's presence proves every shard's.
+  * Its first append commits generation 1 over those files. One with
+  * `hashes/` but no shard 0 (a single-bloom index, or a build that
+  * crashed before its blooms) gets its blooms rebuilt from the rows and
+  * committed as a generation on its first screen or append.
+  *
+  * At scale: the rows are hash-partitioned parquet the confirm join
+  * reads; each shard bloom is fixed-size (9.6 bits per indexed doc at 1%
+  * fpp). Sharding by sha prefix makes total capacity Shards ×
+  * ShardCapacity while keeping every bloom ever built for a shard
   * mergeable (mergeInPlace requires identical bit size + hash count), and
-  * lets appends touching few shards lock/rewrite only those. Growing a
+  * lets an append rewrite only the shards it touches. Growing a
   * deployment = raising Shards (a rebuild), not resizing blooms in place.
   */
 object DedupIndex {
@@ -36,9 +59,15 @@ object DedupIndex {
   /** Shard count; sha's first hex nibble routes a document to its shard. */
   private[operators] val Shards = 16
   /** Per-shard capacity — fixed so all blooms of a shard are mergeable.
-    * 16 shards × 1 Mi ≈ 16.8 M distinct contents at 1% fpp (~2.4 MB of
+    * 16 shards × 1 Mi ≈ 16.8 M distinct contents at 1% fpp (~1.2 MB of
     * bloom per shard); production raises Shards, not this constant. */
-  private val ShardCapacity = 1L << 20
+  private[operators] val ShardCapacity = 1L << 20
+
+  private val HashesSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("sha",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("keeper_id",
+      org.apache.spark.sql.types.LongType)))
 
   // coalesce: sha2(NULL) is NULL, and NULL = NULL never matches in the
   // confirm join — a NULL-text doc would pass the anti-join as "new" on
@@ -48,22 +77,28 @@ object DedupIndex {
     docs.withColumn("sha", sha2(coalesce(col("text"), lit("")), 256))
       .withColumn("h", xxhash64(col("sha")))
 
+  /** One row per distinct content of `docs`: (sha, keeper_id, h), the
+    * min doc_id keeping it. */
+  private def contents(docs: DataFrame): DataFrame =
+    withSha(docs).groupBy("sha").agg(min(col("doc_id")).as("keeper_id"),
+      first(col("h")).as("h"))
+
   /** First hex nibble of sha as an int in [0, 16) — codegen'd. */
   private def shardExpr: Column =
     conv(substring(col("sha"), 1, 1), 16, 10).cast("int")
 
-  /** All shard blooms of a frame's (shard, h) keys, in ONE job. Each
-    * task returns its partition's keys as one primitive array (16 bytes
-    * a key), and the driver puts them into its blooms as each task's
-    * result arrives, then drops them: the driver holds at most Shards
-    * blooms plus the key arrays of tasks finishing at once, whatever the
-    * frame's size. Per-partition blooms would ship Shards × 1.26 MB per
-    * task however few keys it holds (80 MB for a 500-doc batch on four
-    * partitions). A shard the frame never touched stays null — append
-    * derives its touched-shard set from exactly that; use [[fillEmpty]]
-    * where a full array is needed. */
-  private def bloomsOf(df: DataFrame): Array[BloomFilter] = {
+  /** All shard blooms of a frame's (shard, h) keys and the key count, in
+    * ONE job. Each task returns its partition's keys as one primitive
+    * array (16 bytes a key), and the driver puts them into its blooms as
+    * each task's result arrives, then drops them: the driver holds at
+    * most Shards blooms plus the key arrays of tasks finishing at once,
+    * whatever the frame's size. Per-partition blooms would ship Shards ×
+    * 1.26 MB per task however few keys it holds (80 MB for a 500-doc
+    * batch on four partitions). A shard the frame never touched stays
+    * null. */
+  private def bloomsOf(df: DataFrame): (Array[BloomFilter], Long) = {
     val blooms = new Array[BloomFilter](Shards)
+    var n = 0L
     val keys = df.select(shardExpr.as("shard"), col("h")).rdd.mapPartitions { rows =>
       val ks = Array.newBuilder[Long]
       rows.foreach { r => ks += r.getInt(0); ks += r.getLong(1) }
@@ -80,251 +115,212 @@ object DedupIndex {
           blooms(s).putLong(ks(i + 1))
           i += 2
         }
+        n += ks.length / 2
       })
-    blooms
+    (blooms, n)
   }
 
-  private def fillEmpty(blooms: Array[BloomFilter]): Array[BloomFilter] =
-    blooms.map(bf =>
-      if (bf == null) BloomFilter.create(ShardCapacity, Fpp) else bf)
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // Bloom I/O rides the Hadoop FileSystem of the indexDir's scheme so a
   // non-local index (hdfs://, pufs://) works end-to-end — java.nio would
   // treat "hdfs://x" as a relative local path and silently write a local
   // directory literally named "hdfs:" (ADVICE r5 class of bug).
-  private def fsFor(spark: SparkSession, indexDir: String, shard: Int) = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, f"blooms/shard-$shard%x.bin")
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  /** Publish a shard bloom ATOMICALLY: write to a temp name, then one
-    * rename. `newAgainst` takes no lock (screens are read-only and the
-    * append lock only serializes writers), so an in-place overwrite
-    * would expose a concurrent reader to a torn bloom — EOF on a
-    * truncated file at best, a silently bit-incomplete screen (breaking
-    * the "bloom miss proves new" superset invariant) at worst. With
-    * rename-publish a reader sees the old complete bloom or the new
-    * complete bloom, never bytes in between. Filesystems without a
-    * FileContext binding (pufs://) fall back to delete+rename — there
-    * the single-writer contract already governs (see append). */
-  private def writeBloom(spark: SparkSession, indexDir: String, shard: Int,
-      bf: BloomFilter): Unit = {
+  private def writeBloom(spark: SparkSession, file: String, bf: BloomFilter): Unit = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
-    val (fs, p) = fsFor(spark, indexDir, shard)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + ".tmp-" + java.util.UUID.randomUUID().toString)
-    val out = fs.create(tmp, true)
+    val p = new Path(file)
+    val out = fsOf(spark, p).create(p, false)
     try out.write(bos.toByteArray) finally out.close()
-    try
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(p.toUri, spark.sessionState.newHadoopConf())
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // Try the plain rename FIRST: on a fresh publish (no target) it
-        // succeeds directly and no no-file window ever opens. Only when
-        // the target exists (rename-without-overwrite fails) do we
-        // displace it — that brief gap is covered by the reader-side
-        // FNF retry in readBloomBytes, so lock-free screens never die
-        // on a concurrent republish.
-        if (!fs.rename(tmp, p)) {
-          if (fs.exists(p)) fs.delete(p, false)
-          if (!fs.rename(tmp, p))
-            throw new java.io.IOException(s"bloom publish rename failed: $p")
-        }
+  }
+
+  private def readBloom(spark: SparkSession, file: String): BloomFilter = {
+    val p = new Path(file)
+    val in = fsOf(spark, p).open(p)
+    val bytes = try in.readAllBytes() finally in.close()
+    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+  }
+
+  private def bloomName(shard: Int): String = f"shard-$shard%x.bin"
+
+  private def shardOf(file: String): Int =
+    Integer.parseInt(new Path(file).getName.stripPrefix("shard-").stripSuffix(".bin"), 16)
+
+  /** One generation, read back: its row count, the `hashes` files, and
+    * the bloom file of each shard holding rows. */
+  private[graft] final case class Generation(number: Long, rows: Long,
+      hashes: Seq[String], blooms: Map[Int, String])
+
+  private val Empty = Generation(0, 0, Nil, Map.empty)
+
+  /** The newest committed generation of `indexDir`, or generation 0 when
+    * it has no log: `hashes/`, and all shard blooms once shard 0 exists.
+    * Generation 0's row count is left at 0; only the append that commits
+    * generation 1 over it counts its rows. */
+  private[graft] def generation(spark: SparkSession, indexDir: String): Generation =
+    IndexGenerations.latest(spark, indexDir) match {
+      case Some(m) => Generation(m.number, m.rows, m("hashes"),
+        m("blooms").map(f => shardOf(f) -> f).toMap)
+      case None =>
+        val fs = fsOf(spark, new Path(indexDir))
+        val hashes = s"$indexDir/hashes"
+        Generation(0, 0,
+          if (fs.exists(new Path(hashes))) IndexGenerations.files(spark, hashes) else Nil,
+          if (!fs.exists(new Path(s"$indexDir/blooms/${bloomName(0)}"))) Map.empty
+          else (0 until Shards).map(i => i -> s"$indexDir/blooms/${bloomName(i)}").toMap)
     }
+
+  private def readHashes(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(HashesSchema).parquet(files: _*)
+
+  /** Generation 0 with rows but no shard blooms — a single-bloom index,
+    * or a build from before the log that crashed before its blooms. */
+  private def lacksBlooms(g: Generation): Boolean =
+    g.number == 0 && g.hashes.nonEmpty && g.blooms.isEmpty
+
+  /** `g`, or — when it [[lacksBlooms]] — the generation committing its
+    * blooms, rebuilt from its rows: the blooms are DERIVED state, the
+    * authoritative content set lives in the rows. The caller holds the
+    * append lock and read `g` under it: a migrator racing an appender
+    * could otherwise commit blooms missing the appended batch's bits. */
+  private def withBlooms(spark: SparkSession, indexDir: String,
+      g: Generation): Generation =
+    if (!lacksBlooms(g)) g
+    else {
+      val (blooms, n) = bloomsOf(readHashes(spark, g.hashes)
+        .withColumn("h", xxhash64(col("sha"))))
+      commit(spark, indexDir, g, None, blooms, n)
+    }
+
+  /** Commit generation N = the next number over `g`, under the append
+    * lock the caller holds: `rows` (sha, keeper_id) land in g<N>/hashes,
+    * each shard `batch` touches gets `g`'s bloom merged with the batch's
+    * in g<N>/blooms, and `_gen/N` lists them with everything of `g` they
+    * do not replace; `n` is the batch's row count. A crash anywhere
+    * before the commit leaves `g` serving, and the re-run rewrites
+    * g<N>/ and commits the same N. */
+  private def commit(spark: SparkSession, indexDir: String, g: Generation,
+      rows: Option[DataFrame], batch: Array[BloomFilter], n: Long): Generation = {
+    val number = IndexGenerations.next(spark, indexDir)
+    val out = s"$indexDir/g$number"
+    IndexGenerations.delete(spark, out) // a crashed run's leftovers
+    val hashes = rows.toSeq.flatMap { r =>
+      r.write.parquet(s"$out/hashes")
+      IndexGenerations.files(spark, s"$out/hashes")
+    }
+    val blooms = batch.indices.filter(batch(_) != null).map { i =>
+      val merged = g.blooms.get(i).fold(batch(i)) { f =>
+        val bf = readBloom(spark, f)
+        bf.mergeInPlace(batch(i))
+        bf
+      }
+      val f = s"$out/blooms/${bloomName(i)}"
+      writeBloom(spark, f, merged)
+      i -> f
+    }
+    val next = Generation(number, g.rows + n, g.hashes ++ hashes, g.blooms ++ blooms)
+    crashProbe("before_commit")
+    IndexGenerations.commit(spark, indexDir, IndexGenerations.Manifest(number,
+      next.rows, Map("hashes" -> next.hashes,
+        "blooms" -> next.blooms.toSeq.sortBy(_._1).map(_._2))))
+    next
   }
 
-  private def readBloomBytes(spark: SparkSession, indexDir: String,
-      shard: Int): Array[Byte] =
-    // bounded FNF retry over writeBloom's delete-then-rename window
-    FsRetry.retryFnf(readBloomBytesOnce(spark, indexDir, shard))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        fsFor(spark, indexDir, shard)._2.toString))
+  /** Crash-point probe (the AnnIndex.crashProbe discipline): fires after
+    * a generation's files are written, before its commit. */
+  private[graft] var crashProbe: String => Unit = _ => ()
 
-  private def readBloomBytesOnce(spark: SparkSession, indexDir: String,
-      shard: Int): Array[Byte] = {
-    val (fs, p) = fsFor(spark, indexDir, shard)
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      bos.toByteArray
-    } finally in.close()
+  /** Empty `indexDir` of this index for a rebuild: the log, every
+    * generation, and generation 0's tables. Anything else a caller keeps
+    * there (an ingest's accepted/ and batch markers) stays. */
+  private def clear(spark: SparkSession, indexDir: String): Unit = {
+    val p = new Path(indexDir)
+    val fs = fsOf(spark, p)
+    if (fs.exists(p))
+      fs.listStatus(p).map(_.getPath)
+        .filter(q => Set("_gen", "hashes", "blooms")(q.getName) ||
+          q.getName.matches("g[0-9]+"))
+        .foreach(fs.delete(_, true))
   }
 
-  private def readBloom(spark: SparkSession, indexDir: String,
-      shard: Int): BloomFilter =
-    BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(readBloomBytes(spark, indexDir, shard)))
-
-  /** Exclusive append-scope lock — the shared operators.AppendLock (per-
-    * path JVM monitor + cross-process file lock on local FS, lifted out
-    * of this file in round 10 so every standing index serializes appends
-    * the same way). Here it covers the WHOLE append: bloom merges AND
-    * the parquet row append, because concurrent parquet appends to one
-    * directory also clobber each other's _temporary commit staging.
-    * Elsewhere (object stores) the single-writer contract applies (see
-    * append's scaladoc). */
-  private def withAppendLock[A](spark: SparkSession, indexDir: String)
-      (body: => A): A = AppendLock.withLock(spark, indexDir)(body)
-
-  /** Publish a full set of shard blooms with shard 0 LAST. Shard 0 is
-    * the layout sentinel (`ensureShardedLayout` and `newAgainst` probe
-    * it), so ordering it last makes "shard-0.bin exists ⟹ every shard
-    * exists" a crash-safe invariant: a build or migration that dies
-    * mid-publish leaves shard 0 absent and the next touch re-runs the
-    * whole publish, instead of stranding an index whose sentinel is
-    * present but whose shards 1..15 are missing. */
-  private def publishBlooms(spark: SparkSession, indexDir: String,
-      blooms: Array[BloomFilter]): Unit = {
-    (1 until Shards).foreach(i => writeBloom(spark, indexDir, i, blooms(i)))
-    writeBloom(spark, indexDir, 0, blooms(0))
-  }
-
-  /** Dedup `docs` internally (min doc_id survives) and persist the index.
-    * Returns the number of distinct contents indexed. */
+  /** Dedup `docs` internally (min doc_id survives) and persist the index
+    * as generation 1, replacing what `indexDir` held. Returns the number
+    * of distinct contents indexed. */
   def build(spark: SparkSession, docs: DataFrame, indexDir: String): Long = {
-    // persist: the sha-aggregation feeds the parquet write, the bloom
-    // build, and the count — one scan+shuffle instead of three
-    val hashes = withSha(docs)
-      .groupBy("sha").agg(min(col("doc_id")).as("keeper_id"),
-        first(col("h")).as("h"))
-      .persist()
-    try {
-      hashes.select("sha", "keeper_id")
-        .write.mode("overwrite").parquet(s"$indexDir/hashes")
-      publishBlooms(spark, indexDir, fillEmpty(bloomsOf(hashes)))
-      hashes.count()
+    // persist: the sha-aggregation feeds the bloom pass and the parquet
+    // write — one scan+shuffle instead of two
+    val hashes = contents(docs).persist()
+    try AppendLock.withLock(spark, indexDir) {
+      clear(spark, indexDir)
+      val (blooms, n) = bloomsOf(hashes)
+      commit(spark, indexDir, Empty, Some(hashes.select("sha", "keeper_id")), blooms, n)
+      n
     } finally { hashes.unpersist(); () }
-  }
-
-  /** Rebuild the shard blooms from hashes/ whenever rows exist but the
-    * sharded layout doesn't: the screen is DERIVED state — the
-    * authoritative content set lives in the parquet rows — so migration
-    * is one distributed pass over hashes/. This self-heals every
-    * blooms-missing state from one code path: an index persisted by the
-    * legacy single-bloom version (its bloom.bin becomes inert), a build
-    * that crashed between the row write and the bloom publication, and
-    * a migration that crashed halfway. A dir with NO hashes/ is a
-    * never-built index and is left untouched (screens treat it as
-    * empty, the first append publishes the full shard set).
-    *
-    * Crash- and race-safety: blooms publish with shard 0 LAST
-    * (publishBlooms), so the `exists(shard-0)` fast path only fires once
-    * ALL shards are in place — a migrator that dies halfway re-runs in
-    * full on the next touch. Callers MUST hold the append lock (append
-    * already does; newAgainst takes it only when shard 0 is absent):
-    * an unlocked migrator racing a concurrent append could snapshot
-    * hashes/ before the appended batch, then publish blooms missing the
-    * batch's bits over the appender's merged bloom — breaking the
-    * "bloom miss proves new" superset invariant and silently admitting
-    * duplicates. */
-  private def ensureShardedLayout(spark: SparkSession,
-      indexDir: String): Unit = {
-    val (fs, p0) = fsFor(spark, indexDir, 0)
-    if (fs.exists(p0)) return
-    if (!fs.exists(new org.apache.hadoop.fs.Path(indexDir, "hashes")))
-      return // never-built index: the first build/append publishes blooms
-    val hashes = spark.read.parquet(s"$indexDir/hashes")
-      .withColumn("h", xxhash64(col("sha")))
-    publishBlooms(spark, indexDir, fillEmpty(bloomsOf(hashes)))
   }
 
   /** Rows of `docs` whose content is NOT in the index. Bloom misses are
     * new by construction (no false negatives) and never reach the join;
-    * only bloom hits are confirmed against hashes/ (left_anti kills the
-    * false positives).
+    * only bloom hits are confirmed against the generation's rows
+    * (left_anti kills the false positives). A never-built index knows
+    * nothing, so the whole batch is new: the streaming bootstrap
+    * (curateIngest/dedupIngest start against an empty dir), the same
+    * contract as JaccardIndex.pairsAgainst.
     *
-    * The touched shard blooms ride ONE broadcast, probed by a small UDF
-    * over (shard, h) — not per-shard plan literals. Literal embedding
-    * was measured at ~10 s of pure overhead for a 500-doc screen
-    * touching all 16 shards: each ~1.2 MB bloom literal is rehashed by
-    * driver-side optimizer passes and re-shipped inside EVERY task's
-    * serialized plan (twice, once per union branch), so plan weight was
-    * O(shards × tasks). The broadcast moves each bloom to each executor
-    * once and deserializes it once; per-row cost is a map lookup + one
-    * bloom probe. Trading whole-stage codegen for that is a clear win —
-    * the screen's cost driver is bloom bytes, not row arithmetic. The
-    * touched set (one tiny distinct over the batch) still keeps a
-    * two-shard streaming batch from paying all 16 shards' broadcast.
-    *
-    * Totality: a row whose shard was not observed at the collect()
-    * (a nondeterministically re-evaluating `docs`) finds no bloom in
-    * the broadcast map and screens as maybe-seen, routing to the exact
-    * confirm join — correct for any row, never silently dropped. */
+    * The shard blooms ride ONE broadcast, probed by a small UDF over
+    * (shard, h) — not per-shard plan literals. Literal embedding was
+    * measured at ~10 s of pure overhead for a 500-doc screen touching
+    * all 16 shards: each ~1.2 MB bloom literal is rehashed by driver-side
+    * optimizer passes and re-shipped inside EVERY task's serialized plan
+    * (twice, once per union branch), so plan weight was O(shards ×
+    * tasks). The broadcast moves each bloom to each executor once and
+    * deserializes it once; per-row cost is a map lookup + one bloom
+    * probe. Trading whole-stage codegen for that is a clear win — the
+    * screen's cost driver is bloom bytes, not row arithmetic. */
   def newAgainst(spark: SparkSession, indexDir: String,
       docs: DataFrame): DataFrame = {
-    // The screen itself is lock-free; only a legacy-layout migration
-    // mutates the index, and that must serialize with appenders (see
-    // ensureShardedLayout), so the lock is taken IFF shard 0 is absent.
-    val (fs0, p0) = fsFor(spark, indexDir, 0)
-    if (!fs0.exists(p0))
-      withAppendLock(spark, indexDir) { ensureShardedLayout(spark, indexDir) }
-    // still no sentinel after the heal pass ⇒ the index was never built:
-    // an empty index knows nothing, so the whole batch is new. This is
-    // the streaming bootstrap (curateIngest/dedupIngest start against an
-    // empty dir; the first append publishes the full shard set) —
-    // JaccardIndex.pairsAgainst has the same contract.
-    if (!fs0.exists(p0)) return docs
-    val hashed = withSha(docs).withColumn("shard", shardExpr)
-    // Resident shard blooms (r20, the ANN serve-model discipline): the
-    // blooms ARE this index's bounded model (Shards × fixed bloom size,
-    // never corpus-proportional), so the serving process keeps the
-    // DESERIALIZED map broadcast-resident instead of re-reading and
-    // re-broadcasting ~Shards × 1.2 MB per screen. The entry is guarded
-    // by ServeModelCache's content fingerprint (an append/rebuild — even
-    // same-length within one mtime granule — invalidates on the next
-    // screen), and keyed by applicationId because a Broadcast dies with
-    // its context. This also deletes the former per-screen `touched`
-    // collect job: with all shards resident there is nothing to prune.
-    val bcBlooms = ServeModelCache.cachedKeyed(spark, s"$indexDir/blooms",
-      spark.sparkContext.applicationId) {
-      spark.sparkContext.broadcast(
-        (0 until Shards).map(i => i -> readBloom(spark, indexDir, i)).toMap)
+    // lock-free: a committed generation never changes. Only a
+    // generation 0 without blooms mutates the index, and that must
+    // serialize with appenders (see withBlooms)
+    val g = {
+      val g0 = generation(spark, indexDir)
+      if (!lacksBlooms(g0)) g0
+      else AppendLock.withLock(spark, indexDir) {
+        withBlooms(spark, indexDir, generation(spark, indexDir))
+      }
     }
+    // no shard holds a row: never built, or built over nothing
+    if (g.blooms.isEmpty) return docs
+    val hashed = withSha(docs).withColumn("shard", shardExpr)
+    val bcBlooms = residentBlooms(spark, indexDir, g)
     // coalesce(..., true): shard/h are non-null by construction (sha is
     // computed over coalesce(text, '')), but a primitive-arg UDF yields
     // NULL without being called if an input were ever null — and a NULL
     // predicate silently drops the row from BOTH filter branches. Route
     // that impossible case to the exact confirm instead of losing rows.
+    // A shard with no bloom holds no rows: its docs are new.
     val maybeSeen = coalesce(
       udf((shard: Int, h: Long) =>
-        bcBlooms.value.get(shard).forall(_.mightContainLong(h)))
+        bcBlooms.value.get(shard).exists(_.mightContainLong(h)))
         .apply(col("shard"), col("h")),
       lit(true))
     val definitelyNew = hashed.filter(!maybeSeen)
-    // hashes/ can be legitimately absent with the sentinel present: a
-    // BOOTSTRAP append that crashed between its bloom publication and
-    // its row write. The blooms then carry the crashed batch's bits but
-    // the authoritative row set is empty — so bloom hits confirm
-    // against the empty set and pass (correct: nothing is indexed), and
-    // the replayed append heals the rows. Reading the missing path
-    // directly would throw and crash-loop the replay instead.
-    val hashesPath = new org.apache.hadoop.fs.Path(indexDir, "hashes")
     val bloomHits = hashed.filter(maybeSeen)
     // Confirm WITHOUT ever shuffling the standing table (r20, guide §3):
-    // the former anti-join against the full hashes/ scan shuffles (or
+    // the former anti-join against the full rows scan shuffles (or
     // auto-broadcasts) the CORPUS side per screen once it outgrows the
     // broadcast threshold. Instead the batch's candidate shas broadcast
-    // into a semi-join that prunes hashes/ down to the ≤|batch| rows it
+    // into a semi-join that prunes the rows down to the ≤|batch| it
     // actually contains ("seen"), and the anti-join then runs against
     // broadcast(seen) — the standing side streams scan→BHJ with zero
-    // exchange at any corpus size. Explicit read schema: no per-screen
-    // parquet footer inference on the standing side.
-    val hashesSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sha",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("keeper_id",
-        org.apache.spark.sql.types.LongType)))
+    // exchange at any corpus size. A generation 0 can hold blooms
+    // without rows (a bootstrap append from before the log that crashed
+    // between its blooms and its rows): its hits confirm against the
+    // empty set and pass, and the replayed append heals the rows.
     val confirmed =
-      if (!fs0.exists(hashesPath)) bloomHits
+      if (g.hashes.isEmpty) bloomHits
       else {
-        val seen = spark.read.schema(hashesSchema)
-          .parquet(s"$indexDir/hashes").select("sha")
+        val seen = readHashes(spark, g.hashes).select("sha")
           .join(broadcast(bloomHits.select("sha")), Seq("sha"), "left_semi")
         bloomHits.join(broadcast(seen), Seq("sha"), "left_anti")
       }
@@ -333,48 +329,51 @@ object DedupIndex {
     definitelyNew.unionByName(confirmed).drop("h", "sha", "shard")
   }
 
-  /** Index a batch of (already internally-deduped) new rows: blooms first
-    * (each shard's screen stays a superset of its slice of hashes/ at
-    * every instant), then rows. Only shards the batch actually touches
-    * are locked and rewritten.
+  /** The generation's deserialized shard blooms, broadcast-resident (the
+    * ANN serve-model discipline): the blooms ARE this index's bounded
+    * model (Shards × fixed bloom size, never corpus-proportional), so the
+    * serving process keeps them instead of re-reading and
+    * re-broadcasting ~Shards × 1.2 MB per screen. A committed
+    * generation's entry is keyed on the manifest's identity (its number,
+    * rows files and bloom files; a rebuild writes new rows files), so a
+    * warm screen reads no file beyond the manifest. Generation 0 has no
+    * immutable identity and keeps the content-fingerprinted entry. The
+    * application id is part of both keys, because a Broadcast dies with
+    * its context. */
+  private def residentBlooms(spark: SparkSession, indexDir: String,
+      g: Generation): Broadcast[Map[Int, BloomFilter]] = {
+    val app = spark.sparkContext.applicationId
+    def load = spark.sparkContext.broadcast(g.blooms.map { case (i, f) => i -> readBloom(spark, f) })
+    if (g.number == 0) ServeModelCache.cachedKeyed(spark, s"$indexDir/blooms", app)(load)
+    else ServeModelCache.committed(indexDir,
+      (Seq(app, g.number.toString) ++ g.hashes ++ g.blooms.toSeq.sorted.map(_._2))
+        .mkString("\n"))((_: Broadcast[Map[Int, BloomFilter]]) => true)(load)
+  }
+
+  /** Index a batch of (already internally-deduped) new rows as one
+    * generation: the batch's rows, and the merged bloom of each shard
+    * it touches. An empty batch commits nothing.
     *
-    * A shard's bloom update is a read-merge-write, and a parquet append
-    * stages its commit in a shared _temporary dir; concurrent appenders
-    * would lose each other's bloom bits (breaking the superset invariant
-    * — "bloom miss proves new" would then admit duplicates silently) and
-    * clobber each other's staging files. Appends to one index therefore
-    * serialize under an append-scope lock (same-JVM monitor +
-    * cross-process file lock on local FS); on object stores without
-    * locks the contract is single-writer-per-index (the streaming
-    * builders satisfy it: one query owns one indexDir). */
+    * A shard's bloom update is a read-merge-write, and the next
+    * generation number is one past the newest; concurrent appenders
+    * would lose each other's bloom bits (breaking "bloom miss proves
+    * new", which would then admit duplicates silently) or race for one
+    * number. Appends to one index therefore serialize under the shared
+    * [[AppendLock]] (same-JVM monitor + cross-process file lock on local
+    * FS); on object stores without locks the contract is
+    * single-writer-per-index (the streaming builders satisfy it: one
+    * query owns one indexDir). */
   def append(spark: SparkSession, indexDir: String, docs: DataFrame): Unit = {
-    val hashes = withSha(docs)
-      .groupBy("sha").agg(min(col("doc_id")).as("keeper_id"),
-        first(col("h")).as("h"))
-      .persist()
-    val batchBlooms = bloomsOf(hashes)
-    // touched shards fall out of the bloom aggregate itself (r20): the
-    // former separate distinct+collect job re-ran the batch's sha pass
-    // once per append for a fact the nulls in batchBlooms already carry
-    val touched = batchBlooms.indices.filter(batchBlooms(_) != null).toSet
-    withAppendLock(spark, indexDir) {
-      ensureShardedLayout(spark, indexDir)
-      val (fs0, p0) = fsFor(spark, indexDir, 0)
-      if (!fs0.exists(p0))
-        // never-built index: this append IS the build's bloom
-        // publication — all 16 shards (empties included) land with
-        // shard 0 last, establishing the sentinel invariant
-        publishBlooms(spark, indexDir, fillEmpty(batchBlooms))
-      else
-        touched.foreach { i =>
-          val merged = readBloom(spark, indexDir, i)
-          merged.mergeInPlace(batchBlooms(i))
-          writeBloom(spark, indexDir, i, merged)
-        }
-      hashes.select("sha", "keeper_id")
-        .write.mode("append").parquet(s"$indexDir/hashes")
-    }
-    hashes.unpersist()
-    ()
+    val hashes = contents(docs).persist()
+    try {
+      val (batch, n) = bloomsOf(hashes)
+      if (n > 0) AppendLock.withLock(spark, indexDir) {
+        val g = withBlooms(spark, indexDir, generation(spark, indexDir))
+        val base =
+          if (g.number > 0 || g.hashes.isEmpty) g
+          else g.copy(rows = readHashes(spark, g.hashes).count())
+        commit(spark, indexDir, base, Some(hashes.select("sha", "keeper_id")), batch, n)
+      }
+    } finally { hashes.unpersist(); () }
   }
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-/** Read-side retry for files a concurrent publish replaces. On filesystems
-  * without FileContext, DedupIndex publishes a bloom by delete-then-rename,
-  * so a lock-free reader can observe a sub-millisecond no-file window
-  * between the delete and the rename. Waiting out that window keeps the
-  * readers lock-free instead of dragging them through the append lock. */
+/** Read-side retry for files a concurrent writer replaces. A model
+  * directory rebuilt while a lock-free reader fingerprints it
+  * (ServeModelCache) can lose a listed file before the reader opens it;
+  * waiting out that window keeps the readers lock-free instead of
+  * dragging them through the append lock. */
 private[operators] object FsRetry {
 
   private val Attempts = 5

@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   * from its new place. */
 private[operators] object IndexGenerations {
 
-  /** Generation `number`: `rows` vectors, and per table name the data
-    * files (absolute paths) a reader serves from, in commit order. */
+  /** Generation `number`: `rows` rows (AnnIndex's vectors, DedupIndex's
+    * content hashes), and per table name the data files (absolute paths)
+    * a reader serves from, in commit order. */
   final case class Manifest(number: Long, rows: Long,
       tables: Map[String, Seq[String]]) {
     def apply(table: String): Seq[String] = tables.getOrElse(table, Nil)

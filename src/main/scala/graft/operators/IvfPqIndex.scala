@@ -229,7 +229,7 @@ object IvfPqIndex {
     val subDim = cbArr.head._3.length
     val cells = spark.read.schema("vec_id BIGINT, cell BIGINT")
       .parquet(t.cells: _*)
-    val codes = spark.read.parquet(t.codes: _*)
+    val codes = PqIndex.readCodes(spark, t.codes)
     val vecs = spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .parquet(t.vectors: _*)
     val np = if (nprobe > 0) nprobe else defaultNprobe(centersArr.length)

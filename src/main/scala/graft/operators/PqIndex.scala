@@ -401,7 +401,7 @@ object PqIndex {
   private[operators] def encodeMatchingLayout(spark: SparkSession,
       codesDir: String, cb: DataFrame, subDim: Int,
       vecs: DataFrame): DataFrame = {
-    val stored = spark.read.parquet(codesDir).schema.fieldNames.toSet
+    val stored = footerFields(spark, Seq(codesDir))
     val fresh = encode(cb, subDim, vecs)
     if (stored.contains("sub")) fresh
     else if (stored.contains("codes")) widen(fresh)
@@ -409,6 +409,38 @@ object PqIndex {
       s"$codesDir holds neither a wide (vec_id, codes) nor a long " +
         "(vec_id, sub, code) PQ layout — rebuild the index")
   }
+
+  /** The top-level column names of the first data file under `paths`
+    * (directories or files), from one parquet footer read on the driver
+    * — where `spark.read.parquet(...).schema` would run a
+    * footer-inference job. Empty when the paths hold no data file. */
+  private def footerFields(spark: SparkSession, paths: Seq[String]): Set[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.iterator.flatMap { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      if (path.getFileSystem(conf).getFileStatus(path).isDirectory)
+        IndexGenerations.files(spark, p)
+      else Seq(p)
+    }.nextOption().fold(Set.empty[String]) { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        val fields = r.getFooter.getFileMetaData.getSchema.getFields
+        (0 until fields.size).map(fields.get(_).getName).toSet
+      } finally r.close()
+    }
+  }
+
+  /** The codes table at `paths` under a pinned read schema — wide
+    * (vec_id, codes) from an r13+ build, or long (vec_id, sub, code) from
+    * a pre-r13 dir, told apart by [[footerFields]] — so a serve runs no
+    * footer-inference job. */
+  private[operators] def readCodes(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(
+      if (footerFields(spark, paths)("sub")) "vec_id BIGINT, sub INT, code INT"
+      else "vec_id BIGINT, codes ARRAY<INT>")
+      .parquet(paths: _*)
 
   /** Top-k neighbors for an arbitrary probe set (probe_id, pv), served
     * from the stored index: the corpus is read as CODES, raw vectors
@@ -426,7 +458,7 @@ object PqIndex {
       ServeModelCache.cached(spark, s"$dir/codebooks") {
         collectCodebooks(spark.read.parquet(s"$dir/codebooks"))
       },
-      spark.read.parquet(s"$dir/codes"),
+      readCodes(spark, Seq(s"$dir/codes")),
       spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
         .parquet(s"$dir/vectors"),
       probeVecs, k, excludeSelf)

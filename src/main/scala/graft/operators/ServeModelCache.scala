@@ -27,7 +27,8 @@ import org.apache.spark.sql.SparkSession
   * directory and checked against the identity of the manifest the
   * caller read — the puFS key discipline (a block's cache identity
   * includes its generation, PAPER.md §1.1). That is what lets AnnIndex
-  * keep a whole small generation resident, corpus tables included.
+  * keep a whole small generation resident, corpus tables included, and
+  * DedupIndex its shard blooms.
   *
   * The cache is LRU-bounded at [[MaxEntries]] so a long-lived serving
   * process touching many index dirs does not accumulate one resident
@@ -42,16 +43,17 @@ private[operators] object ServeModelCache {
   private val cache = new java.util.LinkedHashMap[String, (String, AnyRef)](
     16, 0.75f, true)
 
-  /** In-flight publish files — DedupIndex's `shard-<i>.bin.tmp-<uuid>`,
-    * DecontamIndex's `.bloom.bin.tmp-<uuid>` — are not model state yet:
-    * fingerprinting them would flip the signature (and force a reload)
-    * for every publish in progress. */
+  /** In-flight publish files — the `shard-<i>.bin.tmp-<uuid>` a writer
+    * from before DedupIndex's generation log stages in a generation-0
+    * blooms/, DecontamIndex's `.bloom.bin.tmp-<uuid>` — are not model
+    * state yet: fingerprinting them would flip the signature (and force
+    * a reload) for every publish in progress. */
   private def isPublishTemp(name: String): Boolean = name.contains(".tmp-")
 
   /** Name:length:content-hash of every listed file. A listed file can
-    * vanish before its open (DedupIndex's delete-then-rename bloom
-    * publish), so the open+hash gets FsRetry's bounded wait; a file
-    * still gone after it is left out, as the next listing would. */
+    * vanish before its open (a rebuild rewriting the directory), so the
+    * open+hash gets FsRetry's bounded wait; a file still gone after it
+    * is left out, as the next listing would. */
   private def signature(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

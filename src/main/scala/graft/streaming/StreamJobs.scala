@@ -321,12 +321,17 @@ object StreamJobs {
     * append, before the marker.
     *
     * The near-dup stage is one pass ([[JaccardPass]]): the batch is
-    * shingled once, both Jaccard screens read that checkpoint into one
-    * small checkpointed reject set, and the Jaccard append writes the
-    * accepted docs' rows of the same checkpoint. A 500-doc batch runs
-    * 38 Spark jobs (local[4]): shingle checkpoint 7 (with the exact
-    * screen it evaluates), reject set 13, pipeline checkpoint 8,
-    * accepted write 1, Jaccard append 5, exact append 4. */
+    * shingled once, one side-tagged Jaccard screen reads that checkpoint
+    * into one small checkpointed reject set, and the Jaccard append
+    * writes the accepted docs' rows of the same checkpoint. The
+    * decontamination stage drops docs by a semi-join against the model.
+    * A batch runs 27 Spark jobs (local[4], StreamingSpec's fixture):
+    * shingle checkpoint 7 (with the exact screen it evaluates), reject
+    * set 6, pipeline checkpoint 7, accepted write 1, Jaccard append 2,
+    * exact append 4 (its bloom pass 3, the rows write 1; the commit
+    * itself is no job). A 500-doc serve_ingest batch runs the same
+    * stages, with one more reject-set job once the index has been
+    * appended to. */
   private[graft] def applyCurateBatch(batch: DataFrame, batchId: Long,
       modelDir: String, pipeDir: String): Unit = {
       val s = batch.sparkSession
@@ -773,14 +778,14 @@ object StreamJobs {
     }
 
   /** The near-dup step both Jaccard ingests share, one pass per batch:
-    * `docs` is shingled ONCE into an eager checkpoint, both screens read
-    * it to build one checkpointed reject set (JaccardIndex.rejects —
-    * within-batch losers ∪ index matches, equal to screening the
-    * within-batch survivors alone), and the append writes the accepted
-    * docs' rows of the same checkpoint instead of shingling them again.
-    * Neither checkpoint's lineage reads the index, so the append's
-    * writes cannot invalidate them; `release` frees both once the
-    * append has landed. */
+    * `docs` is shingled ONCE into an eager checkpoint, one side-tagged
+    * screen reads it into one checkpointed reject set
+    * (JaccardIndex.rejects — within-batch losers ∪ index matches, equal
+    * to screening the within-batch survivors alone), and the append
+    * writes the accepted docs' rows of the same checkpoint instead of
+    * shingling them again. Neither checkpoint's lineage reads the index,
+    * so the append's write cannot invalidate them; `release` frees both
+    * once the append has landed. */
   private final class JaccardPass(s: org.apache.spark.sql.SparkSession,
       indexDir: String, docs: DataFrame) {
     private val sh = graft.operators.JaccardIndex.shingleSets(docs)
@@ -814,9 +819,9 @@ object StreamJobs {
     * rejected either way, so the re-screen admits exactly the original
     * accepted set and the partition rewrite is byte-stable. The replay
     * then RE-APPENDS those rows; the index tolerates that because the
-    * verify counts DISTINCT shingles and max-aggregates sizes — with a
-    * plain count, duplicated stored rows would double n_common and
-    * admit false pairs for every later batch. */
+    * verify counts DISTINCT shingles — with a plain count, duplicated
+    * stored rows would double n_common and admit false pairs for every
+    * later batch. */
   def exactDedupIngest(docs: DataFrame, indexDir: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>

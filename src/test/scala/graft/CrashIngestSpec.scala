@@ -136,7 +136,7 @@ class CrashIngestSpec extends SparkSpec {
     assert(!JF.exists(JP.get(s"$idx/commits/0")),
       "batch marker exists — the kill landed after commit")
     val indexTable = family match {
-      case "dedup" => "hashes"
+      case "dedup" => "_gen/1" // the bootstrap append's committed generation
       case "neardup" => "sigs"
       case "simhash" => "sigs"
       case "jaccard" => "shingles"

@@ -149,7 +149,7 @@ class CrashRecoverySpec extends SparkSpec {
       // on disk, the exact index (the replay fuse) is not yet built
       assert(JF.exists(JP.get(s"$pipe/jaccard/shingles")),
         "Jaccard append had not landed before the kill")
-      assert(!JF.exists(JP.get(s"$pipe/exact/hashes")),
+      assert(!JF.exists(JP.get(s"$pipe/exact/_gen")),
         "exact append already landed — wrong window")
     }
   }
@@ -162,7 +162,7 @@ class CrashRecoverySpec extends SparkSpec {
         "accepted/ had not landed before the kill")
       assert(!JF.exists(JP.get(s"$pipe/jaccard/shingles")),
         "Jaccard append already landed — wrong window")
-      assert(!JF.exists(JP.get(s"$pipe/exact/hashes")),
+      assert(!JF.exists(JP.get(s"$pipe/exact/_gen")),
         "exact append already landed — wrong window")
     }
   }

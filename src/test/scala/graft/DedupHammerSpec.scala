@@ -57,8 +57,11 @@ class DedupHammerSpec extends SparkSpec {
       s"child B failed — log:\n${ChildJvm.logTail(logB)}")
 
     // every appended row is present exactly once (no clobbered parquet
-    // commit staging)
-    val rows = spark.read.parquet(s"$indexDir/hashes")
+    // commit staging), and each of the 8 appends committed its own
+    // generation over the build's
+    val g = graft.operators.DedupIndex.generation(spark, indexDir)
+    assert(g.number == 9 && g.rows == 20 + 160 + 160, s"generations: $g")
+    val rows = spark.read.parquet(g.hashes: _*)
     assert(rows.count() == 20 + 160 + 160, "row count drifted")
     assert(rows.select("sha").distinct().count() == 340,
       "duplicate or lost content hashes")

@@ -45,6 +45,15 @@ object JobAttribution {
       }.toSet
     }
 
+    /** One line per SQL execution, in launch order: its id, its job
+      * count and the frame that launched it; jobs outside any execution
+      * get one line per frame, with id `-`. A per-frame count hides
+      * which execution of a frame grew. */
+    def summary: String =
+      jobs.groupBy(j => (j.execution, j.frame)).toSeq.sortBy(_._2.map(_.id).min)
+        .map { case ((e, f), js) => s"${e.fold("-")(_.toString)}\t${js.size}\t$f" }
+        .mkString("execution\tjobs\tframe\n", "\n", "")
+
     /** The SQL executions whose initial or adaptive plan has a node whose
       * one-line description satisfies `p`. */
     def executionsWith(p: String => Boolean): Set[Long] =

@@ -34,17 +34,15 @@ class JobBudgetSpec extends SparkSpec {
 
   /** Jobs of one warm serve: `serve` runs once to warm caches, then once
     * measured. */
-  private def warmJobs(serve: => Array[Row]): Seq[JobAttribution.Job] = {
+  private def warmJobs(serve: => Array[Row]): JobAttribution.Record = {
     assert(serve.nonEmpty, "the fixture serve answered nothing")
-    val (_, rec) = JobAttribution.of(spark)(serve)
-    rec.jobs
+    JobAttribution.of(spark)(serve)._2
   }
 
   private def pin(path: String, want: Int)(serve: => Array[Row]): Unit = {
-    val jobs = warmJobs(serve)
-    assert(jobs.size == want, s"$path: ${jobs.size} jobs per warm serve, pinned at $want\n" +
-      jobs.groupBy(_.frame).map { case (f, js) => s"${js.size}\t$f" }.toSeq.sorted
-        .mkString("\n"))
+    val rec = warmJobs(serve)
+    assert(rec.jobs.size == want,
+      s"$path: ${rec.jobs.size} jobs per warm serve, pinned at $want\n${rec.summary}")
   }
 
   private def tmp(tag: String): String = Files.createTempDirectory(tag).toString
@@ -67,7 +65,7 @@ class JobBudgetSpec extends SparkSpec {
   test("JaccardIndex.pairsAgainst: jobs per warm serve") {
     val dir = tmp("budget-jaccard")
     JaccardIndex.build(spark, corpus, dir)
-    pin("jaccard", 12)(JaccardIndex.pairsAgainst(spark, dir, batch).collect())
+    pin("jaccard", 7)(JaccardIndex.pairsAgainst(spark, dir, batch).collect())
   }
 
   test("SimHashIndex.neighborsAgainst: jobs per warm serve") {
@@ -102,7 +100,7 @@ class JobBudgetSpec extends SparkSpec {
       AnnIndex.build(spark, sfDir, dir)
       assert(AnnIndex.chosenArm(spark, dir, 50) == "ivfpq")
       val ps = probes(dir)
-      pin("ann ivfpq", 11)(AnnIndex.queryProbes(spark, dir, ps, 5).collect())
+      pin("ann ivfpq", 10)(AnnIndex.queryProbes(spark, dir, ps, 5).collect())
     }
   }
 
@@ -110,6 +108,6 @@ class JobBudgetSpec extends SparkSpec {
     val dir = tmp("budget-pq")
     PqIndex.build(spark, sfDir, dir)
     val ps = probes(dir)
-    pin("pq", 9)(PqIndex.queryProbes(spark, dir, ps, 5).collect())
+    pin("pq", 8)(PqIndex.queryProbes(spark, dir, ps, 5).collect())
   }
 }

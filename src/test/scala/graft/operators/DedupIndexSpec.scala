@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
 class DedupIndexSpec extends SparkSpec {
   import graft.SparkSpec.spark.implicits._
 
+  /** The shard a content routes to: the first hex nibble of its sha. */
+  private def shardOf(text: String): Int = Integer.parseInt(
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      .substring(0, 1), 16)
+
   test("build → screen → append → re-screen finds exactly the novel rows") {
     val indexDir = java.nio.file.Files.createTempDirectory("dedup-idx").toString
     val corpus = Seq(
@@ -58,10 +64,10 @@ class DedupIndexSpec extends SparkSpec {
       (2L, "jumped over the lazy dog")
     ).toDF("doc_id", "text")
     DedupIndex.build(spark, corpus, indexDir)
-    // simulate the legacy layout: drop the shard blooms, plant bloom.bin
-    val blooms = new java.io.File(indexDir, "blooms")
-    blooms.listFiles().foreach(f => assert(f.delete()))
-    assert(blooms.delete())
+    // simulate the legacy layout: rows at hashes/, no shard blooms, no
+    // log, a lone bloom.bin
+    DedupIndexSpec.toPreLog(spark, indexDir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(indexDir, "blooms"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(indexDir, "bloom.bin"), Array[Byte](1, 2, 3))
     val batch = Seq(
@@ -71,19 +77,20 @@ class DedupIndexSpec extends SparkSpec {
     val fresh = DedupIndex.newAgainst(spark, indexDir, batch)
     assert(fresh.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
       "migrated screen must still know the pre-shard contents")
+    val migrated = DedupIndex.generation(spark, indexDir)
+    assert(migrated.number == 1 && migrated.rows == 2 &&
+      migrated.blooms.keySet == corpus.collect().map(r => shardOf(r.getString(1))).toSet,
+      s"migration must commit the sharded layout: $migrated")
     DedupIndex.append(spark, indexDir, fresh)
     assert(DedupIndex.newAgainst(spark, indexDir, batch).isEmpty)
-    assert(new java.io.File(indexDir, "blooms/shard-0.bin").exists,
-      "migration must materialize the sharded layout")
   }
 
   test("partial migration self-heals: crash before shard 0 re-runs in full") {
-    // migration publishes shard 0 LAST, so any crash leaves shard 0
-    // absent and the next touch re-migrates. The stranded state the old
-    // order could produce (sentinel present, shards 1..15 missing) is
-    // unreachable; this simulates the reachable crash shape — a few
-    // non-zero shards landed, sentinel missing — and proves the next
-    // screen completes the layout instead of dying on missing shards.
+    // a migrator from before the log published shard 0 LAST, so any crash
+    // left shard 0 absent and the next touch re-migrates. This simulates
+    // that crash shape — a few non-zero shards landed, sentinel missing —
+    // and proves the next screen rebuilds every bloom from the rows into
+    // a committed generation, never serving the stranded shard files.
     val indexDir = java.nio.file.Files.createTempDirectory("dedup-crash").toString
     val corpus = Seq(
       (1L, "the quick brown fox"),
@@ -91,16 +98,17 @@ class DedupIndexSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     DedupIndex.build(spark, corpus, indexDir)
     // legacy layout again: shard blooms gone, lone bloom.bin present
+    DedupIndexSpec.toPreLog(spark, indexDir)
     val blooms = new java.io.File(indexDir, "blooms")
     blooms.listFiles().foreach(f => assert(f.delete()))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(indexDir, "bloom.bin"), Array[Byte](1, 2, 3))
     // a migrator crashed after publishing shards 3 and 7 (stale bytes to
-    // prove they get overwritten), before reaching shard 0
-    Seq(3, 7).foreach { i =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(indexDir, f"blooms/shard-$i%x.bin"),
-        Array[Byte](9, 9, 9))
+    // prove they are never read), before reaching shard 0
+    val stale = Seq(3, 7).map { i =>
+      val f = java.nio.file.Paths.get(indexDir, f"blooms/shard-$i%x.bin")
+      java.nio.file.Files.write(f, Array[Byte](9, 9, 9))
+      f.toString
     }
     val batch = Seq(
       (10L, "the quick brown fox"), // dup of the indexed corpus
@@ -109,17 +117,19 @@ class DedupIndexSpec extends SparkSpec {
     val fresh = DedupIndex.newAgainst(spark, indexDir, batch)
     assert(fresh.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
       "re-run migration must screen exactly")
-    (0 until 16).foreach { i =>
-      assert(new java.io.File(indexDir, f"blooms/shard-$i%x.bin").exists,
-        s"shard $i must exist after the healed migration")
-    }
+    val g = DedupIndex.generation(spark, indexDir)
+    assert(g.number == 1 &&
+      g.blooms.keySet == corpus.collect().map(r => shardOf(r.getString(1))).toSet &&
+      g.blooms.values.forall(_.startsWith(s"$indexDir/g1/blooms/")),
+      s"the healed migration must commit every shard's bloom afresh: $g")
+    assert(stale.forall(f => !g.blooms.values.exists(_ == f)))
   }
 
   test("never-built index bootstraps: screen sees everything new, first append builds") {
     // the streaming-ingestion cold start: no build() ever ran. The
     // screen must treat the empty dir as an empty index (all new, like
-    // JaccardIndex.pairsAgainst), and the first append must establish
-    // the full sharded layout so later screens/appends find every shard.
+    // JaccardIndex.pairsAgainst), and the first append must commit
+    // generation 1 with a bloom for every shard it touched
     val indexDir = java.nio.file.Files.createTempDirectory("dedup-fresh").toString + "/idx"
     val batch = Seq(
       (10L, "the quick brown fox"),
@@ -129,10 +139,10 @@ class DedupIndexSpec extends SparkSpec {
     assert(fresh.select("doc_id").collect().map(_.getLong(0)).toSet ==
       Set(10L, 11L), "empty index must screen the whole batch as new")
     DedupIndex.append(spark, indexDir, fresh)
-    (0 until 16).foreach { i =>
-      assert(new java.io.File(indexDir, f"blooms/shard-$i%x.bin").exists,
-        s"first append must publish shard $i")
-    }
+    val g = DedupIndex.generation(spark, indexDir)
+    assert(g.number == 1 && g.rows == 2 && g.blooms.keySet ==
+      Set("the quick brown fox", "pack my box with five dozen jugs").map(shardOf),
+      s"first append must commit generation 1 with the batch's shards: $g")
     assert(DedupIndex.newAgainst(spark, indexDir, batch).isEmpty,
       "after the bootstrap append the batch is known")
     val batch2 = Seq(
@@ -144,12 +154,12 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("bootstrap crash window: blooms without rows screens as empty and heals") {
-    // a bootstrap append that dies between its bloom publication and
-    // its row write leaves the sentinel present with hashes/ absent —
-    // the blooms carry the crashed batch's bits but the authoritative
-    // set is empty. The screen must pass everything (confirm against
-    // the empty set), not throw on the missing path, and the replayed
-    // append must heal the rows.
+    // a bootstrap append from before the log that died between its
+    // bloom publication and its row write left the sentinel present with
+    // hashes/ absent — the blooms carry the crashed batch's bits but the
+    // authoritative set is empty. The screen must pass everything
+    // (confirm against the empty set), not throw on the missing path,
+    // and the replayed append must heal the rows.
     val indexDir = java.nio.file.Files.createTempDirectory("dedup-boot").toString + "/idx"
     val batch = Seq(
       (10L, "the quick brown fox"),
@@ -157,11 +167,8 @@ class DedupIndexSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     DedupIndex.append(spark, indexDir, batch) // bootstrap
     // simulate the crash: rows vanish, blooms (with the batch's bits) stay
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec)
-      assert(f.delete())
-    }
-    deleteRec(new java.io.File(indexDir, "hashes"))
+    DedupIndexSpec.toPreLog(spark, indexDir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(indexDir, "hashes"))
     val replayed = DedupIndex.newAgainst(spark, indexDir, batch)
     assert(replayed.select("doc_id").collect().map(_.getLong(0)).toSet ==
       Set(10L, 11L), "blooms-without-rows must screen everything as new")
@@ -220,7 +227,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(p2 == brute(gen1 ++ batch1, batch2), s"gen-2 screen: $p2")
     assert(p2.contains((10L, 20L)) && p2.contains((11L, 21L)), s"p2: $p2")
     // at-least-once tolerance: a replayed append duplicates stored rows;
-    // the screen counts DISTINCT shingles and max-aggregates sizes, so
+    // the screen counts DISTINCT shingles for n_common and n_a, so
     // neither the pair set nor any verified count may move — a plain
     // count would double n_common and admit false pairs
     JaccardIndex.append(spark, indexDir, batch1.toDF("doc_id", "text"))
@@ -269,6 +276,51 @@ class DedupIndexSpec extends SparkSpec {
     assert(fused() == expected, s"fused replay: ${fused()}")
   }
 
+  test("exact-Jaccard side tags: the one chain ≡ the sequential set on colliding ids and shared matches") {
+    // stored rows probe as src 0 (a ≠ b), the batch's own as src 1
+    // (a < b): a stored doc with a LARGER id than its batch match must
+    // still reject it, a within-batch pair that also matches a stored doc
+    // rejects both, and a replay's stored copies of the survivors (same
+    // doc_id, same text) must not match themselves
+    val indexDir = java.nio.file.Files.createTempDirectory("jac-sides").toString
+    def doc(prefix: String): String = (1 to 40).map(i => s"$prefix$i").mkString(" ")
+    def edit(text: String, at: Int, word: String): String =
+      text.split(" ").updated(at - 1, word).mkString(" ")
+    val x = doc("xray")
+    val kilo = doc("kilo")
+    JaccardIndex.build(spark, Seq((100L, x), (101L, doc("yankee")), (9L, kilo))
+      .toDF("doc_id", "text"), indexDir)
+    val a = doc("alpha")
+    val batch = Seq(
+      (1L, a), (2L, edit(a, 10, "b10")), (3L, edit(edit(a, 10, "b10"), 30, "c30")),
+      // a within-batch pair whose shingles also match stored 100
+      (5L, edit(x, 10, "d10")), (6L, edit(x, 10, "e10")),
+      (7L, doc("zulu")),
+      // matches stored 9: an index pair with a > b
+      (8L, edit(kilo, 20, "k20"))).toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.collect().map(_.getLong(0)).toSet
+    def sequential(): Set[Long] = {
+      val losers = JaccardIndex.pairsWithin(batch).select(col("b").as("doc_id"))
+      val survivors = batch.join(losers, Seq("doc_id"), "left_anti")
+      ids(losers) ++ ids(JaccardIndex.pairsAgainst(spark, indexDir, survivors).select("b"))
+    }
+    def oneChain(): Set[Long] = {
+      val sh = JaccardIndex.shingleSets(batch).localCheckpoint(true)
+      try ids(JaccardIndex.rejects(spark, indexDir, sh))
+      finally LlmOps.dropCheckpoint(sh)
+    }
+    val expected = Set(2L, 3L, 5L, 6L, 8L)
+    assert(sequential() == expected, s"sequential: ${sequential()}")
+    assert(oneChain() == expected, s"one chain: ${oneChain()}")
+    // the replay: the Jaccard append landed, so the survivors' doc_ids
+    // are stored AND in the batch
+    JaccardIndex.append(spark, indexDir,
+      batch.filter(!col("doc_id").isin(expected.toSeq: _*)))
+    assert(sequential() == expected, s"sequential replay: ${sequential()}")
+    assert(oneChain() == expected, s"one chain replay: ${oneChain()}")
+  }
+
   test("NULL-text docs dedup instead of being re-admitted every batch") {
     // sha2(NULL) is NULL and NULL = NULL never matches the confirm join —
     // without the coalesce a NULL-text doc would screen as "new" forever
@@ -310,25 +362,20 @@ class DedupIndexSpec extends SparkSpec {
     val indexDir = java.nio.file.Files.createTempDirectory("dedup-shard").toString
     val corpus = (1L to 60L).map(i => (i, s"doc number $i")).toDF("doc_id", "text")
     DedupIndex.build(spark, corpus, indexDir)
-    // all 16 shard blooms exist after build
-    val shardFiles = (0 until DedupIndex.Shards).map(i =>
-      java.nio.file.Paths.get(indexDir, f"blooms/shard-$i%x.bin"))
-    assert(shardFiles.forall(java.nio.file.Files.exists(_)))
+    // every shard the corpus touches has its bloom after build
+    val built = DedupIndex.generation(spark, indexDir)
+    assert(built.blooms.keySet == (1 to 60).map(i => shardOf(s"doc number $i")).toSet)
 
     // one novel doc routes to exactly one shard (first hex nibble of sha)
     val novelText = "a single novel appendix document"
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(novelText.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val expectShard = Integer.parseInt(sha.substring(0, 1), 16)
-    val before = shardFiles.map(java.nio.file.Files.getLastModifiedTime(_))
-    Thread.sleep(10) // mtime granularity
+    val expectShard = shardOf(novelText)
     DedupIndex.append(spark, indexDir, Seq((100L, novelText)).toDF("doc_id", "text"))
-    val after = shardFiles.map(java.nio.file.Files.getLastModifiedTime(_))
+    val appended = DedupIndex.generation(spark, indexDir)
     (0 until DedupIndex.Shards).foreach { i =>
       if (i == expectShard)
-        assert(after(i) != before(i), s"shard $i should have been rewritten")
-      else assert(after(i) == before(i),
+        assert(appended.blooms.get(i).contains(f"$indexDir/g2/blooms/shard-$i%x.bin"),
+          s"shard $i should have been rewritten: ${appended.blooms.get(i)}")
+      else assert(appended.blooms.get(i) == built.blooms.get(i),
         s"shard $i untouched by the batch must not be rewritten")
     }
     // the appended doc now screens as known; novelty still exact
@@ -447,4 +494,31 @@ class FatalSummaryFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object FatalSummaryFileSystem {
   val Message = "getContentSummary failed fatally"
+}
+
+object DedupIndexSpec {
+
+  /** Rewrite a one-generation index into the layout a build from before
+    * the generation log left: hashes/ and all 16 blooms/shard-<i>.bin
+    * (an empty bloom for a shard without rows), and no log. */
+  def toPreLog(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val g = DedupIndex.generation(spark, dir)
+    require(g.number == 1, s"$dir is at generation ${g.number}")
+    Files.move(Paths.get(dir, "g1/hashes"), Paths.get(dir, "hashes"))
+    Files.createDirectories(Paths.get(dir, "blooms"))
+    (0 until DedupIndex.Shards).foreach { i =>
+      val target = Paths.get(dir, f"blooms/shard-$i%x.bin")
+      g.blooms.get(i) match {
+        case Some(f) => Files.copy(Paths.get(f), target)
+        case None =>
+          val out = Files.newOutputStream(target)
+          try org.apache.spark.util.sketch.BloomFilter
+            .create(DedupIndex.ShardCapacity, 0.01).writeTo(out)
+          finally out.close()
+      }
+    }
+    Seq("_gen", "g1").foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, d)))
+  }
 }

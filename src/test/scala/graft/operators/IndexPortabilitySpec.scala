@@ -32,10 +32,14 @@ class IndexPortabilitySpec extends SparkSpec {
       (1L, "alpha content"), (2L, "beta content"), (3L, "alpha content")
     ).toDF("doc_id", "text")
     assert(DedupIndex.build(spark, corpus, indexDir) == 2)
-    // bloom shards landed behind the scheme, not on a literal local path
+    // the generation and its bloom shards landed behind the scheme, not
+    // on a literal local path
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/blooms/shard-0.bin")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/_gen/1")))
+    val blooms = DedupIndex.generation(spark, indexDir).blooms.values
+    assert(blooms.nonEmpty &&
+      blooms.forall(f => fs.exists(new org.apache.hadoop.fs.Path(f))))
     assert(!Files.exists(Paths.get("pufs:")),
       "a java.nio fallback wrote a local dir literally named pufs:")
 
