@@ -25,7 +25,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * shard holding rows. Layout at `indexDir`:
   *   _gen/<N>                   the manifest of generation N
   *   g<N>/hashes/               parquet (sha, keeper_id): the rows
-  *                              generation N added (a build's: all)
+  *                              generation N added (a build's: all; a
+  *                              rewrite's: all, see [[rewrites]])
   *   g<N>/blooms/shard-<i>.bin  shard i's bloom, for each shard
   *                              generation N touched: the previous
   *                              generation's bloom merged with the
@@ -35,7 +36,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * reads the newest complete manifest and exactly the files it names,
   * so a crash before a commit is invisible, files outside a commit
   * never screen, and a screen racing an append sees one generation
-  * whole. A shard the manifest names no bloom for holds no rows.
+  * whole. A shard the manifest names no bloom for holds no rows. After
+  * each commit the appender deletes every file and manifest that
+  * neither the new generation nor the one it replaced names
+  * ([[reclaim]]), so the index holds at most two blooms a shard
+  * however many appends it took.
   *
   * A directory without `_gen/` — written before the log — serves as
   * generation 0: `hashes/` and `blooms/shard-<i>.bin`, whose writers
@@ -147,25 +152,23 @@ object DedupIndex {
   private def shardOf(file: String): Int =
     Integer.parseInt(new Path(file).getName.stripPrefix("shard-").stripSuffix(".bin"), 16)
 
-  /** One generation, read back: its row count, the `hashes` files, and
-    * the bloom file of each shard holding rows. */
-  private[graft] final case class Generation(number: Long, rows: Long,
+  /** One generation, read back: the `hashes` files, and the bloom file
+    * of each shard holding rows. */
+  private[graft] final case class Generation(number: Long,
       hashes: Seq[String], blooms: Map[Int, String])
 
-  private val Empty = Generation(0, 0, Nil, Map.empty)
+  private val Empty = Generation(0, Nil, Map.empty)
 
   /** The newest committed generation of `indexDir`, or generation 0 when
-    * it has no log: `hashes/`, and all shard blooms once shard 0 exists.
-    * Generation 0's row count is left at 0; only the append that commits
-    * generation 1 over it counts its rows. */
+    * it has no log: `hashes/`, and all shard blooms once shard 0 exists. */
   private[graft] def generation(spark: SparkSession, indexDir: String): Generation =
     IndexGenerations.latest(spark, indexDir) match {
-      case Some(m) => Generation(m.number, m.rows, m("hashes"),
+      case Some(m) => Generation(m.number, m("hashes"),
         m("blooms").map(f => shardOf(f) -> f).toMap)
       case None =>
         val fs = fsOf(spark, new Path(indexDir))
         val hashes = s"$indexDir/hashes"
-        Generation(0, 0,
+        Generation(0,
           if (fs.exists(new Path(hashes))) IndexGenerations.files(spark, hashes) else Nil,
           if (!fs.exists(new Path(s"$indexDir/blooms/${bloomName(0)}"))) Map.empty
           else (0 until Shards).map(i => i -> s"$indexDir/blooms/${bloomName(i)}").toMap)
@@ -193,20 +196,40 @@ object DedupIndex {
       commit(spark, indexDir, g, None, blooms, n)
     }
 
+  /** Whether the append over `g` rewrites all of the index's rows into
+    * its own `hashes` (compaction). Each append adds files to the list a
+    * screen reads, and Spark lists a read of more paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a job
+    * of its own, on every screen. So once the list reaches that count,
+    * and the files appends added since the last rewrite (a build, a
+    * rewrite, or generation 0's `hashes/`, which head the list)
+    * outnumber the rewrite's own, the next append rewrites them all.
+    * The rewrite reads every row once; every screen already does. */
+  private def rewrites(spark: SparkSession, g: Generation): Boolean =
+    g.hashes.nonEmpty && {
+      val base = g.hashes.head.take(g.hashes.head.lastIndexOf('/') + 1)
+      val (rewritten, appended) = g.hashes.partition(_.startsWith(base))
+      g.hashes.size >= spark.sessionState.conf.parallelPartitionDiscoveryThreshold &&
+        appended.size >= rewritten.size
+    }
+
   /** Commit generation N = the next number over `g`, under the append
-    * lock the caller holds: `rows` (sha, keeper_id) land in g<N>/hashes,
-    * each shard `batch` touches gets `g`'s bloom merged with the batch's
-    * in g<N>/blooms, and `_gen/N` lists them with everything of `g` they
-    * do not replace; `n` is the batch's row count. A crash anywhere
-    * before the commit leaves `g` serving, and the re-run rewrites
-    * g<N>/ and commits the same N. */
+    * lock the caller holds: `rows` (sha, keeper_id) land in g<N>/hashes
+    * (with all of `g`'s rows when the append [[rewrites]] them), each
+    * shard `batch` touches gets `g`'s bloom merged with the batch's in
+    * g<N>/blooms, and `_gen/N` lists them with everything of `g` they
+    * do not replace; `n`, the batch's row count, is the manifest's
+    * `rows`. A crash anywhere before the commit leaves `g` serving, and
+    * the re-run rewrites g<N>/ and commits the same N. */
   private def commit(spark: SparkSession, indexDir: String, g: Generation,
       rows: Option[DataFrame], batch: Array[BloomFilter], n: Long): Generation = {
     val number = IndexGenerations.next(spark, indexDir)
     val out = s"$indexDir/g$number"
     IndexGenerations.delete(spark, out) // a crashed run's leftovers
+    val rewrite = rows.isDefined && rewrites(spark, g)
     val hashes = rows.toSeq.flatMap { r =>
-      r.write.parquet(s"$out/hashes")
+      (if (rewrite) readHashes(spark, g.hashes).unionByName(r) else r)
+        .write.parquet(s"$out/hashes")
       IndexGenerations.files(spark, s"$out/hashes")
     }
     val blooms = batch.indices.filter(batch(_) != null).map { i =>
@@ -219,13 +242,48 @@ object DedupIndex {
       writeBloom(spark, f, merged)
       i -> f
     }
-    val next = Generation(number, g.rows + n, g.hashes ++ hashes, g.blooms ++ blooms)
+    val next = Generation(number, (if (rewrite) Nil else g.hashes) ++ hashes,
+      g.blooms ++ blooms)
     crashProbe("before_commit")
     IndexGenerations.commit(spark, indexDir, IndexGenerations.Manifest(number,
-      next.rows, Map("hashes" -> next.hashes,
+      n, Map("hashes" -> next.hashes,
         "blooms" -> next.blooms.toSeq.sortBy(_._1).map(_._2))))
+    reclaim(spark, indexDir, g, next)
     next
   }
+
+  /** Delete what no screen can reach once `next` is committed over
+    * `prev`: every file of this index that neither lists — superseded
+    * blooms, rows a rewrite replaced, an uncommitted generation's files,
+    * generation 0's tables once both generations moved past them — and
+    * the manifests before `prev`. A screen reads its manifest without
+    * the lock and opens the files after, so `prev`'s stay for one more
+    * generation. Runs under the append lock; what a crash here leaves
+    * the next commit deletes. */
+  private def reclaim(spark: SparkSession, indexDir: String, prev: Generation,
+      next: Generation): Unit = {
+    val live = Seq(prev, next).flatMap(g => g.hashes ++ g.blooms.values)
+      .map(_.stripPrefix(s"$indexDir/")).toSet
+    def holdsLive(dir: String) = live.exists(_.startsWith(s"$dir/"))
+    val root = new Path(indexDir)
+    val fs = fsOf(spark, root)
+    for (d <- fs.listStatus(root).map(_.getPath.getName) if owned(d)) {
+      if (!holdsLive(d)) fs.delete(new Path(root, d), true)
+      else if (d != "hashes") {
+        val blooms = if (d == "blooms") d else s"$d/blooms"
+        if (!holdsLive(blooms)) fs.delete(new Path(root, blooms), true)
+        else fs.listStatus(new Path(root, blooms)).map(_.getPath.getName)
+          .filterNot(f => live(s"$blooms/$f"))
+          .foreach(f => fs.delete(new Path(root, s"$blooms/$f"), false))
+      }
+    }
+    IndexGenerations.prune(spark, indexDir, prev.number)
+  }
+
+  /** Whether `name`, a child of an index directory, is this index's:
+    * a generation's directory or generation 0's tables. */
+  private def owned(name: String): Boolean =
+    name == "hashes" || name == "blooms" || name.matches("g[0-9]+")
 
   /** Crash-point probe (the AnnIndex.crashProbe discipline): fires after
     * a generation's files are written, before its commit. */
@@ -239,8 +297,7 @@ object DedupIndex {
     val fs = fsOf(spark, p)
     if (fs.exists(p))
       fs.listStatus(p).map(_.getPath)
-        .filter(q => Set("_gen", "hashes", "blooms")(q.getName) ||
-          q.getName.matches("g[0-9]+"))
+        .filter(q => q.getName == "_gen" || owned(q.getName))
         .foreach(fs.delete(_, true))
   }
 
@@ -369,10 +426,7 @@ object DedupIndex {
       val (batch, n) = bloomsOf(hashes)
       if (n > 0) AppendLock.withLock(spark, indexDir) {
         val g = withBlooms(spark, indexDir, generation(spark, indexDir))
-        val base =
-          if (g.number > 0 || g.hashes.isEmpty) g
-          else g.copy(rows = readHashes(spark, g.hashes).count())
-        commit(spark, indexDir, base, Some(hashes.select("sha", "keeper_id")), batch, n)
+        commit(spark, indexDir, g, Some(hashes.select("sha", "keeper_id")), batch, n)
       }
     } finally { hashes.unpersist(); () }
   }

@@ -27,9 +27,9 @@ import org.apache.spark.sql.SparkSession
   * from its new place. */
 private[operators] object IndexGenerations {
 
-  /** Generation `number`: `rows` rows (AnnIndex's vectors, DedupIndex's
-    * content hashes), and per table name the data files (absolute paths)
-    * a reader serves from, in commit order. */
+  /** Generation `number`: `rows` rows (AnnIndex's vectors; DedupIndex's
+    * content hashes that generation added), and per table name the data
+    * files (absolute paths) a reader serves from, in commit order. */
   final case class Manifest(number: Long, rows: Long,
       tables: Map[String, Seq[String]]) {
     def apply(table: String): Seq[String] = tables.getOrElse(table, Nil)
@@ -49,10 +49,13 @@ private[operators] object IndexGenerations {
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
   }
 
-  /** The newest complete manifest, or None when `dir` has no log yet. */
+  /** The newest complete manifest, or None when `dir` has no log yet. A
+    * manifest listed but gone by its read was [[prune]]d by commits
+    * since, so the log is listed again. */
   def latest(spark: SparkSession, dir: String): Option[Manifest] =
-    numbers(spark, dir).sorted(Ordering[Long].reverse).iterator
+    try numbers(spark, dir).sorted(Ordering[Long].reverse).iterator
       .flatMap(read(spark, dir, _)).nextOption()
+    catch { case _: java.io.FileNotFoundException => latest(spark, dir) }
 
   /** The number the next commit takes: one past every manifest present,
     * torn ones included, so a torn manifest is never overwritten. */
@@ -94,6 +97,15 @@ private[operators] object IndexGenerations {
     val out = fsOf(spark, p).create(p, false)
     try out.write(body.toString.getBytes("UTF-8"))
     finally out.close()
+  }
+
+  /** Delete every manifest, complete or torn, numbered below `number`,
+    * under the writer's lock: [[latest]] serves none of them once a
+    * newer one is complete, and [[next]] still counts past them. */
+  def prune(spark: SparkSession, dir: String, number: Long): Unit = {
+    val fs = fsOf(spark, new Path(dir, LogDir))
+    numbers(spark, dir).filter(_ < number)
+      .foreach(n => fs.delete(new Path(s"$dir/$LogDir/$n"), false))
   }
 
   /** Data files of a table directory a writer has just written — Spark's

@@ -60,7 +60,7 @@ class DedupHammerSpec extends SparkSpec {
     // commit staging), and each of the 8 appends committed its own
     // generation over the build's
     val g = graft.operators.DedupIndex.generation(spark, indexDir)
-    assert(g.number == 9 && g.rows == 20 + 160 + 160, s"generations: $g")
+    assert(g.number == 9, s"generations: $g")
     val rows = spark.read.parquet(g.hashes: _*)
     assert(rows.count() == 20 + 160 + 160, "row count drifted")
     assert(rows.select("sha").distinct().count() == 340,

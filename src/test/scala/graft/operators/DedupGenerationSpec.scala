@@ -23,6 +23,8 @@ class DedupGenerationSpec extends SparkSpec {
 
   private val extraIds = extra.map(_._1).toSet
 
+  private def rows(g: DedupIndex.Generation): Long = DedupIndexSpec.rows(spark, g)
+
   private def built(tag: String): String = {
     val dir = Files.createTempDirectory(tag).toString
     assert(DedupIndex.build(spark, docs(corpus), dir) == corpus.size)
@@ -47,7 +49,7 @@ class DedupGenerationSpec extends SparkSpec {
     // the next commit takes the number after the torn one, never over it
     DedupIndex.append(spark, idx, docs(extra.take(5)))
     val g = DedupIndex.generation(spark, idx)
-    assert(g.number == 3 && g.rows == corpus.size + 5, s"$g")
+    assert(g.number == 3 && rows(g) == corpus.size + 5, s"$g")
     assert(novel(idx) == extraIds -- extra.take(5).map(_._1))
   }
 
@@ -64,7 +66,7 @@ class DedupGenerationSpec extends SparkSpec {
     assert(novel(idx) == extraIds, "an uncommitted generation must not screen")
     DedupIndex.append(spark, idx, docs(extra))
     val g = DedupIndex.generation(spark, idx)
-    assert(g.number == 2 && g.rows == corpus.size + extra.size, s"$g")
+    assert(g.number == 2 && rows(g) == corpus.size + extra.size, s"$g")
     assert(novel(idx).isEmpty)
   }
 
@@ -99,7 +101,7 @@ class DedupGenerationSpec extends SparkSpec {
     DedupIndex.append(spark, twin, docs(extra.take(10)))
     val g1 = DedupIndex.generation(spark, idx)
     assert(Files.exists(Paths.get(s"$idx/_gen/1")))
-    assert(g1.number == 1 && g1.rows == corpus.size + 10, s"$g1")
+    assert(g1.number == 1 && rows(g1) == corpus.size + 10, s"$g1")
     assert(g1.hashes.exists(_.startsWith(s"$idx/hashes/")) &&
       g1.hashes.exists(_.startsWith(s"$idx/g1/hashes/")),
       "generation 1 must list the fixed rows and the batch")
@@ -135,6 +137,43 @@ class DedupGenerationSpec extends SparkSpec {
       hc.unset("fs.countopen.impl")
       hc.unset("fs.countopen.impl.disable.cache")
     }
+  }
+
+  test("appends reclaim what no generation serves: two blooms a shard, a rewritten rows list, the previous generation whole") {
+    val idx = built("dedup-gen-reclaim")
+    // a low listing threshold, so a handful of appends reaches a rewrite
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(threshold, "4")
+    try {
+      def onDisk(name: String => Boolean): Long = Files.walk(Paths.get(idx))
+        .filter(p => Files.isRegularFile(p) && name(p.getFileName.toString)).count()
+      var prev = DedupIndex.generation(spark, idx)
+      var rewrites = 0
+      for ((b, k) <- extra.grouped(2).zipWithIndex) {
+        DedupIndex.append(spark, idx, docs(b))
+        val g = DedupIndex.generation(spark, idx)
+        val own = g.hashes.count(_.startsWith(s"$idx/g${g.number}/hashes/"))
+        if (own == g.hashes.size) rewrites += 1
+        // a screen that read the previous manifest can still open its files
+        assert((prev.hashes ++ prev.blooms.values).forall(f => Files.exists(Paths.get(f))),
+          s"append $k deleted files of the generation it replaced")
+        assert(onDisk(n => n.startsWith("shard-")) <= 2 * DedupIndex.Shards,
+          s"append $k left ${onDisk(n => n.startsWith("shard-"))} bloom files")
+        assert(onDisk(n => n.forall(_.isDigit)) <= 2, s"append $k left old manifests")
+        // the list passes the threshold only while the files appended
+        // since the last rewrite (the build, or a rewrite: the head of
+        // the list) do not outnumber the rewrite's own
+        val head = g.hashes.head.take(g.hashes.head.lastIndexOf('/') + 1)
+        val base = g.hashes.count(_.startsWith(head))
+        assert(g.hashes.size < math.max(4, 2 * base) + own,
+          s"append $k left ${g.hashes.size} rows files")
+        assert(rows(g) == corpus.size + 2 * (k + 1))
+        prev = g
+      }
+      assert(rewrites > 0, "no append rewrote the rows list")
+      val probe = corpus ++ extra ++ Seq((999L, "never indexed"))
+      assert(novel(idx, probe) == Set(999L))
+    } finally spark.conf.unset(threshold)
   }
 }
 
