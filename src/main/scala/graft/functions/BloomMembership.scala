@@ -105,42 +105,18 @@ object BloomMembership {
     * broadcast path ships a handle of a few hundred bytes. */
   val LiteralMaxBytes: Long = 4L << 20
 
-  // Broadcast reuse across repeated screens of the same model (a serve
-  // loop calls screen() per batch): caller supplies a stable cache key
-  // (path + length + mtime); eviction only drops OUR reference — a plan
-  // still holding the Broadcast keeps it alive, and the ContextCleaner
-  // reclaims blocks once both release.
-  private val bcastCache =
-    new java.util.LinkedHashMap[String, Broadcast[Array[Byte]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Broadcast[Array[Byte]]]): Boolean =
-        size() > 8
-    }
-
   /** Broadcast-backed membership predicate for blooms too big to embed:
-    * `load` is invoked once per cache key to materialize the serialized
-    * filter bytes; the returned Column evaluates
-    * `mightContainLong(h)` against the executor-cached deserialized
-    * filter. Registered as a uniquely-named temp function because the
-    * Broadcast handle has no SQL-text form — the registry builder closes
-    * over it (the same createOrReplaceTempFunction channel `register`
-    * uses, so no private Column constructors are touched). */
-  def mightContainBroadcast(spark: SparkSession, cacheKey: String,
-      h: Column)(load: => Array[Byte]): Column = {
-    // Key includes the applicationId: the cache is process-global, so
-    // after a SparkContext stop/restart in the same JVM a (path,len,mtime)
-    // hit would otherwise hand back a Broadcast owned by the DEAD context
-    // and fail at use time.
-    val key = spark.sparkContext.applicationId + ":" + cacheKey
-    val bcast = bcastCache.synchronized {
-      val hit = bcastCache.get(key)
-      if (hit != null) hit
-      else {
-        val b = spark.sparkContext.broadcast(load)
-        bcastCache.put(key, b)
-        b
-      }
-    }
+    * the Column evaluates `mightContainLong(h)` against the
+    * executor-cached deserialized filter of `bcast`, the serialized
+    * filter bytes. The caller owns the Broadcast — a serve keeps one per
+    * committed model resident (ServeModelCache), which unpersists it once
+    * a new generation replaces it. Registered as a uniquely-named temp
+    * function because the Broadcast handle has no SQL-text form — the
+    * registry builder closes over it (the same createOrReplaceTempFunction
+    * channel `register` uses, so no private Column constructors are
+    * touched). */
+  def mightContainBroadcast(spark: SparkSession, bcast: Broadcast[Array[Byte]],
+      h: Column): Column = {
     val name = s"graft_might_contain_bcast_${bcast.id}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => BloomMightContainBcast(bcast, exprs(0)), "built-in")

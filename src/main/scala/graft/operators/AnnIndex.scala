@@ -110,14 +110,16 @@ object AnnIndex {
     * the fitted size, the centroids/codebooks describe a minority of
     * the data and routed recall decays silently. `append` then REFITS
     * the sidecar from the full corpus into its generation's directory;
-    * until that generation commits, the old sidecar keeps serving. The
-    * default comes from the measured
+    * until that generation commits, the old sidecar keeps serving, and
+    * once two more generations commit, its files are deleted. The
+    * fitted size is in each manifest. The default comes from the measured
     * drift table (SCALE.md Round-15, AnnDriftProbe): a 4× shifted
     * append under frozen quantizers vs a fresh fit. Refit cost is
     * corpus-linear but amortized — at factor F the total refit work
     * over any append history is ≤ F/(F−1) × one final-corpus fit.
-    * 0 disables auto-refit. Pre-r15 sidecars lack the fitted-size
-    * marker and never auto-refit (rebuild via buildFrom to opt in). */
+    * 0 disables auto-refit. A sidecar whose generation records no
+    * fitted size (pre-r15, or a log written before manifests held it)
+    * never auto-refits (rebuild via buildFrom to opt in). */
   private[graft] val RefitFactorKey = "spark.graft.ann.refitFactor"
   private[graft] val RefitFactor = 4.0
 
@@ -163,8 +165,8 @@ object AnnIndex {
     avgBucketRows(n) > flatMaxBucketRows(spark)
 
   /** One committed generation, read back: the corpus size n and the data
-    * files each table serves from. `ivfpq` is the sidecar's model
-    * directory with its corpus tables. */
+    * files each table serves from. `ivfpq` is the sidecar's directory
+    * with its tables and fitted size. */
   private[graft] final case class Generation(number: Long, rows: Long,
       signatures: Seq[String], vectors: Seq[String], sq8: Seq[String],
       ivfpq: Option[(String, IvfPqIndex.Tables)])
@@ -174,34 +176,38 @@ object AnnIndex {
   private[graft] def generation(spark: SparkSession, dir: String): Generation =
     IndexGenerations.latest(spark, dir) match {
       case Some(m) => Generation(m.number, m.rows, m("signatures"),
-        m("vectors"), m("sq8"), m("ivfpq").headOption.map(_ ->
-          IvfPqIndex.Tables(m("ivfpq/cells"), m("ivfpq/codes"), m("ivfpq/vectors"))))
+        m("vectors"), m("sq8"), m("ivfpq").headOption.map(model =>
+          model -> IvfPqIndex.tablesOf(m, "ivfpq/", model)))
       case None =>
+        val conf = spark.sparkContext.hadoopConfiguration
         val files = IndexGenerations.files(spark, _: String)
         def exists(p: String) = {
           val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+          path.getFileSystem(conf).exists(path)
+        }
+        // a sidecar fitted before the log recorded its fitted size in a
+        // marker file
+        def legacyFitted(marker: String) = Option.when(exists(marker)) {
+          val p = new org.apache.hadoop.fs.Path(marker)
+          val in = p.getFileSystem(conf).open(p)
+          try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
         }
         val vectors = files(s"$dir/vectors")
         Generation(0, readVectors(spark, vectors).count(),
           files(s"$dir/signatures"), vectors,
           if (exists(s"$dir/sq8/codes")) files(s"$dir/sq8/codes") else Nil,
-          if (exists(s"$dir/ivfpq/centroids"))
-            Some(s"$dir/ivfpq" -> sidecarTables(spark, s"$dir/ivfpq"))
-          else None)
+          Option.when(exists(s"$dir/ivfpq/centroids"))(s"$dir/ivfpq" -> IvfPqIndex
+            .listed(spark, s"$dir/ivfpq", legacyFitted(s"$dir/ivfpq/_FITTED_N"))))
     }
 
   private def manifest(g: Generation): IndexGenerations.Manifest =
     IndexGenerations.Manifest(g.number, g.rows, Map("signatures" -> g.signatures,
       "vectors" -> g.vectors, "sq8" -> g.sq8) ++ g.ivfpq.toSeq.flatMap {
-      case (model, t) => Seq("ivfpq" -> Seq(model), "ivfpq/cells" -> t.cells,
-        "ivfpq/codes" -> t.codes, "ivfpq/vectors" -> t.vectors)
-    })
+      case (model, t) => IvfPqIndex.entries(t, "ivfpq/") + ("ivfpq" -> Seq(model))
+    }, g.ivfpq.flatMap(_._2.fitted))
 
-  private def sidecarTables(spark: SparkSession, d: String): IvfPqIndex.Tables =
-    IvfPqIndex.Tables(IndexGenerations.files(spark, s"$d/cells"),
-      IndexGenerations.files(spark, s"$d/codes"),
-      IndexGenerations.files(spark, s"$d/vectors"))
+  /** The tables of generation 0 and of a build. */
+  private val FixedTables = Set("signatures", "vectors", "sq8", "ivfpq")
 
   private def readVectors(spark: SparkSession, files: Seq[String]): DataFrame =
     spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(files: _*)
@@ -282,7 +288,7 @@ object AnnIndex {
     * `dir` held, log included, and commits generation 1. */
   def buildFrom(spark: SparkSession, vecs: DataFrame, dir: String): Unit =
     AppendLock.withLock(spark, dir) {
-      IndexGenerations.clear(spark, dir)
+      IndexGenerations.clear(spark, dir, FixedTables)
       val n = writeIndex(spark, vecs, dir)
       complete(spark, dir, dir, Generation(1, n,
         IndexGenerations.files(spark, s"$dir/signatures"),
@@ -312,26 +318,28 @@ object AnnIndex {
   }
 
   /** Add what generation `g` lacks but the conf and its size call for,
-    * under `out`, then commit it: the SQ8 codes of the whole corpus when
-    * SQ8 serving is opted in and `g` has none (an existing codes table
-    * is extended by [[append]] whatever the conf), and with `fit` a
+    * under `out`, then commit it and return it: the SQ8 codes of the
+    * whole corpus when SQ8 serving is opted in and `g` has none (an
+    * existing codes table is extended by [[append]] whatever the conf),
+    * and with `fit` a
     * fresh IVFPQ sidecar over the whole corpus — past the routing
     * threshold, or in place of one due a refit. The fit is
     * corpus-linear (sampled k-means + one encode pass), paid at
     * build/append time so serving never is. */
   private def complete(spark: SparkSession, dir: String, out: String,
-      g: Generation, fit: Boolean): Unit = {
+      g: Generation, fit: Boolean): Generation = {
     val sq8 =
       if (g.sq8.isEmpty && serveSq8(spark))
         writeSq8(spark, readVectors(spark, g.vectors), s"$out/sq8/codes")
       else g.sq8
     val ivfpq =
-      if (fit) {
-        IvfPqIndex.buildFrom(spark, readVectors(spark, g.vectors), s"$out/ivfpq")
-        Some(s"$out/ivfpq" -> sidecarTables(spark, s"$out/ivfpq"))
-      } else g.ivfpq
+      if (fit) Some(s"$out/ivfpq" ->
+        IvfPqIndex.fit(spark, readVectors(spark, g.vectors), s"$out/ivfpq"))
+      else g.ivfpq
+    val next = g.copy(sq8 = sq8, ivfpq = ivfpq)
     crashProbe("before_commit")
-    IndexGenerations.commit(spark, dir, manifest(g.copy(sq8 = sq8, ivfpq = ivfpq)))
+    IndexGenerations.commit(spark, dir, manifest(next))
+    next
   }
 
   /** Crash-point probe for the SIGKILL e2e (the StreamJobs.crashProbe
@@ -348,6 +356,9 @@ object AnnIndex {
     * sidecar extends under its FROZEN quantizers into `g<N>/ivfpq` (or,
     * past [[RefitFactor]] × its fitted size, is refit there over the
     * whole corpus), and the manifest commit publishes all of it at once.
+    * After it, the files neither generation N nor N−1 names go
+    * ([[IndexGenerations.reclaim]]): a refit's replaced sidecar, an
+    * uncommitted generation's directory, and the manifests before N−1.
     * A crash anywhere before the commit leaves generation N−1 serving
     * on both arms; re-running the append rewrites `g<N>/` and commits
     * the same N. Running it again AFTER a commit appends the batch a
@@ -369,18 +380,18 @@ object AnnIndex {
         val sq8 =
           if (g.sq8.isEmpty) Nil
           else g.sq8 ++ writeSq8(spark, e, s"$out/sq8/codes")
-        val refit = g.ivfpq.exists { case (model, _) =>
+        val refit = g.ivfpq.exists { case (_, t) =>
           val f = refitFactor(spark)
-          f > 0 && IvfPqIndex.fittedN(spark, model).exists(rows > f * _)
+          f > 0 && t.fitted.exists(rows > f * _)
         }
         val ivfpq = g.ivfpq.filterNot(_ => refit).map { case (model, t) =>
-          IvfPqIndex.appendTo(spark, model, s"$out/ivfpq", e)
-          model -> (t ++ sidecarTables(spark, s"$out/ivfpq"))
+          model -> IvfPqIndex.appendTo(spark, t, s"$out/ivfpq", e)._1
         }
-        complete(spark, dir, out, Generation(number, rows,
+        val next = complete(spark, dir, out, Generation(number, rows,
           g.signatures ++ IndexGenerations.files(spark, s"$out/signatures"),
           g.vectors ++ IndexGenerations.files(spark, s"$out/vectors"), sq8, ivfpq),
           fit = refit || (ivfpq.isEmpty && sidecarDue(spark, rows)))
+        IndexGenerations.reclaim(spark, dir, FixedTables, manifest(g), manifest(next))
       } finally { e.unpersist(); () }
     }
 
@@ -398,10 +409,7 @@ object AnnIndex {
       e.select(col("vec_id"), posexplode(
           expr(s"sign_lsh(embedding, $Tables, $Bits)")).as(Seq("band", "sig")))
         .write.mode("overwrite").parquet(s"$dir/signatures")
-      val rows = org.apache.spark.sql.Observation()
-      e.observe(rows, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$dir/vectors")
-      rows.get("n").asInstanceOf[Long]
+      IndexGenerations.writeCounted(e, s"$dir/vectors")
     } finally { e.unpersist(); () }
   }
 
@@ -453,11 +461,11 @@ object AnnIndex {
     val probes = PqIndex.collectProbes(spark, probeVecs)
     val pn = if (probeCount >= 0) probeCount else probes._1.length.toLong
     g.ivfpq match {
-      case Some((model, t)) if arm(spark, g, pn) == "ivfpq" =>
+      case Some((_, t)) if arm(spark, g, pn) == "ivfpq" =>
         // the routed arm's bounded exact re-rank honors serveSq8 too
         // (VERDICT r17 #5 / r18 #4)
-        IvfPqIndex.serve(spark, model, t, probes, k, routeNprobe(spark),
-          excludeSelf, sq8Codes(spark, g))
+        IvfPqIndex.serve(spark, s"$dir/ivfpq", g.number > 0, t, probes, k,
+          routeNprobe(spark), excludeSelf, sq8Codes(spark, g))
       case _ => residentFlat(spark, dir, g) match {
         case Some(m) => m.serve(spark, probes._1, k, excludeSelf)
         case None => flatServe(spark, g, probes._2, k, excludeSelf)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.BloomMembership
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,24 +15,28 @@ import org.apache.spark.sql.functions._
   * pipeline (the reference's freeze-once/read-forever CAS discipline,
   * core/freezer.go:672-711, applied to the decontamination model).
   *
-  * Layout under `indexDir`:
+  * Layout under `indexDir`, committed as one generation
+  * ([[IndexGenerations]], `_gen/1`):
   *   shingles/   parquet (sh STRING, h LONG) — the authoritative distinct
   *               8-gram shingle set (md5 text-shingles via
   *               LlmOps.shingles8, so stream/batch/index can never drift
   *               on the shingle definition), h = xxhash64(sh)
-  *   bloom.bin   derived scan-side prefilter (1% fpp), published AFTER
-  *               the rows by temp-write + rename
+  *   bloom.bin   derived scan-side prefilter (1% fpp) over every row
   *
-  * Publish ORDER matters here (DedupIndex commits its rows and blooms
-  * as one generation instead). The bloom is a containment PREFILTER: a
-  * shingle it wrongly drops would silently MISS contamination, so the
-  * bloom may only ever exist when it covers the full row set.
-  * Rows-first makes that structural: a build that crashes between the
-  * row write and the bloom publish leaves a model whose screen() simply
-  * skips the prefilter (missing sidecar = screen
-  * everything) and still answers exactly. The model is write-once — eval
+  * The bloom is a containment PREFILTER: a shingle it wrongly drops
+  * would silently MISS contamination, so it may only ever serve beside
+  * the row set it covers. The commit makes that structural: a build
+  * clears the directory, writes both, and commits a manifest naming
+  * both, and a screen reads exactly what the newest manifest names. A
+  * build that crashes before its commit leaves no manifest; what it
+  * wrote then reads as generation 0. The model is write-once — eval
   * suites version by building a new dir, which is how benchmarks
   * actually rev — so the bloom can never lag a later append.
+  *
+  * A directory without `_gen/` (built before the log) is generation 0:
+  * `shingles/`, and `bloom.bin` when present. Without it a screen skips
+  * the prefilter (a build from before the log that crashed between its
+  * rows and its bloom) and still answers exactly.
   *
   * 100 TB shape: the model is the SMALL side (a benchmark's shingles —
   * thousands to ~10^8 rows; ~120 MB of bloom at 10^8 keys/1% fpp). The
@@ -51,14 +57,22 @@ object DecontamIndex {
     org.apache.spark.sql.types.StructField("h",
       org.apache.spark.sql.types.LongType)))
 
-  private def fs(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
+  /** The newest committed generation of `indexDir` — its `shingles`
+    * files and, when built, its `bloom` — or generation 0, from one
+    * listing of the directory, when it has no log. */
+  private def generation(spark: SparkSession, indexDir: String): IndexGenerations.Manifest =
+    IndexGenerations.latest(spark, indexDir).getOrElse {
+      val p = new org.apache.hadoop.fs.Path(indexDir)
+      val names = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).map(_.getPath.getName).toSet
+      IndexGenerations.Manifest(0, 0, Map("shingles" -> Seq(s"$indexDir/shingles"),
+        "bloom" -> Seq(s"$indexDir/bloom.bin").filter(_ => names("bloom.bin"))))
+    }
 
   /** Index an eval corpus `(doc_id, text)`: distinct shingles + hash to
-    * parquet, then the bloom sidecar. Returns the distinct shingle
-    * count (0 = every doc under 8 tokens; screen() then reports nothing
+    * parquet, then the bloom, committed as generation 1 in place of
+    * whatever `indexDir` held. Returns the distinct shingle count (0 =
+    * every doc under 8 tokens; screen() then reports nothing
     * contaminated, which is the honest answer for an unshingleable
     * benchmark). */
   def build(spark: SparkSession, evalDocs: DataFrame,
@@ -68,35 +82,25 @@ object DecontamIndex {
       .withColumn("h", xxhash64(col("sh")))
       .persist()
     try {
-      // Retire any PRIOR build's sidecar before the rows change hands:
-      // a rebuild that crashes after the row overwrite (or returns early
-      // on n==0) must leave NO bloom rather than a stale one, because a
-      // stale prefilter silently drops new shingles — the one failure
-      // mode the rows-first publish order exists to exclude. Missing
-      // sidecar = screen everything, which stays exactly correct.
-      val (bfs, bloomTgt) = fs(spark, s"$indexDir/bloom.bin")
-      if (bfs.exists(bloomTgt)) bfs.delete(bloomTgt, false)
-      sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
-      val n = sh.count()
-      // an EMPTY model publishes rows only: Spark's bloomFilter NPEs on
-      // zero input rows, and screen() already treats a missing sidecar
-      // as "no prefilter" — against an empty shingle set the confirm
-      // join then correctly reports nothing contaminated
-      if (n == 0) return 0L
-      // bloom LAST (see publish-order scaladoc); distributed build — the
+      IndexGenerations.clear(spark, indexDir, Set("shingles", "bloom.bin"))
+      val n = IndexGenerations.writeCounted(sh, s"$indexDir/shingles")
+      // an EMPTY model commits rows only: Spark's bloomFilter NPEs on
+      // zero input rows, and a screen without a bloom skips the
+      // prefilter — against an empty shingle set the confirm join then
+      // correctly reports nothing contaminated. Distributed build: the
       // driver holds only the filter bytes, never the shingle rows
-      val bf = sh.stat.bloomFilter("h", n, 0.01)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      val (hfs, target) = fs(spark, s"$indexDir/bloom.bin")
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$indexDir/.bloom.bin.tmp-${java.util.UUID.randomUUID()}")
-      val out = hfs.create(tmp, true)
-      try out.write(bos.toByteArray) finally out.close()
-      if (!hfs.rename(tmp, target)) {
-        hfs.delete(target, false)
-        require(hfs.rename(tmp, target), s"bloom publish failed: $target")
+      val bloom = Option.when(n > 0) {
+        val bos = new java.io.ByteArrayOutputStream()
+        sh.stat.bloomFilter("h", n, 0.01).writeTo(bos)
+        val f = s"$indexDir/bloom.bin"
+        val p = new org.apache.hadoop.fs.Path(f)
+        val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, false)
+        try out.write(bos.toByteArray) finally out.close()
+        f
       }
+      IndexGenerations.commit(spark, indexDir, IndexGenerations.Manifest(1, n,
+        Map("shingles" -> IndexGenerations.files(spark, s"$indexDir/shingles"),
+          "bloom" -> bloom.toSeq)))
       n
     } finally { sh.unpersist(); () }
   }
@@ -121,9 +125,10 @@ object DecontamIndex {
     * the measured 10^7-key point. */
   def screen(spark: SparkSession, indexDir: String,
       docs: DataFrame): DataFrame = {
-    val hits = candidateShingles(spark, indexDir, docs)
+    val g = generation(spark, indexDir)
+    val hits = candidateShingles(spark, indexDir, g, docs)
       .distinct() // count DISTINCT shared shingles (the l26/l29 unit)
-      .join(model(spark, indexDir), "sh")
+      .join(model(spark, g), "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     docs.select("doc_id").join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -138,39 +143,41 @@ object DecontamIndex {
     * no left join (those are [[screen]]'s, for n_shared). */
   def dropContaminated(spark: SparkSession, indexDir: String,
       docs: DataFrame): DataFrame = {
-    val bad = candidateShingles(spark, indexDir, docs)
-      .join(model(spark, indexDir), Seq("sh"), "left_semi")
+    val g = generation(spark, indexDir)
+    val bad = candidateShingles(spark, indexDir, g, docs)
+      .join(model(spark, g), Seq("sh"), "left_semi")
       .select("doc_id")
     docs.join(bad, Seq("doc_id"), "left_anti")
   }
 
-  private def model(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(ShinglesSchema).parquet(s"$indexDir/shingles").select("sh")
+  private def model(spark: SparkSession, g: IndexGenerations.Manifest): DataFrame =
+    spark.read.schema(ShinglesSchema).parquet(g("shingles"): _*).select("sh")
 
   /** The docs' 8-gram shingle rows (doc_id, sh, h) that can be in the
-    * model: those passing the bloom sidecar, or every row when a build
-    * crashed before publishing it. */
+    * model: those passing its bloom, or every row when it has none. The
+    * bloom is resident per committed generation ([[ServeModelCache]],
+    * keyed by the manifest's files and the application id), so a warm
+    * screen opens no model file: its bytes, as a plan literal, or past
+    * the literal ceiling as a Broadcast, which the cache unpersists
+    * once a new generation replaces it. */
   private def candidateShingles(spark: SparkSession, indexDir: String,
-      docs: DataFrame): DataFrame = {
+      g: IndexGenerations.Manifest, docs: DataFrame): DataFrame = {
     val corpusSh = LlmOps.shingles8(docs.select(col("doc_id"), col("text")))
       .withColumn("h", xxhash64(col("sh")))
-    val (hfs, bloomPath) = fs(spark, s"$indexDir/bloom.bin")
-    if (!hfs.exists(bloomPath)) corpusSh // crashed build: no prefilter
-    else {
-      val st = hfs.getFileStatus(bloomPath)
-      def bytes: Array[Byte] = {
-        val in = hfs.open(bloomPath)
-        try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    g("bloom").headOption.fold(corpusSh) { f =>
+      val bloom = ServeModelCache.resident(indexDir, Option.when(g.number > 0)(
+          spark.sparkContext.applicationId + "\n" + g.identity)) {
+        val p = new org.apache.hadoop.fs.Path(f)
+        val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+        val bytes = try in.readAllBytes() finally in.close()
+        if (bytes.length <= BloomMembership.LiteralMaxBytes) bytes
+        else spark.sparkContext.broadcast(bytes)
       }
-      val pred =
-        if (st.getLen <= graft.functions.BloomMembership.LiteralMaxBytes)
-          graft.functions.BloomMembership.mightContain(
-            spark, lit(bytes), col("h"))
-        else // key on (path, len, mtime): a rebuilt model re-broadcasts
-          graft.functions.BloomMembership.mightContainBroadcast(spark,
-            s"$bloomPath@${st.getLen}:${st.getModificationTime}",
-            col("h"))(bytes)
-      corpusSh.filter(pred)
+      corpusSh.filter(bloom match {
+        case bytes: Array[Byte] => BloomMembership.mightContain(spark, lit(bytes), col("h"))
+        case b: Broadcast[Array[Byte]] @unchecked =>
+          BloomMembership.mightContainBroadcast(spark, b, col("h"))
+      })
     }
   }
 }

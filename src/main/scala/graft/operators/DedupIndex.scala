@@ -26,7 +26,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *   _gen/<N>                   the manifest of generation N
   *   g<N>/hashes/               parquet (sha, keeper_id): the rows
   *                              generation N added (a build's: all; a
-  *                              rewrite's: all, see [[rewrites]])
+  *                              rewrite's: all, see
+  *                              [[IndexGenerations.rewrites]])
   *   g<N>/blooms/shard-<i>.bin  shard i's bloom, for each shard
   *                              generation N touched: the previous
   *                              generation's bloom merged with the
@@ -39,8 +40,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * whole. A shard the manifest names no bloom for holds no rows. After
   * each commit the appender deletes every file and manifest that
   * neither the new generation nor the one it replaced names
-  * ([[reclaim]]), so the index holds at most two blooms a shard
-  * however many appends it took.
+  * ([[IndexGenerations.reclaim]]), so the index holds at most two
+  * blooms a shard however many appends it took.
   *
   * A directory without `_gen/` — written before the log — serves as
   * generation 0: `hashes/` and `blooms/shard-<i>.bin`, whose writers
@@ -196,26 +197,11 @@ object DedupIndex {
       commit(spark, indexDir, g, None, blooms, n)
     }
 
-  /** Whether the append over `g` rewrites all of the index's rows into
-    * its own `hashes` (compaction). Each append adds files to the list a
-    * screen reads, and Spark lists a read of more paths than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a job
-    * of its own, on every screen. So once the list reaches that count,
-    * and the files appends added since the last rewrite (a build, a
-    * rewrite, or generation 0's `hashes/`, which head the list)
-    * outnumber the rewrite's own, the next append rewrites them all.
-    * The rewrite reads every row once; every screen already does. */
-  private def rewrites(spark: SparkSession, g: Generation): Boolean =
-    g.hashes.nonEmpty && {
-      val base = g.hashes.head.take(g.hashes.head.lastIndexOf('/') + 1)
-      val (rewritten, appended) = g.hashes.partition(_.startsWith(base))
-      g.hashes.size >= spark.sessionState.conf.parallelPartitionDiscoveryThreshold &&
-        appended.size >= rewritten.size
-    }
-
   /** Commit generation N = the next number over `g`, under the append
     * lock the caller holds: `rows` (sha, keeper_id) land in g<N>/hashes
-    * (with all of `g`'s rows when the append [[rewrites]] them), each
+    * (with all of `g`'s rows when the append rewrites them, see
+    * [[IndexGenerations.rewrites]]; the rewrite reads every row once,
+    * as every screen already does), each
     * shard `batch` touches gets `g`'s bloom merged with the batch's in
     * g<N>/blooms, and `_gen/N` lists them with everything of `g` they
     * do not replace; `n`, the batch's row count, is the manifest's
@@ -226,7 +212,7 @@ object DedupIndex {
     val number = IndexGenerations.next(spark, indexDir)
     val out = s"$indexDir/g$number"
     IndexGenerations.delete(spark, out) // a crashed run's leftovers
-    val rewrite = rows.isDefined && rewrites(spark, g)
+    val rewrite = rows.isDefined && IndexGenerations.rewrites(spark, g.hashes)
     val hashes = rows.toSeq.flatMap { r =>
       (if (rewrite) readHashes(spark, g.hashes).unionByName(r) else r)
         .write.parquet(s"$out/hashes")
@@ -245,61 +231,21 @@ object DedupIndex {
     val next = Generation(number, (if (rewrite) Nil else g.hashes) ++ hashes,
       g.blooms ++ blooms)
     crashProbe("before_commit")
-    IndexGenerations.commit(spark, indexDir, IndexGenerations.Manifest(number,
-      n, Map("hashes" -> next.hashes,
-        "blooms" -> next.blooms.toSeq.sortBy(_._1).map(_._2))))
-    reclaim(spark, indexDir, g, next)
+    IndexGenerations.commit(spark, indexDir, manifest(next, n))
+    IndexGenerations.reclaim(spark, indexDir, FixedTables, manifest(g, 0), manifest(next, n))
     next
   }
 
-  /** Delete what no screen can reach once `next` is committed over
-    * `prev`: every file of this index that neither lists — superseded
-    * blooms, rows a rewrite replaced, an uncommitted generation's files,
-    * generation 0's tables once both generations moved past them — and
-    * the manifests before `prev`. A screen reads its manifest without
-    * the lock and opens the files after, so `prev`'s stay for one more
-    * generation. Runs under the append lock; what a crash here leaves
-    * the next commit deletes. */
-  private def reclaim(spark: SparkSession, indexDir: String, prev: Generation,
-      next: Generation): Unit = {
-    val live = Seq(prev, next).flatMap(g => g.hashes ++ g.blooms.values)
-      .map(_.stripPrefix(s"$indexDir/")).toSet
-    def holdsLive(dir: String) = live.exists(_.startsWith(s"$dir/"))
-    val root = new Path(indexDir)
-    val fs = fsOf(spark, root)
-    for (d <- fs.listStatus(root).map(_.getPath.getName) if owned(d)) {
-      if (!holdsLive(d)) fs.delete(new Path(root, d), true)
-      else if (d != "hashes") {
-        val blooms = if (d == "blooms") d else s"$d/blooms"
-        if (!holdsLive(blooms)) fs.delete(new Path(root, blooms), true)
-        else fs.listStatus(new Path(root, blooms)).map(_.getPath.getName)
-          .filterNot(f => live(s"$blooms/$f"))
-          .foreach(f => fs.delete(new Path(root, s"$blooms/$f"), false))
-      }
-    }
-    IndexGenerations.prune(spark, indexDir, prev.number)
-  }
+  private def manifest(g: Generation, rows: Long): IndexGenerations.Manifest =
+    IndexGenerations.Manifest(g.number, rows, Map("hashes" -> g.hashes,
+      "blooms" -> g.blooms.toSeq.sortBy(_._1).map(_._2)))
 
-  /** Whether `name`, a child of an index directory, is this index's:
-    * a generation's directory or generation 0's tables. */
-  private def owned(name: String): Boolean =
-    name == "hashes" || name == "blooms" || name.matches("g[0-9]+")
+  /** Generation 0's tables, which the first commits still list. */
+  private val FixedTables = Set("hashes", "blooms")
 
   /** Crash-point probe (the AnnIndex.crashProbe discipline): fires after
     * a generation's files are written, before its commit. */
   private[graft] var crashProbe: String => Unit = _ => ()
-
-  /** Empty `indexDir` of this index for a rebuild: the log, every
-    * generation, and generation 0's tables. Anything else a caller keeps
-    * there (an ingest's accepted/ and batch markers) stays. */
-  private def clear(spark: SparkSession, indexDir: String): Unit = {
-    val p = new Path(indexDir)
-    val fs = fsOf(spark, p)
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath)
-        .filter(q => q.getName == "_gen" || owned(q.getName))
-        .foreach(fs.delete(_, true))
-  }
 
   /** Dedup `docs` internally (min doc_id survives) and persist the index
     * as generation 1, replacing what `indexDir` held. Returns the number
@@ -309,7 +255,7 @@ object DedupIndex {
     // write — one scan+shuffle instead of two
     val hashes = contents(docs).persist()
     try AppendLock.withLock(spark, indexDir) {
-      clear(spark, indexDir)
+      IndexGenerations.clear(spark, indexDir, FixedTables)
       val (blooms, n) = bloomsOf(hashes)
       commit(spark, indexDir, Empty, Some(hashes.select("sha", "keeper_id")), blooms, n)
       n
@@ -391,21 +337,16 @@ object DedupIndex {
     * model (Shards × fixed bloom size, never corpus-proportional), so the
     * serving process keeps them instead of re-reading and
     * re-broadcasting ~Shards × 1.2 MB per screen. A committed
-    * generation's entry is keyed on the manifest's identity (its number,
-    * rows files and bloom files; a rebuild writes new rows files), so a
-    * warm screen reads no file beyond the manifest. Generation 0 has no
-    * immutable identity and keeps the content-fingerprinted entry. The
-    * application id is part of both keys, because a Broadcast dies with
-    * its context. */
+    * generation's entry is keyed on the manifest's identity and the
+    * application id (a Broadcast dies with its context), so a warm
+    * screen reads no file beyond the manifest. Generation 0 has no
+    * immutable identity: each screen loads its blooms. */
   private def residentBlooms(spark: SparkSession, indexDir: String,
-      g: Generation): Broadcast[Map[Int, BloomFilter]] = {
-    val app = spark.sparkContext.applicationId
-    def load = spark.sparkContext.broadcast(g.blooms.map { case (i, f) => i -> readBloom(spark, f) })
-    if (g.number == 0) ServeModelCache.cachedKeyed(spark, s"$indexDir/blooms", app)(load)
-    else ServeModelCache.committed(indexDir,
-      (Seq(app, g.number.toString) ++ g.hashes ++ g.blooms.toSeq.sorted.map(_._2))
-        .mkString("\n"))((_: Broadcast[Map[Int, BloomFilter]]) => true)(load)
-  }
+      g: Generation): Broadcast[Map[Int, BloomFilter]] =
+    ServeModelCache.resident(indexDir, Option.when(g.number > 0)(
+        spark.sparkContext.applicationId + "\n" + manifest(g, 0).identity)) {
+      spark.sparkContext.broadcast(g.blooms.map { case (i, f) => i -> readBloom(spark, f) })
+    }
 
   /** Index a batch of (already internally-deduped) new rows as one
     * generation: the batch's rows, and the merged bloom of each shard

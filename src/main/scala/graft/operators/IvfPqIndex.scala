@@ -54,11 +54,18 @@ import org.apache.spark.sql.functions._
   * there; the scan term then falls with corpus growth instead of
   * tracking it.
   *
-  * Appending and serving each have a kernel over a model directory and
-  * explicit table paths ([[appendTo]], [[serve]]). AnnIndex's sidecar
-  * serves through them from the files its generation manifest lists —
-  * the build's directory plus one directory per committed append; the
-  * one-directory `append` and `queryProbes` are wrappers.
+  * GENERATIONS ([[IndexGenerations]]): a build writes the five tables at
+  * `dir` and commits generation 1, naming every data file and the fitted
+  * corpus size; an append writes its batch's cells/, codes/ and vectors/
+  * under `g<N>/` and commits N. A serve reads the newest complete
+  * manifest and exactly the files it names, so a crashed append is
+  * invisible and its re-run commits the same N. A directory without
+  * `_gen/` (built before the log, or an AnnIndex sidecar's model
+  * directory) is generation 0, its tables read by listing.
+  *
+  * Fitting, appending and serving each have a kernel over explicit
+  * table files ([[fit]], [[appendTo]], [[serve]]). AnnIndex's sidecar
+  * commits and serves through them from its own generation manifests.
   */
 object IvfPqIndex {
 
@@ -70,33 +77,26 @@ object IvfPqIndex {
     * fractions. */
   def defaultNprobe(cells: Int): Int = math.max(3, cells / 3)
 
-  /** Corpus size the quantizers were FITTED on, recorded at build time
-    * (`_FITTED_N`) — what a refit-at-N× policy (AnnIndex.append) compares
-    * the grown corpus against. Absent on pre-r15 dirs → no auto-refit. */
-  def fittedN(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_FITTED_N")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in)).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def writeFittedN(spark: SparkSession, dir: String, n: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_FITTED_N")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(n.toString.getBytes)
-    finally out.close()
-  }
-
   def build(spark: SparkSession, sfDir: String, dir: String): Unit =
     buildFrom(spark, graft.Tables.t(spark, sfDir, "embeddings"), dir)
 
-  def buildFrom(spark: SparkSession, vecsIn: DataFrame, dir: String): Unit = {
+  /** Build from an arbitrary (vec_id, embedding) frame: replaces whatever
+    * `dir` held, log included, and commits generation 1. */
+  def buildFrom(spark: SparkSession, vecs: DataFrame, dir: String): Unit =
+    AppendLock.withLock(spark, dir) {
+      IndexGenerations.clear(spark, dir, FixedTables)
+      val t = fit(spark, vecs, dir)
+      IndexGenerations.commit(spark, dir, manifest(1, t.fitted.get, t))
+    }
+
+  /** The tables of generation 0 and of a build. */
+  private val FixedTables = Set("centroids", "codebooks", "cells", "codes", "vectors")
+
+  /** The fit kernel: k-means coarse centroids and PQ codebooks over
+    * `vecsIn`, and its cells, codes and vectors, written to `out`;
+    * returns their files and the fitted corpus size. */
+  private[operators] def fit(spark: SparkSession, vecsIn: DataFrame,
+      out: String): Tables = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     graft.functions.VectorExpressions.register(spark)
@@ -116,115 +116,150 @@ object IvfPqIndex {
           .map { case (v, i) => (i.toLong, v.toArray.map(_.toFloat)) }
           .toDF("cell", "cvec")
       }
-      // top-2 multi-assignment — bounded-heap agg, no window
-      val top2 = udaf(new graft.functions.TopK(2),
-        org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-      val cells = vecs.crossJoin(broadcast(centers))
-        .withColumn("csim", expr("cosine_f32(embedding, cvec)"))
-        .groupBy("vec_id")
-        .agg(top2(col("csim"), col("cell")).as("nb"))
-        .select(col("vec_id"), explode(col("nb.id")).as("cell"))
       val (cb, codes) = PqIndex.buildFrames(spark, vecs)
-      centers.write.mode("overwrite").parquet(s"$dir/centroids")
-      cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-      cells.write.mode("overwrite").parquet(s"$dir/cells")
+      centers.write.mode("overwrite").parquet(s"$out/centroids")
+      cb.write.mode("overwrite").parquet(s"$out/codebooks")
+      cellsOf(vecs, centers).write.mode("overwrite").parquet(s"$out/cells")
       // wide, like PqIndex (round 13): the ADC scores one row per
       // candidate pair, no per-subspace fan-out or (probe, vec) re-agg
-      PqIndex.widen(codes).write.mode("overwrite").parquet(s"$dir/codes")
-      vecs.write.mode("overwrite").parquet(s"$dir/vectors")
-      writeFittedN(spark, dir, n)
+      PqIndex.widen(codes).write.mode("overwrite").parquet(s"$out/codes")
+      vecs.write.mode("overwrite").parquet(s"$out/vectors")
       codes.unpersist()
-      ()
+      listed(spark, out, Some(n))
     } finally { vecs.unpersist(); () }
   }
 
-  /** The corpus-sized tables an index serves from, as parquet paths
-    * (directories or files). A built index is its own directory's
-    * tables ([[Tables.at]]); AnnIndex's sidecar adds the files of each
-    * committed append. */
-  private[graft] final case class Tables(cells: Seq[String],
-      codes: Seq[String], vectors: Seq[String]) {
-    def ++(o: Tables): Tables =
-      Tables(cells ++ o.cells, codes ++ o.codes, vectors ++ o.vectors)
+  /** Top-2 multi-assignment of `vecs` to the cells of `centers` —
+    * bounded-heap agg, no window. */
+  private def cellsOf(vecs: DataFrame, centers: DataFrame): DataFrame = {
+    val top2 = udaf(new graft.functions.TopK(2),
+      org.apache.spark.sql.Encoders.product[graft.functions.Scored])
+    vecs.crossJoin(broadcast(centers))
+      .withColumn("csim", expr("cosine_f32(embedding, cvec)"))
+      .groupBy("vec_id")
+      .agg(top2(col("csim"), col("cell")).as("nb"))
+      .select(col("vec_id"), explode(col("nb.id")).as("cell"))
   }
-  private[graft] object Tables {
-    def at(dir: String): Tables =
-      Tables(Seq(s"$dir/cells"), Seq(s"$dir/codes"), Seq(s"$dir/vectors"))
+
+  /** The files of one IVFPQ index: the two model tables, written once by
+    * a fit, the corpus tables, which appends extend, and the corpus size
+    * the model was `fitted` on, when recorded. */
+  private[graft] final case class Tables(centroids: Seq[String],
+      codebooks: Seq[String], cells: Seq[String], codes: Seq[String],
+      vectors: Seq[String], fitted: Option[Long])
+
+  /** The tables under `dir`, by listing. */
+  private[operators] def listed(spark: SparkSession, dir: String,
+      fitted: Option[Long]): Tables =
+    tablesOf(IndexGenerations.listed(spark, dir, FixedTables).copy(fitted = fitted), "", dir)
+
+  /** The tables a manifest names under `prefix` (AnnIndex's sidecar:
+    * "ivfpq/"). A manifest that names no model files (an AnnIndex log
+    * from before they were listed) has them in `modelDir`. */
+  private[operators] def tablesOf(m: IndexGenerations.Manifest, prefix: String,
+      modelDir: String): Tables = {
+    def model(t: String) = m.tables.getOrElse(s"$prefix$t", Seq(s"$modelDir/$t"))
+    Tables(model("centroids"), model("codebooks"), m(s"${prefix}cells"),
+      m(s"${prefix}codes"), m(s"${prefix}vectors"), m.fitted)
+  }
+
+  /** The manifest entries of `t` under `prefix`. */
+  private[operators] def entries(t: Tables, prefix: String): Map[String, Seq[String]] =
+    Map(s"${prefix}centroids" -> t.centroids, s"${prefix}codebooks" -> t.codebooks,
+      s"${prefix}cells" -> t.cells, s"${prefix}codes" -> t.codes,
+      s"${prefix}vectors" -> t.vectors)
+
+  private def manifest(number: Long, rows: Long, t: Tables) =
+    IndexGenerations.Manifest(number, rows, entries(t, ""), t.fitted)
+
+  /** The newest committed generation of `dir` and its tables; generation
+    * 0 when `dir` has no log. */
+  private def generation(spark: SparkSession, dir: String): (Long, Tables) = {
+    val m = IndexGenerations.current(spark, dir, FixedTables)
+    (m.number, tablesOf(m, "", dir))
   }
 
   /** Incremental maintenance under the FROZEN build-time models: new
     * vectors assign to their top-2 cells under the stored centroids and
     * encode under the stored codebooks (PqIndex.encode — one shared
-    * definition, so appended codes can never drift from built ones),
-    * then append per-row to cells/, codes/ and vectors/. Same contract
-    * as PqIndex.append: not atomic across the three tables and not
-    * idempotent — a crash leaves the batch partially visible but
-    * harmless (cells without codes produce candidates whose ADC rows
-    * drop at the codes join; codes without cells are never candidates),
-    * and replay-safe ingestion belongs behind a committed-batch marker
-    * (the StreamJobs discipline) or a generation commit (AnnIndex's
-    * sidecar). Quantizer drift (a corpus that outgrows the build-time
+    * definition, so appended codes can never drift from built ones).
+    * One generation per call, under the index's [[AppendLock]]: the
+    * batch's cells, codes and vectors land under `g<N>/` and the
+    * manifest commit publishes them at once. A crash anywhere before the
+    * commit leaves generation N−1 serving; re-running the append
+    * rewrites `g<N>/` and commits the same N. Running it again AFTER a
+    * commit appends the batch a second time — replay-safe ingestion
+    * still belongs behind a committed-batch marker (the StreamJobs
+    * discipline). Quantizer drift (a corpus that outgrows the build-time
     * centroids/codebooks) is a REBUILD, the FAISS contract. */
   def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit =
-    appendTo(spark, dir, dir, newVecs)
+    AppendLock.withLock(spark, dir) {
+      val (number, t) = generation(spark, dir)
+      val next = IndexGenerations.next(spark, dir)
+      val out = s"$dir/g$next"
+      IndexGenerations.delete(spark, out) // a crashed run's leftovers
+      val (grown, n) = appendTo(spark, t, out, newVecs)
+      val m = manifest(next, n, grown)
+      IndexGenerations.commit(spark, dir, m)
+      IndexGenerations.reclaim(spark, dir, FixedTables, manifest(number, 0, t), m)
+    }
 
-  /** The append kernel: encodes `newVecs` under the models of `modelDir`
-    * and appends them to cells/, codes/ and vectors/ under `outDir`. */
-  private[operators] def appendTo(spark: SparkSession, modelDir: String,
-      outDir: String, newVecs: DataFrame): Unit = {
+  /** The append kernel: encodes `newVecs` under the models of `t` and
+    * writes their cells, codes and vectors under `outDir`; returns `t`
+    * extended by those files, and the batch's row count. */
+  private[operators] def appendTo(spark: SparkSession, t: Tables,
+      outDir: String, newVecs: DataFrame): (Tables, Long) = {
     graft.functions.VectorExpressions.register(spark)
-    val centers = spark.read.parquet(s"$modelDir/centroids")
-    val cb = spark.read.parquet(s"$modelDir/codebooks")
+    val centers = spark.read.parquet(t.centroids: _*)
+    val cb = spark.read.parquet(t.codebooks: _*)
     val subDim = cb.select(size(col("cvec"))).first().getInt(0)
     val vecs = newVecs.select(col("vec_id"), col("embedding")).persist()
     try {
-      val top2 = udaf(new graft.functions.TopK(2),
-        org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-      vecs.crossJoin(broadcast(centers))
-        .withColumn("csim", expr("cosine_f32(embedding, cvec)"))
-        .groupBy("vec_id")
-        .agg(top2(col("csim"), col("cell")).as("nb"))
-        .select(col("vec_id"), explode(col("nb.id")).as("cell"))
-        .write.mode("append").parquet(s"$outDir/cells")
+      cellsOf(vecs, centers).write.mode("overwrite").parquet(s"$outDir/cells")
       // match the stored codes layout (wide r13+ / long pre-r13) — see
       // PqIndex.encodeMatchingLayout for why mixing schemas is fatal
-      PqIndex.encodeMatchingLayout(spark, s"$modelDir/codes", cb, subDim, vecs)
-        .write.mode("append").parquet(s"$outDir/codes")
-      vecs.write.mode("append").parquet(s"$outDir/vectors")
+      PqIndex.encodeMatchingLayout(spark, t.codes, cb, subDim, vecs)
+        .write.mode("overwrite").parquet(s"$outDir/codes")
+      val n = IndexGenerations.writeCounted(vecs, s"$outDir/vectors")
+      def added(table: String) = IndexGenerations.files(spark, s"$outDir/$table")
+      (t.copy(cells = t.cells ++ added("cells"), codes = t.codes ++ added("codes"),
+        vectors = t.vectors ++ added("vectors")), n)
     } finally { vecs.unpersist(); () }
   }
 
   /** Top-k neighbors for a probe set (probe_id, pv), served from the
-    * store: per-probe nearest cells from the broadcast centroid table,
-    * candidate (probe, vec) pairs from the narrow cells/ join (distinct
-    * at PAIR granularity — a probe reaching BOTH cells of a
-    * multi-assigned vector would otherwise sum its distance table
-    * twice), cell-restricted ADC over codes/, bounded exact re-rank. */
+    * newest generation of `dir`: per-probe nearest cells from the
+    * resident centroids, candidate (probe, vec) pairs from the narrow
+    * cells/ join (distinct at PAIR granularity — a probe reaching BOTH
+    * cells of a multi-assigned vector would otherwise sum its distance
+    * table twice), cell-restricted ADC over codes/, bounded exact
+    * re-rank. */
   def queryProbes(spark: SparkSession, dir: String, probeVecs: DataFrame,
       k: Int, nprobe: Int = 0, excludeSelf: Boolean = true,
-      sq8Codes: Option[DataFrame] = None): DataFrame =
-    serve(spark, dir, Tables.at(dir), PqIndex.collectProbes(spark, probeVecs),
+      sq8Codes: Option[DataFrame] = None): DataFrame = {
+    val (number, t) = generation(spark, dir)
+    serve(spark, dir, number > 0, t, PqIndex.collectProbes(spark, probeVecs),
       k, nprobe, excludeSelf, sq8Codes)
+  }
 
-  /** The serving kernel: the models of `modelDir`, the corpus tables
-    * `t`, and a probe batch already collected by
-    * [[PqIndex.collectProbes]]. */
-  private[operators] def serve(spark: SparkSession, modelDir: String,
-      t: Tables, probes: (Array[(Long, Array[Float])], DataFrame), k: Int,
-      nprobe: Int, excludeSelf: Boolean,
+  /** The serving kernel: tables `t`, and a probe batch already collected
+    * by [[PqIndex.collectProbes]]. The two MODEL tables are collected
+    * once and held resident under `key` while `t` is `committed`
+    * ([[ServeModelCache]], keyed by the model's files): the pre-r19
+    * serve paid a centroid-count job, a subDim job, and a distance-table
+    * crossJoin-collect job per probe batch — driver-blocking scheduling
+    * latency, not compute, at any batch size. Generation 0 collects
+    * them per serve. */
+  private[operators] def serve(spark: SparkSession, key: String,
+      committed: Boolean, t: Tables, probes: (Array[(Long, Array[Float])], DataFrame),
+      k: Int, nprobe: Int, excludeSelf: Boolean,
       sq8Codes: Option[DataFrame]): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
-    // the two MODEL tables are collected once per dir and held resident
-    // (ServeModelCache, file-signature guarded): the pre-r19 serve paid
-    // a centroid-count job, a subDim job, and a distance-table
-    // crossJoin-collect job per probe batch — driver-blocking scheduling
-    // latency, not compute, at any batch size
-    val centersArr = ServeModelCache.cached(spark, s"$modelDir/centroids") {
-      spark.read.parquet(s"$modelDir/centroids").collect().map(r => (r.getLong(0),
-        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)))
-    }
-    val cbArr = ServeModelCache.cached(spark, s"$modelDir/codebooks") {
-      PqIndex.collectCodebooks(spark.read.parquet(s"$modelDir/codebooks"))
+    val (centersArr, cbArr) = ServeModelCache.resident(key,
+        Option.when(committed)((t.centroids ++ t.codebooks).mkString("\n"))) {
+      (spark.read.parquet(t.centroids: _*).collect().map(r => (r.getLong(0),
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray))),
+        PqIndex.collectCodebooks(spark.read.parquet(t.codebooks: _*)))
     }
     val subDim = cbArr.head._3.length
     val cells = spark.read.schema("vec_id BIGINT, cell BIGINT")

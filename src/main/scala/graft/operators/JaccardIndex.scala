@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   *
   * At scale: screen cost is Σ over batch-prefix shingles of the stored
   * posting length; the verify join touches only candidate pairs.
-  * Appends are per-row parquet appends, one write each (AnnIndex and
-  * DedupIndex, by contrast, commit each append as one generation).
+  * Appends are per-row parquet appends, one write each (AnnIndex,
+  * DedupIndex, PqIndex and IvfPqIndex, by contrast, commit each append
+  * as one generation).
   *
   * One screen kernel ([[screen]]): the batch's prefix rows probe
   * side-tagged postings — the stored rows and, for the within-batch

@@ -23,6 +23,14 @@ import org.apache.spark.sql.functions._
   * corpus change. The same immutable build/serve split as AnnIndex —
   * rebuild on corpus change, the serving tables are write-once.
   *
+  * GENERATIONS ([[IndexGenerations]]): a build writes the three tables
+  * at `dir` and commits generation 1; an append writes its batch's
+  * codes/ and vectors/ under `g<N>/` and commits N. A serve reads the
+  * newest complete manifest and exactly the files it names; its
+  * collected codebooks stay resident per model files
+  * ([[ServeModelCache]]). A directory without `_gen/` (built before the
+  * log) is generation 0, its tables read by listing.
+  *
   * Parameters and arithmetic are shared with the inline l53 lane
   * (LlmOps.annPq composes the same frame functions), so stored-index
   * results match the lane exactly — NearDupSpec pins the parity.
@@ -349,65 +357,90 @@ object PqIndex {
     * — the three reads must see ONE evaluation or a non-deterministic
     * input leaves codes/ and vectors/ inconsistent (the AnnIndex
     * writeIndex discipline). */
-  def buildFrom(spark: SparkSession, vecsIn: DataFrame, dir: String): Unit = {
-    val vecs = vecsIn.select(col("vec_id"), col("embedding")).persist()
-    try {
-      val (cb, codes) = buildFrames(spark, vecs)
-      cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-      // stored WIDE (vec_id, codes array): the ADC kernel scans one row
-      // per vector; the pivot shuffle is paid once here, never at serve
-      widen(codes).write.mode("overwrite").parquet(s"$dir/codes")
-      vecs.write.mode("overwrite").parquet(s"$dir/vectors")
-      codes.unpersist()
-      ()
-    } finally { vecs.unpersist(); () }
-  }
+  def buildFrom(spark: SparkSession, vecsIn: DataFrame, dir: String): Unit =
+    AppendLock.withLock(spark, dir) {
+      IndexGenerations.clear(spark, dir, FixedTables)
+      val vecs = vecsIn.select(col("vec_id"), col("embedding")).persist()
+      try {
+        val (cb, codes) = buildFrames(spark, vecs)
+        cb.write.mode("overwrite").parquet(s"$dir/codebooks")
+        // stored WIDE (vec_id, codes array): the ADC kernel scans one row
+        // per vector; the pivot shuffle is paid once here, never at serve
+        widen(codes).write.mode("overwrite").parquet(s"$dir/codes")
+        val n = IndexGenerations.writeCounted(vecs, s"$dir/vectors")
+        codes.unpersist()
+        IndexGenerations.commit(spark, dir,
+          IndexGenerations.listed(spark, dir, FixedTables).copy(number = 1, rows = n))
+      } finally { vecs.unpersist(); () }
+    }
+
+  /** The tables of generation 0 and of a build. */
+  private val FixedTables = Set("codebooks", "codes", "vectors")
+
+  /** The newest committed generation of `dir`: its codebooks, and the
+    * codes and vectors every commit so far added. */
+  private[graft] def generation(spark: SparkSession, dir: String): IndexGenerations.Manifest =
+    IndexGenerations.current(spark, dir, FixedTables)
+
+  /** Crash-point probe (the AnnIndex.crashProbe discipline): fires after
+    * an append's files are written, before its commit. */
+  private[graft] var crashProbe: String => Unit = _ => ()
 
   /** Incremental maintenance — the FAISS `add` semantics: new vectors
     * are encoded against the EXISTING codebooks (the model is frozen at
     * build time; codes are per-row, so they append without touching the
-    * stored corpus) and land in codes/ + vectors/. Quantization quality
-    * for the appended rows is the build-time codebooks' — after enough
-    * distribution drift, rebuild (the write-once snapshot discipline:
-    * a rebuild is a NEW index, not an in-place mutation).
+    * stored corpus). Quantization quality for the appended rows is the
+    * build-time codebooks' — after enough distribution drift, rebuild
+    * (the write-once snapshot discipline: a rebuild is a NEW index, not
+    * an in-place mutation).
     *
-    * NOT atomic across the two tables and NOT idempotent: a crash
-    * between the writes leaves the batch's vectors invisible (codes/ is
-    * the only candidate source — a safe partial state), but blindly
-    * re-running the whole append would duplicate code rows, and the ADC
-    * sum counts every (sub, code) row — duplicated codes DOUBLE a
-    * vector's approx distance. Recovery from a failed append is
-    * re-appending only the missing table's rows, or a rebuild; callers
-    * needing replay-safe ingestion wrap appends in a committed-batch
-    * marker like the StreamJobs foreachBatch builders do. */
-  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    graft.functions.VectorExpressions.register(spark)
-    val cb = spark.read.parquet(s"$dir/codebooks")
-    val subDim = cb.select(size(col("cvec"))).first().getInt(0)
-    val vecs = newVecs.select(col("vec_id"), col("embedding")).persist()
-    try {
-      encodeMatchingLayout(spark, s"$dir/codes", cb, subDim, vecs)
-        .write.mode("append").parquet(s"$dir/codes")
-      vecs.write.mode("append").parquet(s"$dir/vectors")
-    } finally { vecs.unpersist(); () }
-  }
+    * One generation per call, under the index's [[AppendLock]]: the
+    * batch's codes and vectors land under `g<N>/` and the manifest
+    * commit publishes both at once. A crash anywhere before the commit
+    * leaves generation N−1 serving; re-running the append rewrites
+    * `g<N>/` and commits the same N, so no code row is ever served
+    * twice. Running it again AFTER a commit appends the batch a second
+    * time — replay-safe ingestion still belongs behind a committed-batch
+    * marker (the StreamJobs discipline). */
+  def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit =
+    AppendLock.withLock(spark, dir) {
+      graft.functions.VectorExpressions.register(spark)
+      val g = generation(spark, dir)
+      val number = IndexGenerations.next(spark, dir)
+      val out = s"$dir/g$number"
+      IndexGenerations.delete(spark, out) // a crashed run's leftovers
+      val cb = spark.read.parquet(g("codebooks"): _*)
+      val subDim = cb.select(size(col("cvec"))).first().getInt(0)
+      val vecs = newVecs.select(col("vec_id"), col("embedding")).persist()
+      try {
+        encodeMatchingLayout(spark, g("codes"), cb, subDim, vecs)
+          .write.mode("overwrite").parquet(s"$out/codes")
+        val n = IndexGenerations.writeCounted(vecs, s"$out/vectors")
+        def grown(t: String) = t -> (g(t) ++ IndexGenerations.files(spark, s"$out/$t"))
+        val next = IndexGenerations.Manifest(number, n,
+          g.tables ++ Seq(grown("codes"), grown("vectors")))
+        crashProbe("before_commit")
+        IndexGenerations.commit(spark, dir, next)
+        IndexGenerations.reclaim(spark, dir, FixedTables, g, next)
+      } finally { vecs.unpersist(); () }
+    }
 
-  /** Encode `vecs` in whatever layout `codesDir` already stores — wide
-    * (vec_id, codes) from an r13+ build, or long (vec_id, sub, code)
+  /** Encode `vecs` in whatever layout the `codes` files already store —
+    * wide (vec_id, codes) from an r13+ build, or long (vec_id, sub, code)
     * from a pre-r13 dir. Appending ONE fixed layout would mix two
-    * parquet schemas in one directory: later reads pick one file's
-    * schema and null out the other's columns, silently breaking both
-    * the `contains("sub")` layout dispatch and the ADC kernel. */
+    * parquet schemas in one table: later reads pick one file's schema
+    * and null out the other's columns, silently breaking both the
+    * `contains("sub")` layout dispatch and the ADC kernel. */
   private[operators] def encodeMatchingLayout(spark: SparkSession,
-      codesDir: String, cb: DataFrame, subDim: Int,
+      codes: Seq[String], cb: DataFrame, subDim: Int,
       vecs: DataFrame): DataFrame = {
-    val stored = footerFields(spark, Seq(codesDir))
+    val stored = footerFields(spark, codes)
     val fresh = encode(cb, subDim, vecs)
     if (stored.contains("sub")) fresh
     else if (stored.contains("codes")) widen(fresh)
     else throw new IllegalStateException(
-      s"$codesDir holds neither a wide (vec_id, codes) nor a long " +
-        "(vec_id, sub, code) PQ layout — rebuild the index")
+      s"${codes.headOption.getOrElse("codes")} holds neither a wide (vec_id, codes) " +
+        "nor a long (vec_id, sub, code) PQ layout — rebuild the index")
   }
 
   /** The top-level column names of the first data file under `paths`
@@ -453,13 +486,15 @@ object PqIndex {
     * that happens to carry a probe's number silently vanishes from that
     * probe's results. */
   def queryProbes(spark: SparkSession, dir: String, probeVecs: DataFrame,
-      k: Int, excludeSelf: Boolean = true): DataFrame =
+      k: Int, excludeSelf: Boolean = true): DataFrame = {
+    val g = generation(spark, dir)
     scoreProbesArr(spark,
-      ServeModelCache.cached(spark, s"$dir/codebooks") {
-        collectCodebooks(spark.read.parquet(s"$dir/codebooks"))
+      ServeModelCache.resident(dir, Option.when(g.number > 0)(g("codebooks").mkString("\n"))) {
+        collectCodebooks(spark.read.parquet(g("codebooks"): _*))
       },
-      readCodes(spark, Seq(s"$dir/codes")),
+      readCodes(spark, g("codes")),
       spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .parquet(s"$dir/vectors"),
+        .parquet(g("vectors"): _*),
       probeVecs, k, excludeSelf)
+  }
 }

@@ -450,6 +450,25 @@ object StreamJobs {
       ()
     }
 
+  /** The collected centroid fixture, resident per the fixture dir's
+    * (name, length, mtime) listing (ServeModelCache) — VERDICT r18
+    * review: re-reading + re-collecting the K·d fixture was one needless
+    * Spark job per micro-batch. The listing is pure metadata, no job, so
+    * a RE-FIT (new parquet files) is picked up on the next batch while
+    * the steady state costs nothing. */
+  private def kmCentroids(s: org.apache.spark.sql.SparkSession,
+      fixtureDir: String): Seq[(Int, Seq[Double])] = {
+    val (fs, p) = hadoopFs(s, fixtureDir)
+    val listing = fs.listStatus(p)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
+    graft.operators.ServeModelCache.resident(fixtureDir, Some(listing)) {
+      s.read.parquet(fixtureDir).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
+        .sortBy(_._1).toSeq
+    }
+  }
+
   /** Streaming k-means serving — the l70 assignment arm under
     * foreachBatch: each arriving (vec_id, embedding) micro-batch is
     * labeled with its nearest centroid from the FROZEN fixture
@@ -462,34 +481,6 @@ object StreamJobs {
     * the same marker + dynamic-partition-overwrite contract as the
     * other serve jobs. Re-fit cadence is the deployment's policy knob,
     * exactly like the ANN/PQ codebooks. */
-  /** Collected centroid fixtures, cached per (dir, file-identity
-    * fingerprint) — VERDICT r18 review: re-reading + re-collecting the
-    * K·d fixture was one needless Spark job per micro-batch. The
-    * fingerprint is the fixture dir's (name, length, mtime) listing —
-    * pure metadata, no job — so a RE-FIT (new parquet files) is picked
-    * up on the next batch while the steady state costs nothing. */
-  private val kmFixtureCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Int, Seq[Double])])]()
-
-  private def kmCentroids(s: org.apache.spark.sql.SparkSession,
-      fixtureDir: String): Seq[(Int, Seq[Double])] = {
-    val (fs, p) = hadoopFs(s, fixtureDir)
-    val fp = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val cached = kmFixtureCache.get(fixtureDir)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
-      // plain get/put, not compute: the read runs a Spark job and must
-      // not run under the map's bin lock
-      val cents = s.read.parquet(fixtureDir).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      kmFixtureCache.put(fixtureDir, (fp, cents))
-      cents
-    }
-  }
-
   def kmeansServeEachBatch(vecs: DataFrame, fixtureDir: String,
       outDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>

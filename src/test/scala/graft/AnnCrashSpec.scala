@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files => JF, Paths => JP}
-import graft.operators.{AnnIndex, IvfPqIndex}
+import graft.operators.AnnIndex
 
 /** Kill-the-JVM e2e for AnnIndex's generation commit: a child JVM is
   * SIGKILLed inside an append — after the flat write, before the SQ8
@@ -288,7 +288,7 @@ class AnnCrashSpec extends SparkSpec {
 
       val g = AnnIndex.generation(spark, idx)
       assert(g.number == 2 && g.ivfpq.get._1 == s"$idx/g2/ivfpq")
-      assert(IvfPqIndex.fittedN(spark, g.ivfpq.get._1).contains(520L),
+      assert(g.ivfpq.get._2.fitted.contains(520L),
         "the re-run must refit over the grown corpus")
       val answers = spark.read.parquet(s"$outDir/answers")
         .select(col("batch_id").cast("long"), col("probe_id"),
@@ -312,8 +312,8 @@ class AnnCrashSpec extends SparkSpec {
     withConf(AnnIndex.FlatMaxBucketRowsKey -> "0", AnnIndex.RefitFactorKey -> "1.0") {
       val idx = s"$root/idx"
       AnnIndex.build(spark, sfDir, idx)
-      assert(IvfPqIndex.fittedN(spark, s"$idx/ivfpq").contains(500L),
-        "precondition: fresh fit marker")
+      assert(AnnIndex.generation(spark, idx).ivfpq.get._2.fitted.contains(500L),
+        "precondition: fresh fitted size")
       val ref = s"$root/ref"
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(idx), new java.io.File(ref))
@@ -324,7 +324,7 @@ class AnnCrashSpec extends SparkSpec {
       // the child appends with refitFactor 1.0 (any growth refits) and is
       // SIGKILLed with the refit sidecar built but not committed
       crashAppend("graft.AnnRefitChild", idx, batchPq, "before_commit", root)
-      assert(IvfPqIndex.fittedN(spark, s"$idx/g2/ivfpq").contains(520L),
+      assert(spark.read.parquet(s"$idx/g2/ivfpq/vectors").count() == 520L,
         "the refit sidecar must be complete on disk")
       assert(!committed(idx, 2))
       // generation 1's sidecar keeps serving, routed, byte for byte
@@ -337,7 +337,7 @@ class AnnCrashSpec extends SparkSpec {
       AnnIndex.append(spark, ref, spark.read.parquet(batchPq))
       val g2 = AnnIndex.generation(spark, idx)
       assert(g2.number == 2 && !committed(idx, 3))
-      assert(IvfPqIndex.fittedN(spark, g2.ivfpq.get._1).contains(520L),
+      assert(g2.ivfpq.get._2.fitted.contains(520L),
         "the re-run must record the grown corpus as the fitted size")
       val rerun = served(idx, probes)
       assert(rerun == served(ref, probes))

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{AnnIndex, DedupIndex, JaccardIndex, NearDupIndex, PqIndex,
-  SimHashIndex}
+import graft.operators.{AnnIndex, DedupIndex, IvfPqIndex, JaccardIndex, NearDupIndex,
+  PqIndex, SimHashIndex}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -109,5 +109,12 @@ class JobBudgetSpec extends SparkSpec {
     PqIndex.build(spark, sfDir, dir)
     val ps = probes(dir)
     pin("pq", 8)(PqIndex.queryProbes(spark, dir, ps, 5).collect())
+  }
+
+  test("IvfPqIndex.queryProbes: jobs per warm serve") {
+    val dir = tmp("budget-ivfpq")
+    IvfPqIndex.build(spark, sfDir, dir)
+    val ps = probes(dir)
+    pin("ivfpq", 10)(IvfPqIndex.queryProbes(spark, dir, ps, 5).collect())
   }
 }

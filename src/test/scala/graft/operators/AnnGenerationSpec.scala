@@ -138,4 +138,39 @@ class AnnGenerationSpec extends SparkSpec {
         s"generation 1 missed the appended dup of $p: ${top(p)}"))
     }
   }
+
+  test("a sidecar a refit replaced is deleted once two generations moved past it; the replaced generation's files stay") {
+    routed {
+      val idx = Files.createTempDirectory("ann-gen-reclaim").toString
+      val key = AnnIndex.RefitFactorKey
+      def exists(f: String) = Files.exists(Paths.get(f))
+      def whole(g: AnnIndex.Generation) =
+        (g.signatures ++ g.vectors ++ g.ivfpq.toSeq.flatMap { case (_, t) =>
+          t.centroids ++ t.codebooks ++ t.cells ++ t.codes ++ t.vectors
+        }).forall(exists)
+      try {
+        AnnIndex.build(spark, sfDir, idx)
+        // any growth refits: generation 2 replaces the build's sidecar
+        spark.conf.set(key, "1.0")
+        AnnIndex.append(spark, idx, dups(idx, 0 until 10, 900000L))
+        val g2 = AnnIndex.generation(spark, idx)
+        assert(g2.ivfpq.get._1 == s"$idx/g2/ivfpq")
+        assert(exists(s"$idx/ivfpq/centroids") && exists(s"$idx/_gen/1"),
+          "generation 1, which generation 2 replaced, must stay whole")
+        // no refit: generation 3 extends generation 2's sidecar
+        spark.conf.set(key, "0")
+        AnnIndex.append(spark, idx, dups(idx, 10 until 20, 800000L))
+        val g3 = AnnIndex.generation(spark, idx)
+        assert(g3.number == 3 && g3.ivfpq.get._1 == s"$idx/g2/ivfpq")
+        assert(!exists(s"$idx/ivfpq") && !exists(s"$idx/_gen/1"),
+          "the refit-replaced sidecar outlived two generations")
+        assert(whole(g2) && whole(g3))
+        val top = top1(served(idx))
+        (0L until 20L).foreach { p =>
+          val want = if (p < 10) p + 900000L else p + 800000L
+          assert(top(p) == want, s"probe $p: top-1 ${top(p)}, want $want")
+        }
+      } finally spark.conf.unset(key)
+    }
+  }
 }

@@ -43,7 +43,9 @@ class DecontamIndexSpec extends SparkSpec {
     val withBloom = DecontamIndex
       .screen(spark, dir, docs.filter(col("doc_id") >= 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // what such a build leaves: the rows, and neither bloom nor manifest
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "bloom.bin"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, "_gen"))
     val without = DecontamIndex
       .screen(spark, dir, docs.filter(col("doc_id") >= 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -71,22 +73,18 @@ class DecontamIndexSpec extends SparkSpec {
 
   test("rebuild retires the prior bloom BEFORE the rows change (stale-prefilter window)") {
     import graft.SparkSpec.spark.implicits._
-    val dir = buildModel() // generation 1: rows + bloom on disk
+    val dir = buildModel() // rows + bloom, committed
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")))
-    // Generation 2 rebuild into the SAME dir, crashing after the row
-    // overwrite but before the bloom publish — simulated by doing exactly
-    // what build() does up to its crash point: delete-stale-bloom + row
-    // overwrite. The OLD bloom must already be gone at this point; if it
-    // survived, it would wrongly prefilter gen-2 shingles it has never
-    // seen and screen() would silently miss contamination.
+    // A rebuild into the SAME dir that crashes after its row write but
+    // before its bloom and its commit — simulated by doing exactly what
+    // build() does up to that point: clear the index, write the rows.
+    // The OLD bloom must already be gone; if it survived, it would
+    // wrongly prefilter gen-2 shingles it has never seen and screen()
+    // would silently miss contamination.
     val gen2 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
     val sh2 = LlmOps.shingles8(gen2).select("sh").distinct()
       .withColumn("h", xxhash64(col("sh")))
-    val (hfs, bloomTgt) = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/bloom.bin")
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
-    if (hfs.exists(bloomTgt)) hfs.delete(bloomTgt, false)
+    IndexGenerations.clear(spark, dir, Set("shingles", "bloom.bin"))
     sh2.write.mode("overwrite").parquet(s"$dir/shingles")
     // crash here: rows are gen-2, bloom.bin must NOT exist
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")),
@@ -97,10 +95,8 @@ class DecontamIndexSpec extends SparkSpec {
       .filter(col("contaminated")).count()
     assert(screened == probe.count(),
       "gen-2 docs must screen as contaminated against the gen-2 rows")
-    // the n==0 early return must ALSO retire a live sidecar: rebuild a
-    // full model (bloom back on disk), then rebuild with an unshingleable
-    // corpus — build returns before any bloom write, so only the
-    // delete-stale-bloom step can prevent gen-3 rows under a gen-2 bloom
+    // an unshingleable rebuild commits rows only: no bloom, and the
+    // prior one is gone, not left beside the new rows
     DecontamIndex.build(spark, docs.filter(col("doc_id") < 50), dir)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")))
     val n = DecontamIndex.build(spark,
@@ -108,6 +104,7 @@ class DecontamIndexSpec extends SparkSpec {
     assert(n == 0 &&
       !java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")),
       "empty rebuild must retire the prior bloom, not leave it dangling")
+    assert(DecontamIndex.screen(spark, dir, gen2).filter(col("contaminated")).count() == 0)
   }
 
   test("unshingleable eval corpus: empty model, nothing contaminated") {

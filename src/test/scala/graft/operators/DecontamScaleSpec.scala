@@ -131,7 +131,7 @@ class DecontamScaleSpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).toSet
     val viaBcast = probes
       .filter(BloomMembership.mightContainBroadcast(spark,
-        s"parity-test-$n", col("h"))(bytes))
+        spark.sparkContext.broadcast(bytes), col("h")))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(viaLiteral == viaBcast,
       "broadcast-carried filter must accept exactly the literal-carried set")

@@ -178,16 +178,34 @@ class DedupGenerationSpec extends SparkSpec {
 }
 
 /** The local filesystem on the `countopen` scheme, counting the opens of
-  * shard bloom files. */
+  * shard bloom files, and recording every opened file and every listed
+  * directory. */
 class CountingOpenFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("countopen:///")
   override def open(f: org.apache.hadoop.fs.Path,
       bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
     if (f.getName.startsWith("shard-")) CountingOpenFileSystem.bloomOpens.incrementAndGet()
+    CountingOpenFileSystem.opened.add(f.toUri.getPath)
     super.open(f, bufferSize)
+  }
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (pathToFile(f).isDirectory) CountingOpenFileSystem.listed.add(f.toUri.getPath)
+    super.listStatus(f)
   }
 }
 
 object CountingOpenFileSystem {
   val bloomOpens = new java.util.concurrent.atomic.AtomicInteger
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** The files `body` opened and the directories it listed, when the
+    * `countopen` scheme is registered. */
+  def during(body: => Unit): (Seq[String], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    opened.clear(); listed.clear()
+    body
+    (opened.asScala.toSeq, listed.asScala.toSeq)
+  }
 }

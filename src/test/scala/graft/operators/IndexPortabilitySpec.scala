@@ -69,13 +69,13 @@ class IndexPortabilitySpec extends SparkSpec {
   /** VERDICT r15 #5: the standing-index machinery and the snapshot/CAS
     * machinery it sits beside, closed into one loop — a ROUTED AnnIndex
     * with one appended generation (flat tables + IVFPQ sidecar + the
-    * _FITTED_N refit marker + the generation log) is ONE write-once
+    * generation log, which records the sidecar's fitted size) is ONE write-once
     * tree, so one publish freezes all of it under a single snapshot
     * manifest and a consumer mounting the label gets an index that
     * routes and serves byte-identically. The atomicity claim is the
     * snapshot manifest's: there is no label state where the flat tables
-    * arrive without the sidecar, the sidecar without its fit marker, or
-    * a generation's tables without its log entry. */
+    * arrive without the sidecar, or a generation's tables without its
+    * log entry. */
   test("routed AnnIndex publishes to a label; mount serves byte-identically with sidecar + fit marker") {
     val key = AnnIndex.FlatMaxBucketRowsKey
     val saved = spark.conf.getOption(key)
@@ -99,8 +99,8 @@ class IndexPortabilitySpec extends SparkSpec {
       assert(entries.exists(_.path.startsWith("signatures/")))
       assert(entries.exists(_.path.startsWith("ivfpq/centroids/")),
         "sidecar must ride the same manifest as the flat tables")
-      assert(entries.exists(_.path == "ivfpq/_FITTED_N"),
-        "refit marker must ride the same manifest as the sidecar")
+      assert(AnnIndex.generation(spark, dirA).ivfpq.get._2.fitted.contains(500L),
+        "the generation must record the sidecar's fitted size")
       assert(Seq("_gen/1", "_gen/2").forall(p => entries.exists(_.path == p)) &&
         entries.exists(_.path.startsWith("g2/ivfpq/codes/")),
         "the generation log and the appended tables must ride the manifest")
@@ -117,8 +117,8 @@ class IndexPortabilitySpec extends SparkSpec {
       assert(AnnIndex.chosenArm(spark, dirB) == "ivfpq",
         "mounted replica must route through its sidecar")
       assert(AnnIndex.generation(spark, dirB).number == 2)
-      assert(IvfPqIndex.fittedN(spark, s"$dirB/ivfpq") ==
-        IvfPqIndex.fittedN(spark, s"$dirA/ivfpq"))
+      assert(AnnIndex.generation(spark, dirB).ivfpq.get._2.fitted ==
+        AnnIndex.generation(spark, dirA).ivfpq.get._2.fitted)
       def served(dir: String) = AnnIndex
         .query(spark, dir, nProbes = 10, k = 5)
         .collect().map(_.toSeq).toSeq

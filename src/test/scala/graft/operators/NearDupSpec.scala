@@ -602,13 +602,15 @@ class NearDupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
     longRows.toDF("vec_id", "sub", "code")
       .write.mode("overwrite").parquet(s"$dir/codes")
+    // an old index dir predates the generation log too
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, "_gen"))
     // append must encode to the STORED layout — a wide append would mix
     // two parquet schemas in one dir and null out columns on later reads
     val v0 = spark.read.parquet(s"$dir/vectors")
       .filter(col("vec_id") === 0L).select("embedding")
       .collect()(0).getSeq[Float](0).toArray
     PqIndex.append(spark, dir, Seq((99999L, v0)).toDF("vec_id", "embedding"))
-    val after = spark.read.parquet(s"$dir/codes")
+    val after = spark.read.parquet(PqIndex.generation(spark, dir)("codes"): _*)
     assert(after.schema.fieldNames.toSet == Set("vec_id", "sub", "code"),
       s"append changed the stored layout: ${after.schema.treeString}")
     assert(after.filter(col("sub").isNull || col("code").isNull).count() == 0,
@@ -908,8 +910,9 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(fKey, "2")
       AnnIndex.build(spark, sfDir, dir)
       def model = AnnIndex.generation(spark, dir).ivfpq.get._1
+      def fitted = AnnIndex.generation(spark, dir).ivfpq.get._2.fitted
       val n0 = spark.read.parquet(s"$dir/vectors").count() // 500 at sf0.001
-      assert(IvfPqIndex.fittedN(spark, model).contains(n0),
+      assert(fitted.contains(n0),
         "build must record the fitted corpus size")
       val k0 = spark.read.parquet(s"$model/centroids").count()
       val src = spark.read.parquet(s"$dir/vectors")
@@ -917,7 +920,7 @@ class NearDupSpec extends SparkSpec {
       // strict), appended rows served via the frozen quantizers
       AnnIndex.append(spark, dir, src.select(
         (col("vec_id") + 20000L).as("vec_id"), col("embedding")))
-      assert(IvfPqIndex.fittedN(spark, model).contains(n0),
+      assert(fitted.contains(n0),
         "append at exactly refitFactor× must stay frozen")
       // past the bound: refit
       AnnIndex.append(spark, dir, src.limit(200).select(
@@ -925,7 +928,7 @@ class NearDupSpec extends SparkSpec {
       val g = AnnIndex.generation(spark, dir)
       val nNow = spark.read.parquet(g.vectors: _*).count()
       assert(nNow == n0 * 2 + 200 && g.rows == nNow)
-      assert(IvfPqIndex.fittedN(spark, model).contains(nNow),
+      assert(fitted.contains(nNow),
         "append past refitFactor× must refit on the grown corpus")
       assert(spark.read.parquet(s"$model/centroids").count() > k0,
         "refit must re-derive the cell count from the grown corpus")
@@ -947,7 +950,7 @@ class NearDupSpec extends SparkSpec {
       spark.conf.set(fKey, "0")
       AnnIndex.append(spark, dir, src.limit(50).select(
         (col("vec_id") + 40000L).as("vec_id"), col("embedding")))
-      assert(IvfPqIndex.fittedN(spark, model).contains(nNow),
+      assert(fitted.contains(nNow),
         "refitFactor=0 must disable auto-refit")
     } finally { restore(tKey, saved._1); restore(fKey, saved._2) }
   }
