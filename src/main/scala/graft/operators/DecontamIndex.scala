@@ -15,23 +15,25 @@ import org.apache.spark.sql.functions._
   * pipeline (the reference's freeze-once/read-forever CAS discipline,
   * core/freezer.go:672-711, applied to the decontamination model).
   *
-  * Layout under `indexDir`, committed as one generation
-  * ([[IndexGenerations]], `_gen/1`):
-  *   shingles/   parquet (sh STRING, h LONG) — the authoritative distinct
-  *               8-gram shingle set (md5 text-shingles via
-  *               LlmOps.shingles8, so stream/batch/index can never drift
-  *               on the shingle definition), h = xxhash64(sh)
-  *   bloom.bin   derived scan-side prefilter (1% fpp) over every row
+  * Layout under `indexDir`, committed by generation
+  * ([[IndexGenerations]], `_gen/<N>`):
+  *   g<N>/shingles/  parquet (sh STRING, h LONG) — the authoritative
+  *                   distinct 8-gram shingle set (md5 text-shingles via
+  *                   LlmOps.shingles8, so stream/batch/index can never
+  *                   drift on the shingle definition), h = xxhash64(sh)
+  *   g<N>/bloom.bin  derived scan-side prefilter (1% fpp) over every row
   *
   * The bloom is a containment PREFILTER: a shingle it wrongly drops
   * would silently MISS contamination, so it may only ever serve beside
   * the row set it covers. The commit makes that structural: a build
-  * clears the directory, writes both, and commits a manifest naming
-  * both, and a screen reads exactly what the newest manifest names. A
-  * build that crashes before its commit leaves no manifest; what it
-  * wrote then reads as generation 0. The model is write-once — eval
-  * suites version by building a new dir, which is how benchmarks
-  * actually rev — so the bloom can never lag a later append.
+  * writes both into a generation directory no reader looks at yet and
+  * commits a manifest naming both, and a screen reads exactly what the
+  * newest manifest names. A build that crashes before its commit —
+  * mid-way through its bloom, say — leaves the previous generation
+  * serving, and the next build reclaims its files. The model is
+  * write-once — eval suites version by building a new dir or
+  * rebuilding this one, which is how benchmarks actually rev — so the
+  * bloom can never lag a later append.
   *
   * A directory without `_gen/` (built before the log) is generation 0:
   * `shingles/`, and `bloom.bin` when present. Without it a screen skips
@@ -59,31 +61,42 @@ object DecontamIndex {
 
   /** The newest committed generation of `indexDir` — its `shingles`
     * files and, when built, its `bloom` — or generation 0, from one
-    * listing of the directory, when it has no log. */
+    * listing of the directory, when it has no log (nothing when the
+    * directory does not exist). */
   private def generation(spark: SparkSession, indexDir: String): IndexGenerations.Manifest =
     IndexGenerations.latest(spark, indexDir).getOrElse {
       val p = new org.apache.hadoop.fs.Path(indexDir)
-      val names = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(p).map(_.getPath.getName).toSet
+      val names =
+        try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(p).map(_.getPath.getName).toSet
+        catch { case _: java.io.FileNotFoundException => Set.empty[String] }
       IndexGenerations.Manifest(0, 0, Map("shingles" -> Seq(s"$indexDir/shingles"),
         "bloom" -> Seq(s"$indexDir/bloom.bin").filter(_ => names("bloom.bin"))))
     }
 
+  /** Generation 0's fixed paths. */
+  private val FixedTables = Set("shingles", "bloom.bin")
+
   /** Index an eval corpus `(doc_id, text)`: distinct shingles + hash to
-    * parquet, then the bloom, committed as generation 1 in place of
-    * whatever `indexDir` held. Returns the distinct shingle count (0 =
-    * every doc under 8 tokens; screen() then reports nothing
-    * contaminated, which is the honest answer for an unshingleable
-    * benchmark). */
+    * parquet, then the bloom, both under `g<N>/`, committed as
+    * generation N in place of whatever `indexDir` served. A rebuild
+    * killed before its commit leaves the previous generation serving;
+    * after the commit, what neither generation names is reclaimed.
+    * Returns the distinct shingle count (0 = every doc under 8 tokens;
+    * screen() then reports nothing contaminated, which is the honest
+    * answer for an unshingleable benchmark). */
   def build(spark: SparkSession, evalDocs: DataFrame,
       indexDir: String): Long = {
     val sh = LlmOps.shingles8(evalDocs.select(col("doc_id"), col("text")))
       .select("sh").distinct()
       .withColumn("h", xxhash64(col("sh")))
       .persist()
-    try {
-      IndexGenerations.clear(spark, indexDir, Set("shingles", "bloom.bin"))
-      val n = IndexGenerations.writeCounted(sh, s"$indexDir/shingles")
+    try AppendLock.withLock(spark, indexDir) {
+      val prev = generation(spark, indexDir)
+      val number = IndexGenerations.next(spark, indexDir)
+      val out = s"$indexDir/g$number"
+      IndexGenerations.delete(spark, out) // a crashed run's leftovers
+      val n = IndexGenerations.writeCounted(sh, s"$out/shingles")
       // an EMPTY model commits rows only: Spark's bloomFilter NPEs on
       // zero input rows, and a screen without a bloom skips the
       // prefilter — against an empty shingle set the confirm join then
@@ -92,15 +105,17 @@ object DecontamIndex {
       val bloom = Option.when(n > 0) {
         val bos = new java.io.ByteArrayOutputStream()
         sh.stat.bloomFilter("h", n, 0.01).writeTo(bos)
-        val f = s"$indexDir/bloom.bin"
+        val f = s"$out/bloom.bin"
         val p = new org.apache.hadoop.fs.Path(f)
-        val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, false)
-        try out.write(bos.toByteArray) finally out.close()
+        val o = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, false)
+        try o.write(bos.toByteArray) finally o.close()
         f
       }
-      IndexGenerations.commit(spark, indexDir, IndexGenerations.Manifest(1, n,
-        Map("shingles" -> IndexGenerations.files(spark, s"$indexDir/shingles"),
-          "bloom" -> bloom.toSeq)))
+      val next = IndexGenerations.Manifest(number, n,
+        Map("shingles" -> IndexGenerations.files(spark, s"$out/shingles"),
+          "bloom" -> bloom.toSeq))
+      IndexGenerations.commit(spark, indexDir, next)
+      IndexGenerations.reclaim(spark, indexDir, FixedTables, prev, next)
       n
     } finally { sh.unpersist(); () }
   }

@@ -4,8 +4,9 @@ package graft.operators
   * index and would otherwise re-derive per call: collected model tables
   * (PQ codebooks, IVF coarse centroids), DedupIndex's shard blooms and
   * DecontamIndex's bloom (as Broadcasts), AnnIndex's driver-resident flat
-  * arm. The serving process keeps the bounded model resident — the
-  * standard ANN serving contract — instead of re-reading and
+  * arm, JaccardIndex's driver-resident postings. The serving process
+  * keeps the bounded model resident — the standard ANN serving
+  * contract — instead of re-reading and
   * re-collecting it on every probe batch (measured r19: each re-read +
   * collect/count was a separate driver-blocking job, and the model jobs
   * were ~half the per-batch serve latency at bench scale).
@@ -59,6 +60,13 @@ private[graft] object ServeModelCache {
       v
     }
   }
+
+  /** What [[committed]] holds for `dir` under `identity`, if anything;
+    * nothing is loaded. An appender that holds the replaced generation's
+    * state derives the new one's from it (JaccardIndex's write-through). */
+  def held[T <: AnyRef](dir: String, identity: String): Option[T] =
+    Option(cache.synchronized(cache.get(s"manifest:$dir")))
+      .collect { case (`identity`, v) => v.asInstanceOf[T] }
 
   /** [[committed]] when the caller's generation has an `identity`; a
     * generation 0 (None) loads on each call. */

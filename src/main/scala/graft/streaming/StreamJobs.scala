@@ -281,7 +281,10 @@ object StreamJobs {
     * touches nothing (an empty frame overwrites no partition). So the
     * exact append must be LAST of the two — Jaccard first, exact
     * second, marker third:
-    *  - crash before any append: replay recomputes identically;
+    *  - crash before any append: replay recomputes identically. Each
+    *    index commits an append as one generation, so a crash inside
+    *    an append, before its commit, is this case too: the re-run
+    *    commits the same generation number;
     *  - crash between the appends (Jaccard in, exact not): the replay's
     *    exact screen passes the full batch; the Jaccard reject set
     *    (within-batch losers ∪ index matches of the WHOLE batch) now
@@ -321,17 +324,24 @@ object StreamJobs {
     * append, before the marker.
     *
     * The near-dup stage is one pass ([[JaccardPass]]): the batch is
-    * shingled once, one side-tagged Jaccard screen reads that checkpoint
-    * into one small checkpointed reject set, and the Jaccard append
-    * writes the accepted docs' rows of the same checkpoint. The
-    * decontamination stage drops docs by a semi-join against the model.
-    * A batch runs 27 Spark jobs (local[4], StreamingSpec's fixture):
-    * shingle checkpoint 7 (with the exact screen it evaluates), reject
-    * set 6, pipeline checkpoint 7, accepted write 1, Jaccard append 2,
-    * exact append 4 (its bloom pass 3, the rows write 1; the commit
-    * itself is no job). A 500-doc serve_ingest batch runs the same
-    * stages, with one more reject-set job once the index has been
-    * appended to. */
+    * shingled once into a sized checkpoint, one side-tagged Jaccard
+    * screen reads it into one small reject set, and the Jaccard append
+    * writes the accepted docs' rows of the same batch. When the index's
+    * committed generation and the batch fit
+    * `spark.sql.autoBroadcastJoinThreshold`, the screen runs on the
+    * driver from the generation's resident model, and the append extends
+    * that model. The decontamination stage drops docs by a semi-join
+    * against the model. A batch runs 20 Spark jobs (local[4],
+    * StreamingSpec's fixture, a freshly built index): shingle checkpoint
+    * 7 (with the exact screen it evaluates), reject set 2 (the model's
+    * load, once per process and build, and the batch collect), pipeline
+    * checkpoint 4 (the reject set is a local relation, so its joins need
+    * no job), accepted write 1, Jaccard append 2 (the accepted doc_ids'
+    * collect, the write of the held rows), exact append 4 (its bloom pass
+    * 3, the rows write 1; the commits themselves are no jobs). Once the
+    * model is resident a batch runs 19. On the distributed arm (an
+    * index generation or a batch over the bound) the reject set runs 6
+    * jobs and the pipeline checkpoint 7. */
   private[graft] def applyCurateBatch(batch: DataFrame, batchId: Long,
       modelDir: String, pipeDir: String): Unit = {
       val s = batch.sparkSession
@@ -769,23 +779,35 @@ object StreamJobs {
     }
 
   /** The near-dup step both Jaccard ingests share, one pass per batch:
-    * `docs` is shingled ONCE into an eager checkpoint, one side-tagged
-    * screen reads it into one checkpointed reject set
-    * (JaccardIndex.rejects — within-batch losers ∪ index matches, equal
-    * to screening the within-batch survivors alone), and the append
-    * writes the accepted docs' rows of the same checkpoint instead of
-    * shingling them again. Neither checkpoint's lineage reads the index,
-    * so the append's write cannot invalidate them; `release` frees both
-    * once the append has landed. */
+    * `docs` is shingled ONCE into an eager checkpoint, sized by an
+    * observation on its own job, one side-tagged screen reads it into
+    * one reject set (JaccardIndex.rejectsOf — within-batch losers ∪
+    * index matches, equal to screening the within-batch survivors
+    * alone), and the append writes the accepted docs' rows of the same
+    * batch instead of shingling them again. When the screen ran on the
+    * driver-resident arm it collected the batch's rows: the append then
+    * collects only the accepted doc_ids and writes the held rows, which
+    * also extend the index's resident model. Neither the checkpoint's
+    * nor the reject set's lineage reads the index, so the append's write
+    * cannot invalidate them; `release` frees both once the append has
+    * landed. */
   private final class JaccardPass(s: org.apache.spark.sql.SparkSession,
       indexDir: String, docs: DataFrame) {
-    private val sh = graft.operators.JaccardIndex.shingleSets(docs)
-      .localCheckpoint(true)
-    private val rejected = graft.operators.JaccardIndex.rejects(s, indexDir, sh)
+    private val (sh, bytes) = graft.operators.JaccardIndex.sizedCheckpoint(
+      graft.operators.JaccardIndex.shingleSets(docs))
+    private val (rejected, held) =
+      graft.operators.JaccardIndex.rejectsOf(s, indexDir, sh, Some(bytes))
     val survivors: DataFrame = docs.join(rejected, Seq("doc_id"), "left_anti")
-    def append(accepted: DataFrame): Unit =
-      graft.operators.JaccardIndex.appendShingles(s, indexDir,
-        sh.join(accepted.select("doc_id"), Seq("doc_id"), "left_semi"))
+    def append(accepted: DataFrame): Unit = held match {
+      case Some(rows) =>
+        val ids = accepted.select(col("doc_id").cast("long")).collect()
+          .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+        graft.operators.JaccardIndex.appendRows(s, indexDir,
+          rows.filter(r => !r.isNullAt(0) && ids(r.getLong(0))))
+      case None =>
+        graft.operators.JaccardIndex.appendShingles(s, indexDir,
+          sh.join(accepted.select("doc_id"), Seq("doc_id"), "left_semi"))
+    }
     def release(): Unit = {
       graft.operators.LlmOps.dropCheckpoint(rejected)
       graft.operators.LlmOps.dropCheckpoint(sh)
@@ -801,7 +823,9 @@ object StreamJobs {
     *
     * at-least-once replay safety, the nearDedupIngest argument made
     * exact: marker, per-batch dynamic partition overwrite, append last.
-    * A replay after the append screens the WHOLE batch against an index
+    * The append commits one index generation, so a crash inside it,
+    * before its commit, replays as if it had not run. A replay after
+    * the append screens the WHOLE batch against an index
     * already holding its own survivors (the one-pass reject set,
     * [[JaccardPass]]) — a doc's match with its own stored rows is
     * excluded (a ≠ b), two within-batch SURVIVORS have exact J < τ by

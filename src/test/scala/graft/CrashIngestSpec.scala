@@ -139,7 +139,7 @@ class CrashIngestSpec extends SparkSpec {
       case "dedup" => "_gen/1" // the bootstrap append's committed generation
       case "neardup" => "sigs"
       case "simhash" => "sigs"
-      case "jaccard" => "shingles"
+      case "jaccard" => "_gen/1" // likewise
     }
     assert(JF.exists(JP.get(s"$idx/$indexTable")),
       s"index append had not landed before the kill ($indexTable)")

@@ -147,7 +147,7 @@ class CrashRecoverySpec extends SparkSpec {
     crashAndRecover("after_jaccard_append") { pipe =>
       // the kill landed in the between-appends window: Jaccard rows are
       // on disk, the exact index (the replay fuse) is not yet built
-      assert(JF.exists(JP.get(s"$pipe/jaccard/shingles")),
+      assert(JF.exists(JP.get(s"$pipe/jaccard/_gen/1")),
         "Jaccard append had not landed before the kill")
       assert(!JF.exists(JP.get(s"$pipe/exact/_gen")),
         "exact append already landed — wrong window")
@@ -160,7 +160,7 @@ class CrashRecoverySpec extends SparkSpec {
       // recompute the whole flow and rewrite the partition byte-stably
       assert(JF.exists(JP.get(s"$pipe/accepted")),
         "accepted/ had not landed before the kill")
-      assert(!JF.exists(JP.get(s"$pipe/jaccard/shingles")),
+      assert(!JF.exists(JP.get(s"$pipe/jaccard/_gen")),
         "Jaccard append already landed — wrong window")
       assert(!JF.exists(JP.get(s"$pipe/exact/_gen")),
         "exact append already landed — wrong window")

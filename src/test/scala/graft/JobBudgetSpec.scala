@@ -65,7 +65,14 @@ class JobBudgetSpec extends SparkSpec {
   test("JaccardIndex.pairsAgainst: jobs per warm serve") {
     val dir = tmp("budget-jaccard")
     JaccardIndex.build(spark, corpus, dir)
-    pin("jaccard", 7)(JaccardIndex.pairsAgainst(spark, dir, batch).collect())
+    // resident: the sized shingle checkpoint and the batch collect (the
+    // distributed kernel ran 7 at the default threshold)
+    pin("jaccard, resident", 2)(JaccardIndex.pairsAgainst(spark, dir, batch).collect())
+    // the distributed kernel, with every join shuffled: the checkpoint
+    // and 11 for the screen
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      pin("jaccard, distributed", 12)(JaccardIndex.pairsAgainst(spark, dir, batch).collect())
+    }
   }
 
   test("SimHashIndex.neighborsAgainst: jobs per warm serve") {

@@ -848,7 +848,7 @@ class StreamingSpec extends SparkSpec {
       // the model is read with its pinned schema: no footer-inference job
       assert(!rec.jobs.exists(_.frame.startsWith("graft.operators.DecontamIndex$.screen")),
         s"batch $batch inferred the model's schema: ${rec.jobs}")
-      rec.scansOf(s"$modelDir/shingles")
+      rec.scansOf(s"$modelDir/g1/shingles")
     }
     // each batch carries a contaminated doc: with no bloom survivor the
     // adaptive plan would skip the model scan altogether
@@ -904,14 +904,20 @@ class StreamingSpec extends SparkSpec {
     val shingled = rec.executionsWith(n =>
       n.startsWith("Generate") && n.contains("array_distinct"))
     assert(shingled.size == 1, s"the batch was shingled in executions $shingled")
-    val reads = rec.scansOf(s"$pipeDir/jaccard/shingles")
-    assert(reads.size == 1, s"jaccard/shingles was read in executions $reads")
-    // jobs per batch, measured on this fixture with local[4]: 27 —
-    // shingle checkpoint 7, reject set 6, pipeline checkpoint 7, accepted
-    // write 1, Jaccard append 2, exact append 4 (two verify chains, a
-    // sizes table and a counting decontamination screen ran 39; the
-    // sequential screens, each shingling the batch again, ran 51)
-    assert(rec.jobs.size <= 27, s"${rec.jobs.size} jobs:\n${rec.summary}")
+    // the build's generation: the first screen loads it into the
+    // resident model, and the append extends that model instead of
+    // reading it again
+    val reads = rec.scansOf(s"$pipeDir/jaccard/g1/shingles")
+    assert(reads.size == 1, s"jaccard/g1/shingles was read in executions $reads")
+    // jobs per batch, measured on this fixture with local[4]: 20 —
+    // shingle checkpoint 7, reject set 2 (the resident model's load and
+    // the batch collect; a warm model skips the load), pipeline
+    // checkpoint 4, accepted write 1, Jaccard append 2 (the accepted
+    // doc_ids' collect, the write), exact append 4. The distributed reject
+    // set ran 27 (6 reject-set jobs, a pipeline checkpoint of 7); two
+    // verify chains, a sizes table and a counting decontamination screen
+    // ran 39; the sequential screens, each shingling the batch again, 51
+    assert(rec.jobs.size <= 20, s"${rec.jobs.size} jobs:\n${rec.summary}")
   }
 
   test("an exactDedupIngest batch's append does not re-run the screens") {
@@ -926,17 +932,18 @@ class StreamingSpec extends SparkSpec {
         (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
         (12L, "one two three four five six seven eight nine ten eleven twelve"))
       q.processAllAvailable()
-      // batch 2 screens against the built index: its accepted frame's
-      // lineage scans shingles/, which the append then writes
+      // batch 2 screens against generation 1, which batch 1's append
+      // committed: the screen reads its shingles once, and the append of
+      // generation 2 must not read them again
       val (_, rec) = JobAttribution.of(spark) {
         mem.addData(
           (20L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda xi"),
           (21L, "red orange yellow green blue indigo violet white black grey pink brown"))
         q.processAllAvailable()
       }
-      val reads = rec.scansOf(s"$indexDir/shingles")
+      val reads = rec.scansOf(s"$indexDir/g1/shingles")
       assert(reads.size == 1,
-        s"the standing shingles/ was read in executions $reads: the append " +
+        s"the standing g1/shingles was read in executions $reads: the append " +
           "re-ran the screen")
     } finally q.stop()
     val accepted = spark.read.parquet(s"$indexDir/accepted")

@@ -43,9 +43,12 @@ class DecontamIndexSpec extends SparkSpec {
     val withBloom = DecontamIndex
       .screen(spark, dir, docs.filter(col("doc_id") >= 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // what such a build leaves: the rows, and neither bloom nor manifest
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "bloom.bin"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, "_gen"))
+    // what such a build from before the log left: the rows at the fixed
+    // path, and neither bloom nor manifest
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir, "g1/shingles"),
+      java.nio.file.Paths.get(dir, "shingles"))
+    Seq("g1", "_gen").foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, d)))
     val without = DecontamIndex
       .screen(spark, dir, docs.filter(col("doc_id") >= 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -71,40 +74,70 @@ class DecontamIndexSpec extends SparkSpec {
       "screen must scan the stored shingles/ table")
   }
 
+  private def bloomFiles(dir: String): Seq[java.nio.file.Path] = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try all.filter(_.getFileName.toString == "bloom.bin").toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+    finally all.close()
+  }
+
   test("rebuild retires the prior bloom BEFORE the rows change (stale-prefilter window)") {
-    import graft.SparkSpec.spark.implicits._
-    val dir = buildModel() // rows + bloom, committed
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")))
+    // a crashed rebuild leaves the previous generation serving: its bloom
+    // only ever prefilters the rows it was built over
+    val dir = buildModel() // generation 1: rows + bloom, committed
+    val corpus = docs.filter(col("doc_id") >= 50)
+    def served(): Set[(Long, Long)] = DecontamIndex.screen(spark, dir, corpus)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val gen1 = served()
     // A rebuild into the SAME dir that crashes after its row write but
     // before its bloom and its commit — simulated by doing exactly what
-    // build() does up to that point: clear the index, write the rows.
-    // The OLD bloom must already be gone; if it survived, it would
-    // wrongly prefilter gen-2 shingles it has never seen and screen()
-    // would silently miss contamination.
+    // build() does up to that point: write generation 2's rows into its
+    // own directory. No reader looks there, so generation 1's rows and
+    // bloom keep serving together: a bloom never prefilters rows it was
+    // not built over.
     val gen2 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
-    val sh2 = LlmOps.shingles8(gen2).select("sh").distinct()
+    LlmOps.shingles8(gen2).select("sh").distinct()
       .withColumn("h", xxhash64(col("sh")))
-    IndexGenerations.clear(spark, dir, Set("shingles", "bloom.bin"))
-    sh2.write.mode("overwrite").parquet(s"$dir/shingles")
-    // crash here: rows are gen-2, bloom.bin must NOT exist
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")),
-      "crash window left a stale gen-1 bloom over gen-2 rows")
-    // and the crashed-state screen answers exactly (no prefilter at all)
+      .write.parquet(s"$dir/g2/shingles")
+    ServeModelCache.clear()
+    assert(served() == gen1, "a crashed rebuild changed what the index serves")
+    // the re-run commits past the crashed files, and its gen-2 docs screen
+    // as contaminated against the gen-2 rows
+    DecontamIndex.build(spark, gen2, dir)
     val probe = gen2.limit(5)
-    val screened = DecontamIndex.screen(spark, dir, probe)
-      .filter(col("contaminated")).count()
-    assert(screened == probe.count(),
-      "gen-2 docs must screen as contaminated against the gen-2 rows")
-    // an unshingleable rebuild commits rows only: no bloom, and the
-    // prior one is gone, not left beside the new rows
-    DecontamIndex.build(spark, docs.filter(col("doc_id") < 50), dir)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")))
-    val n = DecontamIndex.build(spark,
-      Seq((1L, "short")).toDF("doc_id", "text"), dir)
-    assert(n == 0 &&
-      !java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")),
-      "empty rebuild must retire the prior bloom, not leave it dangling")
+    assert(DecontamIndex.screen(spark, dir, probe).filter(col("contaminated")).count() ==
+      probe.count(), "gen-2 docs must screen as contaminated against the gen-2 rows")
+    // an unshingleable rebuild commits rows only: its manifest names no
+    // bloom, and the blooms of generations before the one it replaced
+    // are reclaimed
+    import graft.SparkSpec.spark.implicits._
+    val n = DecontamIndex.build(spark, Seq((1L, "short")).toDF("doc_id", "text"), dir)
+    val g = IndexGenerations.latest(spark, dir).get
+    assert(n == 0 && g("bloom").isEmpty, s"empty rebuild must commit no bloom: $g")
+    assert(bloomFiles(dir).size == 1, s"blooms left behind: ${bloomFiles(dir)}")
     assert(DecontamIndex.screen(spark, dir, gen2).filter(col("contaminated")).count() == 0)
+  }
+
+  test("a rebuild torn mid-way through its bloom write leaves the previous generation serving") {
+    val dir = buildModel()
+    val corpus = docs.filter(col("doc_id") >= 50)
+    def served(): Set[(Long, Long)] = DecontamIndex.screen(spark, dir, corpus)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val gen1 = served()
+    val full = java.nio.file.Files.size(bloomFiles(dir).head)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.tearbloom.impl", classOf[TearingBloomFileSystem].getName)
+    hc.setBoolean("fs.tearbloom.impl.disable.cache", true)
+    try intercept[java.io.IOException](DecontamIndex.build(spark,
+      docs.filter(col("doc_id") >= 100 && col("doc_id") < 120), s"tearbloom://$dir"))
+    finally {
+      hc.unset("fs.tearbloom.impl")
+      hc.unset("fs.tearbloom.impl.disable.cache")
+    }
+    assert(bloomFiles(dir).exists(f => java.nio.file.Files.size(f) < full),
+      s"no torn bloom on disk: ${bloomFiles(dir)}")
+    ServeModelCache.clear()
+    assert(served() == gen1, "a torn rebuild changed what the index serves")
   }
 
   test("unshingleable eval corpus: empty model, nothing contaminated") {
@@ -118,5 +151,27 @@ class DecontamIndexSpec extends SparkSpec {
       Seq((50L, ("w " * 20).trim)).toDF("doc_id", "text")).collect()
     assert(out.length == 1 && out.head.getLong(1) == 0 &&
       !out.head.getBoolean(2))
+  }
+}
+
+/** The local filesystem on the `tearbloom` scheme: a `bloom.bin` created
+  * through it receives half of the bytes of its first write, which then
+  * throws — a process killed mid-way through writing a bloom. */
+class TearingBloomFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("tearbloom:///")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (f.getName != "bloom.bin") out
+    else new org.apache.hadoop.fs.FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = out.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        out.write(b, off, len / 2)
+        out.close()
+        throw new java.io.IOException(s"torn write of $f")
+      }
+      override def close(): Unit = out.close()
+    }, null)
   }
 }

@@ -177,7 +177,21 @@ class DedupIndexSpec extends SparkSpec {
       "the healed index must know the batch")
   }
 
-  test("exact-Jaccard index: screened pairs ≡ brute force across generations") {
+  /** An exact-Jaccard case, registered for both screen arms: these small
+    * indexes and batches take the driver-resident arm at the default
+    * threshold, and a threshold of -1 sends them through the distributed
+    * kernel. */
+  private def onBothArms(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name, distributed arm") {
+      val k = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(k)
+      try { spark.conf.set(k, "-1"); body }
+      finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  onBothArms("exact-Jaccard index: screened pairs ≡ brute force across generations") {
     val indexDir = java.nio.file.Files.createTempDirectory("jac-idx").toString
     def brute(index: Seq[(Long, String)], batch: Seq[(Long, String)]) = {
       val sh = LlmOps.shingleRows(
@@ -235,7 +249,7 @@ class DedupIndexSpec extends SparkSpec {
       "duplicated stored rows changed the screened pairs or their counts")
   }
 
-  test("exact-Jaccard one-pass reject set ≡ the sequential within-then-index screen") {
+  onBothArms("exact-Jaccard one-pass reject set ≡ the sequential within-then-index screen") {
     val indexDir = java.nio.file.Files.createTempDirectory("jac-rejects").toString
     // 40-token docs: one changed token keeps J = 31/41 ≥ 3/5, two
     // changed tokens far apart give J = 26/46 < 3/5
@@ -276,7 +290,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(fused() == expected, s"fused replay: ${fused()}")
   }
 
-  test("exact-Jaccard side tags: the one chain ≡ the sequential set on colliding ids and shared matches") {
+  onBothArms("exact-Jaccard side tags: the one chain ≡ the sequential set on colliding ids and shared matches") {
     // stored rows probe as src 0 (a ≠ b), the batch's own as src 1
     // (a < b): a stored doc with a LARGER id than its batch match must
     // still reject it, a within-batch pair that also matches a stored doc

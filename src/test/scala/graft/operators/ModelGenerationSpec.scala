@@ -17,11 +17,17 @@ class ModelGenerationSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(from), new java.io.File(to))
 
-  /** `dir` as a build from before the log left it: the same tables, no
-    * `_gen/`. */
+  /** `dir` as a build from before the log left it: the same tables at
+    * the fixed paths (a build that committed them under `g1/` moves
+    * them there), no `_gen/`. */
   private def toPreLog(dir: String): String = {
     val pre = s"${tmp("model-gen-pre")}/pre"
     copyTree(dir, pre)
+    val g1 = new java.io.File(pre, "g1")
+    if (g1.isDirectory) {
+      g1.listFiles().foreach(f => Files.move(f.toPath, Paths.get(pre, f.getName)))
+      org.apache.commons.io.FileUtils.deleteDirectory(g1)
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pre, "_gen"))
     pre
   }
